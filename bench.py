@@ -82,15 +82,9 @@ def _compact_round(block: dict | None) -> dict | None:
     The 2000-char stdout-tail budget is the constraint (VERDICT r4 #1)."""
     if not block or "rounds" not in block:
         return block
-    out = {"filter_kind": block.get("filter_kind"),
-           "rounds": [{"round": r["round"], "wall_sec": r["wall_sec"],
-                       "urls_per_sec": r["urls_per_sec"]}
-                      for r in block["rounds"]]}
-    if "bloom_shard_table_bytes" in block:
-        out["shard_table_bytes"] = block["bloom_shard_table_bytes"]
-    if "cuckoo_shard_table_bytes" in block:
-        out["shard_table_bytes"] = block["cuckoo_shard_table_bytes"]
-    return out
+    return {"rounds": [{"round": r["round"], "wall_sec": r["wall_sec"],
+                        "urls_per_sec": r["urls_per_sec"]}
+                       for r in block["rounds"]]}
 
 
 def probe_once() -> float:
@@ -319,20 +313,12 @@ def frontier_wave(spark, n_rows: int, cores: int, n_hosts: int = 1000) -> dict:
     }
 
 
-def crawl_round_wave(
-    spark, n_rows: int, cores: int, n_hosts: int = 1000, filter_kind: str = "bloom"
-) -> dict:
+def crawl_round_wave(spark, n_rows: int, cores: int, n_hosts: int = 1000) -> dict:
     """TWO full crawl rounds INCLUDING the MERGE-back storage writes
     (frontier partition-merge, seen/documents/lineage appends, commit) —
     the cost the headline wave excludes.  Reports per-round walls and the
     parquet bytes each round wrote: with manifest-segment appends, round
-    2's bytes track its DELTA, not the table size (VERDICT r1 #4).
-
-    ``filter_kind`` picks the seen-prefilter: "bloom" (ShardedBloom,
-    driver broadcast) or "bloom-dist" (DistributedBloom — the 10^10-key
-    form whose shard bitmaps live in a store table and are cogrouped
-    against candidates; VERDICT r3 #5 asked for driver-visible evidence
-    of this path next to the broadcast one)."""
+    2's bytes track its DELTA, not the table size (VERDICT r1 #4)."""
     import shutil
     import tempfile
 
@@ -343,10 +329,9 @@ def crawl_round_wave(
     base = "/dev/shm" if os.path.isdir("/dev/shm") else None
     workdir = tempfile.mkdtemp(prefix="spark_graft_bench_store_", dir=base)
 
-    def store_bytes(sub: str | None = None) -> int:
+    def store_bytes() -> int:
         total = 0
-        top = os.path.join(workdir, sub) if sub else workdir
-        for root, _d, files in os.walk(top):
+        for root, _d, files in os.walk(workdir):
             for f in files:
                 if f.endswith(".parquet"):
                     total += os.path.getsize(os.path.join(root, f))
@@ -356,7 +341,7 @@ def crawl_round_wave(
         page_space = max(10_000, n_rows)
         cfg = CrawlConfig(
             n_hosts=n_hosts, page_space=page_space, fetch_partitions=cores,
-            salt=8, use_bloom=True, filter_kind=filter_kind,
+            salt=8, use_bloom=True,
             bloom_shards=32, bloom_bits=1 << 22,
         )
         c = Crawler(spark, workdir, cfg)
@@ -386,20 +371,10 @@ def crawl_round_wave(
                     "probe_mops": round(probe / 1e6, 1),
                 }
             )
-            log(f"  round[{i}] ({filter_kind}): {wall:.1f}s, "
+            log(f"  round[{i}]: {wall:.1f}s, "
                 f"{rounds[-1]['urls_per_sec']} urls/s, "
                 f"{rounds[-1]['bytes_written']} B written")
-        out = {"filter_kind": filter_kind, "bootstrap_bytes": bytes_after[0],
-               "rounds": rounds}
-        if filter_kind == "bloom-dist":
-            # shard I/O evidence: the filter's whole footprint is this
-            # store table (never driver memory / broadcast)
-            out["bloom_shard_table_bytes"] = store_bytes("bloom_shards")
-            out["bloom_shards"] = cfg.bloom_shards
-        if filter_kind == "cuckoo-dist":
-            out["cuckoo_shard_table_bytes"] = store_bytes("cuckoo_shards")
-            out["cuckoo_shards"] = cfg.bloom_shards
-        return out
+        return {"bootstrap_bytes": bytes_after[0], "rounds": rounds}
     finally:
         shutil.rmtree(workdir, ignore_errors=True)
 
@@ -564,8 +539,6 @@ def main():
         wave["headline_retries"] = retries
     queries, queries_probe = {}, None
     round_wave = None
-    round_wave_dist = None
-    round_wave_cuckoo = None
     terminated = False
     try:
         log(f"bench: catalog queries at {sf_dir}")
@@ -578,25 +551,6 @@ def main():
             except Exception as e:  # keep the JSON line alive
                 log(f"bench: round wave failed ({e})")
                 round_wave = {"error": str(e)[:200]}
-            # same storage-inclusive legs on the 10^10-scale seen filter
-            # (shards in a store table, cogrouped membership) so the scale
-            # path has driver-visible numbers next to the broadcast one
-            log(f"bench: full crawl round, filter_kind=bloom-dist, {n_round} rows")
-            try:
-                round_wave_dist = crawl_round_wave(spark, n_round, cpus,
-                                                   filter_kind="bloom-dist")
-            except Exception as e:
-                log(f"bench: bloom-dist round wave failed ({e})")
-                round_wave_dist = {"error": str(e)[:200]}
-            # deletable seen-filter at 10^10 scale: store-backed sharded
-            # cuckoo (cogrouped membership, same pattern as bloom-dist)
-            log(f"bench: full crawl round, filter_kind=cuckoo-dist, {n_round} rows")
-            try:
-                round_wave_cuckoo = crawl_round_wave(spark, n_round, cpus,
-                                                     filter_kind="cuckoo-dist")
-            except Exception as e:
-                log(f"bench: cuckoo-dist round wave failed ({e})")
-                round_wave_cuckoo = {"error": str(e)[:200]}
         spark.stop()
     except _Terminated:
         terminated = True
@@ -788,8 +742,6 @@ def main():
         "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
         "frontier": wave,
         "round": _compact_round(round_wave),
-        "round_bloom_dist": _compact_round(round_wave_dist),
-        "round_cuckoo_dist": _compact_round(round_wave_cuckoo),
         "scaling": scaling,
     }
     if terminated:
@@ -798,20 +750,16 @@ def main():
     try:
         os.makedirs(_BENCH_DIR, exist_ok=True)
         with open(os.path.join(_BENCH_DIR, "bench_detail_latest.json"), "w") as f:
-            json.dump({"result": result, "round_full": round_wave,
-                       "round_bloom_dist_full": round_wave_dist,
-                       "round_cuckoo_dist_full": round_wave_cuckoo}, f, indent=1)
+            json.dump({"result": result, "round_full": round_wave}, f, indent=1)
     except OSError as e:
         log(f"bench: could not write detail artifact ({e})")
     line = json.dumps(result)
     # The driver records only the last 2000 chars of stdout; an overlong
     # line means the round's official record parses as null (BENCH_r04).
-    # Degrade gracefully, never silently: drop the least-essential blocks.
-    for drop in ("round_cuckoo_dist", "round_bloom_dist", "frontier"):
-        if len(line) <= 1900:
-            break
-        result.pop(drop, None)
-        result["truncated"] = result.get("truncated", []) + [drop]
+    # Degrade gracefully, never silently: drop the least-essential block.
+    if len(line) > 1900:
+        result.pop("frontier", None)
+        result["truncated"] = ["frontier"]
         line = json.dumps(result)
     print(line, flush=True)
 

@@ -32,9 +32,9 @@ _MIX = np.uint64(0x9E3779B97F4A7C15)
 # both carry the FULL n_shards * bits_per_shard / 8 bytes.  A 10^10-URL
 # frontier at 10 bits/key is ~12 GB — far past any sane driver heap or
 # broadcast, so ShardedBloom fails FAST at construction instead of
-# OOMing mid-crawl; that scale belongs to DistributedBloom (shards live
-# in a store table, shipped per-shard via a cogrouped join, never
-# resident on or broadcast from the driver).
+# OOMing mid-crawl.  Past the budget, crawl with use_bloom=False (the
+# bucket-pruned exact anti-join is correct at any size) or pass an
+# explicit driver_budget_bytes.
 DRIVER_BUDGET_BYTES = 512 << 20
 
 
@@ -57,17 +57,6 @@ def _shard_bitmap(url_hash: np.ndarray, m: int, k: int) -> np.ndarray:
     return bits
 
 
-def _maybe_in_bitmap(url_hash: np.ndarray, bits: np.ndarray, m: int, k: int) -> np.ndarray:
-    """Membership of url_hash values against ONE shard's bit array."""
-    h1, h2 = _h1h2(url_hash)
-    res = np.ones(len(url_hash), dtype=bool)
-    for i in range(k):
-        pos = (h1 + np.uint64(i) * h2) % np.uint64(m)
-        word = bits[(pos >> np.uint64(6)).astype(np.int64)]
-        res &= (word >> (pos & np.uint64(63))) & np.uint64(1) != 0
-    return res
-
-
 class ShardedBloom:
     def __init__(
         self,
@@ -85,8 +74,8 @@ class ShardedBloom:
                 f"driver budget of {driver_budget_bytes / 2**30:.1f} GiB: "
                 f"driver-resident bitmaps are broadcast whole every round. "
                 f"Rule of thumb: total bits ~= 10 * expected keys (1% FP); "
-                f"past the budget use DistributedBloom (store-backed shards, "
-                f"cogrouped per-shard membership, no driver copy) or raise "
+                f"past the budget crawl with use_bloom=False (the exact "
+                f"anti-join alone is correct at any size) or raise "
                 f"driver_budget_bytes explicitly."
             )
         self.n_shards = n_shards
@@ -149,9 +138,6 @@ class ShardedBloom:
             res &= (word >> (pos & np.uint64(63))) & np.uint64(1) != 0
         return res
 
-    def fill_ratio(self) -> float:
-        return float(np.unpackbits(self.shards.view(np.uint8)).mean())
-
 
 def bloom_prefilter(
     spark: SparkSession, candidates: DataFrame, bloom: ShardedBloom | None
@@ -184,138 +170,3 @@ def bloom_prefilter(
         tagged.filter(F.col("_maybe")).drop("_maybe"),
         bc,
     )
-
-
-class DistributedBloom:
-    """The 10^10-key form of the seen-filter: shard bitmaps live in a
-    TableStore table (``bloom_shards``), NEVER on the driver and never in
-    a broadcast (VERDICT r2 #5: a 10^10-URL filter at 10 bits/key is
-    ~12 GB — past any driver heap/broadcast limit; ShardedBloom now
-    fails fast at that size and points here).
-
-    - update: per-shard delta bitmaps built with ``applyInPandas``,
-      OR-merged against the current rows of the TOUCHED shards only, then
-      MERGE-upserted — O(touched shards) rows per round.  The table
-      version flips with ``commit_round``, so resume-from-checkpoint
-      restores the filter with no rebuild (``persistent = True``).
-    - query: candidates shuffle by shard id and COGROUP with the shards
-      table — each task reads only the bitmaps of the shards its
-      candidates hash into, instead of every executor receiving every
-      byte.  At n_shards >> cores the shuffle is balanced by the hash.
-
-    Same hash family and bit layout as ShardedBloom — identical
-    membership decisions for identical inserts — and the same safety
-    direction: a false positive costs an extra exact check, never a
-    dropped URL.
-    """
-
-    TABLE = "bloom_shards"
-    persistent = True  # lives in the store; resume() must NOT rebuild it
-
-    def __init__(
-        self,
-        spark: SparkSession,
-        store,
-        n_shards: int = 4096,
-        bits_per_shard: int = 1 << 23,
-        n_hashes: int = 5,
-    ):
-        assert n_shards & (n_shards - 1) == 0, "n_shards must be a power of two"
-        self.spark = spark
-        self.store = store
-        self.n_shards = n_shards
-        self.m = bits_per_shard
-        self.k = n_hashes
-        self.count = 0
-
-    def _shard_col(self):
-        return F.col("url_hash").bitwiseAND(self.n_shards - 1).cast("int")
-
-    def _delta_df(self, delta: DataFrame) -> DataFrame:
-        m, k = self.m, self.k
-
-        def build(pdf: pd.DataFrame) -> pd.DataFrame:
-            bits = _shard_bitmap(pdf["url_hash"].to_numpy(), m, k)
-            return pd.DataFrame(
-                {"shard": [int(pdf["shard"].iloc[0])], "bits": [bits.tobytes()]}
-            )
-
-        return (
-            delta.select("url_hash")
-            .withColumn("shard", self._shard_col())
-            .groupBy("shard")
-            .applyInPandas(build, "shard int, bits binary")
-        )
-
-    def update_from_df(self, spark: SparkSession, delta: DataFrame) -> None:
-        new = self._delta_df(delta)
-        if not self.store.exists(self.TABLE):
-            self.store.write(self.TABLE, new)
-        else:
-            old = self.store.read(self.TABLE).withColumnRenamed("bits", "_old")
-
-            @F.pandas_udf("binary")
-            def or_bytes(a: pd.Series, b: pd.Series) -> pd.Series:
-                # <= touched-shards rows per round: driver-free, tiny
-                return pd.Series(
-                    x if y is None
-                    else (np.frombuffer(x, dtype=np.uint64)
-                          | np.frombuffer(y, dtype=np.uint64)).tobytes()
-                    for x, y in zip(a, b)
-                )
-
-            merged = new.join(old, "shard", "left").select(
-                "shard", or_bytes("bits", "_old").alias("bits")
-            ).localCheckpoint(eager=True)  # merge_upsert consumes its
-            # input twice; pin the touched-shard rows so the delta-bitmap
-            # python stage and the OR merge run once (see cuckoo._apply)
-            self.store.merge_upsert(self.TABLE, merged, key="shard")
-        self.count += delta.count()
-
-    def prefilter(
-        self, candidates: DataFrame, materialize=None
-    ) -> tuple[DataFrame, DataFrame, None]:
-        """Split candidates into (definitely_new, maybe_seen) — the
-        cogrouped, broadcast-free twin of ``bloom_prefilter``.
-
-        ``materialize(df) -> df`` pins the tagged frame before the split:
-        downstream a round consumes BOTH halves plus a bucket-id collect,
-        so without pinning the candidate shuffle + shard-bitmap cogroup —
-        the expensive stage this class exists to bound — re-executes up
-        to 3x per round (ADVICE r3)."""
-        from pyspark.sql.types import BooleanType, StructField, StructType
-
-        if not self.store.exists(self.TABLE):
-            # no inserts yet -> no bloom evidence: send EVERYTHING to the
-            # exact check (claiming definitely-new without a bitmap could
-            # re-enqueue a seen URL)
-            return candidates.limit(0), candidates, None
-        m, k = self.m, self.k
-        out_schema = StructType(
-            list(candidates.schema.fields) + [StructField("_maybe", BooleanType())]
-        )
-
-        def check(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
-            left = left.drop(columns=["_shard"])
-            if left.empty:
-                return left.assign(_maybe=pd.Series([], dtype=bool))
-            if right.empty:  # shard never inserted into -> definitely new
-                return left.assign(_maybe=False)
-            bits = np.frombuffer(right["bits"].iloc[0], dtype=np.uint64)
-            return left.assign(
-                _maybe=_maybe_in_bitmap(left["url_hash"].to_numpy(), bits, m, k)
-            )
-
-        tagged = (
-            candidates.withColumn("_shard", self._shard_col())
-            .groupby("_shard")
-            .cogroup(self.store.read(self.TABLE).groupby("shard"))
-            .applyInPandas(check, out_schema)
-        )
-        if materialize is not None:
-            tagged = materialize(tagged)
-        return (
-            tagged.filter(~F.col("_maybe")).drop("_maybe"),
-            tagged.filter(F.col("_maybe")).drop("_maybe"),
-            None,
-        )

@@ -892,71 +892,6 @@ def f23_sitemap_index(spark, sf_dir):
 
 
 @q(
-    "c16_cuckoo_dist_deletes",
-    # invariant oracle (the a10/c2 pattern): the distributed cuckoo's
-    # structural guarantees are engine-side booleans SQL can state as
-    # constants — (a) NO false negatives: every surviving inserted key
-    # still reads "maybe" after the deletes; (b) deletes restore
-    # negatives: deleted keys read "definitely new" again, up to the
-    # 16-bit-fingerprint FP band (2 buckets x 4 slots / 65536 per probed
-    # slot; <=5 of 200 is >40x the expectation); (c) fresh keys pass the
-    # filter within the same band
-    """SELECT 'survivors_all_maybe' AS probe, CAST(1 AS BOOLEAN) AS ok
-       UNION ALL SELECT 'deleted_fp_in_band', CAST(1 AS BOOLEAN)
-       UNION ALL SELECT 'fresh_fp_in_band', CAST(1 AS BOOLEAN)""",
-)
-def c16_cuckoo_dist_deletes(spark, sf_dir):
-    """DistributedCuckoo on real store bytes: insert 400 keys, DELETE 200
-    of them through the per-shard no-rebuild path (the MoR takedown
-    sync bloom cannot do), then grade the prefilter's split on
-    survivors / deleted / fresh keys.  Shard tables live in a TableStore
-    table; nothing filter-sized ever touches the driver."""
-    import hashlib
-    import shutil
-    import tempfile
-
-    from .cuckoo import DistributedCuckoo
-    from .storage import TableStore
-
-    key = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    root = os.path.join(tempfile.gettempdir(), f"spider_spark_c16_store_{key}")
-    shutil.rmtree(root, ignore_errors=True)
-    store = TableStore(spark, root)
-    dc = DistributedCuckoo(spark, store, n_shards=8, buckets_per_shard=1 << 11)
-
-    ids = _t(spark, sf_dir, "documents").filter(F.col("doc_id") < 400).select(
-        F.col("doc_id").cast("long").alias("doc_id")
-    )
-    inserted = ids.select(
-        "doc_id", F.xxhash64(F.concat(F.lit("cuckoo:"), F.col("doc_id"))).alias("url_hash")
-    )
-    dc.update_from_df(spark, inserted)
-    dc.delete_from_df(inserted.filter(F.col("doc_id") < 200))
-
-    survivors = inserted.filter(F.col("doc_id") >= 200)
-    deleted = inserted.filter(F.col("doc_id") < 200)
-    fresh = ids.filter(F.col("doc_id") < 200).select(
-        F.xxhash64(F.concat(F.lit("fresh:"), F.col("doc_id"))).alias("url_hash")
-    )
-    cand = survivors.select("url_hash").unionByName(deleted.select("url_hash")).unionByName(fresh)
-    _, maybe, _ = dc.prefilter(cand)
-    maybe_set = maybe.select("url_hash").distinct()
-
-    n_surv = survivors.join(maybe_set, "url_hash").count()
-    n_del_maybe = deleted.join(maybe_set, "url_hash").count()
-    n_fresh_maybe = fresh.join(maybe_set, "url_hash").count()
-    n_surv_total = survivors.count()
-    return spark.createDataFrame(
-        [
-            ("survivors_all_maybe", n_surv == n_surv_total),
-            ("deleted_fp_in_band", n_del_maybe <= 5),
-            ("fresh_fp_in_band", n_fresh_maybe <= 5),
-        ],
-        "probe string, ok boolean",
-    )
-
-
-@q(
     "c17_foreign_sink_upsert",
     # first-wins keyed upsert is exactly GROUP BY key + MIN(payload):
     # the sink's job-level dedup picks the payload-minimal representative

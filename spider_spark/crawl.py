@@ -28,39 +28,11 @@ class Crawler:
         self.store = TableStore(spark, workdir)
         self.bloom = self._make_filter()
 
-    def _make_filter(self):
-        """Seen-prefilter per config: bloom (default), cuckoo, or
-        bloom-dist (store-backed shards for filters too big for the
-        driver/broadcast).  All expose update_from_df; the filter only
-        changes WHICH candidates skip the exact anti-join, never the
-        result."""
+    def _make_filter(self) -> ShardedBloom | None:
+        """The seen-prefilter: it only changes WHICH candidates skip the
+        exact anti-join, never the result."""
         if not self.cfg.use_bloom:
             return None
-        if self.cfg.filter_kind == "cuckoo":
-            from .cuckoo import ShardedCuckoo
-
-            return ShardedCuckoo(self.cfg.cuckoo_buckets)
-        if self.cfg.filter_kind == "cuckoo-dist":
-            from .cuckoo import DistributedCuckoo
-
-            # capacity provisioned for the key budget (cuckoo_dist_buckets,
-            # the bloom_bits analog), split across shards — NOT the
-            # driver-resident total: a dist cuckoo sized like the broadcast
-            # one saturates (95%+ fill) within a round at bench scale
-            per_shard = max(64, self.cfg.cuckoo_dist_buckets // self.cfg.bloom_shards)
-            return DistributedCuckoo(
-                self.spark, self.store, self.cfg.bloom_shards, per_shard
-            )
-        if self.cfg.filter_kind == "bloom-dist":
-            from .bloom import DistributedBloom
-
-            return DistributedBloom(
-                self.spark, self.store, self.cfg.bloom_shards, self.cfg.bloom_bits
-            )
-        if self.cfg.filter_kind != "bloom":
-            # an unknown kind silently falling back to bloom would let a
-            # benchmark run mislabeled (caught in r5's cuckoo-dist leg)
-            raise ValueError(f"unknown filter_kind: {self.cfg.filter_kind!r}")
         return ShardedBloom(self.cfg.bloom_shards, self.cfg.bloom_bits)
 
     # ------------------------------------------------------------ bootstrap
@@ -108,16 +80,13 @@ class Crawler:
     # ------------------------------------------------------------ resume
     def resume(self) -> int:
         """Roll back to the last committed manifest; rebuild the Bloom
-        side-structure from the (authoritative) seen table.  A persistent
-        filter (DistributedBloom) lives in a store table whose pointer
-        the rollback already restored — no rebuild."""
+        side-structure from the (authoritative) seen table."""
         rid = self.store.restore_last_committed()
         if rid is None:
             raise RuntimeError("nothing to resume: no committed rounds")
-        if self.cfg.use_bloom:
-            self.bloom = self._make_filter()
-            if not getattr(self.bloom, "persistent", False):
-                self.bloom.update_from_df(self.spark, self.store.read("seen"))
+        self.bloom = self._make_filter()
+        if self.bloom is not None:
+            self.bloom.update_from_df(self.spark, self.store.read("seen"))
         return rid
 
     # ------------------------------------------------------------ buckets

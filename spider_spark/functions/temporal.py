@@ -36,6 +36,7 @@ from pyspark.sql import functions as F
 _TS = "_asof_ts"
 _SIDE = "_asof_side"
 _RTS = "_asof_right_ts"
+_ROW = "_asof_right_row"
 
 
 def asof_join(
@@ -71,32 +72,42 @@ def asof_join(
         raise ValueError(f"direction must be 'backward' or 'forward', got {direction!r}")
 
     # side ordering makes the boundary inclusive: backward sorts right
-    # rows BEFORE left at equal ts (carry sees them), forward AFTER
+    # rows BEFORE left at equal ts (carry sees them), forward AFTER.
+    # Each right row travels as ONE struct (_ROW: its ts as _RTS, then
+    # right_cols), so a NULL right value is carried as part of its row,
+    # never stitched from another row; left rows (and right rows with a
+    # NULL ts, which match nothing) carry a NULL struct that ignorenulls
+    # skips.
     l_side = 1 if direction == "backward" else 0
-    out_cols = [c for c in left.columns]
-    l_tagged = left.withColumn(_TS, F.col(left_ts)).withColumn(_SIDE, F.lit(l_side))
-    for c in right_cols:
-        l_tagged = l_tagged.withColumn(c, F.lit(None).cast(right.schema[c].dataType))
-    l_tagged = l_tagged.withColumn(_RTS, F.lit(None).cast(right.schema[right_ts].dataType))
-
+    out_cols = list(left.columns)
+    row = F.when(
+        F.col(right_ts).isNotNull(),
+        F.struct(F.col(right_ts).alias(_RTS), *[F.col(c) for c in right_cols]),
+    )
     r_tagged = right.select(
-        F.col(on),
+        *[
+            F.col(on) if c == on else F.lit(None).cast(left.schema[c].dataType).alias(c)
+            for c in out_cols
+        ],
         F.col(right_ts).alias(_TS),
-        F.col(right_ts).alias(_RTS),
-        *[F.col(c) for c in right_cols],
-    ).withColumn(_SIDE, F.lit(1 - l_side))
-    for c in out_cols:
-        if c not in r_tagged.columns:
-            r_tagged = r_tagged.withColumn(c, F.lit(None).cast(left.schema[c].dataType))
-
-    unioned = l_tagged.unionByName(r_tagged.select(*l_tagged.columns))
+        F.lit(1 - l_side).alias(_SIDE),
+        row.alias(_ROW),
+    )
+    l_tagged = left.select(
+        *out_cols,
+        F.col(left_ts).alias(_TS),
+        F.lit(l_side).alias(_SIDE),
+        F.lit(None).cast(r_tagged.schema[_ROW].dataType).alias(_ROW),
+    )
+    unioned = l_tagged.unionByName(r_tagged)
 
     # Backward: right rows sort before left rows at equal timestamps and
     # last(ignorenulls) over the PRECEDING frame carries the newest
     # match; forward mirrors it — left first at equal ts,
-    # first(ignorenulls) over the FOLLOWING frame.  Trailing right_cols
-    # break ties among same-timestamp right rows deterministically.
-    base = Window.partitionBy(on).orderBy(_TS, _SIDE, *right_cols)
+    # first(ignorenulls) over the FOLLOWING frame.  The struct's trailing
+    # right_cols break ties among same-timestamp right rows
+    # deterministically.
+    base = Window.partitionBy(on).orderBy(_TS, _SIDE, _ROW)
     if direction == "backward":
         w = base.rowsBetween(Window.unboundedPreceding, Window.currentRow)
         carry = F.last
@@ -104,14 +115,12 @@ def asof_join(
         w = base.rowsBetween(Window.currentRow, Window.unboundedFollowing)
         carry = F.first
     carried = unioned.select(
-        *out_cols,
-        F.col(_SIDE),
-        *[carry(c, ignorenulls=True).over(w).alias(f"_m_{c}") for c in [_RTS, *right_cols]],
+        *out_cols, F.col(_SIDE), carry(_ROW, ignorenulls=True).over(w).alias(_ROW)
     )
     matched = carried.filter(F.col(_SIDE) == l_side).select(
         *out_cols,
-        F.col(f"_m_{_RTS}").alias("asof_matched_ts"),
-        *[F.col(f"_m_{c}").alias(c) for c in right_cols],
+        F.col(_ROW).getField(_RTS).alias("asof_matched_ts"),
+        *[F.col(_ROW).getField(c).alias(c) for c in right_cols],
     )
     if how == "inner":
         matched = matched.filter(F.col("asof_matched_ts").isNotNull())

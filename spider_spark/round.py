@@ -33,18 +33,6 @@ class CrawlConfig:
     use_bloom: bool = True
     bloom_shards: int = 16
     bloom_bits: int = 1 << 20
-    # seen-prefilter structure: "bloom" (OR-mergeable deltas — the scale
-    # default) or "cuckoo" (deletable, syncs with S9 delete-resolved)
-    filter_kind: str = "bloom"
-    cuckoo_buckets: int = 1 << 18
-    # capacity for the STORE-BACKED cuckoo ("cuckoo-dist"): total buckets
-    # across shards.  Sized like bloom_bits — for the key budget, not the
-    # driver heap (the dist form exists to be big).  A cuckoo past ~85%
-    # fill thrashes its kicking loop and saturated shards fail safe to
-    # "maybe"-everything, gutting the prefilter (measured r5: 1<<18 hit
-    # 95.6% fill + 4.1k drops on a 1M-key round wave).  1<<21 buckets =
-    # 8.4M slots / 16.8 MB — the bloom-dist footprint, 12% load at 1M.
-    cuckoo_dist_buckets: int = 1 << 21
     # link canonicalization happens inside the fetch stage (fetch.py) —
     # kept as a flag only to document the contract
     canonicalize_links: bool = True
@@ -125,7 +113,6 @@ def run_round(
     t0 = time.monotonic()
     if materialize is None:
         materialize = lambda name, df: df.cache()  # noqa: E731
-    round_pins: list[DataFrame] = []  # extra intermediates to unpersist
 
     elig = politeness.eligible_hosts(hosts_df, host_state_df, round_id)
     batch = frontier.dequeue(
@@ -189,21 +176,7 @@ def run_round(
     cand = politeness.robots_allowed(cand, hosts_df).cache()
     n_cand = cand.count()
 
-    from .cuckoo import DistributedCuckoo, ShardedCuckoo, cuckoo_prefilter
-
-    if isinstance(bloom, ShardedCuckoo):
-        definite_new, maybe_seen, bloom_bc = cuckoo_prefilter(spark, cand, bloom)
-    elif isinstance(bloom, (bloom_mod.DistributedBloom, DistributedCuckoo)):
-        # pin the tagged frame: both halves + the bucket-id collect below
-        # consume it, and the shard cogroup must run ONCE per round
-        def _pin_tagged(df):
-            df = materialize("_bloom_tagged", df)
-            round_pins.append(df)
-            return df
-
-        definite_new, maybe_seen, bloom_bc = bloom.prefilter(cand, materialize=_pin_tagged)
-    else:
-        definite_new, maybe_seen, bloom_bc = bloom_mod.bloom_prefilter(spark, cand, bloom)
+    definite_new, maybe_seen, bloom_bc = bloom_mod.bloom_prefilter(spark, cand, bloom)
     if seen_reader is not None and cfg.seen_buckets:
         # bucket-pruned exact check: collect the candidate buckets (a
         # bounded-size distinct over the post-Bloom survivors, reading
@@ -290,7 +263,7 @@ def run_round(
         "media_delta": media_delta,
         "host_updates": host_updates,
         "lineage": lineage,
-        "_cached": [cand, new_links] + round_pins,
+        "_cached": [cand, new_links],
         # round-scoped broadcasts: destroyed by the caller once the
         # round's actions complete (never-destroyed per-round broadcasts
         # leak driver+executor memory over a long crawl)

@@ -787,11 +787,10 @@ class TableStore:
         totals (footer counts as written; logically-deleted rows still
         count until compact materializes the delete), outstanding
         equality-delete segments, partition spec, and whether the
-        snapshot originated from stage_append (WAP lineage — ``staged``;
-        it may since have been published) plus which one the pointer
-        currently serves.  Metadata-only: JSON reads, zero
-        parquet I/O — the audit surface a takedown/compliance review
-        reads before touching data."""
+        snapshot is a staged or branch commit not yet published
+        (``staged``) plus which one the pointer currently serves.
+        Metadata-only: JSON reads, zero parquet I/O — the audit surface a
+        takedown/compliance review reads before touching data."""
         out = []
         try:
             versions = sorted(
@@ -965,6 +964,19 @@ class TableStore:
         )
         return v
 
+    def _mark_published(self, table: str, version: str) -> str | None:
+        """Drop ``parent`` from a manifest the pointer has exposed: it is
+        an ordinary snapshot now, so ``rollback`` may target it and
+        ``history`` no longer reports it as staged.  Runs AFTER the
+        pointer flip, so a crash in between can only leave the marker on
+        an exposed snapshot, never strip it from an unpublished one.
+        Returns the dropped parent."""
+        man = self._manifest(table, version)
+        parent = man.pop("parent", None)
+        if parent is not None:
+            self._write_manifest(table, version, man)
+        return parent
+
     def publish(self, table: str, version: str) -> str:
         """Write-audit-publish, step 2: atomically expose a staged
         snapshot.  CAS on the staged snapshot's parent — if any writer
@@ -981,6 +993,7 @@ class TableStore:
                 f"table is at {cur} — re-stage on the current snapshot"
             )
         self._set_pointer(table, version)
+        self._mark_published(table, version)
         return version
 
     def rollback(self, table: str, version: str | None = None, round_id: int | None = None) -> str:
@@ -1185,6 +1198,11 @@ class TableStore:
                 f"table is at {cur} — re-branch from the current snapshot"
             )
         self._set_pointer(table, r["version"])
+        # every branch commit since the fork (that expiry kept) is now
+        # main-table lineage
+        v = r["version"]
+        while v not in (None, r["base"]) and os.path.exists(self._mpath(table, v)):
+            v = self._mark_published(table, v)
         self._write_ref(
             table, name, {"kind": "branch", "version": r["version"], "base": r["version"]}
         )

@@ -59,7 +59,7 @@ def test_driver_budget_fails_fast():
     import pytest
 
     t0 = time.monotonic()
-    with pytest.raises(ValueError, match="DistributedBloom"):
+    with pytest.raises(ValueError, match="use_bloom=False"):
         ShardedBloom(n_shards=4096, bits_per_shard=1 << 25)
     assert time.monotonic() - t0 < 1.0
     # an explicit budget raise is honored
@@ -68,44 +68,30 @@ def test_driver_budget_fails_fast():
     assert b.nbytes <= 1 << 20
 
 
-def test_distributed_bloom_matches_broadcast(spark, tmp_path):
-    """Store-backed cogrouped membership == driver-broadcast membership
-    for identical inserts (same hash family, same bit layout)."""
-    from spider_spark.bloom import DistributedBloom
-    from spider_spark.storage import TableStore
+def test_crawl_identical_with_and_without_bloom(spark, tmp_path):
+    """The seen-prefilter is an optimization only: the final seen set and
+    frontier states must be IDENTICAL with the Bloom on and off (the
+    invariant that makes false positives harmless)."""
+    from spider_spark import synth
+    from spider_spark.crawl import Crawler
+    from spider_spark.round import CrawlConfig
 
-    seen = spark.createDataFrame([(i * 7919,) for i in range(200)], "url_hash long")
-    cand = spark.createDataFrame([(i * 7919,) for i in range(150, 350)], "url_hash long")
-    sb = ShardedBloom(n_shards=8, bits_per_shard=1 << 12, n_hashes=3)
-    sb.update_from_df(spark, seen)
-    db = DistributedBloom(spark, TableStore(spark, str(tmp_path)),
-                          n_shards=8, bits_per_shard=1 << 12, n_hashes=3)
-    db.update_from_df(spark, seen)
-
-    dn_b, ms_b, bc = bloom_prefilter(spark, cand, sb)
-    dn_d, ms_d, _ = db.prefilter(cand)
-    assert {r["url_hash"] for r in dn_b.collect()} == {r["url_hash"] for r in dn_d.collect()}
-    assert {r["url_hash"] for r in ms_b.collect()} == {r["url_hash"] for r in ms_d.collect()}
-    if bc is not None:
-        bc.destroy()
-
-
-def test_distributed_bloom_incremental_or_merge(spark, tmp_path):
-    """Second update OR-merges into existing shard rows: earlier inserts
-    stay present, the shards table keeps one row per touched shard."""
-    from spider_spark.bloom import DistributedBloom
-    from spider_spark.storage import TableStore
-
-    store = TableStore(spark, str(tmp_path))
-    db = DistributedBloom(spark, store, n_shards=8, bits_per_shard=1 << 12, n_hashes=3)
-    first = spark.createDataFrame([(i * 104729,) for i in range(100)], "url_hash long")
-    second = spark.createDataFrame([(i * 104729,) for i in range(100, 200)], "url_hash long")
-    db.update_from_df(spark, first)
-    db.update_from_df(spark, second)
-
-    both = first.union(second)
-    _dn, ms, _ = db.prefilter(both)
-    # no false negatives across the merge: every inserted key reads maybe
-    assert ms.count() == 200
-    rows = store.read(db.TABLE).collect()
-    assert len(rows) == len({r["shard"] for r in rows})  # unique shard rows
+    n_hosts, page_space = 10, 200
+    outs = {}
+    for kind, use in (("none", False), ("bloom", True)):
+        cfg = CrawlConfig(
+            n_hosts=n_hosts, page_space=page_space, max_retries=2,
+            fetch_partitions=4, use_bloom=use, bloom_shards=4,
+            bloom_bits=1 << 14,
+        )
+        c = Crawler(spark, str(tmp_path / kind), cfg)
+        c.bootstrap(
+            synth.seed_list(spark, 40, n_hosts, page_space),
+            synth.hosts_config(spark, n_hosts),
+        )
+        c.run_rounds(2, expire_keep=10)
+        outs[kind] = (
+            c.seen_urls(),
+            {(r["url"], r["state"]) for r in c.frontier_df().collect()},
+        )
+    assert outs["none"] == outs["bloom"]

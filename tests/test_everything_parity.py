@@ -1,15 +1,16 @@
 """Everything-on integration parity: every engine feature that could
 plausibly perturb crawl semantics, enabled SIMULTANEOUSLY in one crawl —
-hot-host skew seeds, a global dequeue cap, the store-backed
-DistributedBloom seen-filter, bucketed seen+media manifests, the media
-sink, raw-body retention, proxy affinity, and a mid-crawl robots refresh
-— must still reproduce the reference simulator's crawl order, seen set,
-and frontier states exactly.
+hot-host skew seeds, a global dequeue cap, the Bloom seen-filter,
+bucketed seen+media manifests, the media sink, raw-body retention,
+proxy affinity, and a mid-crawl robots refresh — must still reproduce
+the reference simulator's crawl order, seen set, and frontier states
+exactly.
 
 Each feature is results-neutral by its own test (test_bucketing,
-test_cuckoo, test_skew, test_crawl_parity); this gate catches
+test_bloom, test_skew, test_crawl_parity); this gate catches
 INTERACTIONS between them (e.g. a bucketed anti-join consuming the
-bloom-dist tagged frame, under a refresh that strands queued rows).
+Bloom prefilter's maybe-seen half, under a refresh that strands queued
+rows).
 """
 
 from __future__ import annotations
@@ -37,7 +38,6 @@ def everything_crawl(spark, tmp_path_factory):
         fetch_partitions=4,
         salt=4,
         use_bloom=True,
-        filter_kind="bloom-dist",
         bloom_shards=4,
         bloom_bits=1 << 16,
         keep_raw_body=True,
@@ -62,7 +62,7 @@ def everything_crawl(spark, tmp_path_factory):
     )
     crawler.update_hosts(refreshed)
     # mid-crawl seed batch through the REAL streaming path (file source +
-    # checkpoint + foreachBatch enqueue_seeds) — composed with bloom-dist,
+    # checkpoint + foreachBatch enqueue_seeds) — composed with the Bloom,
     # bucketed seen, and the robots refresh that just landed
     import json
 

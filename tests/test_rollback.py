@@ -2,8 +2,9 @@
 rollback analog): restoring an earlier snapshot is a NEW history-
 preserving commit that copies the target's members; rolled-past
 snapshots stay time-travelable; streaming txn watermarks ride the
-rollback (never rewind); staged targets are refused; incremental scans
-across the rollback boundary raise instead of answering wrong."""
+rollback (never rewind); staged targets are refused until published;
+incremental scans across the rollback boundary raise instead of
+answering wrong."""
 
 from __future__ import annotations
 
@@ -74,6 +75,27 @@ def test_rollback_refuses_staged_target_and_noops_on_current(spark, tmp_path):
     assert [h["version"] for h in store.history("t")] == [0, 1]
     with pytest.raises(ValueError, match="no snapshot"):
         store.rollback("t", version="v99999")
+
+
+def test_rollback_to_published_snapshots(spark, tmp_path):
+    """A published WAP snapshot and a fast-forwarded branch commit are
+    ordinary history: rollback may target them and history stops
+    reporting them as staged."""
+    store = TableStore(spark, str(tmp_path))
+    store.write("t", _mk(spark, 0, 3))
+    pub = store.publish("t", store.stage_append("t", _mk(spark, 3, 6)))
+    store.append("t", _mk(spark, 6, 9))
+    store.rollback("t", version=pub)
+    assert _ks(store.read("t")) == list(range(6))
+
+    store.create_branch("t", "audit")
+    mid = store.append_to_branch("t", "audit", _mk(spark, 10, 12))
+    store.append_to_branch("t", "audit", _mk(spark, 12, 14))
+    store.fast_forward("t", "audit")
+    store.append("t", _mk(spark, 20, 22))
+    store.rollback("t", version=mid)
+    assert _ks(store.read("t")) == list(range(6)) + [10, 11]
+    assert not any(h["staged"] for h in store.history("t"))
 
 
 def test_rollback_restores_mor_deleted_rows(spark, tmp_path):

@@ -84,6 +84,30 @@ def test_asof_join_left_keeps_unmatched(spark):
     assert unmatched == {t for t, m in _naive_asof().items() if m is None}
 
 
+def test_asof_join_keeps_null_right_values_of_the_matched_row(spark):
+    """A NULL right column belongs to the matched row: it must come back
+    NULL, never stitched from another right row's non-NULL value."""
+    left = spark.createDataFrame(
+        [("a", 25, "back"), ("a", 15, "fwd")], "key string, lts long, tag string"
+    )
+    right = spark.createDataFrame(
+        [("a", 10, "x", 1), ("a", 20, None, 2), ("a", 30, "z", None)],
+        "key string, rts long, rv string, rn long",
+    )
+
+    def run(direction):
+        return {
+            r["tag"]: (r["asof_matched_ts"], r["rv"], r["rn"])
+            for r in asof_join(
+                left, right, on="key", left_ts="lts", right_ts="rts",
+                right_cols=["rv", "rn"], direction=direction,
+            ).collect()
+        }
+
+    assert run("backward") == {"back": (20, None, 2), "fwd": (10, "x", 1)}
+    assert run("forward") == {"back": (30, "z", None), "fwd": (20, None, 2)}
+
+
 def test_asof_join_rejects_column_clash(spark):
     left, right = _asof_frames(spark)
     with pytest.raises(ValueError, match="collide"):
