@@ -675,8 +675,12 @@ def _kcore_twin_sql(k: int = 3, rounds: int = 6) -> str:
     recounts degrees among the previous round's survivors and keeps
     >= k.  ``rounds`` exceeds the measured peel depth at every SF (5 at
     sf0.1 including the final no-op), so the last alive set IS the
-    fixpoint — and the Spark side independently certifies convergence
-    (k_core raises if the fixpoint needs more rounds than its bound)."""
+    fixpoint — and the twin certifies it like the Spark side does
+    (k_core raises if the fixpoint needs more rounds than its bound):
+    when the last round still peeled a node, the query fails with
+    error() instead of returning a truncated core.  Each alive set is a
+    MATERIALIZED CTE: inlined, round r would re-plan round r-1 twice, and
+    the plan would grow as 2^rounds."""
     blocks = [
         "nn AS (SELECT COUNT(*) AS n FROM documents)",
         """e0 AS (
@@ -698,13 +702,17 @@ def _kcore_twin_sql(k: int = 3, rounds: int = 6) -> str:
                JOIN a{r - 1} x ON u.a = x.a
                JOIN a{r - 1} y ON u.b = y.a GROUP BY u.a)"""
         )
-        blocks.append(f"a{r} AS (SELECT a FROM d{r} WHERE c >= {k})")
+        blocks.append(f"a{r} AS MATERIALIZED (SELECT a FROM d{r} WHERE c >= {k})")
     return (
         "WITH " + ",\n       ".join(blocks) + f"""
        SELECT u.a AS node, CAST(COUNT(*) AS BIGINT) AS deg
        FROM ud u
        JOIN a{rounds} x ON u.a = x.a
        JOIN a{rounds} y ON u.b = y.a
+       WHERE (SELECT CASE WHEN (SELECT COUNT(*) FROM a{rounds})
+                               = (SELECT COUNT(*) FROM a{rounds - 1}) THEN TRUE
+                          ELSE error('g8 twin: no k-core fixpoint within {rounds} peel rounds')
+                     END)
        GROUP BY u.a"""
     )
 
@@ -714,9 +722,9 @@ def _kcore_twin_sql(k: int = 3, rounds: int = 6) -> str:
     # 3-core of the g2 skewed graph (dst = id^2+13 / id^3+29 mod N —
     # varied degrees, so peeling genuinely cascades: 3 rounds at
     # sf0.001/0.01, 5 at sf0.1) — the twin unrolls 6 synchronized peel
-    # rounds, past the fixpoint at every SF, while the Spark side
-    # CERTIFIES convergence (k_core raises otherwise), so both compute
-    # the true k-core, not a truncation
+    # rounds, past the fixpoint at every SF, and both sides CERTIFY
+    # convergence (k_core raises, the twin calls error() otherwise), so
+    # both compute the true k-core, not a truncation
     _kcore_twin_sql(),
 )
 def g8_kcore(spark, sf_dir):

@@ -14,15 +14,18 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from . import canon, politeness
+from . import canon, frontier, politeness
 from .bloom import ShardedBloom
-from .round import CrawlConfig, RoundResult, run_round
-from .schemas import FRONTIER, HOST_STATE, LINEAGE, SEEN
+from .round import CrawlConfig, RoundResult, run_round, seen_rows
+from .schemas import FRONTIER, HOST_STATE, LINEAGE
 from .storage import TableStore
 
 
 class Crawler:
     def __init__(self, spark: SparkSession, workdir: str, cfg: CrawlConfig):
+        for name in ("seen_buckets", "media_buckets"):
+            if getattr(cfg, name) < 1:
+                raise ValueError(f"CrawlConfig.{name} must be >= 1, got {getattr(cfg, name)}")
         self.spark = spark
         self.cfg = cfg
         self.store = TableStore(spark, workdir)
@@ -35,10 +38,11 @@ class Crawler:
             return None
         return ShardedBloom(self.cfg.bloom_shards, self.cfg.bloom_bits)
 
-    # ------------------------------------------------------------ bootstrap
-    def bootstrap(self, seeds: DataFrame, hosts: DataFrame) -> None:
-        """Seed list -> round-0 frontier; seeds are canonicalized, robots-
-        filtered, deduped (first-wins on lowest priority)."""
+    # ------------------------------------------------------------ admission
+    def _canonical_seeds(self, seeds: DataFrame, hosts: DataFrame) -> DataFrame:
+        """(url, priority) rows -> canonical, robots-allowed depth-0 rows
+        (url, url_hash, host, priority, depth), one per URL with its
+        lowest priority.  The prelude of every admission path."""
         s = seeds.select(
             canon.canonicalize_udf(F.col("url")).alias("url"), F.col("priority").cast("int")
         )
@@ -48,19 +52,49 @@ class Crawler:
             canon.url_hash_col(F.col("url")).alias("url_hash"),
             canon.host_col(F.col("url")).alias("host"),
             "priority",
-        )
-        s = politeness.robots_allowed(s, hosts)
-        frontier0 = s.select(
-            "url",
-            "url_hash",
-            "host",
-            "priority",
             F.lit(0).alias("depth"),
-            F.lit("pending").alias("state"),
-            F.lit(0).alias("retry_count"),
-            F.lit(0).cast("long").alias("next_fetch_time"),
-            F.lit(0).cast("long").alias("discovered_round"),
-        ).select([f.name for f in FRONTIER.fields])
+        )
+        return politeness.robots_allowed(s, hosts)
+
+    def _admit(self, seeds: DataFrame, next_fetch_time: int, round_id: int, what: str) -> int:
+        """Admit the ``_canonical_seeds`` rows not yet in seen: MERGE them
+        into the frontier as pending rows, append them to seen, add them
+        to the Bloom, and commit ``round_id`` with ``{what: n}`` so they
+        survive resume().  Returns n, the number of new URLs."""
+        new = seeds.join(
+            self.store.read("seen").select("url_hash"), "url_hash", "left_anti"
+        ).cache()
+        n_new = new.count()
+        if n_new:
+            self._merge_frontier(frontier.pending_rows(new, next_fetch_time, round_id))
+            self.store.append("seen", seen_rows(new, self.cfg))
+            if self.bloom is not None:
+                self.bloom.update_from_df(self.spark, new.select("url_hash"))
+            self.store.commit_round(round_id, extra={what: n_new})
+        new.unpersist()
+        return n_new
+
+    def _merge_frontier(self, rows: DataFrame) -> str:
+        """MERGE frontier rows by url_hash (single-writer; an atomic
+        snapshot flip).  Terminal partitions are immutable: fetched/dead
+        rows are never re-dequeued, so the merge reads and rewrites ONLY
+        the live pending/retry partitions and carries the terminal members
+        forward by manifest reference — per-round cost stays O(live), not
+        O(all-ever-crawled)."""
+        return self.store.merge_upsert(
+            "frontier", rows, key="url_hash", partition_by=["state"],
+            immutable_partitions=["fetched", "dead"],
+        )
+
+    def _seen_reader(self, bucket_values) -> DataFrame:
+        """Manifest-pruned seen scan for the round's exact anti-join."""
+        return self.store.read_partitions("seen", bucket_values)
+
+    # ------------------------------------------------------------ bootstrap
+    def bootstrap(self, seeds: DataFrame, hosts: DataFrame) -> None:
+        """Seed list -> round-0 frontier; seeds are canonicalized, robots-
+        filtered, deduped (first-wins on lowest priority)."""
+        frontier0 = frontier.pending_rows(self._canonical_seeds(seeds, hosts), 0, 0)
         # frontier is partitioned by state (Iceberg partition-spec analog):
         # the dequeue scan of pending/retry rows prunes terminal files
         self.store.write(
@@ -68,8 +102,7 @@ class Crawler:
             self.spark.createDataFrame([], FRONTIER).unionByName(frontier0),
             partition_by=["state"],
         )
-        self.store.write("seen", self._with_seen_bucket(frontier0.select("url_hash", "url")),
-                         partition_by=["seen_bucket"] if self.cfg.seen_buckets else None)
+        self.store.write("seen", seen_rows(frontier0, self.cfg), partition_by=["seen_bucket"])
         self.store.write("hosts", hosts)
         self.store.write("host_state", self.spark.createDataFrame([], HOST_STATE))
         self.store.write("lineage", self.spark.createDataFrame([], LINEAGE))
@@ -88,18 +121,6 @@ class Crawler:
         if self.bloom is not None:
             self.bloom.update_from_df(self.spark, self.store.read("seen"))
         return rid
-
-    # ------------------------------------------------------------ buckets
-    def _with_seen_bucket(self, df: DataFrame) -> DataFrame:
-        if not self.cfg.seen_buckets:
-            return df
-        return df.withColumn(
-            "seen_bucket", canon.bucket_col(F.col("url_hash"), self.cfg.seen_buckets)
-        )
-
-    def _seen_reader(self, bucket_values) -> DataFrame:
-        """Manifest-pruned seen scan for the round's exact anti-join."""
-        return self.store.read_partitions("seen", bucket_values)
 
     # ------------------------------------------------------------ rounds
     def _materialize(self, name: str, df: DataFrame) -> DataFrame:
@@ -121,91 +142,72 @@ class Crawler:
                 self.cfg,
                 r,
                 self.store.read("frontier"),
-                self.store.read("seen"),
                 hosts_df,
                 self.store.read("host_state") if self.store.exists("host_state") else None,
                 self.bloom,
-                record_order=record_order,
                 materialize=self._materialize,
-                seen_reader=self._seen_reader if self.cfg.seen_buckets else None,
+                seen_reader=self._seen_reader,
+                record_order=record_order,
             )
-            if res.dequeued == 0:
-                # empty round: advance the clock (retry rows may be backed
-                # off into the future); stop only when the frontier is
-                # truly drained.
-                for df in out["_cached"]:
-                    df.unpersist()
-                for b in out.get("_broadcasts", []):
-                    b.destroy()
-                remaining = (
-                    self.store.read("frontier")
-                    .filter(F.col("state").isin("pending", "retry"))
-                    .count()
-                )
-                if remaining == 0:
-                    break
-                self.store.commit_round(r)
-                continue
-            # MERGE-back (single-writer; each write is an atomic snapshot
-            # flip).  Terminal frontier partitions are immutable: fetched/
-            # dead rows are never re-dequeued, so the merge reads and
-            # rewrites ONLY the live pending/retry partitions and carries
-            # the terminal members forward by manifest reference —
-            # per-round cost stays O(live), not O(all-ever-crawled).
-            self.store.merge_upsert(
-                "frontier",
-                out["frontier_updates"],
-                key="url_hash",
-                partition_by=["state"],
-                immutable_partitions=["fetched", "dead"],
-            )
-            self.store.append("seen", out["seen_delta"])
-            # documents partitioned by fetch_round: each round's append is
-            # one partition member, so an incremental consumer (export of
-            # rounds k..k+n for a training-data pipeline) opens only those
-            # members — manifest-level pruning, no full-table scan
-            self.store.append("documents", out["documents"], partition_by=["fetch_round"])
-            if out.get("media_delta") is not None:
-                # S13 dup-key skip (db_config.py:46-54): first sighting of
-                # a media_ref wins; later rounds' repeats are dropped by
-                # the anti-join, and the append writes only the new rows
-                delta = out["media_delta"]
-                if self.store.exists("media"):
-                    if self.cfg.media_buckets:
-                        # bucket-pruned dup-skip: only the media buckets
-                        # this round's refs hash into are opened
+            # the round's cached frames and broadcasts are released
+            # however the round ends: empty, drained, or a store write
+            # raising (ConcurrentCommitError, a schema ValueError)
+            try:
+                if res.dequeued == 0:
+                    # empty round: advance the clock (retry rows may be
+                    # backed off into the future); stop only when the
+                    # frontier is truly drained.
+                    remaining = (
+                        self.store.read("frontier")
+                        .filter(F.col("state").isin("pending", "retry"))
+                        .count()
+                    )
+                    if remaining == 0:
+                        break
+                    self.store.commit_round(r)
+                    continue
+                self._merge_frontier(out["frontier_updates"])
+                self.store.append("seen", out["seen_delta"])
+                # documents partitioned by fetch_round: each round's append
+                # is one partition member, so an incremental consumer
+                # (export of rounds k..k+n for a training-data pipeline)
+                # opens only those members — manifest-level pruning, no
+                # full-table scan
+                self.store.append("documents", out["documents"], partition_by=["fetch_round"])
+                if out["media_delta"] is not None:
+                    # S13 dup-key skip (db_config.py:46-54): first sighting
+                    # of a media_ref wins; later rounds' repeats are dropped
+                    # by a bucket-pruned anti-join (only the media buckets
+                    # this round's refs hash into are opened), and the
+                    # append writes only the new rows
+                    delta = out["media_delta"]
+                    if self.store.exists("media"):
                         cand_b = [
                             r["media_bucket"]
                             for r in delta.select("media_bucket").distinct().collect()
                         ]
                         prior = self.store.read_partitions("media", cand_b)
-                    else:
-                        prior = self.store.read("media")
-                    delta = delta.join(
-                        prior.select("media_ref"), "media_ref", "left_anti"
-                    )
-                self.store.append(
-                    "media", delta,
-                    partition_by=["media_bucket"] if self.cfg.media_buckets else None,
-                )
-            self.store.merge_upsert("host_state", out["host_updates"], key="host")
-            self.store.append("lineage", out["lineage"])
-            if self.bloom is not None and res.new_urls:
-                self.bloom.update_from_df(self.spark, out["seen_delta"])
-            self.store.commit_round(r)
-            self.store.expire_snapshots(keep=expire_keep)
-            # small-file maintenance (Iceberg rewrite_data_files analog):
-            # delta appends add one segment per round; compact the worst
-            # table slice once it crosses the member threshold.  No-op
-            # most rounds, amortized O(table/threshold).
-            for t in ("seen", "documents", "lineage", "frontier"):
-                if self.store.exists(t):
-                    self.store.compact(t, max_members=32)
-            for df in out["_cached"]:
-                df.unpersist()
-            for b in out.get("_broadcasts", []):
-                b.destroy()
-            results.append(res)
+                        delta = delta.join(prior.select("media_ref"), "media_ref", "left_anti")
+                    self.store.append("media", delta, partition_by=["media_bucket"])
+                self.store.merge_upsert("host_state", out["host_updates"], key="host")
+                self.store.append("lineage", out["lineage"])
+                if self.bloom is not None and res.new_urls:
+                    self.bloom.update_from_df(self.spark, out["seen_delta"])
+                self.store.commit_round(r)
+                self.store.expire_snapshots(keep=expire_keep)
+                # small-file maintenance (Iceberg rewrite_data_files
+                # analog): delta appends add one segment per round; compact
+                # the worst table slice once it crosses the member
+                # threshold.  No-op most rounds, amortized O(table/threshold).
+                for t in ("seen", "documents", "lineage", "frontier"):
+                    if self.store.exists(t):
+                        self.store.compact(t, max_members=32)
+                results.append(res)
+            finally:
+                for df in out["_cached"]:
+                    df.unpersist()
+                for b in out["_broadcasts"]:
+                    b.destroy()
         hosts_df.unpersist()
         return results
 
@@ -240,47 +242,9 @@ class Crawler:
         (next_fetch_time = r+1) but with depth 0 and caller-given
         priority, robots-filtered against the live hosts table.
         Returns the number of genuinely new URLs."""
-        s = seeds.select(
-            canon.canonicalize_udf(F.col("url")).alias("url"),
-            F.col("priority").cast("int"),
-        )
-        s = s.groupBy("url").agg(F.min("priority").alias("priority"))
-        s = s.select(
-            "url",
-            canon.url_hash_col(F.col("url")).alias("url_hash"),
-            canon.host_col(F.col("url")).alias("host"),
-            "priority",
-        )
-        s = politeness.robots_allowed(s, self.store.read("hosts"))
-        new = s.join(
-            self.store.read("seen").select("url_hash"), "url_hash", "left_anti"
-        ).cache()
-        n_new = new.count()
-        if n_new:
-            rid = self.store.last_committed_round() or 0
-            rows = new.select(
-                "url",
-                "url_hash",
-                "host",
-                "priority",
-                F.lit(0).alias("depth"),
-                F.lit("pending").alias("state"),
-                F.lit(0).alias("retry_count"),
-                F.lit(rid + 1).cast("long").alias("next_fetch_time"),
-                F.lit(rid).cast("long").alias("discovered_round"),
-            ).select([f.name for f in FRONTIER.fields])
-            self.store.merge_upsert(
-                "frontier", rows, key="url_hash", partition_by=["state"],
-                immutable_partitions=["fetched", "dead"],
-            )
-            self.store.append(
-                "seen", self._with_seen_bucket(new.select("url_hash", "url"))
-            )
-            if self.bloom is not None:
-                self.bloom.update_from_df(self.spark, new.select("url_hash"))
-            self.store.commit_round(rid, extra={"seed_ingest": n_new})
-        new.unpersist()
-        return n_new
+        rid = self.store.last_committed_round() or 0
+        seeds = self._canonical_seeds(seeds, self.store.read("hosts"))
+        return self._admit(seeds, rid + 1, rid, "seed_ingest")
 
     # ------------------------------------------------------------ priority refresh
     def reprioritize_from_links(self, boost_cap: int = 3) -> str | None:
@@ -291,21 +255,13 @@ class Crawler:
         (pending rows stay pending, so the partition-level merge never
         sees a terminal key).  Mirrored by refsim.simulate(reprioritize=)
         at the start of the next round."""
-        from .frontier import link_indegree_priorities
-
         if not self.store.exists("documents"):
             return None
         pending = self.store.read("frontier").filter(F.col("state") == "pending")
-        updates = link_indegree_priorities(
+        updates = frontier.link_indegree_priorities(
             pending, self.store.read("documents"), boost_cap
         )
-        v = self.store.merge_upsert(
-            "frontier",
-            updates,
-            key="url_hash",
-            partition_by=["state"],
-            immutable_partitions=["fetched", "dead"],
-        )
+        v = self._merge_frontier(updates)
         # durability (ADVICE r4): without a re-commit, a crash before the
         # next round's commit_round reverts the refresh on resume() and the
         # replayed rounds diverge from a refsim run with reprioritize set —
@@ -321,44 +277,16 @@ class Crawler:
         URLs in the expected universe that were never seen — dropped by a
         crash, a blocked batch, an over-eager filter — are re-enqueued as
         pending.  One anti-join vs the seen table, MERGE-back, done; run
-        it every N rounds or after a resume.
+        it every N rounds or after a resume.  Robots-disallowed URLs are
+        dropped like on every admission path: dequeue would never release
+        them, so they would sit pending forever.
 
         Safe with the partition-level frontier merge: lost keys are by
         definition absent from seen ⊇ all frontier keys, so they can
         never reside in a terminal partition."""
-        exp = expected.select(canon.canonicalize_udf(F.col("url")).alias("url")).distinct()
-        exp = exp.select(
-            "url",
-            canon.url_hash_col(F.col("url")).alias("url_hash"),
-            canon.host_col(F.col("url")).alias("host"),
-        )
-        lost = exp.join(
-            self.store.read("seen").select("url_hash"), "url_hash", "left_anti"
-        ).cache()
-        n_lost = lost.count()
-        if n_lost:
-            rid = (self.store.last_committed_round() or 0) + 1
-            rows = lost.select(
-                "url",
-                "url_hash",
-                "host",
-                F.lit(priority).alias("priority"),
-                F.lit(0).alias("depth"),
-                F.lit("pending").alias("state"),
-                F.lit(0).alias("retry_count"),
-                F.lit(0).cast("long").alias("next_fetch_time"),
-                F.lit(rid).cast("long").alias("discovered_round"),
-            ).select([f.name for f in FRONTIER.fields])
-            self.store.merge_upsert(
-                "frontier", rows, key="url_hash", partition_by=["state"],
-                immutable_partitions=["fetched", "dead"],
-            )
-            self.store.append("seen", self._with_seen_bucket(lost.select("url_hash", "url")))
-            if self.bloom is not None:
-                self.bloom.update_from_df(self.spark, lost.select("url_hash"))
-            self.store.commit_round(rid, extra={"audit": n_lost})
-        lost.unpersist()
-        return n_lost
+        rid = (self.store.last_committed_round() or 0) + 1
+        exp = expected.select("url", F.lit(priority).alias("priority"))
+        return self._admit(self._canonical_seeds(exp, self.store.read("hosts")), 0, rid, "audit")
 
     # ------------------------------------------------------------ views
     def seen_urls(self) -> set[str]:

@@ -157,19 +157,22 @@ def link_indegree_priorities(
     return boosted.select(pending.columns)
 
 
-def new_frontier_rows(new_links: DataFrame, round_id: int) -> DataFrame:
-    """Discovered links -> pending frontier rows, fetchable next round.
+def pending_rows(df: DataFrame, next_fetch_time: int, discovered_round: int) -> DataFrame:
+    """(url, url_hash, host, priority, depth) rows -> pending frontier rows
+    in FRONTIER column order, fetchable from round ``next_fetch_time``.
 
-    Child priority == child depth (BFS-ish frontier: shallower pages
-    first, matching the reference's sweep-in-discovery-order)."""
-    return new_links.select(
+    Every admission path builds its rows here: bootstrap seeds (0, 0),
+    links discovered in round r (r+1, r; priority == depth, a BFS-ish
+    frontier: shallower pages first, matching the reference's
+    sweep-in-discovery-order), seed batches and audit re-enqueues."""
+    return df.select(
         "url",
         "url_hash",
         "host",
-        F.col("depth").cast("int").alias("priority"),
+        F.col("priority").cast("int").alias("priority"),
         F.col("depth").cast("int").alias("depth"),
         F.lit("pending").alias("state"),
         F.lit(0).alias("retry_count"),
-        F.lit(round_id + 1).cast("long").alias("next_fetch_time"),
-        F.lit(round_id).cast("long").alias("discovered_round"),
+        F.lit(next_fetch_time).cast("long").alias("next_fetch_time"),
+        F.lit(discovered_round).cast("long").alias("discovered_round"),
     )

@@ -12,14 +12,14 @@ DataFrame op.
 from __future__ import annotations
 
 import time
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from . import bloom as bloom_mod
 from . import canon, fetch, frontier, parse, politeness
-from .schemas import FRONTIER, LINEAGE
+from .schemas import LINEAGE
 
 
 @dataclass
@@ -33,9 +33,6 @@ class CrawlConfig:
     use_bloom: bool = True
     bloom_shards: int = 16
     bloom_bits: int = 1 << 20
-    # link canonicalization happens inside the fetch stage (fetch.py) —
-    # kept as a flag only to document the contract
-    canonicalize_links: bool = True
     # S14 raw-body retention: keep the response HTML on each document row
     # so parsers can re-run over old crawls (credit_person_web.py:234-249)
     keep_raw_body: bool = False
@@ -49,9 +46,10 @@ class CrawlConfig:
     write_media_table: bool = False
     # seen/media tables are bucketed by pmod(hash, N) so the per-round
     # exact dedup anti-joins read only candidate buckets (manifest-level
-    # pruning) instead of the whole ever-grown key set; 0 disables.
-    # At 10^10 URLs size so one bucket's parquet fits an executor scan
-    # (e.g. 4096 buckets ≈ 2.4M keys/bucket).
+    # pruning) instead of the whole ever-grown key set; each must be
+    # >= 1 (Crawler rejects anything else).  At 10^10 URLs size so one
+    # bucket's parquet fits an executor scan (e.g. 4096 buckets ≈ 2.4M
+    # keys/bucket).
     seen_buckets: int = 16
     media_buckets: int = 16
     # two-phase hot-host dequeue rank (frontier.dequeue rank_salt): the
@@ -66,7 +64,6 @@ class CrawlConfig:
     # downstream stage (span assembly, dedup, MERGE-back, resume) is
     # unchanged.  Parity gates (refsim) only apply to the simnet default.
     fetch_fn: object = None
-    extra: dict = field(default_factory=dict)
 
 
 @dataclass
@@ -81,39 +78,44 @@ class RoundResult:
     batch_urls: list[str] | None = None  # crawl-order parity (tests only)
 
 
+def seen_rows(df: DataFrame, cfg: CrawlConfig) -> DataFrame:
+    """Rows of ``df`` as seen-table rows (url_hash, url, seen_bucket)."""
+    return df.select(
+        "url_hash",
+        "url",
+        canon.bucket_col(F.col("url_hash"), cfg.seen_buckets).alias("seen_bucket"),
+    )
+
+
 def run_round(
     spark: SparkSession,
     cfg: CrawlConfig,
     round_id: int,
     frontier_df: DataFrame,
-    seen_df: DataFrame,
     hosts_df: DataFrame,
     host_state_df: DataFrame | None,
     bloom: bloom_mod.ShardedBloom | None,
+    *,
+    materialize,
+    seen_reader,
     record_order: bool = False,
-    materialize=None,
-    seen_reader=None,
 ) -> tuple[RoundResult, dict[str, DataFrame]]:
     """Pure-transform round: takes current table DataFrames, returns the
     round result + the updated DataFrames (caller persists via storage).
 
-    ``seen_reader(bucket_values) -> DataFrame``, when provided, returns
-    the seen slice restricted to those pmod(url_hash, cfg.seen_buckets)
-    buckets (storage.read_partitions) — the exact anti-join then opens
-    only the buckets its candidates hash into.  Without it, ``seen_df``
-    is scanned whole (correct, just O(all-ever-seen) per round).
+    ``seen_reader(bucket_values) -> DataFrame`` returns the seen slice
+    restricted to those pmod(url_hash, cfg.seen_buckets) buckets
+    (storage.read_partitions) — the exact anti-join opens only the
+    buckets its candidates hash into, never the whole ever-seen set.
 
     ``materialize(name, df) -> DataFrame`` pins an intermediate for reuse
-    across the round's several consumers.  The Crawler passes a
-    store-backed version (write parquet snapshot, read back — what Iceberg
-    MERGE pays anyway); the default is ``.cache()``, which is fine for
-    small tests but thrashes the JVM allocator on wide nested rows at
-    high core counts (measured: in-memory columnar caching of the fetch
-    results was 5-10x slower than a parquet round-trip at local[32])."""
+    across the round's several consumers.  The Crawler writes a parquet
+    snapshot and reads it back (what Iceberg MERGE pays anyway): an
+    in-memory ``.cache()`` thrashes the JVM allocator on wide nested rows
+    at high core counts (measured: in-memory columnar caching of the
+    fetch results was 5-10x slower than a parquet round-trip at
+    local[32])."""
     t0 = time.monotonic()
-    if materialize is None:
-        materialize = lambda name, df: df.cache()  # noqa: E731
-
     elig = politeness.eligible_hosts(hosts_df, host_state_df, round_id)
     batch = frontier.dequeue(
         frontier_df, elig, round_id, cfg.global_cap, hosts_df=hosts_df,
@@ -149,12 +151,10 @@ def run_round(
                 F.min("url").alias("source_url"),
                 F.lit(round_id).cast("long").alias("first_seen_round"),
             )
-        )
-        if cfg.media_buckets:
-            media_delta = media_delta.withColumn(
-                "media_bucket",
-                canon.bucket_col(F.xxhash64("media_ref"), cfg.media_buckets),
+            .withColumn(
+                "media_bucket", canon.bucket_col(F.xxhash64("media_ref"), cfg.media_buckets)
             )
+        )
 
     # ---- link extraction -> robots -> dedup vs seen.  Links come out of
     # the fetch stage ALREADY canonical (canon.canonicalize_series runs
@@ -177,35 +177,29 @@ def run_round(
     n_cand = cand.count()
 
     definite_new, maybe_seen, bloom_bc = bloom_mod.bloom_prefilter(spark, cand, bloom)
-    if seen_reader is not None and cfg.seen_buckets:
-        # bucket-pruned exact check: collect the candidate buckets (a
-        # bounded-size distinct over the post-Bloom survivors, reading
-        # only the cached cand) and open just those seen members.
-        # Correctness is unchanged — a bucket with no candidate hash
-        # cannot produce an anti-join match.
-        cand_buckets = [
-            r["b"]
-            for r in maybe_seen.select(
-                canon.bucket_col(F.col("url_hash"), cfg.seen_buckets).alias("b")
-            )
-            .distinct()
-            .collect()
-        ]
-        seen_scan = seen_reader(cand_buckets)
-    else:
-        seen_scan = seen_df
+    # bucket-pruned exact check: collect the candidate buckets (a
+    # bounded-size distinct over the post-Bloom survivors, reading only
+    # the cached cand) and open just those seen members — exact, since a
+    # bucket with no candidate hash cannot produce an anti-join match.
+    cand_buckets = [
+        r["b"]
+        for r in maybe_seen.select(
+            canon.bucket_col(F.col("url_hash"), cfg.seen_buckets).alias("b")
+        )
+        .distinct()
+        .collect()
+    ]
+    seen_scan = seen_reader(cand_buckets)
     checked_new = maybe_seen.join(seen_scan.select("url_hash"), "url_hash", "left_anti")
     new_links = definite_new.unionByName(checked_new).cache()
 
     # ---- MERGE-able outputs
     updates = frontier.state_updates(results, round_id, cfg.max_retries)
-    new_rows = frontier.new_frontier_rows(new_links, round_id)
-    frontier_updates = updates.unionByName(new_rows).select([f.name for f in FRONTIER.fields])
-    seen_delta = new_links.select("url_hash", "url")
-    if cfg.seen_buckets:
-        seen_delta = seen_delta.withColumn(
-            "seen_bucket", canon.bucket_col(F.col("url_hash"), cfg.seen_buckets)
-        )
+    new_rows = frontier.pending_rows(
+        new_links.withColumn("priority", F.col("depth")), round_id + 1, round_id
+    )
+    frontier_updates = updates.unionByName(new_rows)
+    seen_delta = seen_rows(new_links, cfg)
     host_updates = politeness.quarantine_updates(results, round_id)
 
     # ---- metrics (A1/A5 analog: per-batch valid/invalid counts ->

@@ -1458,6 +1458,53 @@ class TableStore:
                 self._clear_pointer(t)
         return rid
 
+    def _referenced(self, table: str, versions) -> set[str]:
+        """Data and delete-file paths the given manifests of ``table``
+        reference (a version whose manifest is gone references nothing)."""
+        referenced: set[str] = set()
+        for v in versions:
+            try:
+                man = self._manifest(table, v)
+            except FileNotFoundError:
+                continue
+            referenced.update(m["path"] for m in man["members"])
+            referenced.update(d["path"] for d in man.get("deletes") or [])
+        return referenced
+
+    def _sweep_unreferenced(
+        self, table: str, referenced: set[str], cutoff: float | None = None
+    ) -> list[str]:
+        """Delete every ``seg*`` directory of ``table`` that ``referenced``
+        does not name — for a partitioned segment, every unreferenced
+        partition subdirectory (merge carries live slices by reference),
+        then the segment once none is left.  With ``cutoff``, anything
+        modified after it is kept.  Returns the deleted paths (relative
+        to the table dir)."""
+        tdir = self._tdir(table)
+        removed: list[str] = []
+
+        def _sweep(rel: str) -> None:
+            path = os.path.join(tdir, rel)
+            if cutoff is not None and os.path.getmtime(path) > cutoff:
+                return  # possibly a commit in flight: keep
+            shutil.rmtree(path, ignore_errors=True)
+            removed.append(rel)
+
+        for seg in sorted(os.listdir(tdir)):
+            seg_path = os.path.join(tdir, seg)
+            if not seg.startswith("seg") or not os.path.isdir(seg_path) or seg in referenced:
+                continue
+            subdirs = [d for d in os.listdir(seg_path) if "=" in d]
+            if not subdirs:
+                _sweep(seg)
+                continue
+            for d in sorted(subdirs):
+                if f"{seg}/{d}" not in referenced:
+                    _sweep(f"{seg}/{d}")
+            if not any("=" in d for d in os.listdir(seg_path)):
+                shutil.rmtree(seg_path, ignore_errors=True)
+        return removed
+
     def remove_orphans(self, table: str, older_than_s: float = 0.0) -> list[str]:
         """Iceberg remove_orphan_files analog: delete segment data that NO
         manifest of ``table`` references — the debris of a crashed writer
@@ -1474,60 +1521,24 @@ class TableStore:
         Returns the deleted paths (relative to the table dir)."""
         import time
 
-        tdir = self._tdir(table)
         mdir = self._mdir(table)
-        if not os.path.isdir(tdir) or not os.path.isdir(mdir):
+        if not os.path.isdir(self._tdir(table)) or not os.path.isdir(mdir):
             return []
-        referenced: set[str] = set()
-        for f in os.listdir(mdir):
-            if not f.endswith(".json"):
-                continue
-            man = self._manifest(table, f[:-5])
-            for m in man["members"]:
-                referenced.add(m["path"])
-            for d in man.get("deletes") or []:
-                referenced.add(d["path"])
-        cutoff = time.time() - older_than_s
-        removed: list[str] = []
-
-        def _sweep(rel: str) -> None:
-            path = os.path.join(tdir, rel)
-            if os.path.getmtime(path) > cutoff:
-                return  # possibly a commit in flight: keep
-            shutil.rmtree(path, ignore_errors=True)
-            removed.append(rel)
-
-        for seg in sorted(os.listdir(tdir)):
-            seg_path = os.path.join(tdir, seg)
-            if not seg.startswith("seg") or not os.path.isdir(seg_path):
-                continue
-            if seg in referenced:
-                continue
-            subdirs = [d for d in os.listdir(seg_path) if "=" in d]
-            if not subdirs:
-                _sweep(seg)
-                continue
-            # partitioned segment: individual partition subdirs may be
-            # referenced (merge carries live slices by reference)
-            for d in sorted(subdirs):
-                if f"{seg}/{d}" not in referenced:
-                    _sweep(f"{seg}/{d}")
-            if not any("=" in d for d in os.listdir(seg_path)):
-                shutil.rmtree(seg_path, ignore_errors=True)
-        return removed
+        versions = [f[:-5] for f in os.listdir(mdir) if f.endswith(".json")]
+        return self._sweep_unreferenced(
+            table, self._referenced(table, versions), cutoff=time.time() - older_than_s
+        )
 
     def expire_snapshots(self, keep: int = 2) -> None:
         """Iceberg snapshot-expiry analog: drop all but the newest `keep`
         manifests of each table (never the current one), then delete any
         segment data no surviving manifest references."""
         for t in os.listdir(self.root):
-            tdir = self._tdir(t)
-            if t == "rounds" or not os.path.isdir(tdir) or not os.path.isdir(self._mdir(t)):
+            mdir = self._mdir(t)
+            if t == "rounds" or not os.path.isdir(self._tdir(t)) or not os.path.isdir(mdir):
                 continue
             cur = self.current_version(t)
-            versions = sorted(
-                f[:-5] for f in os.listdir(self._mdir(t)) if f.endswith(".json")
-            )
+            versions = sorted(f[:-5] for f in os.listdir(mdir) if f.endswith(".json"))
             kept = set(versions[-keep:])
             if cur:
                 kept.add(cur)
@@ -1537,34 +1548,11 @@ class TableStore:
                 kept.add(r["version"])
                 if "base" in r:
                     kept.add(r["base"])
-            referenced: set[str] = set()
-            for v in kept:
-                try:
-                    man = self._manifest(t, v)
-                    for m in man["members"]:
-                        referenced.add(m["path"])
-                    for d in man.get("deletes") or []:
-                        referenced.add(d["path"])
-                except FileNotFoundError:
-                    pass
+            referenced = self._referenced(t, kept)
             for v in versions:
                 if v not in kept:
                     try:
                         os.remove(self._mpath(t, v))
                     except FileNotFoundError:
                         pass
-            for seg in os.listdir(tdir):
-                seg_path = os.path.join(tdir, seg)
-                if not seg.startswith("seg") or not os.path.isdir(seg_path):
-                    continue
-                if seg in referenced:
-                    continue
-                subdirs = [d for d in os.listdir(seg_path) if "=" in d]
-                if not subdirs:
-                    shutil.rmtree(seg_path, ignore_errors=True)
-                    continue
-                for d in subdirs:
-                    if f"{seg}/{d}" not in referenced:
-                        shutil.rmtree(os.path.join(seg_path, d), ignore_errors=True)
-                if not any("=" in d for d in os.listdir(seg_path)):
-                    shutil.rmtree(seg_path, ignore_errors=True)
+            self._sweep_unreferenced(t, referenced)

@@ -28,8 +28,10 @@ def test_audit_lost_requeues_exactly_the_missing(spark, tmp_path):
         F.concat(F.lit("http://h0.example/p"), F.col("id").cast("string")).alias("url")
     )
     seen_before = c.seen_urls()
+    # h0 disallows the /p13 prefix (synth.hosts_config: every 7th host),
+    # so the audit must not re-enqueue p13 even though it was never seen
     manual_lost = {
-        f"http://h0.example/p{i}" for i in range(60)
+        f"http://h0.example/p{i}" for i in range(60) if not f"/p{i}".startswith("/p13")
     } - seen_before
     n = c.audit_lost(expected)
     assert n == len(manual_lost)
@@ -39,6 +41,22 @@ def test_audit_lost_requeues_exactly_the_missing(spark, tmp_path):
     assert manual_lost <= pend
     assert manual_lost <= c.seen_urls()
     assert c.audit_lost(expected) == 0
+
+
+def test_audit_lost_skips_robots_disallowed_after_drain(spark, tmp_path):
+    # a disallowed URL re-enqueued as pending is never released by
+    # frontier.dequeue, so a drained crawl would tick empty rounds forever
+    cfg = CrawlConfig(n_hosts=1, page_space=4, max_retries=0, fetch_partitions=2, use_bloom=False)
+    c = Crawler(spark, str(tmp_path), cfg)
+    c.bootstrap(synth.seed_list(spark, 1, 1, 4), synth.hosts_config(spark, 1))
+    c.run_rounds(10)
+    drained = c.store.last_committed_round()
+    assert c.frontier_df().filter(F.col("state").isin("pending", "retry")).count() == 0
+
+    disallowed = spark.createDataFrame([("http://h0.example/p13",)], ["url"])
+    assert c.audit_lost(disallowed) == 0
+    assert c.run_rounds(5) == []
+    assert c.store.last_committed_round() == drained
 
 
 def test_probe_and_live_pool_deterministic(spark):

@@ -6,6 +6,7 @@ exact-checked."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from spider_spark.storage import TableStore
@@ -59,7 +60,7 @@ def _run_crawl(spark, workdir, buckets):
 
 def test_bucketed_crawl_matches_unbucketed(spark, tmp_path):
     a = _run_crawl(spark, str(tmp_path / "bucketed"), buckets=4)
-    b = _run_crawl(spark, str(tmp_path / "flat"), buckets=0)
+    b = _run_crawl(spark, str(tmp_path / "flat"), buckets=1)
 
     assert a.seen_urls() == b.seen_urls()
     fa = {(r["url"], r["state"]) for r in a.frontier_df().collect()}
@@ -74,3 +75,13 @@ def test_bucketed_crawl_matches_unbucketed(spark, tmp_path):
     assert values <= {"0", "1", "2", "3"} and len(values) > 1
     mvalues = {m["value"] for m in a.store._manifest("media")["members"]}
     assert mvalues <= {"0", "1", "2", "3"}
+
+
+def test_bucket_counts_must_be_positive(spark, tmp_path):
+    from spider_spark.crawl import Crawler
+    from spider_spark.round import CrawlConfig
+
+    for field in ("seen_buckets", "media_buckets"):
+        for bad in (0, -1):
+            with pytest.raises(ValueError, match=field):
+                Crawler(spark, str(tmp_path), CrawlConfig(**{field: bad}))

@@ -43,3 +43,25 @@ def test_convergence_bound_raises(spark):
         _run(spark, path, 2, max_rounds=2)
     # with an adequate bound the 2-core of a path is empty
     assert _run(spark, path, 2, max_rounds=6) == {}
+
+
+def test_g8_twin_fails_loudly_short_of_the_fixpoint(spark, tmp_path):
+    # 400 doc ids: the g8 graph needs 4 peel rounds plus the certifying
+    # no-op, so the 6-round twin is value-exact against the Spark entry
+    # and a 4-round twin must raise instead of returning a truncation
+    import duckdb
+
+    import spider_spark.catalog  # noqa: F401  (registers the catalog in order)
+    from spider_spark.catalog_extra import _kcore_twin_sql, g8_kcore
+
+    spark.range(400).withColumnRenamed("id", "doc_id").write.parquet(
+        str(tmp_path / "documents.parquet")
+    )
+    con = duckdb.connect()
+    con.execute(
+        f"CREATE VIEW documents AS SELECT * FROM read_parquet('{tmp_path}/documents.parquet/*.parquet')"
+    )
+    twin = sorted(con.execute(_kcore_twin_sql()).fetchall())
+    assert twin and twin == sorted(tuple(r) for r in g8_kcore(spark, str(tmp_path)).collect())
+    with pytest.raises(duckdb.Error, match="fixpoint"):
+        con.execute(_kcore_twin_sql(rounds=4)).fetchall()
