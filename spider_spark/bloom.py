@@ -82,7 +82,6 @@ class ShardedBloom:
         self.m = bits_per_shard
         self.k = n_hashes
         self.shards = np.zeros((n_shards, bits_per_shard // 64), dtype=np.uint64)
-        self.count = 0
 
     @property
     def nbytes(self) -> int:
@@ -119,12 +118,10 @@ class ShardedBloom:
         )
         for r in rows:
             self.shards[r["shard"] % self.n_shards] |= np.frombuffer(r["bits"], dtype=np.uint64)
-        self.count += delta.count()
 
     def update_local(self, url_hash: np.ndarray) -> None:
         for sid, bits in self._delta_for(url_hash).items():
             self.shards[sid] |= bits
-        self.count += len(url_hash)
 
     # ------------------------------------------------------------- query
     def maybe_contains(self, url_hash: np.ndarray) -> np.ndarray:
@@ -141,32 +138,45 @@ class ShardedBloom:
 
 def bloom_prefilter(
     spark: SparkSession, candidates: DataFrame, bloom: ShardedBloom | None
-) -> tuple[DataFrame, DataFrame, object | None]:
+) -> tuple[DataFrame, DataFrame, DataFrame, object | None]:
     """Split candidates into (definitely_new, maybe_seen) on url_hash.
 
     definitely_new rows skip the exact anti-join; maybe_seen rows go to
     the exact check.  With bloom=None everything is maybe_seen.
 
-    Also returns the shard-bitmap Broadcast (or None): the caller MUST
-    destroy it once the round's actions are done — a fresh broadcast per
+    The membership test runs ONCE per candidate: ``tagged`` is the
+    candidates plus a boolean ``_maybe`` column (all-true with
+    bloom=None), cached, and both halves are filters over that cache.
+    Never filter on the pandas UDF itself: it is a deterministic function
+    of the join key, so constraint inference would copy the predicate onto
+    the other side of the url_hash anti-join and run Python over every
+    seen row of every opened bucket.
+
+    Returns (definitely_new, maybe_seen, tagged, broadcast-or-None).  The
+    caller MUST unpersist ``tagged`` and destroy the shard-bitmap
+    broadcast once the round's actions are done — a fresh broadcast per
     round that is never destroyed leaks driver+executor memory over a
     long crawl (ADVICE r1 #3)."""
-    if bloom is None:
-        return candidates.limit(0), candidates, None
-    bc = spark.sparkContext.broadcast(
-        {"shards": bloom.shards, "n": bloom.n_shards, "m": bloom.m, "k": bloom.k}
-    )
+    bc = None
+    maybe = F.lit(True)
+    if bloom is not None:
+        bc = spark.sparkContext.broadcast(
+            {"shards": bloom.shards, "n": bloom.n_shards, "m": bloom.m, "k": bloom.k}
+        )
 
-    @F.pandas_udf("boolean")
-    def maybe_udf(url_hash: pd.Series) -> pd.Series:
-        d = bc.value
-        b = ShardedBloom(d["n"], d["m"], d["k"])
-        b.shards = d["shards"]
-        return pd.Series(b.maybe_contains(url_hash.to_numpy()))
+        @F.pandas_udf("boolean")
+        def maybe_udf(url_hash: pd.Series) -> pd.Series:
+            d = bc.value
+            b = ShardedBloom(d["n"], d["m"], d["k"])
+            b.shards = d["shards"]
+            return pd.Series(b.maybe_contains(url_hash.to_numpy()))
 
-    tagged = candidates.withColumn("_maybe", maybe_udf(F.col("url_hash")))
+        maybe = maybe_udf(F.col("url_hash"))
+
+    tagged = candidates.withColumn("_maybe", maybe).cache()
     return (
         tagged.filter(~F.col("_maybe")).drop("_maybe"),
         tagged.filter(F.col("_maybe")).drop("_maybe"),
+        tagged,
         bc,
     )

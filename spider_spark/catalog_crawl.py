@@ -141,7 +141,7 @@ def c3_seen_filter_split(spark, sf_dir):
     # >50% full -> hundreds of FPs routed through the exact check
     b = bloom_mod.ShardedBloom(n_shards=4, bits_per_shard=1 << 10, n_hashes=2)
     b.update_from_df(spark, seen.select("url_hash"))
-    definite_new, maybe_seen, _bc = bloom_mod.bloom_prefilter(spark, cand, b)
+    definite_new, maybe_seen, _tagged, _bc = bloom_mod.bloom_prefilter(spark, cand, b)
     checked_new = maybe_seen.join(seen.select("url_hash"), "url_hash", "left_anti")
     return definite_new.unionByName(checked_new).select("url", "host")
 

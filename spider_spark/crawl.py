@@ -149,9 +149,10 @@ class Crawler:
                 seen_reader=self._seen_reader,
                 record_order=record_order,
             )
-            # the round's cached frames and broadcasts are released
-            # however the round ends: empty, drained, or a store write
-            # raising (ConcurrentCommitError, a schema ValueError)
+            # the round's cached frames (Bloom-tagged candidates, new
+            # links) and broadcasts are released however the round ends:
+            # empty, drained, or a store write raising
+            # (ConcurrentCommitError, a schema ValueError)
             try:
                 if res.dequeued == 0:
                     # empty round: advance the clock (retry rows may be

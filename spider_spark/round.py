@@ -1,4 +1,4 @@
-"""One crawl round == one DataFrame job (SURVEY.md §3.4).
+"""One crawl round: a pure DataFrame transform (SURVEY.md §3.4).
 
 dequeue (W1) → politeness gates (T2/T3) → salted repartition → fetch+parse
 (mapInPandas) → documents append → link extraction → canonicalize →
@@ -6,7 +6,13 @@ Bloom prefilter + exact seen anti-join (J5) → MERGE-back (frontier /
 seen / host_state / documents) → per-partition lineage rows (T1).
 
 The driver only sequences rounds; every data-touching step is a
-DataFrame op.
+DataFrame op.  A round is several Spark jobs, not one.  ``run_round``'s
+own actions are: the ``_round_results`` snapshot of the fetch stage
+(``materialize``); one grouped count over the Bloom-tagged candidates,
+which gives the candidate count and the seen buckets to open; the
+lineage collect; and the new-link count.  The caller's MERGE-back
+writes, Bloom update and commit run the rest (about 30 jobs per
+storage-inclusive round in all).
 """
 
 from __future__ import annotations
@@ -173,22 +179,26 @@ def run_round(
             "depth",
         )
     )
-    cand = politeness.robots_allowed(cand, hosts_df).cache()
-    n_cand = cand.count()
+    cand = politeness.robots_allowed(cand, hosts_df)
 
-    definite_new, maybe_seen, bloom_bc = bloom_mod.bloom_prefilter(spark, cand, bloom)
-    # bucket-pruned exact check: collect the candidate buckets (a
-    # bounded-size distinct over the post-Bloom survivors, reading only
-    # the cached cand) and open just those seen members — exact, since a
-    # bucket with no candidate hash cannot produce an anti-join match.
-    cand_buckets = [
-        r["b"]
-        for r in maybe_seen.select(
-            canon.bucket_col(F.col("url_hash"), cfg.seen_buckets).alias("b")
+    # Bloom tag once per candidate, cached (bloom_prefilter); ONE action
+    # over that cache gives both the candidate count and the buckets the
+    # exact check must open: rows tagged maybe-seen group by their seen
+    # bucket, the definitely-new ones into a NULL group.  Opening only
+    # those buckets is exact, since a bucket with no maybe-seen hash
+    # cannot produce an anti-join match.
+    definite_new, maybe_seen, tagged, bloom_bc = bloom_mod.bloom_prefilter(spark, cand, bloom)
+    bucket_counts = (
+        tagged.groupBy(
+            F.when(
+                F.col("_maybe"), canon.bucket_col(F.col("url_hash"), cfg.seen_buckets)
+            ).alias("b")
         )
-        .distinct()
+        .count()
         .collect()
-    ]
+    )
+    n_cand = sum(r["count"] for r in bucket_counts)
+    cand_buckets = [r["b"] for r in bucket_counts if r["b"] is not None]
     seen_scan = seen_reader(cand_buckets)
     checked_new = maybe_seen.join(seen_scan.select("url_hash"), "url_hash", "left_anti")
     new_links = definite_new.unionByName(checked_new).cache()
@@ -257,7 +267,7 @@ def run_round(
         "media_delta": media_delta,
         "host_updates": host_updates,
         "lineage": lineage,
-        "_cached": [cand, new_links],
+        "_cached": [tagged, new_links],
         # round-scoped broadcasts: destroyed by the caller once the
         # round's actions complete (never-destroyed per-round broadcasts
         # leak driver+executor memory over a long crawl)

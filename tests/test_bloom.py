@@ -31,7 +31,8 @@ def test_distributed_build_matches_local(spark):
 def test_prefilter_is_only_an_optimization(spark):
     """Crawl results with Bloom == results without (SURVEY.md §7 step 4):
     definite_new ∪ maybe_seen must partition candidates, with every
-    truly-seen key in maybe_seen."""
+    truly-seen key in maybe_seen.  bloom=None tags every candidate
+    maybe-seen, so the exact check alone decides."""
     seen_keys = [(i * 7919,) for i in range(200)]
     cand_keys = [(i * 7919,) for i in range(150, 350)]
     seen = spark.createDataFrame(seen_keys, ["url_hash"])
@@ -40,15 +41,21 @@ def test_prefilter_is_only_an_optimization(spark):
     b = ShardedBloom(n_shards=4, bits_per_shard=1 << 12, n_hashes=3)
     b.update_from_df(spark, seen)
 
-    definite_new, maybe_seen, _bc = bloom_prefilter(spark, cand, b)
-    new_with = {
-        r["url_hash"]
-        for r in definite_new.unionByName(
-            maybe_seen.join(seen, "url_hash", "left_anti")
-        ).collect()
-    }
     new_without = {r["url_hash"] for r in cand.join(seen, "url_hash", "left_anti").collect()}
-    assert new_with == new_without
+    for bloom in (b, None):
+        definite_new, maybe_seen, tagged, bc = bloom_prefilter(spark, cand, bloom)
+        new_with = {
+            r["url_hash"]
+            for r in definite_new.unionByName(
+                maybe_seen.join(seen, "url_hash", "left_anti")
+            ).collect()
+        }
+        assert new_with == new_without
+        if bloom is None:
+            assert bc is None and definite_new.count() == 0
+        tagged.unpersist()
+        if bc is not None:
+            bc.destroy()
 
 
 def test_driver_budget_fails_fast():

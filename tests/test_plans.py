@@ -701,3 +701,71 @@ def test_d14_prefix_filter_equi_joins_no_cartesian(spark):
     assert "BroadcastNestedLoopJoin" not in plan
     # the checkpointed token relation feeds df-count, rank, and verify
     assert "Scan ExistingRDD" in plan or "LocalTableScan" in plan
+
+
+def test_bloom_udf_never_runs_over_seen_rows(spark, tmp_path):
+    """The Bloom tag is a deterministic pandas UDF of url_hash.  Filtered
+    on directly, constraint inference copies it onto the seen side of the
+    url_hash anti-join and every seen row of every opened bucket goes
+    through Python.  bloom_prefilter must evaluate it once per candidate
+    behind a cache, so no seen scan has an ArrowEvalPython ancestor."""
+    from pyspark.sql import functions as F
+
+    from spider_spark import canon
+    from spider_spark.bloom import ShardedBloom, bloom_prefilter
+    from spider_spark.round import CrawlConfig, seen_rows
+    from spider_spark.storage import TableStore
+
+    cfg = CrawlConfig()
+    urls = spark.range(2000).select(
+        "id", F.concat(F.lit("http://h0.example/p"), F.col("id").cast("string")).alias("url")
+    )
+    urls = urls.select(
+        "id", "url",
+        canon.url_hash_col(F.col("url")).alias("url_hash"),
+        F.lit("h0.example").alias("host"),
+    )
+    st = TableStore(spark, str(tmp_path))
+    # seen: ids 0-499 (also candidates) and 1000-1999 (never candidates)
+    seen = urls.filter((F.col("id") < 500) | (F.col("id") >= 1000))
+    st.write("seen", seen_rows(seen, cfg), partition_by=["seen_bucket"])
+    cand = urls.filter(F.col("id") < 1000).drop("id")
+    # undersized so false positives reach the exact check
+    bloom = ShardedBloom(n_shards=4, bits_per_shard=1 << 12, n_hashes=3)
+    bloom.update_from_df(spark, st.read("seen"))
+
+    # the round's dedup: prefilter, then the anti-join over only the seen
+    # buckets the maybe-seen candidates hash into
+    out = bloom_prefilter(spark, cand, bloom)
+    definite_new, maybe_seen = out[0], out[1]
+    buckets = [
+        r["b"]
+        for r in maybe_seen.select(
+            canon.bucket_col(F.col("url_hash"), cfg.seen_buckets).alias("b")
+        ).distinct().collect()
+    ]
+    seen_scan = st.read_partitions("seen", buckets).select("url_hash")
+    new_links = definite_new.unionByName(maybe_seen.join(seen_scan, "url_hash", "left_anti"))
+
+    seen_dir = f"{tmp_path}/seen/"
+    seen_scans = []  # (root paths, has an ArrowEvalPython ancestor)
+
+    def walk(node, under_python):
+        name = node.nodeName()
+        if node.getClass().getSimpleName() == "FileSourceScanExec":
+            roots = node.relation().location().rootPaths().mkString(",")
+            if seen_dir in roots:
+                seen_scans.append((roots, under_python))
+        if name == "InMemoryTableScan":  # the cached tag, evaluated once
+            return
+        kids = node.children()
+        for i in range(kids.size()):
+            walk(kids.apply(i), under_python or name == "ArrowEvalPython")
+
+    walk(new_links._jdf.queryExecution().sparkPlan(), False)
+    assert seen_scans, "the anti-join must scan the seen buckets"
+    bad = [roots for roots, under_python in seen_scans if under_python]
+    assert not bad, f"{len(bad)} seen scans feed a Python UDF: {bad[:2]}"
+    assert new_links.count() == 500
+    out[2].unpersist()  # the tagged cache
+    out[3].destroy()  # the shard-bitmap broadcast
