@@ -10,8 +10,9 @@ idiomatic Spark engine:
 - per-host politeness buckets (robots disallow cache, crawl-delay gates)
   enforced via salted host-hash repartitioning,
 - URL canonicalization/hashing in vectorized Arrow/pandas UDFs,
-- each crawl round is ONE DataFrame job, MERGE-back with per-partition
-  lineage rows, resumable from checkpoint.
+- each crawl round is a chain of DataFrame ops run as several Spark jobs
+  (about 30 with storage), MERGE-back with per-partition lineage rows,
+  resumable from checkpoint.
 
 Reference parity targets are documented per-module with ``file:line``
 citations into /root/reference.

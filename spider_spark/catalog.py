@@ -43,134 +43,6 @@ def q(name: str, sql: str | None = None):
 # =====================================================================
 
 @q(
-    "p1_key_convert",
-    "SELECT c_custkey AS cust_id, c_name AS cust_name, c_mktsegment AS segment FROM customer",
-)
-def p1_key_convert(spark, sf_dir):
-    """P1 key-convert projection: static rename map -> select/alias
-    (shixin_spider.py:174-180, configuration/columns.py:8-26)."""
-    return _t(spark, sf_dir, "customer").select(
-        F.col("c_custkey").alias("cust_id"),
-        F.col("c_name").alias("cust_name"),
-        F.col("c_mktsegment").alias("segment"),
-    )
-
-
-@q(
-    "p2_flag_derive",
-    "SELECT o_orderkey, CASE WHEN o_orderstatus = 'F' THEN 1 ELSE 0 END AS done_flag FROM orders",
-)
-def p2_flag_derive(spark, sf_dir):
-    """P2 flag derivation: presence/value -> 0/1 flag (shixin_spider.py:179)."""
-    return _t(spark, sf_dir, "orders").select(
-        "o_orderkey",
-        F.when(F.col("o_orderstatus") == "F", 1).otherwise(0).alias("done_flag"),
-    )
-
-
-@q(
-    "p3_missing_fill",
-    "SELECT event_id, COALESCE(NULLIF(props, ''), '{}') AS props_filled FROM events",
-)
-def p3_missing_fill(spark, sf_dir):
-    """P3 missing-field fill: absent -> '' default (db_config.py:29-33)."""
-    return _t(spark, sf_dir, "events").select(
-        "event_id",
-        F.coalesce(F.nullif(F.col("props"), F.lit("")), F.lit("{}")).alias("props_filled"),
-    )
-
-
-@q(
-    "p4_enum_recode",
-    """SELECT CASE event_type WHEN 'click' THEN 1 WHEN 'view' THEN 2
-              WHEN 'purchase' THEN 3 WHEN 'signup' THEN 4 ELSE 0 END AS type_code,
-              COUNT(*) AS n
-       FROM events GROUP BY 1""",
-)
-def p4_enum_recode(spark, sf_dir):
-    """P4 enum recode: 主叫->1 / 被叫->2 / else 3 (china_unicom.py:318-334)."""
-    ev = _t(spark, sf_dir, "events")
-    code = (
-        F.when(F.col("event_type") == "click", 1)
-        .when(F.col("event_type") == "view", 2)
-        .when(F.col("event_type") == "purchase", 3)
-        .when(F.col("event_type") == "signup", 4)
-        .otherwise(0)
-    )
-    return ev.groupBy(code.alias("type_code")).agg(F.count(F.lit(1)).alias("n"))
-
-
-@q(
-    "p5_date_split",
-    """SELECT event_id, strftime(ts, '%Y-%m-%d') AS event_date,
-              strftime(ts, '%H:%M:%S') AS event_time FROM events""",
-)
-def p5_date_split(spark, sf_dir):
-    """P5 date-time split: '04-01 11:18:50' -> date + time cols
-    (china_mobile_gd.py:293-297, parse_json.py:24-28)."""
-    return _t(spark, sf_dir, "events").select(
-        "event_id",
-        F.date_format("ts", "yyyy-MM-dd").alias("event_date"),
-        F.date_format("ts", "HH:mm:ss").alias("event_time"),
-    )
-
-
-@q(
-    "p6_month_prefix",
-    """SELECT o_orderkey, o_totalprice FROM orders
-       WHERE strftime(o_orderdate, '%Y-%m') = '1996-03'""",
-)
-def p6_month_prefix(spark, sf_dir):
-    """P6 month-prefix filter: date startswith 'YYYY-MM' (check_spider.py:60-61)."""
-    return (
-        _t(spark, sf_dir, "orders")
-        .filter(F.date_format("o_orderdate", "yyyy-MM") == "1996-03")
-        .select("o_orderkey", "o_totalprice")
-    )
-
-
-@q(
-    "p7_like_prefix",
-    "SELECT c_custkey, c_name FROM customer WHERE c_name LIKE 'Customer#00000012%'",
-)
-def p7_like_prefix(spark, sf_dir):
-    """P7 LIKE-prefix predicate: name LIKE 'x%' (check_spider.py:176-191)."""
-    return (
-        _t(spark, sf_dir, "customer")
-        .filter(F.col("c_name").startswith("Customer#00000012"))
-        .select("c_custkey", "c_name")
-    )
-
-
-@q(
-    "p8_ilike_contains",
-    "SELECT p_partkey, p_name FROM part WHERE lower(p_name) LIKE '%widget%'",
-)
-def p8_ilike_contains(spark, sf_dir):
-    """P8 ILIKE-contains predicate (check_spider.py:214-217)."""
-    return (
-        _t(spark, sf_dir, "part")
-        .filter(F.lower(F.col("p_name")).contains("widget"))
-        .select("p_partkey", "p_name")
-    )
-
-
-@q(
-    "p9_mask",
-    """SELECT c_custkey, concat(substr(c_name, 1, 10), '****', substr(c_name, 15, 4)) AS masked
-       FROM customer""",
-)
-def p9_mask(spark, sf_dir):
-    """P9 card-number masking: [:10]+'****'+[14:] (check_spider.py:183-184)."""
-    return _t(spark, sf_dir, "customer").select(
-        "c_custkey",
-        F.concat(
-            F.substring("c_name", 1, 10), F.lit("****"), F.substring("c_name", 15, 4)
-        ).alias("masked"),
-    )
-
-
-@q(
     "p11_sanity_filter",
     """SELECT lang, COUNT(*) AS n FROM documents
        WHERE length(text) >= 100 AND regexp_matches(text, '^[a-z ]+$')
@@ -287,21 +159,6 @@ def j6_dim_lookup(spark, sf_dir):
     )
 
 
-@q(
-    "j7_semi_join",
-    """SELECT o.o_orderkey, o.o_totalprice FROM orders o
-       WHERE EXISTS (SELECT 1 FROM lineitem l
-                     WHERE l.l_orderkey = o.o_orderkey AND l.l_quantity > 45)""",
-)
-def j7_semi_join(spark, sf_dir):
-    """J7 semi-join re-enqueue confirmation (shixin_spider.py:345-398)."""
-    o = _t(spark, sf_dir, "orders")
-    li = _t(spark, sf_dir, "lineitem").filter(F.col("l_quantity") > 45).select(
-        F.col("l_orderkey").alias("o_orderkey")
-    )
-    return o.join(li, "o_orderkey", "left_semi").select("o_orderkey", "o_totalprice")
-
-
 # =====================================================================
 # §2.4 aggregations
 # =====================================================================
@@ -316,35 +173,6 @@ def a1_count_by_state(spark, sf_dir):
         _t(spark, sf_dir, "orders")
         .groupBy(F.col("o_orderstatus").alias("state"))
         .agg(F.count(F.lit(1)).alias("n"))
-    )
-
-
-@q(
-    "a2_regex_extract_agg",
-    """SELECT event_type, MAX(CAST(regexp_extract(props, '"k": (\\d+)', 1) AS BIGINT)) AS max_k,
-              CAST(SUM(CAST(regexp_extract(props, '"k": (\\d+)', 1) AS BIGINT)) AS BIGINT) AS sum_k
-       FROM events WHERE props LIKE '%"k"%' GROUP BY event_type""",
-)
-def a2_regex_extract_agg(spark, sf_dir):
-    """A2 result-count extraction: regex 共(\\d+) over page (shixin_search.py:131-146)."""
-    ev = _t(spark, sf_dir, "events").filter(F.col("props").contains('"k"'))
-    k = F.regexp_extract("props", r'"k": (\d+)', 1).cast("bigint")
-    return ev.groupBy("event_type").agg(
-        F.max(k).alias("max_k"), F.sum(k).alias("sum_k")
-    )
-
-
-@q(
-    "a3_ceil_pages",
-    """SELECT c_mktsegment, CAST(CEIL(COUNT(*) / 10.0) AS BIGINT) AS pages
-       FROM customer GROUP BY c_mktsegment""",
-)
-def a3_ceil_pages(spark, sf_dir):
-    """A3 page-count derivation: ceil(total/10.0) (shixin_search.py:143)."""
-    return (
-        _t(spark, sf_dir, "customer")
-        .groupBy("c_mktsegment")
-        .agg(F.ceil(F.count(F.lit(1)) / 10.0).cast("bigint").alias("pages"))
     )
 
 
@@ -387,12 +215,6 @@ def a5_group_stats(spark, sf_dir):
             F.count(F.lit(1)).alias("n_rows"),
         )
     )
-
-
-@q("a6_distinct", "SELECT DISTINCT c_mktsegment AS segment FROM customer")
-def a6_distinct(spark, sf_dir):
-    """A6 SELECT DISTINCT for cascading dropdowns (check_spider.py:133-139)."""
-    return _t(spark, sf_dir, "customer").select(F.col("c_mktsegment").alias("segment")).distinct()
 
 
 # =====================================================================
@@ -485,18 +307,6 @@ def w5_month_windows(spark, sf_dir):
 # =====================================================================
 
 @q(
-    "u1_union",
-    """SELECT c_nationkey AS nationkey FROM customer
-       UNION SELECT s_nationkey FROM supplier""",
-)
-def u1_union(spark, sf_dir):
-    """U1 union of id spaces (shixin_python_sql.py:105-112)."""
-    c = _t(spark, sf_dir, "customer").select(F.col("c_nationkey").alias("nationkey"))
-    s = _t(spark, sf_dir, "supplier").select(F.col("s_nationkey").alias("nationkey"))
-    return c.union(s).distinct()
-
-
-@q(
     "u2_except",
     """SELECT p_partkey FROM part
        EXCEPT SELECT l_partkey FROM lineitem WHERE l_quantity > 45""",
@@ -533,65 +343,6 @@ def f1_json_parse(spark, sf_dir):
     )
 
 
-@q(
-    "f4_regex_extract",
-    """SELECT regexp_extract(text, '^(\\w+)', 1) AS first_word, COUNT(*) AS n
-       FROM documents GROUP BY 1""",
-)
-def f4_regex_extract(spark, sf_dir):
-    """F4 regex extract (共(\\d+) shixin_search.py:134; proxy_spider.py:33-34)."""
-    return (
-        _t(spark, sf_dir, "documents")
-        .groupBy(F.regexp_extract("text", r"^(\w+)", 1).alias("first_word"))
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
-
-
-@q(
-    "f6_whitespace_normalize",
-    """SELECT ROUND(AVG(length(trim(regexp_replace(text, '\\s+', ' ', 'g')))), 2) AS avg_norm_len
-       FROM documents""",
-)
-def f6_whitespace_normalize(spark, sf_dir):
-    """F6 whitespace normalize (.replace('\\n','')... shixin_search.py:134)."""
-    norm = F.length(F.trim(F.regexp_replace("text", r"\s+", " ")))
-    return _t(spark, sf_dir, "documents").agg(F.round(F.avg(norm), 2).alias("avg_norm_len"))
-
-
-@q(
-    "f10_lpad",
-    "SELECT lpad(CAST(n_nationkey AS VARCHAR), 4, '0') AS padded, n_name FROM nation",
-)
-def f10_lpad(spark, sf_dir):
-    """F10 zero-pad month (_getStrMonth param_date.py:5-17)."""
-    return _t(spark, sf_dir, "nation").select(
-        F.lpad(F.col("n_nationkey").cast("string"), 4, "0").alias("padded"), "n_name"
-    )
-
-
-@q(
-    "f12_cast_ceil",
-    """SELECT CAST(SUM(CAST(CEIL(l_extendedprice / 100.0) AS BIGINT)) AS BIGINT) AS s
-       FROM lineitem""",
-)
-def f12_cast_ceil(spark, sf_dir):
-    """F12 int cast + ceil math (shixin_search.py:136,143)."""
-    return _t(spark, sf_dir, "lineitem").agg(
-        F.sum(F.ceil(F.col("l_extendedprice") / 100.0).cast("bigint")).cast("bigint").alias("s")
-    )
-
-
-@q(
-    "f13_substring",
-    """SELECT COUNT(DISTINCT substr(c_name, 10, 8)) AS n_distinct_tails FROM customer""",
-)
-def f13_substring(spark, sf_dir):
-    """F13 substring truncate (card_num[:10] check_spider.py:214-215)."""
-    return _t(spark, sf_dir, "customer").agg(
-        F.countDistinct(F.substring("c_name", 10, 8)).alias("n_distinct_tails")
-    )
-
-
 # part 2 (windows/sessionize, text analysis, dedup, similarity,
 # multimodal, crawl demos) registers itself into QUERIES/ORACLES:
 from . import catalog_pipeline  # noqa: E402,F401  (registration side-effect)
@@ -610,18 +361,20 @@ from . import catalog_streaming  # noqa: E402,F401  (registration side-effect)
 # outside the window keep full local verification: tests/test_oracle.py
 # mirrors the driver compare for EVERY oracle-backed entry, and the
 # three rows-only ops (s2/s3 approximate ANN top-k, m1 fake-decode
-# fallback demo) are gated by recall/featurize tests.
+# fallback demo) are gated by recall/featurize tests.  Tail entries that
+# called no engine code and whose plan node set one graded entry's plan
+# already contains were deleted; the swap notes below still name some of
+# them as history, marked "since deleted".
 GRADED_WINDOW = [
     # projections / validation (r4 final: p9 mask out — scalar projection;
     # r4 cont.: p12 out too — p11 keeps the validation-filter family and
-    # p12's schema-enforcement shape is graded by s7's tail twin; both
-    # stay oracle-gated in the tail)
+    # p12 stays oracle-gated in the tail; p9 and s7, the tail twin of
+    # p12's schema-enforcement shape, since deleted)
     # (r5 final4: p1 key-convert out — the trivial rename projection;
-    # p11 keeps the P-family green and p1 stays oracle-gated in the
-    # tail.  c18 in — z-order clustering + 2-D manifest stats skipping
-    # on REAL store bytes; the entry RAISES unless the box query prunes
-    # 3 of 4 members, and the oracle re-derives the Morton math bit-
-    # for-bit)
+    # p11 keeps the P-family green; p1 since deleted.  c18 in — z-order
+    # clustering + 2-D manifest stats skipping on REAL store bytes; the
+    # entry RAISES unless the box query prunes 3 of 4 members, and the
+    # oracle re-derives the Morton math bit-for-bit)
     "c18_zorder_scan", "p11_sanity_filter",
     # joins (j6 dim-lookup swapped out r4: near-dup of j1's broadcast
     # join; late-r4: j4 anti-range out — the anti-join shape is graded by
@@ -629,10 +382,10 @@ GRADED_WINDOW = [
     # existence-join shape is j5's complement; in their place the two
     # temporal joins Spark lacks as built-ins, j8 as-of (union+window
     # single shuffle) and j9 range (bucketed equi, no cartesian) —
-    # j4/j7 stay oracle-gated in the tail)
+    # j4 stays oracle-gated in the tail, j7 since deleted)
     # (r4 cont.: j3 cache-aside out — its left-join+default shape sits
-    # between j1's dim lookup and j2's fk join, both graded; stays
-    # oracle-gated in the tail)
+    # between j1's dim lookup and j2's fk join, both graded; since
+    # deleted)
     # (r5 final7: j2 fk-join out — the shuffled fact-join shape is also
     # graded through q3's order/lineitem join, and j2 stays oracle-gated
     # in the tail; j10 in — the skew-salting technique itself, graded on
@@ -645,23 +398,26 @@ GRADED_WINDOW = [
     # late-r4: a6 distinct out — a4/u2 already grade distinct shapes)
     # (r5 final5: a7 throughput-by-day out — a1/a4/a5/a13 keep the
     # A-family and a7's day-bucket shape sits inside st1's graded
-    # windowed counts; c20 in — adaptive recrawl scheduling, the
-    # freshness policy that derives frontier.dequeue's next_fetch_time
-    # from observed change history, BIGINT-epoch exact)
+    # windowed counts; a2/a6/a7 since deleted; c20 in — adaptive
+    # recrawl scheduling, the freshness policy that derives
+    # frontier.dequeue's next_fetch_time from observed change history,
+    # BIGINT-epoch exact)
     "a1_count_by_state", "a4_dedup_unique_key", "a5_group_stats",
     "c20_recrawl_schedule",
     # windows / sorts / limits (r4: w3 page-expand out — explode shape
-    # now graded by f17; late-r4: w5b month-params out — date arith is a
-    # scalar shape, f-family covers it; both stay oracle-gated in the tail)
+    # now graded by f17; w3 since deleted; late-r4: w5b month-params out —
+    # date arith is a scalar shape, f-family covers it; w5b stays
+    # oracle-gated in the tail)
     # (r4 final: w2 limit-dequeue out — the TakeOrdered top-k plan shape
     # is graded by q3; g1 in — 3-iteration PageRank, the iterative float
     # join+agg family the window lacked; w2 stays oracle-gated in tail)
     "w1_ranked_dequeue", "g1_pagerank3",
     "w4_stable_chunking", "w6_sessionize",
-    # set ops (late-r4: u3 union-all out — trivial shape, u2 keeps §2.6)
+    # set ops (late-r4: u3 union-all out — trivial shape, u2 keeps §2.6;
+    # u3 since deleted)
     "u2_except",
     # crawl engine end-to-end + dedup canonicalization + video decode
-    # (late-r4 swaps: the real seen-filter ladder with measured Bloom FPs,
+    # (late-r4 swaps: the real seen filter with measured Bloom FPs,
     # connected-components closure on planted 3-chains, and real
     # multi-frame MPNG container decode; r4 cont.: c12 mid-crawl seed
     # ingestion through the REAL bootstrap+enqueue_seeds store path —
@@ -674,9 +430,9 @@ GRADED_WINDOW = [
     # f17 explode+top-k in — the link-extraction shape; late-r4: f11
     # url-format out — scalar concat, four f-entries keep the family)
     # (r4 cont.: f19 sorted-array-agg out — a third scalar string shape,
-    # f1/f4/f17 keep the family; stays oracle-gated in the tail)
-    # (r5 final4: f4 regex-extract out — f1/f17 keep the F-family green,
-    # f4 stays oracle-gated in the tail.  a13 in — certified-exact heavy
+    # f1/f4/f17 keep the family)
+    # (r5 final4: f4 regex-extract out — f1/f17 keep the F-family green;
+    # f4, f5, f11 and f19 since deleted.  a13 in — certified-exact heavy
     # hitters: bounded-memory Misra-Gries candidates + exact recount,
     # the op that keeps top-k affordable at 10^9 distinct keys)
     # (r5 final6: f17 explode-tokens out — its explode + per-key top-k
@@ -695,8 +451,7 @@ GRADED_WINDOW = [
     "st5_stream_stream_join",
     # text analysis (r5: t2 quality-ratio out — a scalar ratio shape,
     # t1/t3 keep the family; t12 in — token-budget sequence packing, the
-    # LLM-export op, plan-gated to ONE hash exchange; t2 stays
-    # oracle-gated in the tail)
+    # LLM-export op, plan-gated to ONE hash exchange; t2 since deleted)
     # (r5 final5: t4 fingerprint-stability out — the xxhash64 rolling
     # fingerprint stays graded through d1's exact-dedup keys and t4
     # remains oracle-gated in the tail; t19 in — DSIR importance
@@ -753,7 +508,7 @@ GRADED_WINDOW = [
     "c17_foreign_sink_upsert", "m8_jpeg_stats",
     # headline analytical queries
     # (r5 final2: q5 snowflake-revenue out — q3 keeps the OLAP-report
-    # family, q5 stays oracle-gated in the tail; d10 containment dedup
+    # family, q5 since deleted; d10 containment dedup
     # in — a genuinely new dedup MODE (truncated/boilerplate-wrapped
     # copies at ~0.5 Jaccard that the MinHash tier provably drops),
     # integer-exact n_match == n_shingles predicate, planted half-doc

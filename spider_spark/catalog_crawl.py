@@ -1,6 +1,6 @@
 """Catalog part 4: crawl-engine operators under the oracle gate —
-pagination fan-out (W3), month-window parameter generation, the
-seen-filter ladder end-to-end (c3), snapshot semantics (c4 time-travel /
+month-window parameter generation, the Bloom seen filter end-to-end
+(c3), snapshot semantics (c4 time-travel /
 incremental scan, c8 MERGE, c9 compaction + pruned reads), the
 politeness / robots / retry-state gates (c5-c7), and invariant oracles
 for the Bloom fill band (c2) and the HLL error bound (a10)."""
@@ -12,28 +12,6 @@ import os
 from pyspark.sql import functions as F
 
 from .catalog import _t, q
-
-
-@q(
-    "w3_page_expand",
-    """SELECT segment, page FROM (
-         SELECT c_mktsegment AS segment,
-                CAST(CEIL(COUNT(*) / 25.0) AS BIGINT) AS page_num
-         FROM customer GROUP BY c_mktsegment),
-       LATERAL (SELECT unnest(generate_series(1, page_num)) AS page)""",
-)
-def w3_page_expand(spark, sf_dir):
-    """W3 pagination scan: fetch page 1, derive page count, fan out pages
-    2..N (shixin_search.py:157-180; china_unicom.py:210-213) —
-    ``sequence + explode`` turns the page space into frontier rows."""
-    counts = (
-        _t(spark, sf_dir, "customer")
-        .groupBy(F.col("c_mktsegment").alias("segment"))
-        .agg(F.ceil(F.count(F.lit(1)) / 25.0).cast("bigint").alias("page_num"))
-    )
-    return counts.select(
-        "segment", F.explode(F.sequence(F.lit(1).cast("bigint"), F.col("page_num"))).alias("page")
-    )
 
 
 @q(
@@ -102,7 +80,7 @@ def c2_bloom_stats(spark, sf_dir):
 
 @q(
     "c3_seen_filter_split",
-    # exact ground truth for the WHOLE seen-filter ladder: the final
+    # exact ground truth for the seen filter: the final
     # new/seen split is deterministic even when the Bloom prefilter has
     # false positives (an FP only routes a row to the exact anti-join,
     # never drops it) and has no false negatives (a seen row can never
@@ -118,7 +96,9 @@ def c3_seen_filter_split(spark, sf_dir):
     (bloom_prefilter -> definite_new + maybe_seen -> exact anti-join,
     round.py), on a deterministic universe: every 3rd URL is pre-seen.
     The small Bloom is deliberately undersized so false positives occur
-    and the anti-join actually earns its keep."""
+    and the anti-join actually earns its keep.  The split is collected
+    so the prefilter's tag cache and Bloom broadcast are released before
+    returning, as ``run_round`` releases them after its actions."""
     from . import bloom as bloom_mod
     from . import canon
 
@@ -141,9 +121,15 @@ def c3_seen_filter_split(spark, sf_dir):
     # >50% full -> hundreds of FPs routed through the exact check
     b = bloom_mod.ShardedBloom(n_shards=4, bits_per_shard=1 << 10, n_hashes=2)
     b.update_from_df(spark, seen.select("url_hash"))
-    definite_new, maybe_seen, _tagged, _bc = bloom_mod.bloom_prefilter(spark, cand, b)
+    definite_new, maybe_seen, tagged, bc = bloom_mod.bloom_prefilter(spark, cand, b)
     checked_new = maybe_seen.join(seen.select("url_hash"), "url_hash", "left_anti")
-    return definite_new.unionByName(checked_new).select("url", "host")
+    split = definite_new.unionByName(checked_new).select("url", "host")
+    try:
+        rows = split.collect()
+    finally:
+        tagged.unpersist()
+        bc.destroy()
+    return spark.createDataFrame(rows, split.schema)
 
 
 @q(
@@ -446,57 +432,6 @@ def c10_schema_evolution_scan(spark, sf_dir):
         F.lit("asof_r1").alias("probe"), "doc_id", F.lit(None).cast("long").alias("gen")
     )
     return current.unionByName(asof)
-
-
-@q(
-    "s7_json_source_corrupt_routing",
-    # staged copy of events as JSON lines plus exactly 7 planted corrupt
-    # lines: the schema-enforced PERMISSIVE read must route every bad
-    # line to _corrupt_record (never drop, never crash) and keep every
-    # good row — so DuckDB states the result from the original parquet table
-    """SELECT event_type, COUNT(*) AS n FROM events GROUP BY event_type
-       UNION ALL
-       SELECT '_corrupt' AS event_type, CAST(7 AS BIGINT) AS n""",
-)
-def s7_json_source_corrupt_routing(spark, sf_dir):
-    """S1/S7-analog file source: schema-enforced JSON-lines ingest with
-    corrupt-record routing (the reference consumes JSON APIs and routes
-    unparseable payloads to err-3, china_unicom.py returnResult guards;
-    at scale a fetch tier lands JSONL and the engine must route bad
-    lines as DATA, not task failures).  PERMISSIVE mode + explicit
-    schema + columnNameOfCorruptRecord; good rows aggregate identically
-    to the parquet original."""
-    import hashlib
-    import os as _os
-    import shutil
-    import tempfile
-
-    key = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    root = _os.path.join(tempfile.gettempdir(), f"spider_spark_s7_{key}")
-    shutil.rmtree(root, ignore_errors=True)
-    src = _os.path.join(root, "src")
-    ev = _t(spark, sf_dir, "events").select(
-        "event_id", "event_type", "value"
-    )
-    ev.write.mode("overwrite").json(src)
-    with open(_os.path.join(src, "part-corrupt.json"), "w") as f:
-        for i in range(7):
-            f.write(f'{{"event_id": "not-a-number-{i}", "event_type": [broken\n')
-    schema = (
-        "event_id bigint, event_type string, value double, _corrupt_record string"
-    )
-    raw = (
-        spark.read.schema(schema)
-        .option("mode", "PERMISSIVE")
-        .option("columnNameOfCorruptRecord", "_corrupt_record")
-        .json(src)
-    )
-    routed = raw.select(
-        F.when(F.col("_corrupt_record").isNotNull(), F.lit("_corrupt"))
-        .otherwise(F.col("event_type"))
-        .alias("event_type")
-    )
-    return routed.groupBy("event_type").agg(F.count(F.lit(1)).alias("n"))
 
 
 @q(
@@ -1087,7 +1022,7 @@ def c23_incremental_agg(spark, sf_dir):
     adds, sum adds.  The combine step touches |groups| x 2 rows
     regardless of history depth.  Store rebuilt per call in a scratch
     dir (c4 precedent); the parquet bytes on disk are what get graded.
-    The summand is floor(price*1000) as BIGINT (w10 precedent) so the
+    The summand is floor(price*1000) as BIGINT so the
     maintained sum is accumulation-order independent and hashes
     exactly against the full-recompute twin.  Reference analog: the
     crawler's per-status report tables are recomputed per run

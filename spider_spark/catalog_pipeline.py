@@ -1,5 +1,5 @@
-"""Catalog part 2: windows (sessionize/running), array ops, cache-aside
-join, and the training-data pipeline operators (dedup / similarity /
+"""Catalog part 2: windows (sessionize, ntile), array ops, and the
+training-data pipeline operators (dedup / similarity /
 text analysis / multimodal) over the testdata tables.
 
 Entries without an oracle are genuinely non-SQL-expressible in DuckDB
@@ -21,28 +21,6 @@ from .catalog import _t, q
 # =====================================================================
 # more joins / windows
 # =====================================================================
-
-@q(
-    "j3_cache_aside",
-    """SELECT c.c_custkey, COALESCE(MAX(o.o_orderdate), TIMESTAMP '1900-01-01') AS last_order
-       FROM customer c LEFT JOIN orders o ON o.o_custkey = c.c_custkey
-       GROUP BY c.c_custkey""",
-)
-def j3_cache_aside(spark, sf_dir):
-    """J3 cache-aside lookup: query local table first, default on miss
-    (check_spider.py:176-201 DB-hit-else-crawl)."""
-    c = _t(spark, sf_dir, "customer")
-    o = _t(spark, sf_dir, "orders")
-    return (
-        c.join(o, c.c_custkey == o.o_custkey, "left")
-        .groupBy("c_custkey")
-        .agg(
-            F.coalesce(F.max("o_orderdate"), F.to_timestamp(F.lit("1900-01-01"))).alias(
-                "last_order"
-            )
-        )
-    )
-
 
 @q(
     "w6_sessionize",
@@ -72,24 +50,6 @@ def w6_sessionize(spark, sf_dir):
         .withColumn("session_id", F.sum("is_new").over(w))
         .groupBy("user_id")
         .agg(F.countDistinct("session_id").alias("n_sessions"))
-    )
-
-
-@q(
-    "w7_running_sum",
-    """SELECT user_id, event_id,
-              ROUND(SUM(value) OVER (PARTITION BY user_id ORDER BY ts, event_id
-                                     ROWS UNBOUNDED PRECEDING), 2) AS running
-       FROM events""",
-)
-def w7_running_sum(spark, sf_dir):
-    w = (
-        Window.partitionBy("user_id")
-        .orderBy("ts", "event_id")
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    return _t(spark, sf_dir, "events").select(
-        "user_id", "event_id", F.round(F.sum("value").over(w), 2).alias("running")
     )
 
 
@@ -126,25 +86,6 @@ def t1_token_count(spark, sf_dir):
 
     return _t(spark, sf_dir, "documents").select(
         "doc_id", token_count_col(F.col("text")).cast("int").alias("n_tokens")
-    )
-
-
-@q(
-    "t2_quality_ratio",
-    """SELECT lang,
-              ROUND(AVG(CAST(length(text) - length(regexp_replace(text, '[^a-z ]', '', 'g'))
-                        AS DOUBLE) / length(text)), 4) AS avg_nonalpha_ratio,
-              ROUND(AVG(length(text)), 2) AS avg_len
-       FROM documents WHERE length(text) > 0 GROUP BY lang""",
-)
-def t2_quality_ratio(spark, sf_dir):
-    d = _t(spark, sf_dir, "documents").filter(F.length("text") > 0)
-    nonalpha = F.length("text") - F.length(F.regexp_replace("text", "[^a-z ]", ""))
-    return d.groupBy("lang").agg(
-        F.round(F.avg(nonalpha.cast("double") / F.length("text")), 4).alias(
-            "avg_nonalpha_ratio"
-        ),
-        F.round(F.avg(F.length("text")), 2).alias("avg_len"),
     )
 
 
@@ -932,24 +873,6 @@ def t5_bpe_token_count(spark, sf_dir):
 
 
 @q(
-    "t6_hash_sample",
-    # md5 is identical across engines, so a hex-prefix threshold is a
-    # deterministic, engine-independent sample predicate
-    """SELECT doc_id, lang FROM documents WHERE substr(md5(text), 1, 2) <= '19'""",
-)
-def t6_hash_sample(spark, sf_dir):
-    """Deterministic content-hash sampling (~10%: first md5 byte <= 0x19)
-    — reproducible corpus subsetting for eval splits: no RNG state, no
-    partition-order dependence, same subset on any engine or cluster
-    size.  At 100 TB this is a codegen'd predicate on a narrow scan."""
-    return (
-        _t(spark, sf_dir, "documents")
-        .filter(F.substring(F.md5(F.col("text").cast("binary")), 1, 2) <= "19")
-        .select("doc_id", "lang")
-    )
-
-
-@q(
     "m3_frame_sample",
     # analytic ground truth: frames/pixels are integer formulas of
     # (doc_id, frame, i) (synth_png_video docstring); the sampled frame
@@ -986,86 +909,6 @@ def m3_frame_sample(spark, sf_dir):
     )
     media = synth_png_video(refs).repartition(8)
     return sample_frame_stats(media, every_k=4, strict=True)
-
-
-@q(
-    "t7_tfidf_top_term",
-    # rank on the ROUNDED score (then term) so a 1-ulp ln() difference
-    # between engines can never flip the winner; mathematically-equal
-    # scores (e.g. 2*ln(N/10) == ln(N/100)) are common in synthetic text
-    """WITH terms AS (
-         SELECT doc_id, unnest(regexp_extract_all(lower(text), '[a-z]{2,}')) AS term
-         FROM documents),
-       tf AS (SELECT doc_id, term, COUNT(*) AS tf FROM terms GROUP BY 1, 2),
-       dfreq AS (SELECT term, COUNT(*) AS df FROM tf GROUP BY 1),
-       n AS (SELECT COUNT(DISTINCT doc_id) AS n FROM tf)
-       SELECT doc_id, term AS top_term, score FROM (
-         SELECT tf.doc_id, tf.term,
-                ROUND(tf.tf * ln(CAST(n.n AS DOUBLE) / dfreq.df), 4) AS score,
-                ROW_NUMBER() OVER (
-                  PARTITION BY tf.doc_id
-                  ORDER BY ROUND(tf.tf * ln(CAST(n.n AS DOUBLE) / dfreq.df), 4) DESC,
-                           tf.term) AS rn
-         FROM tf JOIN dfreq USING (term) CROSS JOIN n) t
-       WHERE rn = 1""",
-)
-def t7_tfidf_top_term(spark, sf_dir):
-    """TF-IDF document keyword extraction — per-doc top term by
-    tf * ln(N/df): explode terms -> (doc,term) counts -> doc-frequency
-    agg -> broadcast the 1-row corpus size -> rank per doc.  The
-    training-pipeline "what is this document about" scorer; all JVM
-    (regexp_extract_all + two shuffles on term/doc), no Python.  At
-    100 TB the vocabulary agg is the small side (broadcastable) and the
-    per-doc rank shuffles on doc_id only."""
-    docs = _t(spark, sf_dir, "documents")
-    terms = docs.select(
-        "doc_id",
-        F.explode(F.regexp_extract_all(F.lower("text"), F.lit("[a-z]{2,}"), 0)).alias("term"),
-    )
-    tf = terms.groupBy("doc_id", "term").agg(F.count(F.lit(1)).alias("tf"))
-    dfreq = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
-    n = tf.agg(F.countDistinct("doc_id").alias("n"))
-    scored = (
-        tf.join(dfreq, "term")
-        .crossJoin(F.broadcast(n))
-        .withColumn(
-            "score",
-            F.round(F.col("tf") * F.log(F.col("n").cast("double") / F.col("df")), 4),
-        )
-    )
-    w = Window.partitionBy("doc_id").orderBy(F.desc("score"), F.asc("term"))
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select("doc_id", F.col("term").alias("top_term"), "score")
-    )
-
-
-@q(
-    "t8_stratified_sample",
-    # md5 is engine-independent, so per-group rank by (md5, doc_id) is a
-    # deterministic stratified sample: same 20 docs per lang on any
-    # engine, any partitioning, any cluster size
-    """SELECT lang, doc_id FROM (
-         SELECT lang, doc_id,
-                ROW_NUMBER() OVER (PARTITION BY lang
-                                   ORDER BY md5(text), doc_id) AS rn
-         FROM documents) t
-       WHERE rn <= 20""",
-)
-def t8_stratified_sample(spark, sf_dir):
-    """Deterministic stratified sampling: fixed-size per-stratum subset
-    ranked by content hash — the eval-split / per-language quota shape
-    (t6's global sample, stratified).  No RNG state, no partition-order
-    dependence; at 100 TB this is one window shuffle on the stratum key
-    (or a TakeOrdered per group via repartition+sortWithinPartitions)."""
-    w = Window.partitionBy("lang").orderBy(F.md5(F.col("text").cast("binary")), "doc_id")
-    return (
-        _t(spark, sf_dir, "documents")
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= 20)
-        .select("lang", "doc_id")
-    )
 
 
 @q(
@@ -1106,100 +949,6 @@ def t9_bigram_vocab(spark, sf_dir):
         .agg(F.count(F.lit(1)).alias("n"))
         .orderBy(F.desc("n"), F.asc("bigram"))
         .limit(30)
-    )
-
-
-@q(
-    "t10_repetition_flag",
-    # Gopher-style repetition filter stated in pure integer math —
-    # (n_total - n_distinct) * 5 > n_total  <=>  dup fraction > 20% —
-    # so no float division can differ between engines
-    """WITH d AS (SELECT doc_id,
-                         regexp_extract_all(lower(text), '[a-z]{2,}') AS w
-                  FROM documents),
-       bi AS (SELECT doc_id,
-                     unnest(list_transform(
-                       generate_series(1, greatest(0, len(w) - 1)),
-                       i -> w[i] || ' ' || w[i+1])) AS bigram
-              FROM d)
-       SELECT doc_id, COUNT(*) AS n_bigrams,
-              COUNT(DISTINCT bigram) AS n_distinct,
-              (COUNT(*) - COUNT(DISTINCT bigram)) * 5 > COUNT(*) AS flagged
-       FROM bi GROUP BY doc_id""",
-)
-def t10_repetition_flag(spark, sf_dir):
-    """Within-document repetition scoring (the Gopher/C4 quality rule:
-    drop documents whose duplicate-bigram fraction exceeds a threshold).
-    One groupBy(doc_id) with count + approx-free exact countDistinct;
-    the flag is integer-only arithmetic.  Shuffles once on doc_id and
-    never leaves the JVM — at 100 TB this is a narrow scan + one
-    partial-agg'd shuffle."""
-    d = _t(spark, sf_dir, "documents").select(
-        "doc_id", F.regexp_extract_all(F.lower("text"), F.lit("[a-z]{2,}"), 0).alias("w")
-    )
-    bi = d.select(
-        "doc_id",
-        F.explode(
-            F.expr(
-                "CASE WHEN size(w) >= 2 THEN "
-                "transform(slice(w, 1, size(w) - 1), (x, i) -> concat(x, ' ', w[i+1])) "
-                "ELSE array() END"
-            )
-        ).alias("bigram"),
-    )
-    return bi.groupBy("doc_id").agg(
-        F.count(F.lit(1)).alias("n_bigrams"),
-        F.countDistinct("bigram").alias("n_distinct"),
-        (
-            (F.count(F.lit(1)) - F.countDistinct("bigram")) * F.lit(5)
-            > F.count(F.lit(1))
-        ).alias("flagged"),
-    )
-
-
-@q(
-    "t11_rare_word_ratio",
-    # KenLM-free quality proxy in pure integer math: a word is "rare"
-    # when its corpus document frequency is under 10% of the corpus
-    # (cross-multiplied, scale-relative — no float division, no absolute
-    # constant that stops discriminating at a different SF); docs
-    # carrying ANY rare token are flagged (5% of docs at every SF)
-    """WITH terms AS (
-         SELECT doc_id, unnest(regexp_extract_all(lower(text), '[a-z]{2,}')) AS term
-         FROM documents),
-       dfreq AS (SELECT term, COUNT(DISTINCT doc_id) AS df FROM terms GROUP BY 1),
-       nd AS (SELECT COUNT(*) AS n FROM documents)
-       SELECT t.doc_id, COUNT(*) AS n_words,
-              COUNT(CASE WHEN d.df * 10 < nd.n THEN 1 END) AS n_rare,
-              COUNT(CASE WHEN d.df * 10 < nd.n THEN 1 END) > 0 AS flagged
-       FROM terms t JOIN dfreq d USING (term) CROSS JOIN nd
-       GROUP BY t.doc_id""",
-)
-def t11_rare_word_ratio(spark, sf_dir):
-    """Corpus-statistics quality scoring: the rare-word ratio (share of
-    tokens whose corpus document frequency is below a floor) — the
-    integer-exact stand-in for LM-perplexity filtering.  Two shuffles
-    (term df agg, then doc re-agg); the vocabulary side is the small
-    side and broadcast-joins back onto the exploded terms.  The flag is
-    cross-multiplied integer math so no engine can disagree by an ulp."""
-    docs = _t(spark, sf_dir, "documents")
-    n_docs = docs.count()
-    terms = docs.select(
-        "doc_id",
-        F.explode(
-            F.regexp_extract_all(F.lower("text"), F.lit("[a-z]{2,}"), 0)
-        ).alias("term"),
-    )
-    dfreq = terms.groupBy("term").agg(F.countDistinct("doc_id").alias("df"))
-    rare = F.sum(F.when(F.col("df") * 10 < F.lit(n_docs), 1).otherwise(0))
-    return (
-        terms.join(F.broadcast(dfreq), "term")
-        .groupBy("doc_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_words"),
-            rare.alias("n_rare"),
-            (rare > F.lit(0)).alias("flagged"),
-        )
     )
 
 
@@ -1395,112 +1144,6 @@ def s9_int8_quant(spark, sf_dir):
 
 
 @q(
-    "d9_repeated_passages",
-    # exact cross-doc repeated-passage detection (Lee et al. exact-substring
-    # dedup at fixed 3-token granularity): stride-1 shingles via lead()
-    # windows, distinct per doc, passages held by >= 2 docs
-    """WITH toks AS (
-         SELECT doc_id,
-                unnest(regexp_split_to_array(trim(text), '\\s+')) AS tok,
-                generate_subscripts(regexp_split_to_array(trim(text), '\\s+'), 1) AS i
-         FROM documents WHERE length(trim(text)) > 0),
-       sh AS (
-         SELECT doc_id,
-                tok || ' ' || lead(tok, 1) OVER w || ' ' || lead(tok, 2) OVER w AS p
-         FROM toks WINDOW w AS (PARTITION BY doc_id ORDER BY i)),
-       per_doc AS (SELECT DISTINCT doc_id, p FROM sh WHERE p IS NOT NULL)
-       SELECT p AS passage, COUNT(*) AS n_docs, MIN(doc_id) AS first_doc
-       FROM per_doc GROUP BY p HAVING COUNT(*) >= 2""",
-)
-def d9_repeated_passages(spark, sf_dir):
-    """Cross-document repeated-passage detection — the passage-level
-    sibling of d8's benchmark decontamination and the exact-substring
-    dedup LLM corpora run before training (memorization control): every
-    3-token stride-1 shingle, deduped within doc, grouped across docs;
-    passages appearing in >= 2 documents come back with their spread.
-    All-JVM (split + transform over sequence + explode, two partial-agg
-    shuffles).  At 100 TB: key the group-by on xxhash64(passage) (8-byte
-    shuffle keys, like d1) and keep the string only for the final
-    readback join; the shingle explode is map-side and never quadratic."""
-    docs = (
-        _t(spark, sf_dir, "documents")
-        .filter(F.length(F.trim("text")) > 0)
-        .select("doc_id", F.split(F.trim("text"), r"\s+").alias("t"))
-        .filter(F.size("t") >= 3)
-    )
-    sh = docs.select(
-        "doc_id",
-        F.explode(
-            F.expr(
-                "transform(sequence(0, size(t)-3),"
-                " i -> concat(t[i], ' ', t[i+1], ' ', t[i+2]))"
-            )
-        ).alias("p"),
-    )
-    return (
-        sh.distinct()
-        .groupBy(F.col("p").alias("passage"))
-        .agg(
-            F.count("*").alias("n_docs"),
-            F.min("doc_id").alias("first_doc"),
-        )
-        .filter(F.col("n_docs") >= 2)
-    )
-
-
-@q(
-    "t14_repetition_quality",
-    # Gopher-rule repetition metrics, INTEGER-exact (no float fractions:
-    # a 1-ulp division diff would flip the hash — counts + an integer
-    # comparison express the same filter): per doc, total bigrams,
-    # duplicated bigrams, the top bigram's count, and the
-    # top-fraction > 20% flag as top*5 > total
-    """WITH toks AS (
-         SELECT doc_id,
-                unnest(regexp_split_to_array(trim(text), '\\s+')) AS tok,
-                generate_subscripts(regexp_split_to_array(trim(text), '\\s+'), 1) AS i
-         FROM documents WHERE length(trim(text)) > 0),
-       bg AS (
-         SELECT doc_id, tok || ' ' || lead(tok, 1) OVER w AS b
-         FROM toks WINDOW w AS (PARTITION BY doc_id ORDER BY i)),
-       cnt AS (SELECT doc_id, b, COUNT(*) AS c FROM bg WHERE b IS NOT NULL
-               GROUP BY doc_id, b)
-       SELECT doc_id, SUM(c) AS n_bigrams, SUM(c) - COUNT(*) AS n_dup_bigrams,
-              MAX(c) AS top_count,
-              (MAX(c) * 5 > SUM(c)) AS flagged
-       FROM cnt GROUP BY doc_id""",
-)
-def t14_repetition_quality(spark, sf_dir):
-    """Repetition-based quality filter (the Gopher/MassiveText rules:
-    docs dominated by a repeated n-gram are boilerplate/spam and get
-    dropped before training).  Per document: bigram total, duplicated
-    bigram count, the most frequent bigram's count, and the
-    top-2-gram-fraction > 0.2 flag — all integers/booleans so the twin
-    is hash-exact by construction.  All-JVM; the per-doc group-by
-    partial-aggregates map-side, and at 100 TB the doc_id grouping is
-    the same shuffle t1/t5 already pay (co-partitionable)."""
-    docs = (
-        _t(spark, sf_dir, "documents")
-        .filter(F.length(F.trim("text")) > 0)
-        .select("doc_id", F.split(F.trim("text"), r"\s+").alias("t"))
-        .filter(F.size("t") >= 2)
-    )
-    bg = docs.select(
-        "doc_id",
-        F.explode(
-            F.expr("transform(sequence(0, size(t)-2), i -> concat(t[i], ' ', t[i+1]))")
-        ).alias("b"),
-    )
-    cnt = bg.groupBy("doc_id", "b").agg(F.count("*").alias("c"))
-    return cnt.groupBy("doc_id").agg(
-        F.sum("c").alias("n_bigrams"),
-        (F.sum("c") - F.count("*")).alias("n_dup_bigrams"),
-        F.max("c").alias("top_count"),
-        (F.max("c") * 5 > F.sum("c")).alias("flagged"),
-    )
-
-
-@q(
     "s12_kmeans_assign",
     # integer-exact nearest-centroid assignment: int8 quantization (the
     # s9 invariant) makes the squared-L2 distances integers, so argmin +
@@ -1617,8 +1260,7 @@ def t15_temperature_mix(spark, sf_dir):
     low-resource languages are upsampled relative to the head).  The
     keep decision is integer-exact: h = 20-bit md5(doc_id) prefix, keep
     iff h^2 * max_n < n_lang * 2^40  (equivalent to h/2^20 <
-    sqrt(n/max_n) with zero rounding — same no-RNG reproducibility as
-    t6/t8, and the same subset on any engine or cluster size).  Plan:
+    sqrt(n/max_n) with zero rounding — no RNG, so the same subset on any engine or cluster size).  Plan:
     the 5-row lang-weight dim broadcasts; the predicate is codegen'd on
     the scan.  At petabyte counts widen the comparison to decimal."""
     docs = _t(spark, sf_dir, "documents").select("doc_id", "lang")
@@ -2054,68 +1696,6 @@ def m11_video_frame_dedup(spark, sf_dir):
 
 
 @q(
-    "t18_bigram_lm_score",
-    # CCNet-style LM quality scoring made integer-exact: per-bigram
-    # "probability" = floor(1e6 * count(w1 w2) / count(w1 _)) via BIGINT
-    # integer division (no float log, no ulp drift), summed per doc
-    """WITH toks AS (
-         SELECT doc_id,
-                unnest(regexp_split_to_array(trim(text), '\\s+')) AS tok,
-                generate_subscripts(regexp_split_to_array(trim(text), '\\s+'), 1) AS i
-         FROM documents WHERE length(trim(text)) > 0),
-       bg AS (
-         SELECT doc_id, tok AS w1,
-                lead(tok) OVER (PARTITION BY doc_id ORDER BY i) AS w2
-         FROM toks),
-       big AS (SELECT doc_id, w1, w2 FROM bg WHERE w2 IS NOT NULL),
-       cp AS (SELECT w1, COUNT(*) AS cp FROM big GROUP BY w1),
-       cb AS (SELECT w1, w2, COUNT(*) AS cb FROM big GROUP BY w1, w2)
-       SELECT doc_id,
-              COUNT(*) AS n_bigrams,
-              CAST(SUM((1000000 * cb) // cp) AS BIGINT) AS lm_score
-       FROM big JOIN cb USING (w1, w2) JOIN cp USING (w1)
-       GROUP BY doc_id""",
-)
-def t18_bigram_lm_score(spark, sf_dir):
-    """Corpus-trained bigram language-model quality scoring — the
-    CCNet/KenLM-shaped filter (score each document by how typical its
-    token transitions are for the corpus; boilerplate and word-salad
-    score low).  The usual per-bigram log-prob is float and cross-engine
-    fragile; this uses the integer surrogate floor(1e6 * P(w2|w1)) via
-    BIGINT division, preserving the ranking while staying engine-exact
-    (same trick as t15's integer threshold).  All-JVM: bigrams via
-    transform-over-sequence + explode, the 31^2-row model broadcast to
-    the scoring join — at 100 TB the model stays a broadcast table and
-    the corpus is touched in two shuffle-free-after-partial-agg passes."""
-    docs = (
-        _t(spark, sf_dir, "documents")
-        .filter(F.length(F.trim("text")) > 0)
-        .select("doc_id", F.split(F.trim("text"), r"\s+").alias("t"))
-        .filter(F.size("t") >= 2)
-    )
-    big = docs.select(
-        "doc_id",
-        F.explode(
-            F.expr(
-                "transform(sequence(0, size(t)-2),"
-                " i -> named_struct('w1', t[i], 'w2', t[i+1]))"
-            )
-        ).alias("b"),
-    ).select("doc_id", "b.w1", "b.w2")
-    cp = big.groupBy("w1").agg(F.count("*").alias("cp"))
-    cb = big.groupBy("w1", "w2").agg(F.count("*").alias("cb"))
-    model = cb.join(cp, "w1")
-    return (
-        big.join(F.broadcast(model), ["w1", "w2"])
-        .groupBy("doc_id")
-        .agg(
-            F.count("*").alias("n_bigrams"),
-            F.sum(F.expr("(1000000 * cb) div cp")).alias("lm_score"),
-        )
-    )
-
-
-@q(
     "t19_dsir_importance",
     # DSIR-style importance weighting for domain-targeted data selection
     # (Xie et al. 2023): per-token weight = floor(1e6 * n_target(w) /
@@ -2141,7 +1721,7 @@ def t19_dsir_importance(spark, sf_dir):
     probabilities; the float log is cross-engine fragile, so the score
     is the integer surrogate sum(floor(1e6 * n_target(w)/n_source(w)))
     — monotone in the target/source likelihood ratio under a unigram
-    model, engine-exact (t18's BIGINT-division trick).  Plan shape: ONE
+    model, engine-exact (BIGINT division).  Plan shape: ONE
     conditional aggregation (map-side partial) builds both sides of the
     token model in a single corpus pass, the model broadcasts into the
     scoring join, score is one more partial agg — at 100 TB the model
@@ -2347,7 +1927,7 @@ def t20_global_shuffle(spark, sf_dir):
     """Deterministic global shuffle + shard export — the last step of a
     training-data pipeline (break source locality before the training
     run; every worker must derive the SAME permutation).  Permutation
-    key = md5(doc_id) (no RNG, t6/t8's reproducibility), global rank by
+    key = md5(doc_id) (no RNG), global rank by
     the two-phase distributed total-order rank: bucket on the first md5
     byte (256 buckets), per-bucket row_number + running bucket offsets
     (a 256-row driver-side-free prefix sum, broadcast back) — NO
@@ -2727,7 +2307,7 @@ def d13_incremental_dedup(spark, sf_dir):
     # leakage-free train/val split: the d6 planted-chain components are
     # ground truth (component = min base doc_id sharing the text), and
     # the split is a pure function of the COMPONENT id (md5-prefix
-    # ~10% sample, t6's engine-independent trick) — so a document and
+    # ~10% sample, engine-independent) — so a document and
     # every near-duplicate of it land on the same side by construction
     """WITH m AS (
          SELECT t.member, g.component
@@ -2816,55 +2396,6 @@ def a15_pivot_event_matrix(spark, sf_dir):
 
 
 @q(
-    "g4_bfs_2hop",
-    # k-hop BFS reachability over the g3 edge set (u -> (7u+13)%N and
-    # u -> (u*u+5)%N): per seed (doc_id < 10), distinct nodes reachable
-    # in 1 or 2 hops — the frontier-expansion primitive, integer-exact
-    """WITH n AS (SELECT COUNT(*) AS n FROM documents),
-       e AS (
-         SELECT doc_id AS u, (7 * doc_id + 13) % n.n AS v FROM documents, n
-         UNION ALL
-         SELECT doc_id AS u, (doc_id * doc_id + 5) % n.n AS v
-         FROM documents, n),
-       s AS (SELECT doc_id AS seed FROM documents WHERE doc_id < 10),
-       h1 AS (SELECT s.seed, e.v FROM s JOIN e ON e.u = s.seed),
-       h2 AS (SELECT h1.seed, e.v FROM h1 JOIN e ON e.u = h1.v),
-       r AS (SELECT seed, v FROM h1 UNION SELECT seed, v FROM h2)
-       SELECT seed, COUNT(*) AS n_reach FROM r GROUP BY seed""",
-)
-def g4_bfs_2hop(spark, sf_dir):
-    """k-hop BFS reachability — the frontier-expansion primitive under
-    every crawl (this engine's rounds ARE BFS hops over the link graph)
-    and under graph dedup closure (d6/d7), graded standalone: per seed,
-    the distinct node set reachable within 2 hops of the g3 edge set.
-    Two equi-joins against the adjacency (hop = join, the d6 precedent)
-    + one distinct — all-integer, engine-exact.  At 100 TB the
-    adjacency is hash-partitioned on u once and both hop joins reuse
-    that partitioning; the seed side stays a broadcast.  The union
-    passes through UNION (set semantics) so revisited nodes collapse
-    exactly as a crawl's seen-set collapses them."""
-    docs = _t(spark, sf_dir, "documents").select(
-        F.col("doc_id").cast("long").alias("doc_id")
-    )
-    n = docs.agg(F.count("*").alias("n"))
-    base = docs.crossJoin(F.broadcast(n))
-    e = base.select(
-        F.col("doc_id").alias("u"),
-        ((F.lit(7) * F.col("doc_id") + 13) % F.col("n")).alias("v"),
-    ).unionByName(
-        base.select(
-            F.col("doc_id").alias("u"),
-            ((F.col("doc_id") * F.col("doc_id") + 5) % F.col("n")).alias("v"),
-        )
-    )
-    s = docs.filter(F.col("doc_id") < 10).select(F.col("doc_id").alias("seed"))
-    h1 = F.broadcast(s).join(e, s.seed == e.u).select("seed", "v")
-    h2 = h1.withColumnRenamed("v", "u").join(e, "u").select("seed", "v")
-    reach = h1.unionByName(h2).distinct()
-    return reach.groupBy("seed").agg(F.count("*").alias("n_reach"))
-
-
-@q(
     "a16_cohort_retention",
     # cohort retention: users bucketed by first-event DAY (the events
     # table spans one month, so month-grain would collapse to one row),
@@ -2901,89 +2432,6 @@ def a16_cohort_retention(spark, sf_dir):
         )
     finally:
         spark.conf.set("spark.sql.session.timeZone", tz)
-
-
-@q(
-    "f21_url_parse",
-    # JVM URL decomposition (parse_url) vs a regex twin over the same
-    # constructed URLs: https://h{d%50}.example/p{d%7}/s{d%11}?x={d%3}&y={d%5}
-    """WITH u AS (
-         SELECT doc_id,
-                'https://h' || CAST(doc_id % 50 AS VARCHAR) ||
-                '.example/p' || CAST(doc_id % 7 AS VARCHAR) ||
-                '/s' || CAST(doc_id % 11 AS VARCHAR) ||
-                '?x=' || CAST(doc_id % 3 AS VARCHAR) ||
-                '&y=' || CAST(doc_id % 5 AS VARCHAR) AS url
-         FROM documents)
-       SELECT doc_id,
-              regexp_extract(url, '^([a-z]+)://', 1) AS proto,
-              regexp_extract(url, '^[a-z]+://([^/]+)', 1) AS host,
-              regexp_extract(url, '^[a-z]+://[^/]+(/[^?]*)', 1) AS path,
-              regexp_extract(url, '[?&]y=([^&]*)', 1) AS q_y
-       FROM u""",
-)
-def f21_url_parse(spark, sf_dir):
-    """URL decomposition as a first-class JVM scalar — the hot-path
-    surgery under canonicalization, host-bucketing, and the politeness
-    key (the engine's canon.py does the full normalization in an Arrow
-    UDF; THIS entry proves the pure-decomposition piece stays
-    whole-stage-codegen with Spark's built-in parse_url, no python).
-    Construct -> parse identity (t16's pattern): the URLs come from
-    doc_id formulas, the oracle re-derives every component with plain
-    regexes, so a parse_url semantic surprise (encoding, default
-    ports, query ordering) would hash-mismatch immediately.  At 100 TB
-    this runs at scan speed — zero exchanges, one projection."""
-    docs = _t(spark, sf_dir, "documents").select(
-        F.col("doc_id").cast("long").alias("doc_id")
-    )
-    d = F.col("doc_id")
-    url = F.concat(
-        F.lit("https://h"), (d % 50).cast("string"),
-        F.lit(".example/p"), (d % 7).cast("string"),
-        F.lit("/s"), (d % 11).cast("string"),
-        F.lit("?x="), (d % 3).cast("string"),
-        F.lit("&y="), (d % 5).cast("string"),
-    )
-    u = docs.select("doc_id", url.alias("url"))
-    return u.select(
-        "doc_id",
-        F.parse_url("url", F.lit("PROTOCOL")).alias("proto"),
-        F.parse_url("url", F.lit("HOST")).alias("host"),
-        F.parse_url("url", F.lit("PATH")).alias("path"),
-        F.parse_url("url", F.lit("QUERY"), F.lit("y")).alias("q_y"),
-    )
-
-
-@q(
-    "u5_intersect",
-    # INTERSECT — the §2.6 set-op shape u1 (UNION) / u2 (EXCEPT) leave
-    # ungraded: users with BOTH a big click and a big purchase (> 150
-    # keeps the intersection a proper non-empty subset at every SF —
-    # the unfiltered form matched ALL users, a near-vacuous grade)
-    """SELECT user_id FROM events
-       WHERE event_type = 'click' AND value > 150
-       INTERSECT
-       SELECT user_id FROM events
-       WHERE event_type = 'purchase' AND value > 150""",
-)
-def u5_intersect(spark, sf_dir):
-    """Set intersection — completes the set-op ladder (u1 UNION,
-    u2 EXCEPT, u3 UNION ALL): the converting-users query (a big click
-    AND a big purchase), which in the crawl engine is the
-    re-seen-on-two-channels shape.  Thresholded so the result is a
-    proper subset at every SF (5/15, 31/150, 344/1500 users) — the
-    unfiltered form returned every user, the u2-round-2 vacuity class.
-    Spark plans intersect() as a left-semi after per-side distinct
-    partial aggregation — one key shuffle per side, no join
-    explosion."""
-    ev = _t(spark, sf_dir, "events")
-    c = ev.filter((F.col("event_type") == "click") & (F.col("value") > 150)).select(
-        "user_id"
-    )
-    p = ev.filter(
-        (F.col("event_type") == "purchase") & (F.col("value") > 150)
-    ).select("user_id")
-    return c.intersect(p)
 
 
 @q(
@@ -3076,7 +2524,7 @@ def g6_label_propagation(spark, sf_dir):
     (count DESC, label ASC) tie-break — the randomness-free LPA form a
     reproducible pipeline needs).  Completes the graph ladder between
     connected components (d6/d7: transitive closure only) and
-    PageRank/HITS (g1/g2: global scores): LPA finds density clusters
+    PageRank (g1: global scores): LPA finds density clusters
     inside one component.  Per round: one (node, label) partial-count
     aggregation (map-side combine bounds hub skew — hubs here have
     ~N/10 neighbors by construction) + one per-node window argmax,
@@ -3141,61 +2589,9 @@ def a17_rollup_report(spark, sf_dir):
 
 
 @q(
-    "w10_range_frame_sum",
-    # time-RANGE window frame: per event, the trailing 1-hour sum of a
-    # milli-scaled integer surrogate (integer addition is
-    # order-independent, so the frame sum hashes exactly); RANGE peers
-    # at equal ts_us are included by both engines by definition
-    """WITH e AS (SELECT event_id, user_id, epoch_us(ts) AS ts_us,
-                         CAST(FLOOR(value * 1000) AS BIGINT) AS v_mil
-                  FROM events)
-       SELECT event_id, user_id, ts_us,
-              CAST(SUM(v_mil) OVER (PARTITION BY user_id ORDER BY ts_us
-                   RANGE BETWEEN 3600000000 PRECEDING AND CURRENT ROW)
-                   AS BIGINT) AS win_sum_mil
-       FROM e""",
-)
-def w10_range_frame_sum(spark, sf_dir):
-    """Time-RANGE window frame — the trailing-window aggregate (per
-    event: this user's last-hour activity) that ROWS frames cannot
-    express when event spacing is irregular.  Both engines order by
-    BIGINT epoch-micros and use a numeric RANGE frame of 3.6e9 us, so
-    the frame boundary and the equal-ts peer rule are bit-identical;
-    the summand is floor(value*1000) as BIGINT because a float running
-    sum is accumulation-order-dependent (the st3 lesson) while integer
-    addition commutes.  The NTZ->unix_micros cast is pinned to UTC
-    (j9 precedent) to match DuckDB's epoch_us.  Plan: ONE hash
-    exchange on user_id; the frame scan is a per-partition sorted
-    sliding sum — no shuffle amplification at 100 TB, and skew is
-    bounded by the per-user event count, not corpus size."""
-    tz = spark.conf.get("spark.sql.session.timeZone")
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    try:
-        ev = _t(spark, sf_dir, "events").select(
-            "event_id",
-            "user_id",
-            F.unix_micros(F.col("ts").cast("timestamp")).alias("ts_us"),
-            F.floor(F.col("value") * 1000).cast("long").alias("v_mil"),
-        )
-        w = (
-            Window.partitionBy("user_id")
-            .orderBy("ts_us")
-            .rangeBetween(-3_600_000_000, 0)
-        )
-        return ev.select(
-            "event_id",
-            "user_id",
-            "ts_us",
-            F.sum("v_mil").over(w).cast("long").alias("win_sum_mil"),
-        )
-    finally:
-        spark.conf.set("spark.sql.session.timeZone", tz)
-
-
-@q(
     "i2_bm25_topk",
     # BM25-shaped retrieval over the i1 index: integer-surrogate score
-    # (t18 precedent — BIGINT div instead of log idf) so ranking is
+    # (BIGINT div instead of log idf) so ranking is
     # engine-exact; top-5 docs per query term
     """WITH toks AS (
          SELECT doc_id,
@@ -3232,9 +2628,8 @@ def i2_bm25_topk(spark, sf_dir):
     denom = tf + 1 + dl/avgdl, multiplied through by avgdl so
     sat = 3*tf*avgdl / (tf*avgdl + avgdl + dl), held as
     (1e6 * num) div denom in BIGINT, then weighted by the integer idf
-    surrogate (n_docs - df + 1) — the t18 move (BIGINT div instead of
-    ln) so rank order is engine-exact with no 1-ulp flips (the t7
-    lesson); avgdl itself is SUM(dl) div N, integer both sides.
+    surrogate (n_docs - df + 1) — BIGINT div instead of ln, so rank
+    order is engine-exact with no 1-ulp flips; avgdl itself is SUM(dl) div N, integer both sides.
     Plan: the term filter prunes the explode BEFORE any shuffle
     (three terms survive), df and the corpus stats are 1-to-3-row
     broadcasts, and the per-term top-5 is a window over only matching
@@ -3339,59 +2734,6 @@ def t21_bpe_merge_rank(spark, sf_dir):
     w = Window.orderBy(F.col("cnt").desc(), "pair")
     return top.select(
         F.row_number().over(w).cast("int").alias("rnk"), "pair", "cnt"
-    )
-
-
-@q(
-    "f22_surt_key",
-    # SURT-style storage key: reversed host labels + path, the
-    # prefix-locality row key web archives cluster crawl storage on;
-    # construct->transform identity over f21's URL formulas (+ a www
-    # label on every third host so multi-label reversal is exercised)
-    """WITH u AS (
-         SELECT doc_id,
-                CASE WHEN doc_id % 3 = 0 THEN 'www.' ELSE '' END ||
-                'h' || CAST(doc_id % 50 AS VARCHAR) || '.example' AS host,
-                '/p' || CAST(doc_id % 7 AS VARCHAR) ||
-                '/s' || CAST(doc_id % 11 AS VARCHAR) AS path
-         FROM documents)
-       SELECT doc_id,
-              array_to_string(list_reverse(string_split(host, '.')), '.')
-                  AS surt_host,
-              array_to_string(list_reverse(string_split(host, '.')), '.')
-                  || ')' || path AS surt_key
-       FROM u""",
-)
-def f22_surt_key(spark, sf_dir):
-    """SURT storage key — reversed host labels (www.h0.example ->
-    example.h0.www) plus path, the row-key form web archives and
-    BigTable-style crawl stores sort on so one domain's pages are one
-    contiguous key range (range scans, per-domain splits, and prefix
-    compression all fall out of the reversal).  The engine's own
-    bucket partitioning hashes the host (storage pmod buckets); THIS
-    is the complementary layout for range-scan-heavy stores, kept
-    all-JVM: split / reverse / concat_ws in one codegen projection,
-    zero exchanges.  Construct -> transform identity (f21's pattern)
-    with a www label on every third host so multi-label reversal is
-    actually exercised, not just 2-label hosts."""
-    docs = _t(spark, sf_dir, "documents").select(
-        F.col("doc_id").cast("long").alias("doc_id")
-    )
-    d = F.col("doc_id")
-    host = F.concat(
-        F.when(d % 3 == 0, F.lit("www.")).otherwise(F.lit("")),
-        F.lit("h"), (d % 50).cast("string"), F.lit(".example"),
-    )
-    path = F.concat(
-        F.lit("/p"), (d % 7).cast("string"),
-        F.lit("/s"), (d % 11).cast("string"),
-    )
-    u = docs.select("doc_id", host.alias("host"), path.alias("path"))
-    surt_host = F.concat_ws(".", F.reverse(F.split(F.col("host"), r"\.")))
-    return u.select(
-        "doc_id",
-        surt_host.alias("surt_host"),
-        F.concat(surt_host, F.lit(")"), F.col("path")).alias("surt_key"),
     )
 
 
@@ -3650,53 +2992,6 @@ def i3_phrase_query(spark, sf_dir):
             (F.min("pos0") + 1).cast("int").alias("first_pos"),
         )
     )
-
-
-@q(
-    "i4_conjunctive_query",
-    # boolean AND retrieval: docs containing ALL of {dup, vector, order}
-    # (df(dup) ~ 5% of docs, so the intersection is a small proper
-    # subset at every SF: 13/16/156 docs at sf0.001/0.01/0.1), with the
-    # per-term tf profile certified per matching doc
-    """WITH toks AS (SELECT doc_id,
-                unnest(regexp_split_to_array(trim(text), '\\s+')) AS term
-         FROM documents WHERE length(trim(text)) > 0),
-       tf AS (SELECT doc_id, term, COUNT(*) AS tf FROM toks
-              WHERE term IN ('dup', 'vector', 'order')
-              GROUP BY doc_id, term)
-       SELECT doc_id,
-              CAST(SUM(CASE WHEN term = 'dup' THEN tf END) AS BIGINT) AS tf_dup,
-              CAST(SUM(CASE WHEN term = 'vector' THEN tf END) AS BIGINT) AS tf_vector,
-              CAST(SUM(CASE WHEN term = 'order' THEN tf END) AS BIGINT) AS tf_order
-       FROM tf GROUP BY doc_id HAVING COUNT(DISTINCT term) = 3""",
-)
-def i4_conjunctive_query(spark, sf_dir):
-    """Conjunctive (AND) boolean retrieval — the fourth rung of the
-    retrieval ladder (i1 postings, i2 ranking, i3 phrases, THIS is the
-    multi-term filter every search front-end runs first).  Posting
-    intersection restated relationally: the term filter prunes the
-    exploded stream BEFORE any shuffle (only the 3 query terms' tokens
-    survive the scan stage), one (doc, term) partial agg bounds
-    stopword skew, and HAVING count(distinct term) = n_terms IS the
-    intersection — no join chain, no driver loop, term count fixed at
-    plan time.  At 100 TB against the i1 index proper, the same shape
-    is an IN-pushdown read of 3 posting shards + this one agg."""
-    terms = ["dup", "vector", "order"]
-    toks = (
-        _t(spark, sf_dir, "documents")
-        .filter(F.length(F.trim("text")) > 0)
-        .select("doc_id", F.explode(F.split(F.trim("text"), r"\s+")).alias("term"))
-        .filter(F.col("term").isin(terms))
-    )
-    tf = toks.groupBy("doc_id", "term").agg(F.count("*").alias("tf"))
-    agg = tf.groupBy("doc_id").agg(
-        F.countDistinct("term").alias("n_terms"),
-        *[
-            F.sum(F.when(F.col("term") == t, F.col("tf"))).alias(f"tf_{t}")
-            for t in terms
-        ],
-    )
-    return agg.filter(F.col("n_terms") == len(terms)).drop("n_terms")
 
 
 @q(
@@ -4013,13 +3308,13 @@ def w11_ntile_buckets(spark, sf_dir):
     so the entry grades the exact INTEGER form
     floor((rank-1)*1000 / max(n-1, 1)) instead — same information and
     hash-exact, because IEEE division of integers below 2^30 is never
-    within 0.5 ulp of a wrong floor boundary (t7's rounding lesson);
+    within 0.5 ulp of a wrong floor boundary;
     the max(..,1) guards single-event users, whose 0/0 would RAISE
     under ANSI.
     Plan: ONE hash exchange on user_id serves ntile, rank, and the
     partition count; per-user ordering bounds the sort, never corpus
-    size.  Single-user-per-task skew is the w10 story: bounded by the
-    entity's event count."""
+    size.  Single-user-per-task skew is bounded by the entity's event
+    count."""
     ev = _t(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("value", "event_id")
     wc = Window.partitionBy("user_id")
@@ -4031,294 +3326,6 @@ def w11_ntile_buckets(spark, sf_dir):
             (F.rank().over(w) - 1) * 1000
             / F.greatest(F.count(F.lit(1)).over(wc) - 1, F.lit(1))
         ).cast("long").alias("pr_mille"),
-    )
-
-
-@q(
-    "u6_except_all",
-    # EXCEPT ALL — the MULTISET difference u2's set EXCEPT cannot
-    # express: a user with 3 big views and 1 big click keeps 2 rows
-    # (surplus view sessions not followed by a click), with exact
-    # multiplicity; same >150 thresholds as u5 keep both sides proper
-    # subsets at every SF
-    """SELECT user_id FROM events
-       WHERE event_type = 'view' AND value > 150
-       EXCEPT ALL
-       SELECT user_id FROM events
-       WHERE event_type = 'click' AND value > 150""",
-)
-def u6_except_all(spark, sf_dir):
-    """Multiset difference (DataFrame.exceptAll) — completes the set-op
-    ladder's bag semantics (u1 UNION / u2 EXCEPT / u3 UNION ALL /
-    u5 INTERSECT are set-or-append shapes; only EXCEPT ALL preserves
-    surplus MULTIPLICITY).  The crawl reading: per-user unconverted
-    big-view sessions, counted not deduplicated.  Spark plans exceptAll
-    as a per-side count aggregate + generate (replicate rows by the
-    count difference) — two partial-agg shuffles on the key, never a
-    row-by-row anti-join, so it holds at 10^10 events; multiplicities
-    make the value-hash grade strictly stronger than u2's key-set
-    grade."""
-    ev = _t(spark, sf_dir, "events")
-    v = ev.filter((F.col("event_type") == "view") & (F.col("value") > 150)).select(
-        "user_id"
-    )
-    c = ev.filter((F.col("event_type") == "click") & (F.col("value") > 150)).select(
-        "user_id"
-    )
-    return v.exceptAll(c)
-
-
-@q(
-    "w12_rows_frame_trail3",
-    # ROWS-frame sibling of w10's RANGE frame: trailing-3-events sum per
-    # user; the (ts, event_id) order is TOTAL (event_id unique) so the
-    # row frame is engine-exact; integer milli-scaled summand (w10 rule)
-    """SELECT event_id, user_id,
-              CAST(SUM(CAST(FLOOR(value * 1000) AS BIGINT)) OVER (
-                PARTITION BY user_id ORDER BY ts, event_id
-                ROWS BETWEEN 2 PRECEDING AND CURRENT ROW) AS BIGINT) AS trail3
-       FROM events""",
-)
-def w12_rows_frame_trail3(spark, sf_dir):
-    """ROWS window frame — the physical frame processor w10's RANGE
-    frame does not exercise (a row frame slides by COUNT, a range frame
-    by value; Spark plans them with different frame processors): per
-    event, the sum of this user's last three events.  ROWS frames are
-    only deterministic under a TOTAL order, so event_id breaks ts ties
-    — without it, equal-ts rows could legally swap and change every
-    frame they straddle (the class of bug the w10 docstring ducks by
-    using RANGE).  Summand is floor(value*1000) BIGINT: IEEE double
-    multiply is bit-deterministic cross-engine, and integer addition
-    commutes, so no float-summation-order tolerance games.  Plan: ONE
-    hash exchange on user_id, per-partition sort, O(1)-memory sliding
-    frame — no shuffle amplification at 100 TB."""
-    w = (
-        Window.partitionBy("user_id")
-        .orderBy("ts", "event_id")
-        .rowsBetween(-2, 0)
-    )
-    return _t(spark, sf_dir, "events").select(
-        "event_id",
-        "user_id",
-        F.sum(F.floor(F.col("value") * 1000).cast("long")).over(w)
-        .cast("long").alias("trail3"),
-    )
-
-
-@q(
-    "i5_proximity_query",
-    # unordered windowed co-occurrence: docs where 'order' and 'fast'
-    # land within 3 positions IN EITHER ORDER — strictly more than i3's
-    # exact adjacency (which it contains); per doc the qualifying pair
-    # count and the closest distance
-    """WITH t AS (SELECT doc_id, regexp_split_to_array(trim(text), '\\s+') AS toks
-                  FROM documents WHERE length(trim(text)) > 0),
-       p AS (SELECT doc_id, unnest(toks) AS tok,
-                    unnest(generate_series(1, len(toks))) AS pos
-             FROM t),
-       a AS (SELECT doc_id, pos FROM p WHERE tok = 'order'),
-       b AS (SELECT doc_id, pos FROM p WHERE tok = 'fast')
-       SELECT a.doc_id, CAST(COUNT(*) AS BIGINT) AS n_pairs,
-              CAST(MIN(abs(a.pos - b.pos)) AS INT) AS min_dist
-       FROM a JOIN b ON a.doc_id = b.doc_id AND abs(a.pos - b.pos) <= 3
-       GROUP BY a.doc_id""",
-)
-def i5_proximity_query(spark, sf_dir):
-    """Proximity (NEAR/k) retrieval — the rung between i3's exact
-    phrase and i4's bag-of-words AND: both terms within k positions in
-    either order, the query class behind "terms near each other"
-    operators (Lucene SpanNearQuery).  Positional postings come from
-    ONE posexplode pass filtered to the two query terms BEFORE any
-    shuffle (the i2 pruning rule), then a per-doc equi-join of the two
-    position lists with the |Δpos| <= k refine — pair blowup is bounded
-    by per-doc term frequency, never corpus size.  At 100 TB this is
-    two term-pruned posting scans and one doc-keyed equi-join — the
-    same shape a real positional index serves from disk."""
-    toks = (
-        _t(spark, sf_dir, "documents")
-        .filter(F.length(F.trim("text")) > 0)
-        .select("doc_id", F.posexplode(F.split(F.trim("text"), r"\s+")).alias("pos0", "tok"))
-        .filter(F.col("tok").isin("order", "fast"))
-        .select("doc_id", "tok", (F.col("pos0") + 1).alias("pos"))
-    )
-    a = toks.filter(F.col("tok") == "order").select("doc_id", F.col("pos").alias("pa"))
-    b = toks.filter(F.col("tok") == "fast").select("doc_id", F.col("pos").alias("pb"))
-    return (
-        a.join(b, "doc_id")
-        .filter(F.abs(F.col("pa") - F.col("pb")) <= 3)
-        .groupBy("doc_id")
-        .agg(
-            F.count("*").alias("n_pairs"),
-            F.min(F.abs(F.col("pa") - F.col("pb"))).cast("int").alias("min_dist"),
-        )
-    )
-
-
-@q(
-    "t22_vocab_coverage",
-    # tokenizer-vocabulary truncation: the smallest count-ranked prefix
-    # covering 90% of corpus token mass — keep iff the EXCLUSIVE prefix
-    # sum is still short of 90%, all-BIGINT ((cum-cnt)*10 < 9*total);
-    # (count DESC, token ASC) is a total order so ranks are engine-exact
-    """WITH t AS (SELECT unnest(regexp_split_to_array(trim(text), '\\s+')) AS tok
-                  FROM documents WHERE length(trim(text)) > 0),
-       c AS (SELECT tok, CAST(COUNT(*) AS BIGINT) AS cnt FROM t
-             WHERE tok <> '' GROUP BY tok),
-       tot AS (SELECT CAST(SUM(cnt) AS BIGINT) AS total FROM c),
-       w AS (SELECT tok, cnt,
-                    CAST(SUM(cnt) OVER (ORDER BY cnt DESC, tok
-                                        ROWS UNBOUNDED PRECEDING) AS BIGINT) AS cum,
-                    CAST(ROW_NUMBER() OVER (ORDER BY cnt DESC, tok) AS BIGINT) AS rnk
-             FROM c)
-       SELECT tok, cnt, rnk FROM w, tot
-       WHERE (cum - cnt) * 10 < 9 * tot.total""",
-)
-def t22_vocab_coverage(spark, sf_dir):
-    """Vocabulary-coverage truncation — the tokenizer-building step
-    after t21's merge ranking: keep the smallest frequency-ranked token
-    prefix covering 90% of corpus mass (how vocab sizes and OOV budgets
-    get chosen).  The keep rule uses the EXCLUSIVE prefix sum in BIGINT
-    ((cum - cnt)*10 < 9*total) so the boundary token — the one that
-    crosses 90% — is kept by both engines identically, no float
-    fractions anywhere; (count DESC, token ASC) totalizes the order so
-    rank/cumsum are engine-exact.  Plan shape: the corpus-sized work is
-    ONE count aggregate (map-side partial); the window then runs over
-    the AGGREGATED vocabulary — |V| rows, bounded and ~10^6 at web
-    scale, the standard single-partition tail every vocab builder pays
-    (t20's two-phase bucket rank is the escape hatch if |V| ever
-    isn't)."""
-    c = (
-        _t(spark, sf_dir, "documents")
-        .filter(F.length(F.trim("text")) > 0)
-        .select(F.explode(F.split(F.trim("text"), r"\s+")).alias("tok"))
-        .filter(F.col("tok") != "")
-        .groupBy("tok")
-        .agg(F.count("*").alias("cnt"))
-    )
-    total = c.agg(F.sum("cnt").alias("total"))
-    wspec = Window.orderBy(F.col("cnt").desc(), "tok")
-    w = c.select(
-        "tok",
-        "cnt",
-        F.sum("cnt").over(wspec.rowsBetween(Window.unboundedPreceding, 0))
-        .cast("long").alias("cum"),
-        F.row_number().over(wspec).cast("long").alias("rnk"),
-    )
-    return (
-        w.crossJoin(F.broadcast(total))
-        .filter((F.col("cum") - F.col("cnt")) * 10 < 9 * F.col("total"))
-        .select("tok", "cnt", "rnk")
-    )
-
-
-@q(
-    "t23_hashed_classifier",
-    # fastText-style hashed linear classifier, integer-exact: tokens
-    # hash to 256 buckets via the engine-shared md5 2-hex-char prefix;
-    # each bucket's weight is the SIGN of its CLASS-BALANCED margin
-    # sg*T_bad - sb*T_good (per-bucket class counts cross-scaled by the
-    # OTHER class's total, the exact integer form of a rate difference
-    # — an unbalanced margin would just learn which class has more
-    # tokens) under the surrogate label good = (lang = 'en'); a doc's
-    # score is the tf-weighted sum of its buckets' weights — all
-    # BIGINT arithmetic, no float boundary anywhere
-    """WITH toks AS (
-         SELECT doc_id, lang = 'en' AS good,
-                substr(md5(term), 1, 2) AS bucket
-         FROM (SELECT doc_id, lang,
-                      unnest(regexp_split_to_array(trim(text), '\\s+')) AS term
-               FROM documents WHERE length(trim(text)) > 0)),
-       tf AS (SELECT doc_id, good, bucket, COUNT(*) AS tf
-              FROM toks GROUP BY doc_id, good, bucket),
-       bk AS (SELECT bucket,
-                     CAST(SUM(CASE WHEN good THEN tf ELSE 0 END) AS BIGINT) AS sg,
-                     CAST(SUM(CASE WHEN good THEN 0 ELSE tf END) AS BIGINT) AS sb
-              FROM tf GROUP BY bucket),
-       tot AS (SELECT CAST(SUM(sg) AS BIGINT) AS t_good,
-                      CAST(SUM(sb) AS BIGINT) AS t_bad FROM bk),
-       model AS (
-         SELECT bucket,
-                CASE WHEN sg * t_bad > sb * t_good THEN 1
-                     WHEN sg * t_bad < sb * t_good THEN -1
-                     ELSE 0 END AS w
-         FROM bk, tot)
-       SELECT t.doc_id,
-              CAST(SUM(t.tf * m.w) AS BIGINT) AS score,
-              SUM(t.tf * m.w) > 0 AS keep
-       FROM tf t JOIN model m USING (bucket)
-       GROUP BY t.doc_id""",
-)
-def t23_hashed_classifier(spark, sf_dir):
-    """Quality filtering with a trained linear classifier — the
-    fastText-shaped gate every production LLM corpus passes through
-    (CCNet/GPT-3 style), as hashed bag-of-tokens: hash each token to a
-    small bucket space, learn one integer weight per bucket from
-    labeled examples, score a document as the weighted sum of its
-    token-bucket counts.  Labels here are a deterministic surrogate
-    (lang = 'en') so training is self-contained and the twin can
-    re-derive the exact model; weights are the SIGN of the
-    CLASS-BALANCED per-bucket margin sg*T_bad - sb*T_good (the exact
-    integer form of an occurrence-rate difference — the unbalanced
-    margin would only learn which class has more total tokens),
-    making train AND inference all-integer — engine-exact with zero
-    float tolerance.  Plan shape: ONE explode feeds a (doc_id, bucket)
-    tf aggregate (map-side combine bounds stopword skew, i1's trick),
-    localCheckpointed because both the model build and the scoring
-    join consume it (g5's rule: two consumers of an explode subtree
-    would otherwise recompute the corpus scan twice); the cross-scale
-    products happen on the 256-row bucket aggregate (never per
-    document), and the 256-row model broadcasts, so scoring adds no
-    shuffle beyond the final per-doc sum.  At 100 TB: identical shape
-    — the model is always tiny (hash-bucket count, not vocab size),
-    which is the entire point of the hashing trick; with ~10^14-token
-    classes the sg*T products need the margin re-expressed over a
-    common divisor (or DECIMAL), a representation change only."""
-    toks = (
-        _t(spark, sf_dir, "documents")
-        .filter(F.length(F.trim("text")) > 0)
-        .select(
-            "doc_id",
-            (F.col("lang") == "en").alias("good"),
-            F.explode(F.split(F.trim("text"), r"\s+")).alias("term"),
-        )
-        .select(
-            "doc_id",
-            "good",
-            F.substring(F.md5(F.col("term").cast("binary")), 1, 2).alias("bucket"),
-        )
-    )
-    tf = (
-        toks.groupBy("doc_id", "good", "bucket")
-        .agg(F.count("*").alias("tf"))
-        .localCheckpoint(eager=True)
-    )
-    bk = tf.groupBy("bucket").agg(
-        F.sum(F.when(F.col("good"), F.col("tf")).otherwise(F.lit(0)))
-        .cast("long")
-        .alias("sg"),
-        F.sum(F.when(F.col("good"), F.lit(0)).otherwise(F.col("tf")))
-        .cast("long")
-        .alias("sb"),
-    )
-    tot = bk.agg(
-        F.sum("sg").cast("long").alias("t_good"),
-        F.sum("sb").cast("long").alias("t_bad"),
-    )
-    model = bk.crossJoin(F.broadcast(tot)).select(
-        "bucket",
-        F.when(F.col("sg") * F.col("t_bad") > F.col("sb") * F.col("t_good"), F.lit(1))
-        .when(F.col("sg") * F.col("t_bad") < F.col("sb") * F.col("t_good"), F.lit(-1))
-        .otherwise(F.lit(0))
-        .cast("long")
-        .alias("w"),
-    )
-    return (
-        tf.join(F.broadcast(model), "bucket")
-        .groupBy("doc_id")
-        .agg(
-            F.sum(F.col("tf") * F.col("w")).cast("long").alias("score"),
-            (F.sum(F.col("tf") * F.col("w")) > 0).alias("keep"),
-        )
     )
 
 
@@ -4388,37 +3395,6 @@ def d14_prefix_filter_join(spark, sf_dir):
         ).alias("tok"),
     )
     return prefix_filter_pairs(base.unionByName(twin), threshold=(4, 5))
-
-
-@q(
-    "u7_intersect_all",
-    # INTERSECT ALL — the multiset meet completing u6's bag ladder: a
-    # user with 3 big views and 2 big clicks keeps min(3,2) = 2 rows;
-    # same >150 thresholds as u5/u6 keep both sides proper subsets
-    """SELECT user_id FROM events
-       WHERE event_type = 'view' AND value > 150
-       INTERSECT ALL
-       SELECT user_id FROM events
-       WHERE event_type = 'click' AND value > 150""",
-)
-def u7_intersect_all(spark, sf_dir):
-    """Multiset intersection (DataFrame.intersectAll) — closes the
-    set-op ladder: with u6's EXCEPT ALL this gives both bag-algebra
-    primitives (meet = min of multiplicities, difference = surplus).
-    The crawl reading: per-user big-view sessions that CAN be paired
-    one-to-one with a big click — the matched-session count an
-    attribution model caps conversions at.  Spark plans intersectAll
-    like exceptAll: per-side count aggregates + generate
-    (min(count_l, count_r) replicas), two partial-agg shuffles on the
-    key — no row-by-row join, so it holds at 10^10 events."""
-    ev = _t(spark, sf_dir, "events")
-    v = ev.filter((F.col("event_type") == "view") & (F.col("value") > 150)).select(
-        "user_id"
-    )
-    c = ev.filter((F.col("event_type") == "click") & (F.col("value") > 150)).select(
-        "user_id"
-    )
-    return v.intersectAll(c)
 
 
 @q(

@@ -102,3 +102,31 @@ def test_crawl_identical_with_and_without_bloom(spark, tmp_path):
             {(r["url"], r["state"]) for r in c.frontier_df().collect()},
         )
     assert outs["none"] == outs["bloom"]
+
+
+def test_seen_filter_entry_releases_prefilter_state(spark, monkeypatch):
+    """c3_seen_filter_split runs the real prefilter; like run_round it
+    must unpersist the tagged cache and destroy the Bloom broadcast, or
+    every grading call leaks one cached frame and one broadcast."""
+    import os
+
+    import spider_spark.bloom as bloom_mod
+    from spider_spark.catalog import QUERIES
+
+    made = []
+
+    def spy(*args):
+        out = bloom_prefilter(*args)
+        made.append(out)
+        return out
+
+    monkeypatch.setattr(bloom_mod, "bloom_prefilter", spy)
+    jsc = spark.sparkContext._jsc
+    before = jsc.getPersistentRDDs().size()
+    for _ in range(2):
+        assert QUERIES["c3_seen_filter_split"](spark, "/root/testdata/sf0.001").count() > 0
+    assert len(made) == 2
+    assert jsc.getPersistentRDDs().size() == before
+    for _, _, tagged, bc in made:
+        assert not tagged.is_cached
+        assert not os.path.exists(bc._path)
