@@ -7,10 +7,23 @@ URLs.  Safety direction: a false positive only costs an extra exact
 check; a URL is NEVER dropped on Bloom evidence alone.
 
 Sharding: ``shard = url_hash & (n_shards-1)``; each shard is an
-independent bit array.  Deltas are built per-partition with
-``applyInPandas`` (numpy bit math, no per-row Python), OR-merged on the
-driver, and re-broadcast — at cluster scale each round ships only the
-shard bitmaps (fixed bytes), not the seen table.
+independent bit array, re-broadcast each round — at cluster scale a
+round ships only the shard bitmaps (fixed bytes), not the seen table.
+
+Two build paths, by size:
+
+- **Full rebuilds** from ``seen`` (``Crawler.bootstrap``/``resume``)
+  run distributed: ``update_from_df`` builds each shard's bitmap with
+  ``applyInPandas`` (numpy bit math, no per-row Python) and ORs them in
+  on the driver.
+- **Per-round deltas** (a round's new links, an admitted seed batch)
+  are ORed in on the driver by ``update_local`` from the ``url_hash``
+  values the caller already collected to count them: no Spark job.
+  That collect costs 8 B per new URL, while ``update_from_df`` ships
+  back one m/8-byte bitmap per touched shard (2 MiB in all at the
+  default 16 x 2^20 bits).  So the collect is the smaller of the two
+  while a delta adds fewer than total_bits/64 URLs (262k at the
+  default).
 
 Double-hashing scheme: h_i = h1 + i*h2 (Kirsch–Mitzenmacher), with
 h1/h2 derived from url_hash by odd-constant mixing — public-domain
@@ -98,8 +111,8 @@ class ShardedBloom:
         return out
 
     def update_from_df(self, spark: SparkSession, delta: DataFrame) -> None:
-        """Per-partition delta build (applyInPandas over shard id) +
-        driver-side OR merge."""
+        """Distributed build (applyInPandas over shard id) + driver-side
+        OR merge: the full rebuild from ``seen``."""
         n_shards, m, k = self.n_shards, self.m, self.k
 
         def build(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -120,6 +133,7 @@ class ShardedBloom:
             self.shards[r["shard"] % self.n_shards] |= np.frombuffer(r["bits"], dtype=np.uint64)
 
     def update_local(self, url_hash: np.ndarray) -> None:
+        """OR a driver-held delta of url_hash values in (no Spark job)."""
         for sid, bits in self._delta_for(url_hash).items():
             self.shards[sid] |= bits
 

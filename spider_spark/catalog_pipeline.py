@@ -1126,15 +1126,13 @@ def s9_int8_quant(spark, sf_dir):
     """Symmetric int8 embedding quantization (the 4x storage compression
     an ANN index over a 100 TB embedding store runs on — PQ's scalar
     little sibling, and the form int8 ADC kernels consume).  All-JVM:
-    array_max for the per-vector scale, one transform for the codes;
-    graded on the exact integer profile (sum/min/max) per vector."""
+    ``int8_quantize_col`` (array_max for the per-vector scale, one
+    transform for the codes); graded on the exact integer profile
+    (sum/min/max) per vector."""
+    from .functions.similarity import int8_quantize_col
+
     e = _t(spark, sf_dir, "embeddings")
-    mx = F.array_max(F.transform("embedding", lambda v: F.abs(v)))
-    sc = F.lit(127.0) / mx
-    qarr = F.transform(
-        "embedding",
-        lambda v: F.floor(v.cast("double") * sc + F.lit(0.5)).cast("int"),
-    )
+    qarr = int8_quantize_col(F.col("embedding"))
     return e.select(
         "vec_id",
         F.aggregate(qarr, F.lit(0).cast("long"), lambda a, x: a + x).alias("q_sum"),

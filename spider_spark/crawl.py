@@ -64,12 +64,15 @@ class Crawler:
         new = seeds.join(
             self.store.read("seen").select("url_hash"), "url_hash", "left_anti"
         ).cache()
-        n_new = new.count()
+        # one collect of the new hashes is both the count and the Bloom
+        # delta (ORed in on the driver, like a round's; see bloom.py)
+        hashes = new.select("url_hash").toArrow().column("url_hash").to_numpy()
+        n_new = len(hashes)
         if n_new:
             self._merge_frontier(frontier.pending_rows(new, next_fetch_time, round_id))
             self.store.append("seen", seen_rows(new, self.cfg))
             if self.bloom is not None:
-                self.bloom.update_from_df(self.spark, new.select("url_hash"))
+                self.bloom.update_local(hashes)
             self.store.commit_round(round_id, extra={what: n_new})
         new.unpersist()
         return n_new
@@ -190,10 +193,12 @@ class Crawler:
                         prior = self.store.read_partitions("media", cand_b)
                         delta = delta.join(prior.select("media_ref"), "media_ref", "left_anti")
                     self.store.append("media", delta, partition_by=["media_bucket"])
-                self.store.merge_upsert("host_state", out["host_updates"], key="host")
-                self.store.append("lineage", out["lineage"])
-                if self.bloom is not None and res.new_urls:
-                    self.bloom.update_from_df(self.spark, out["seen_delta"])
+                # driver-sized rows (<= n_hosts, <= fetch_partitions) and
+                # the collected Bloom delta: no Spark job of their own
+                self.store.upsert_rows("host_state", out["host_state"], key="host")
+                self.store.append_rows("lineage", out["lineage"])
+                if self.bloom is not None:
+                    self.bloom.update_local(out["new_hashes"])
                 self.store.commit_round(r)
                 self.store.expire_snapshots(keep=expire_keep)
                 # small-file maintenance (Iceberg rewrite_data_files

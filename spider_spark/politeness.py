@@ -12,6 +12,8 @@ Reference analogs (SURVEY.md §2.8 T2/T3):
 
 All gates are DataFrame expressions evaluated against broadcastable
 host-level tables — politeness state is data, not a mutable service.
+The quarantine rule itself is a pure function of one round's per-host
+counts, which the round collects anyway (at most one row per host).
 """
 
 from __future__ import annotations
@@ -61,20 +63,16 @@ def robots_allowed(urls: DataFrame, hosts: DataFrame, url_col: str = "url") -> D
     return allowed.drop("_path", "disallow_prefixes")
 
 
-def quarantine_updates(results: DataFrame, round_id: int) -> DataFrame:
-    """(host, last_fetch_round, quarantined) rows for this round's hosts."""
-    return (
-        results.groupBy("host")
-        .agg(
-            F.count(F.lit(1)).alias("_n"),
-            F.sum((F.col("err_type") > 0).cast("long")).alias("_err"),
-        )
-        .select(
-            "host",
-            F.lit(round_id).cast("long").alias("last_fetch_round"),
-            (
-                (F.col("_n") >= QUARANTINE_MIN)
-                & (F.col("_err") / F.col("_n") > QUARANTINE_RATE)
-            ).alias("quarantined"),
-        )
-    )
+def quarantine_rows(host_counts: dict, round_id: int) -> dict[str, list]:
+    """``host_state`` rows for this round's hosts, as columns for
+    ``TableStore.upsert_rows``.  ``host_counts`` maps each fetched host to
+    its (fetches, errors) this round; the rule is T3's."""
+    hosts = sorted(host_counts)
+    return {
+        "host": hosts,
+        "last_fetch_round": [round_id] * len(hosts),
+        "quarantined": [
+            n >= QUARANTINE_MIN and err / n > QUARANTINE_RATE
+            for n, err in (host_counts[h] for h in hosts)
+        ],
+    }

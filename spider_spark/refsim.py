@@ -206,7 +206,7 @@ def simulate(
                 next_fetch=r + 1,
             )
 
-        # ---- host state + quarantine (politeness.quarantine_updates)
+        # ---- host state + quarantine (politeness.quarantine_rows)
         for h, (n, errs) in host_stats.items():
             last_fetch[h] = r
             if n >= QUARANTINE_MIN and errs / n > QUARANTINE_RATE:

@@ -5,14 +5,26 @@ dequeue (W1) → politeness gates (T2/T3) → salted repartition → fetch+parse
 Bloom prefilter + exact seen anti-join (J5) → MERGE-back (frontier /
 seen / host_state / documents) → per-partition lineage rows (T1).
 
-The driver only sequences rounds; every data-touching step is a
-DataFrame op.  A round is several Spark jobs, not one.  ``run_round``'s
-own actions are: the ``_round_results`` snapshot of the fetch stage
-(``materialize``); one grouped count over the Bloom-tagged candidates,
-which gives the candidate count and the seen buckets to open; the
-lineage collect; and the new-link count.  The caller's MERGE-back
-writes, Bloom update and commit run the rest (about 30 jobs per
-storage-inclusive round in all).
+The driver only sequences rounds; every step that touches crawl-sized
+data is a DataFrame op.  A round is several Spark jobs, not one.
+``run_round``'s own actions are:
+
+- the ``_round_results`` snapshot of the fetch stage (``materialize``);
+- one grouped count over the Bloom-tagged candidates, which gives the
+  candidate count and the seen buckets to open;
+- one grouping-sets collect over the fetch results: per-partition
+  lineage rows and per-host (fetches, errors), at most fetch partitions
+  + fetched hosts rows;
+- one collect of the new links' ``url_hash`` values: their count is the
+  round's new-URL count and they are its Bloom delta.
+
+The caller writes the frontier, seen and documents with Spark and
+commits.  The driver-sized outputs -- ``host_state`` rows (at most
+``n_hosts``), lineage rows (at most ``fetch_partitions``) and the Bloom
+delta -- launch no Spark job of their own: the store writes them with
+pyarrow (``TableStore.upsert_rows``/``append_rows``) and the Bloom ORs
+the hashes in on the driver (``ShardedBloom.update_local``).  A
+storage-inclusive round is about 23 Spark jobs in all.
 """
 
 from __future__ import annotations
@@ -25,7 +37,6 @@ from pyspark.sql import functions as F
 
 from . import bloom as bloom_mod
 from . import canon, fetch, frontier, parse, politeness
-from .schemas import LINEAGE
 
 
 @dataclass
@@ -210,38 +221,43 @@ def run_round(
     )
     frontier_updates = updates.unionByName(new_rows)
     seen_delta = seen_rows(new_links, cfg)
-    host_updates = politeness.quarantine_updates(results, round_id)
 
-    # ---- metrics (A1/A5 analog: per-batch valid/invalid counts ->
-    # per-partition lineage rows)
-    lineage = (
-        results.groupBy("partition_id")
+    # ---- per-partition lineage rows (A1/A5 analog) and per-host
+    # quarantine counts (T3) from ONE driver action: grouping sets over
+    # partition_id and host give at most fetch_partitions + fetched-hosts
+    # rows, which the store writes as driver rows (no Spark write job).
+    stats = (
+        results.groupingSets([["partition_id"], ["host"]], "partition_id", "host")
         .agg(
-            F.count(F.lit(1)).alias("dequeued"),
-            F.sum((F.col("err_type") == 0).cast("long")).alias("fetched_ok"),
-            F.sum((F.col("err_type") > 0).cast("long")).alias("errors"),
+            F.grouping("host").alias("by_part"),
+            F.count(F.lit(1)).alias("n"),
+            F.sum((F.col("err_type") == 0).cast("long")).alias("ok"),
+            F.sum((F.col("err_type") > 0).cast("long")).alias("err"),
         )
-        .select(
-            F.lit(round_id).cast("long").alias("round_id"),
-            "partition_id",
-            "dequeued",
-            "fetched_ok",
-            "errors",
-            F.lit(None).cast("long").alias("new_urls"),
-            F.lit(None).cast("long").alias("dup_urls"),
-            F.lit(None).cast("long").alias("wall_ms"),
-        )
+        .collect()
     )
-
-    # ONE driver action covers both the lineage sink and the round
-    # metrics: the per-partition rows are tiny (<= fetch partitions), so
-    # collect them, sum in python, and hand the store a local-relation
-    # DataFrame — no second results.agg job (VERDICT r1 #8).
-    lineage_rows = lineage.collect()
-    n_deq = sum(r["dequeued"] for r in lineage_rows)
-    n_ok = sum(r["fetched_ok"] for r in lineage_rows)
-    lineage = spark.createDataFrame(lineage_rows, LINEAGE)
-    n_new = new_links.count()
+    parts = sorted((r for r in stats if r["by_part"]), key=lambda r: r["partition_id"])
+    n_deq = sum(r["n"] for r in parts)
+    n_ok = sum(r["ok"] for r in parts)
+    nulls = [None] * len(parts)
+    lineage = {
+        "round_id": [round_id] * len(parts),
+        "partition_id": [r["partition_id"] for r in parts],
+        "dequeued": [r["n"] for r in parts],
+        "fetched_ok": [r["ok"] for r in parts],
+        "errors": [r["err"] for r in parts],
+        "new_urls": nulls,
+        "dup_urls": nulls,
+        "wall_ms": nulls,
+    }
+    host_state = politeness.quarantine_rows(
+        {r["host"]: (r["n"], r["err"]) for r in stats if not r["by_part"]}, round_id
+    )
+    # the new links' hashes, once: their count is the round's new-URL
+    # count and they are the Bloom delta (8 B per new URL, ORed in on the
+    # driver -- see bloom.py)
+    new_hashes = new_links.select("url_hash").toArrow().column("url_hash").to_numpy()
+    n_new = len(new_hashes)
     batch_urls = None
     if record_order:
         batch_urls = [
@@ -265,8 +281,9 @@ def run_round(
         "seen_delta": seen_delta,
         "documents": docs,
         "media_delta": media_delta,
-        "host_updates": host_updates,
+        "host_state": host_state,
         "lineage": lineage,
+        "new_hashes": new_hashes,
         "_cached": [tagged, new_links],
         # round-scoped broadcasts: destroyed by the caller once the
         # round's actions complete (never-destroyed per-round broadcasts

@@ -669,7 +669,25 @@ class TableStore:
         incoming frame to carry NEW columns on top of the committed set;
         missing columns and type drift on existing columns stay hard
         errors either way — evolution is additive only."""
-        have = [f.name for f in df.schema.fields]
+        self._check_fields(
+            table,
+            [(f.name, f.dataType.simpleString()) for f in df.schema.fields],
+            manifest,
+            what,
+            allow_evolution,
+        )
+
+    def _check_fields(
+        self,
+        table: str,
+        fields: list[tuple[str, str]],
+        manifest: dict,
+        what: str,
+        allow_evolution: bool = False,
+    ) -> None:
+        """``_check_schema`` over (name, Spark simpleString) pairs: the one
+        rule both the DataFrame writes and the driver-row writes obey."""
+        have = [name for name, _t in fields]
         want = manifest["columns"]
         if sorted(have) != sorted(want):
             extra = sorted(set(have) - set(want))
@@ -688,9 +706,9 @@ class TableStore:
         committed = StructType.fromJson(json.loads(manifest["schema"]))
         want_types = {f.name: f.dataType.simpleString() for f in committed.fields}
         drift = {
-            f.name: (f.dataType.simpleString(), want_types[f.name])
-            for f in df.schema.fields
-            if f.name in want_types and f.dataType.simpleString() != want_types[f.name]
+            name: (t, want_types[name])
+            for name, t in fields
+            if name in want_types and t != want_types[name]
         }
         if drift:
             raise ValueError(
@@ -779,6 +797,121 @@ class TableStore:
         return self._commit_version(
             table, v, prev["members"] + new_members, schema, pcol, expected=base,
             deletes=prev.get("deletes"), txn=txn_map,
+        )
+
+    # ------------------------------------------------------------ driver rows
+    def append_rows(self, table: str, cols: dict) -> str:
+        """``append`` for rows the driver already holds, given as
+        ``{column: values}``: written with pyarrow as one
+        ``seg{N}/part-00000.parquet`` and committed through the same
+        version/CAS path — no Spark job.  For driver-sized deltas of an
+        existing unpartitioned table (a round's per-partition lineage
+        rows); names and types are checked like ``append``'s."""
+        base = self.current_version(table)
+        prev = self._manifest(table, base)
+        rows = self._rows_table(table, cols, prev, "append_rows")
+        return self._commit_rows(table, base, prev, prev["members"], rows)
+
+    def upsert_rows(self, table: str, cols: dict, key: str) -> str:
+        """``merge_upsert`` for a driver-sized unpartitioned table (a
+        crawl's ``host_state``, one row per host): the current rows are
+        read with pyarrow, every row whose ``key`` the update carries is
+        replaced, and the result is committed as one new segment — no
+        Spark job.  A NULL key matches nothing, as in ``merge_upsert``'s
+        left-anti join: NULL-key rows already stored are kept, NULL-key
+        update rows are inserted.  Refuses a table with outstanding
+        equality deletes (``compact`` it first)."""
+        import pyarrow as pa
+        import pyarrow.compute as pc
+        import pyarrow.parquet as pq
+
+        base = self.current_version(table)
+        prev = self._manifest(table, base)
+        rows = self._rows_table(table, cols, prev, "upsert_rows")
+        if key not in prev["columns"]:
+            raise ValueError(f"upsert key '{key}' not a column of '{table}'")
+        if prev.get("deletes"):
+            raise ValueError(
+                f"upsert_rows to table '{table}': outstanding equality deletes; "
+                f"compact the table first"
+            )
+        cur = pa.concat_tables(
+            [rows.schema.empty_table()]
+            + [
+                pq.read_table(os.path.join(self._tdir(table), m["path"]), schema=rows.schema)
+                for m in prev["members"]
+            ]
+        )
+        replaced = pc.is_in(cur[key], value_set=rows[key].drop_null())
+        merged = pa.concat_tables([cur.filter(pc.invert(replaced)), rows])
+        return self._commit_rows(table, base, prev, [], merged)
+
+    # Spark simpleString -> pyarrow type alias, for the driver-row writes
+    _ARROW_TYPES = {
+        "string": "string", "bigint": "int64", "int": "int32",
+        "boolean": "bool", "double": "float64",
+    }
+
+    def _rows_table(self, table: str, cols: dict, manifest: dict, what: str):
+        """``{column: values}`` -> an arrow table in the manifest's column
+        order and types.  A column's incoming type is what pyarrow infers
+        from its values; an all-NULL column takes the committed type and
+        an integer column may land in an ``int`` or ``bigint`` column it
+        fits.  Mismatches raise ``_check_fields``' ValueError."""
+        import pyarrow as pa
+
+        if manifest.get("partition_col") is not None:
+            raise ValueError(
+                f"{what} to table '{table}': driver-row writes are for "
+                f"unpartitioned tables; use append()/merge_upsert()"
+            )
+        arrow = {t: pa.type_for_alias(a) for t, a in self._ARROW_TYPES.items()}
+        spark_of = {a: t for t, a in arrow.items()}
+        committed = StructType.fromJson(json.loads(manifest["schema"]))
+        want = {f.name: f.dataType.simpleString() for f in committed.fields}
+        for name, t in want.items():
+            if t not in arrow:
+                raise ValueError(
+                    f"{what} to table '{table}': column '{name}' is {t}; "
+                    f"driver-row writes support {sorted(arrow)}"
+                )
+        arrays, fields = {}, []
+        for name, values in cols.items():
+            arr = pa.array(values)
+            got = spark_of.get(arr.type, str(arr.type))
+            target = arrow.get(want.get(name))
+            if target is not None and (
+                pa.types.is_null(arr.type)
+                or (pa.types.is_integer(arr.type) and pa.types.is_integer(target))
+            ):
+                try:
+                    arr, got = arr.cast(target), want[name]
+                except pa.ArrowInvalid:  # out of the column's range
+                    pass
+            arrays[name] = arr
+            fields.append((name, got))
+        self._check_fields(table, fields, manifest, what)
+        return pa.table(
+            [arrays[name] for name in want],
+            schema=pa.schema([(name, arrow[t]) for name, t in want.items()]),
+        )
+
+    def _commit_rows(self, table: str, base: str, prev: dict, members: list[dict], rows) -> str:
+        """Write an arrow table as the next version's one-file segment and
+        commit ``members`` plus it against ``base`` (the CAS every write
+        path uses)."""
+        import pyarrow.parquet as pq
+
+        v = self._next_version(table)
+        seg = f"seg{v[1:]}"
+        seg_path = os.path.join(self._tdir(table), seg)
+        shutil.rmtree(seg_path, ignore_errors=True)  # a torn earlier write
+        os.makedirs(seg_path)
+        pq.write_table(rows, os.path.join(seg_path, "part-00000.parquet"))
+        member = {"path": seg, "value": None, "rows": rows.num_rows}
+        return self._commit_version(
+            table, v, members + [member], StructType.fromJson(json.loads(prev["schema"])),
+            None, expected=base, deletes=prev.get("deletes"),
         )
 
     def history(self, table: str) -> list[dict]:

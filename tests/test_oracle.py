@@ -66,9 +66,25 @@ def _query_names():
 
 @pytest.mark.parametrize("name", _query_names())
 def test_query_matches_oracle(spark, ddb, name):
-    from spider_spark.catalog import ORACLES, QUERIES
+    from pyspark.sql import types as T
+
+    from spider_spark.catalog import GRADED_WINDOW, ORACLES, QUERIES
 
     sdf = QUERIES[name](spark, SF_DIR)
+    if name in GRADED_WINDOW:
+        # The driver's canonicalizer pandas-sorts every result column and
+        # dies on unhashable cells: round 3's f19 returned a top-level
+        # array<double> and errored driver-side while this mirror (which
+        # normalizes cells itself) stayed green (VERDICT r3 #1).  Reject
+        # non-atomic top-level columns in every graded entry; the graded
+        # window is all oracle-backed (test_graded_window_is_oracle_dense),
+        # so every entry of it passes here.
+        nested = [
+            f.name
+            for f in sdf.schema.fields
+            if isinstance(f.dataType, (T.ArrayType, T.StructType, T.MapType))
+        ]
+        assert not nested, f"graded entry {name} has non-scalar top-level columns {nested}"
     spark_cols = [c.lower() for c in sdf.columns]
     spark_rows = [tuple(r) for r in sdf.collect()]
 
@@ -115,29 +131,6 @@ def test_formerly_vacuous_entries_discriminate(ddb):
 
     for name in ("j5_anti_seen", "u2_except"):
         assert len(ddb.sql(ORACLES[name]).fetchall()) > 0, name
-
-
-def test_window_queries_return_scalar_columns(spark):
-    """The driver's canonicalizer pandas-sorts every result column and
-    dies on unhashable cells: round 3's f19 returned a top-level
-    array<double> and errored driver-side while the local mirror
-    (which normalizes cells itself) stayed green (VERDICT r3 #1).
-    Reject non-atomic top-level columns in every graded entry."""
-    from pyspark.sql import types as T
-
-    from spider_spark.catalog import GRADED_WINDOW, QUERIES
-
-    bad = {}
-    for name in GRADED_WINDOW:
-        schema = QUERIES[name](spark, SF_DIR).schema
-        nested = [
-            f.name
-            for f in schema.fields
-            if isinstance(f.dataType, (T.ArrayType, T.StructType, T.MapType))
-        ]
-        if nested:
-            bad[name] = nested
-    assert not bad, f"graded entries with non-scalar top-level columns: {bad}"
 
 
 @pytest.mark.parametrize("sf", ["sf0.001", "sf0.01", "sf0.1"])

@@ -45,6 +45,11 @@ def test_resume_equals_uninterrupted(spark, tmp_path):
     da = {r["doc_id"] for r in a.store.read("documents").collect()}
     db = {r["doc_id"] for r in b2.store.read("documents").collect()}
     assert da == db
+    # and the tables the round writes as driver rows
+    for t in ("host_state", "lineage"):
+        assert {tuple(r) for r in a.store.read(t).collect()} == {
+            tuple(r) for r in b2.store.read(t).collect()
+        }, t
 
 
 def test_reprioritize_survives_resume(spark, tmp_path):

@@ -328,3 +328,131 @@ def test_commit_round_merges_extras(spark, tmp_path):
     assert m["seed_ingest"] == 7
     assert m["note"] == "a"
     assert "t" in m["tables"]
+
+
+# ------------------------------------------ driver-row writes (pyarrow path)
+
+def _job_ids(spark):
+    return set(spark.sparkContext.statusTracker().getJobIdsForGroup())
+
+
+def _lineage_cols(rows):
+    from spider_spark.schemas import LINEAGE
+
+    return {c: [r[i] for r in rows] for i, c in enumerate(LINEAGE.fieldNames())}
+
+
+def test_driver_rows_launch_no_spark_job_and_read_back_typed(spark, tmp_path):
+    """append_rows/upsert_rows write one pyarrow file per commit and run
+    no Spark job; Spark reads the rows back with the manifest's types
+    (an int partition_id, all-NULL bigint columns).  upsert_rows replaces
+    matched keys and, like merge_upsert's left-anti join, never matches
+    a NULL key."""
+    import os
+
+    from spider_spark.schemas import HOST_STATE, LINEAGE
+
+    st = TableStore(spark, str(tmp_path))
+    st.write("lineage", spark.createDataFrame([(1, 0, 5, 4, 1, None, None, None)], LINEAGE))
+    st.write(
+        "host_state",
+        spark.createDataFrame([("a", 1, False), ("b", 1, True), (None, 1, False)], HOST_STATE),
+    )
+    new_lineage = [(2, 0, 3, 3, 0, None, None, None), (2, 1, 4, 2, 2, None, None, None)]
+    before = _job_ids(spark)
+    st.append_rows("lineage", _lineage_cols(new_lineage))
+    st.upsert_rows(
+        "host_state",
+        {"host": ["b", "c", None], "last_fetch_round": [2, 2, 2], "quarantined": [False, True, False]},
+        key="host",
+    )
+    assert _job_ids(spark) == before
+    for t in ("lineage", "host_state"):
+        seg = f"seg{st.current_version(t)[1:]}"
+        assert os.listdir(tmp_path / t / seg) == ["part-00000.parquet"]
+
+    lin = st.read("lineage")
+    assert [(f.name, f.dataType) for f in lin.schema.fields] == [
+        (f.name, f.dataType) for f in LINEAGE.fields
+    ]
+    assert sorted(tuple(r) for r in lin.collect()) == [(1, 0, 5, 4, 1, None, None, None)] + new_lineage
+    got = sorted((tuple(r) for r in st.read("host_state").collect()), key=str)
+    want = [("a", 1, False), ("b", 2, False), ("c", 2, True), (None, 1, False), (None, 2, False)]
+    assert got == sorted(want, key=str)
+
+
+def test_driver_rows_reject_mismatch_partitioned_deletes_and_moved_base(spark, tmp_path):
+    import pytest as _pytest
+
+    from spider_spark.storage import ConcurrentCommitError
+
+    st = TableStore(spark, str(tmp_path))
+    st.write("t", spark.createDataFrame([(1, "a")], "k bigint, v string"))
+    for call in (st.append_rows, lambda t, c: st.upsert_rows(t, c, key="k")):
+        with _pytest.raises(ValueError, match=r"schema mismatch .*missing columns \['v'\]"):
+            call("t", {"k": [2]})
+        with _pytest.raises(ValueError, match=r"schema mismatch .*extra columns \['w'\]"):
+            call("t", {"k": [2], "v": ["b"], "w": [1]})
+        with _pytest.raises(ValueError, match="column type mismatch"):
+            call("t", {"k": ["x"], "v": ["b"]})
+        with _pytest.raises(ValueError, match="column type mismatch"):
+            call("t", {"k": [1.5], "v": ["b"]})
+    assert sorted(tuple(r) for r in st.read("t").collect()) == [(1, "a")]
+
+    st.write("p", spark.createDataFrame([(1, "a")], "k bigint, v string"), partition_by=["v"])
+    with _pytest.raises(ValueError, match="unpartitioned"):
+        st.append_rows("p", {"k": [2], "v": ["b"]})
+    st.write("arr", spark.createDataFrame([(1, [1])], "k bigint, a array<int>"))
+    with _pytest.raises(ValueError, match="driver-row writes support"):
+        st.append_rows("arr", {"k": [2], "a": [[2]]})
+
+    # a writer whose base moved between its snapshot read and its commit
+    a, b = TableStore(spark, str(tmp_path)), TableStore(spark, str(tmp_path))
+    orig = a._rows_table
+
+    def racing(*args, **kw):
+        out = orig(*args, **kw)
+        b.append_rows("t", {"k": [10], "v": ["z"]})  # B commits first
+        return out
+
+    a._rows_table = racing
+    try:
+        with _pytest.raises(ConcurrentCommitError):
+            a.append_rows("t", {"k": [2], "v": ["b"]})
+        with _pytest.raises(ConcurrentCommitError):
+            a.upsert_rows("t", {"k": [1], "v": ["A"]}, key="k")
+    finally:
+        a._rows_table = orig
+    assert sorted(tuple(r) for r in st.read("t").collect()) == [(1, "a"), (10, "z"), (10, "z")]
+
+    st.delete_rows("t", spark.createDataFrame([(10,)], "k bigint"), key="k")
+    with _pytest.raises(ValueError, match="equality deletes"):
+        st.upsert_rows("t", {"k": [3], "v": ["c"]}, key="k")
+
+
+def test_maintenance_over_mixed_spark_and_pyarrow_segments(spark, tmp_path):
+    """compact, read_at, history and files treat a pyarrow-written member
+    like any Spark-written one."""
+    from spider_spark.schemas import LINEAGE
+
+    st = TableStore(spark, str(tmp_path))
+    st.write("lineage", spark.createDataFrame([], LINEAGE))
+    rows = []
+    for r in range(1, 5):
+        row = (r, r % 2, r, r - 1, 1, None, None, None)
+        if r % 2:
+            st.append("lineage", spark.createDataFrame([row], LINEAGE))
+        else:
+            st.append_rows("lineage", _lineage_cols([row]))
+        st.commit_round(r)
+        rows.append(row)
+
+    assert sorted(tuple(x) for x in st.read_at("lineage", round_id=2).collect()) == rows[:2]
+    assert [h["rows"] for h in st.history("lineage")] == [0, 1, 2, 3, 4]
+    files = st.files("lineage").collect()
+    assert len(files) == 5 and sum(f["rows"] for f in files) == 4
+
+    assert st.compact("lineage", max_members=2) is not None
+    assert len(st.files("lineage").collect()) == 1
+    assert sorted(tuple(x) for x in st.read("lineage").collect()) == rows
+    assert sorted(tuple(x) for x in st.read_at("lineage", round_id=3).collect()) == rows[:3]
