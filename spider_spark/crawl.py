@@ -107,8 +107,8 @@ class Crawler:
         )
         self.store.write("seen", seen_rows(frontier0, self.cfg), partition_by=["seen_bucket"])
         self.store.write("hosts", hosts)
-        self.store.write("host_state", self.spark.createDataFrame([], HOST_STATE))
-        self.store.write("lineage", self.spark.createDataFrame([], LINEAGE))
+        self.store.create("host_state", HOST_STATE)
+        self.store.create("lineage", LINEAGE)
         if self.bloom is not None:
             self.bloom.update_from_df(self.spark, self.store.read("seen"))
         self.store.commit_round(0)

@@ -23,6 +23,16 @@ emulated on plain parquet with a single-writer protocol (SURVEY.md §7
   in the round manifest) get their pointer cleared so a crashed
   half-round can never leak rows into the resumed run.
 
+Every commit takes one path.  ``_next_version`` first CLAIMS the version
+number by creating its segment directory ``seg{N}`` (``os.mkdir`` is
+atomic: two writers never hold one number, and no write ever lands in a
+directory another writer owns; metadata-only commits claim too).  The
+data lands in that directory, then ``_commit`` builds the manifest from
+the parent's, CASes on the base version (``_check_base``) and flips the
+pointer — or, for a staged snapshot, only writes the manifest.
+``_replace`` is the one atomic metadata write (pointer, manifests, refs,
+round manifests).
+
 On a real cluster this module swaps for Iceberg catalog calls 1:1 (the
 API is MERGE-shaped on purpose); nothing else in the engine changes.
 """
@@ -77,10 +87,18 @@ class TableStore:
             return None
 
     def _set_pointer(self, table: str, version: str) -> None:
-        tmp = self._pointer(table) + ".tmp"
+        self._replace(self._pointer(table), version)
+
+    @staticmethod
+    def _replace(path: str, text: str) -> None:
+        """The one atomic metadata write: a tmp file ``os.replace``d over
+        ``path``, so readers see the old content or the new, never a torn
+        file."""
+        os.makedirs(os.path.dirname(path), exist_ok=True)
+        tmp = path + ".tmp"
         with open(tmp, "w") as f:
-            f.write(version)
-        os.replace(tmp, self._pointer(table))
+            f.write(text)
+        os.replace(tmp, path)
 
     def _clear_pointer(self, table: str) -> None:
         try:
@@ -100,28 +118,32 @@ class TableStore:
             return json.load(f)
 
     def _write_manifest(self, table: str, version: str, manifest: dict) -> None:
-        os.makedirs(self._mdir(table), exist_ok=True)
-        tmp = self._mpath(table, version) + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(manifest, f)
-        os.replace(tmp, self._mpath(table, version))
+        self._replace(self._mpath(table, version), json.dumps(manifest))
+
+    def _versions(self, table: str) -> list[str]:
+        """Every manifest version of ``table`` on disk, oldest first."""
+        try:
+            return sorted(
+                f[:-5] for f in os.listdir(self._mdir(table)) if f.endswith(".json")
+            )
+        except (FileNotFoundError, NotADirectoryError):
+            return []
 
     def _next_version(self, table: str) -> str:
-        """Next unused version number: max over ALL manifests on disk,
-        not just the pointer — a STAGED snapshot (stage_append) holds a
-        version without moving the pointer, and a later writer must not
-        reuse (and clobber) its segment."""
-        n = -1
-        cur = self.current_version(table)
-        if cur:
-            n = int(cur[1:])
-        try:
-            for f in os.listdir(self._mdir(table)):
-                if f.endswith(".json"):
-                    n = max(n, int(f[1:-5]))
-        except FileNotFoundError:
-            pass
-        return f"v{n + 1:05d}"
+        """Claim the next version: one past every manifest on disk (a
+        STAGED snapshot holds a version without moving the pointer), made
+        this writer's by creating its segment directory.  The loser of a
+        race for ``seg{N}`` moves on to N+1 and never writes into (or
+        replaces) the winner's segment; a torn write's directory is
+        skipped, never reused, and ``remove_orphans`` sweeps it."""
+        n = max((int(v[1:]) for v in self._versions(table)), default=-1) + 1
+        os.makedirs(self._tdir(table), exist_ok=True)
+        while True:
+            try:
+                os.mkdir(os.path.join(self._tdir(table), f"seg{n:05d}"))
+                return f"v{n:05d}"
+            except FileExistsError:
+                n += 1
 
     # ------------------------------------------------------------ segments
     def _write_segment(
@@ -133,8 +155,8 @@ class TableStore:
         stats_col: str | None = None,
         bloom_col: str | None = None,
     ) -> list[dict]:
-        """Write df as the immutable segment for `version`; return its
-        member records (one per partition subdir when partitioned).
+        """Write df into the segment directory `version` claimed; return
+        its member records (one per partition subdir when partitioned).
 
         ``stats_col`` attaches the member's [min, max] of that column to
         the manifest (Iceberg's column-stats / file-skipping analog) —
@@ -146,7 +168,7 @@ class TableStore:
             raise ValueError("only single-column partition specs are supported")
         seg = f"seg{version[1:]}"
         seg_path = os.path.join(self._tdir(table), seg)
-        writer = df.write.mode("overwrite")
+        writer = df.write.mode("append")
         if partition_by:
             writer = writer.partitionBy(*partition_by)
         writer.parquet(seg_path)
@@ -216,49 +238,56 @@ class TableStore:
                     total += pq.ParquetFile(os.path.join(root, f)).metadata.num_rows
         return total
 
-    def _commit_version(
+    def _commit(
         self,
         table: str,
         version: str,
+        prev: dict,
         members: list[dict],
-        schema: StructType,
-        partition_col: str | None,
-        expected: str | None = None,
-        deletes: list[dict] | None = None,
-        txn: dict | None = None,
-        spec_since: int | None = None,
+        base: str | None,
+        parent: str | None = None,
+        mark: tuple[str, int] | None = None,
+        **fields,
     ) -> str:
-        if expected is not None and self.current_version(table) != expected:
-            raise ConcurrentCommitError(
-                f"table '{table}': expected version {expected} at commit time "
-                f"but found {self.current_version(table)} — another writer "
-                f"committed first; re-read and retry"
-            )
-        # inherit snapshot-scoped metadata from the parent unless the
-        # caller overrides: the txn high-water marks (Delta txn / Iceberg
-        # snapshot-summary analog — maintenance commits must never reset a
-        # streaming sink's exactly-once watermark) and the partition-spec
-        # evolution boundary.  A pointerless commit (fresh write) starts
-        # clean: a full table rewrite is a new table generation.
-        if expected is not None and (txn is None or spec_since is None):
-            prev = self._manifest(table, expected)
-            if txn is None:
-                txn = prev.get("txn") or {}
-            if spec_since is None:
-                spec_since = prev.get("spec_since")
-        manifest = {
-            "members": members,
-            "schema": schema.json(),
-            "columns": [f.name for f in schema.fields],
-            "partition_col": partition_col,
-            "deletes": deletes or [],
-            "txn": txn or {},
-        }
-        if spec_since is not None:
-            manifest["spec_since"] = int(spec_since)
+        """The one manifest builder.  The new manifest is ``prev``'s with
+        ``members`` replaced: schema, columns, partition spec, outstanding
+        deletes, the spec-evolution boundary and the txn high-water marks
+        are inherited (Delta txn / Iceberg snapshot-summary analog —
+        maintenance commits must never reset a streaming sink's
+        exactly-once watermark).  ``fields`` override keys; ``mark=(key,
+        id)`` records one more txn mark.
+
+        With ``parent`` the snapshot is STAGED: the manifest is written
+        and the pointer does not move.  Otherwise the commit CASes on
+        ``base`` and flips the pointer; ``base=None`` is a full rewrite,
+        a new table generation (``write``/``create``)."""
+        manifest = {k: v for k, v in prev.items() if k != "parent"}
+        manifest.update(
+            members=members, deletes=prev.get("deletes") or [], txn=prev.get("txn") or {}
+        )
+        manifest.update(fields)
+        if mark is not None:
+            manifest["txn"] = {**manifest["txn"], mark[0]: int(mark[1])}
+        if parent is not None:
+            manifest["parent"] = parent
+        elif base is not None:
+            self._check_base(table, base)
         self._write_manifest(table, version, manifest)
-        self._set_pointer(table, version)
+        if parent is None:
+            self._set_pointer(table, version)
         return version
+
+    def _check_base(
+        self, table: str, base: str, hint: str = "another writer committed first; re-read and retry"
+    ) -> None:
+        """The one optimistic-concurrency check (Iceberg CAS): the table
+        must still serve ``base``, the snapshot the operation read."""
+        cur = self.current_version(table)
+        if cur != base:
+            raise ConcurrentCommitError(
+                f"table '{table}': expected version {base} at commit time "
+                f"but found {cur} — {hint}"
+            )
 
     @staticmethod
     def _member_seq(member: dict) -> int:
@@ -734,16 +763,20 @@ class TableStore:
         prunes fetched/dead members entirely (at 10^10 rows the vast
         majority of the frontier is terminal — pruning is the difference
         between scanning the whole table and scanning the live slice)."""
-        os.makedirs(self._tdir(table), exist_ok=True)
         v = self._next_version(table)
         members = self._write_segment(
             table, v, df, partition_by, stats_col=stats_col, bloom_col=bloom_col
         )
         pcol = partition_by[0] if partition_by else None
-        return self._commit_version(
-            table, v, members, df.schema, pcol,
-            txn={txn[0]: txn[1]} if txn else None,
-        )
+        fresh = {"schema": df.schema.json(), "columns": df.columns, "partition_col": pcol}
+        return self._commit(table, v, fresh, members, None, mark=txn)
+
+    def create(self, table: str, schema: StructType) -> str:
+        """An empty unpartitioned table as a metadata-only commit: what a
+        ``write`` of an empty frame gives, without its Spark job and its
+        empty file.  Like ``write`` it starts a new table generation."""
+        fresh = {"schema": schema.json(), "columns": schema.fieldNames(), "partition_col": None}
+        return self._commit(table, self._next_version(table), fresh, [], None)
 
     def append(
         self,
@@ -772,31 +805,48 @@ class TableStore:
                 table, df, partition_by, stats_col=stats_col,
                 bloom_col=bloom_col, txn=txn,
             )
-        prev = self._manifest(table, base)
+        return self._append(
+            table, base, df, "append", partition_by, allow_evolution,
+            stats_col, bloom_col, txn,
+        )
+
+    def _append(
+        self,
+        table: str,
+        head: str,
+        df: DataFrame,
+        what: str,
+        partition_by: list[str] | None = None,
+        allow_evolution: bool = False,
+        stats_col: str | None = None,
+        bloom_col: str | None = None,
+        txn: tuple[str, int] | None = None,
+        parent: str | None = None,
+    ) -> str:
+        """Write df as a new segment and commit it on top of snapshot
+        ``head`` (staged when ``parent`` is set): the one append path of
+        ``append``, ``stage_append`` and ``append_to_branch``."""
+        prev = self._manifest(table, head)
         pcol = prev.get("partition_col")
         if partition_by and partition_by[0] != pcol:
             raise ValueError(f"append partition spec {partition_by} != table spec {pcol}")
-        self._check_schema(table, df, prev, "append", allow_evolution=allow_evolution)
+        self._check_schema(table, df, prev, what, allow_evolution=allow_evolution)
         v = self._next_version(table)
         new_members = self._write_segment(
             table, v, df, [pcol] if pcol else None,
             stats_col=stats_col, bloom_col=bloom_col,
         )
-        schema = StructType.fromJson(json.loads(prev["schema"]))
-        committed_names = {f.name for f in schema.fields}
-        added = [f for f in df.schema.fields if f.name not in committed_names]
+        fields = {}
+        added = [f for f in df.schema.fields if f.name not in prev["columns"]]
         if added:  # only reachable with allow_evolution (checked above)
             schema = StructType(
-                schema.fields
+                StructType.fromJson(json.loads(prev["schema"])).fields
                 + [StructField(f.name, f.dataType, nullable=True) for f in added]
             )
-        txn_map = None
-        if txn is not None:
-            txn_map = dict(prev.get("txn") or {})
-            txn_map[txn[0]] = txn[1]
-        return self._commit_version(
-            table, v, prev["members"] + new_members, schema, pcol, expected=base,
-            deletes=prev.get("deletes"), txn=txn_map,
+            fields = {"schema": schema.json(), "columns": schema.fieldNames()}
+        return self._commit(
+            table, v, prev, prev["members"] + new_members, head,
+            parent=parent, mark=txn, **fields,
         )
 
     # ------------------------------------------------------------ driver rows
@@ -898,21 +948,14 @@ class TableStore:
 
     def _commit_rows(self, table: str, base: str, prev: dict, members: list[dict], rows) -> str:
         """Write an arrow table as the next version's one-file segment and
-        commit ``members`` plus it against ``base`` (the CAS every write
-        path uses)."""
+        commit ``members`` plus it against ``base``."""
         import pyarrow.parquet as pq
 
         v = self._next_version(table)
         seg = f"seg{v[1:]}"
-        seg_path = os.path.join(self._tdir(table), seg)
-        shutil.rmtree(seg_path, ignore_errors=True)  # a torn earlier write
-        os.makedirs(seg_path)
-        pq.write_table(rows, os.path.join(seg_path, "part-00000.parquet"))
+        pq.write_table(rows, os.path.join(self._tdir(table), seg, "part-00000.parquet"))
         member = {"path": seg, "value": None, "rows": rows.num_rows}
-        return self._commit_version(
-            table, v, members + [member], StructType.fromJson(json.loads(prev["schema"])),
-            None, expected=base, deletes=prev.get("deletes"),
-        )
+        return self._commit(table, v, prev, members + [member], base)
 
     def history(self, table: str) -> list[dict]:
         """Iceberg ``table.history``/``snapshots`` analog: one record per
@@ -925,14 +968,8 @@ class TableStore:
         Metadata-only: JSON reads, zero parquet I/O — the audit surface a
         takedown/compliance review reads before touching data."""
         out = []
-        try:
-            versions = sorted(
-                f[:-5] for f in os.listdir(self._mdir(table)) if f.endswith(".json")
-            )
-        except FileNotFoundError:
-            return out
         cur = self.current_version(table)
-        for v in versions:
+        for v in self._versions(table):
             man = self._manifest(table, v)
             out.append(
                 {
@@ -1006,10 +1043,8 @@ class TableStore:
         if col not in prev["columns"]:
             raise ValueError(f"partition column '{col}' not a column of '{table}'")
         v = self._next_version(table)
-        schema = StructType.fromJson(json.loads(prev["schema"]))
-        return self._commit_version(
-            table, v, prev["members"], schema, col, expected=base,
-            deletes=prev.get("deletes"), spec_since=int(v[1:]),
+        return self._commit(
+            table, v, prev, prev["members"], base, partition_col=col, spec_since=int(v[1:])
         )
 
     # ------------------------------------------------- idempotent writes
@@ -1071,63 +1106,38 @@ class TableStore:
             raise FileNotFoundError(
                 f"stage_append needs an existing table '{table}' (write() first)"
             )
-        prev = self._manifest(table, base)
-        pcol = prev.get("partition_col")
-        if partition_by and partition_by[0] != pcol:
-            raise ValueError(f"append partition spec {partition_by} != table spec {pcol}")
-        self._check_schema(table, df, prev, "stage_append")
-        v = self._next_version(table)
-        new_members = self._write_segment(
-            table, v, df, [pcol] if pcol else None, stats_col=stats_col
+        return self._append(
+            table, base, df, "stage_append", partition_by, stats_col=stats_col, parent=base
         )
-        schema = StructType.fromJson(json.loads(prev["schema"]))
-        self._write_manifest(
-            table,
-            v,
-            {
-                "members": prev["members"] + new_members,
-                "schema": schema.json(),
-                "columns": [f.name for f in schema.fields],
-                "partition_col": pcol,
-                "deletes": prev.get("deletes") or [],
-                "txn": prev.get("txn") or {},
-                **({"spec_since": prev["spec_since"]} if "spec_since" in prev else {}),
-                "parent": base,
-            },
-        )
-        return v
 
-    def _mark_published(self, table: str, version: str) -> str | None:
-        """Drop ``parent`` from a manifest the pointer has exposed: it is
-        an ordinary snapshot now, so ``rollback`` may target it and
-        ``history`` no longer reports it as staged.  Runs AFTER the
-        pointer flip, so a crash in between can only leave the marker on
-        an exposed snapshot, never strip it from an unpublished one.
-        Returns the dropped parent."""
-        man = self._manifest(table, version)
-        parent = man.pop("parent", None)
-        if parent is not None:
-            self._write_manifest(table, version, man)
-        return parent
+    def _expose(self, table: str, head: str, base: str, hint: str) -> str:
+        """Make a staged lineage the table's snapshot (``publish``,
+        ``fast_forward``): CAS on ``base``, flip the pointer to ``head``,
+        then drop ``parent`` from every manifest from ``head`` back to
+        ``base`` (that expiry kept) — they are ordinary snapshots now, so
+        ``rollback`` may target them and ``history`` no longer reports
+        them as staged.  The markers go AFTER the flip, so a crash in
+        between can only leave one on an exposed snapshot, never strip it
+        from an unpublished one."""
+        self._check_base(table, base, hint)
+        self._set_pointer(table, head)
+        v = head
+        while v not in (None, base) and os.path.exists(self._mpath(table, v)):
+            man = self._manifest(table, v)
+            if "parent" in man:
+                self._write_manifest(table, v, {k: x for k, x in man.items() if k != "parent"})
+            v = man.get("parent")
+        return head
 
     def publish(self, table: str, version: str) -> str:
         """Write-audit-publish, step 2: atomically expose a staged
         snapshot.  CAS on the staged snapshot's parent — if any writer
         committed since the stage, publishing would silently drop their
         members, so it raises instead (re-stage on top and re-audit)."""
-        man = self._manifest(table, version)
-        parent = man.get("parent")
+        parent = self._manifest(table, version).get("parent")
         if parent is None:
             raise ValueError(f"version {version} of '{table}' was not staged")
-        cur = self.current_version(table)
-        if cur != parent:
-            raise ConcurrentCommitError(
-                f"table '{table}': staged {version} has parent {parent} but the "
-                f"table is at {cur} — re-stage on the current snapshot"
-            )
-        self._set_pointer(table, version)
-        self._mark_published(table, version)
-        return version
+        return self._expose(table, version, parent, "re-stage on the current snapshot")
 
     def rollback(self, table: str, version: str | None = None, round_id: int | None = None) -> str:
         """Delta ``RESTORE`` / Iceberg rollback analog: make the table
@@ -1146,8 +1156,8 @@ class TableStore:
           not the target — rolling back table content must never rewind a
           streaming sink's exactly-once watermark, or the producer's next
           replayed micro-batch would double-append into the restored
-          table (same rule ``_commit_version`` applies to maintenance
-          commits);
+          table (the rule ``_commit`` applies to every maintenance
+          commit);
         * a staged, never-published snapshot is refused — WAP audit
           candidates become visible through ``publish``'s parent CAS,
           and restoring one would expose unaudited rows while skipping
@@ -1179,28 +1189,12 @@ class TableStore:
                 f"version {version} of '{table}' is a staged (WAP) snapshot — "
                 f"expose it with publish(), not rollback()"
             )
-        cur_man = self._manifest(table, cur)
-        v = self._next_version(table)
-        manifest = {
-            "members": target["members"],
-            "schema": target["schema"],
-            "columns": target["columns"],
-            "partition_col": target.get("partition_col"),
-            "deletes": target.get("deletes") or [],
-            # watermarks ride the content rollback: see docstring
-            "txn": cur_man.get("txn") or {},
-        }
         # the restored members' physical layout is the TARGET's, so its
-        # spec boundary (not the current one) must govern residual reads
-        if target.get("spec_since") is not None:
-            manifest["spec_since"] = int(target["spec_since"])
-        if self.current_version(table) != cur:
-            raise ConcurrentCommitError(
-                f"table '{table}': another writer committed during rollback"
-            )
-        self._write_manifest(table, v, manifest)
-        self._set_pointer(table, v)
-        return v
+        # spec, deletes and spec boundary govern reads; the watermarks
+        # ride the content rollback from the current snapshot (docstring)
+        txn = self._manifest(table, cur).get("txn") or {}
+        v = self._next_version(table)
+        return self._commit(table, v, target, target["members"], cur, txn=txn)
 
     # ------------------------------------------------------------ refs
     def _refs_dir(self, table: str) -> str:
@@ -1212,11 +1206,7 @@ class TableStore:
         return os.path.join(self._refs_dir(table), f"{name}.json")
 
     def _write_ref(self, table: str, name: str, ref: dict) -> None:
-        os.makedirs(self._refs_dir(table), exist_ok=True)
-        tmp = self._ref_path(table, name) + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(ref, f)
-        os.replace(tmp, self._ref_path(table, name))
+        self._replace(self._ref_path(table, name), json.dumps(ref))
 
     def ref(self, table: str, name: str) -> dict:
         try:
@@ -1287,30 +1277,11 @@ class TableStore:
         r = self.ref(table, name)
         if r["kind"] != "branch":
             raise ValueError(f"ref '{name}' is a {r['kind']}, not a branch")
-        head = r["version"]
-        prev = self._manifest(table, head)
-        pcol = prev.get("partition_col")
-        self._check_schema(table, df, prev, "append_to_branch")
-        v = self._next_version(table)
-        new_members = self._write_segment(
-            table, v, df, [pcol] if pcol else None, stats_col=stats_col
+        v = self._append(
+            table, r["version"], df, "append_to_branch", stats_col=stats_col,
+            parent=r["version"],
         )
-        schema = StructType.fromJson(json.loads(prev["schema"]))
-        self._write_manifest(
-            table,
-            v,
-            {
-                "members": prev["members"] + new_members,
-                "schema": schema.json(),
-                "columns": [f.name for f in schema.fields],
-                "partition_col": pcol,
-                "deletes": prev.get("deletes") or [],
-                "txn": prev.get("txn") or {},
-                **({"spec_since": prev["spec_since"]} if "spec_since" in prev else {}),
-                "parent": head,
-            },
-        )
-        self._write_ref(table, name, {"kind": "branch", "version": v, "base": r["base"]})
+        self._write_ref(table, name, dict(r, version=v))
         return v
 
     def fast_forward(self, table: str, name: str) -> str:
@@ -1324,21 +1295,9 @@ class TableStore:
         r = self.ref(table, name)
         if r["kind"] != "branch":
             raise ValueError(f"ref '{name}' is a {r['kind']}, not a branch")
-        cur = self.current_version(table)
-        if cur != r["base"]:
-            raise ConcurrentCommitError(
-                f"table '{table}': branch '{name}' forked at {r['base']} but the "
-                f"table is at {cur} — re-branch from the current snapshot"
-            )
-        self._set_pointer(table, r["version"])
-        # every branch commit since the fork (that expiry kept) is now
-        # main-table lineage
-        v = r["version"]
-        while v not in (None, r["base"]) and os.path.exists(self._mpath(table, v)):
-            v = self._mark_published(table, v)
-        self._write_ref(
-            table, name, {"kind": "branch", "version": r["version"], "base": r["version"]}
-        )
+        # every branch commit since the fork is main-table lineage now
+        self._expose(table, r["version"], r["base"], "re-branch from the current snapshot")
+        self._write_ref(table, name, dict(r, base=r["version"]))
         return r["version"]
 
     def drop_ref(self, table: str, name: str) -> None:
@@ -1387,11 +1346,7 @@ class TableStore:
         deletes = (prev.get("deletes") or []) + [
             {"path": members[0]["path"], "key": key, "applies_below": int(v[1:])}
         ]
-        schema = StructType.fromJson(json.loads(prev["schema"]))
-        return self._commit_version(
-            table, v, prev["members"], schema, prev.get("partition_col"),
-            expected=base_v, deletes=deletes,
-        )
+        return self._commit(table, v, prev, prev["members"], base_v, deletes=deletes)
 
     def merge_upsert(
         self,
@@ -1447,18 +1402,10 @@ class TableStore:
         v = self._next_version(table)
         new_members = self._write_segment(table, v, merged, [pcol] if pcol else None)
         kept = [m for m in prev["members"] if m["value"] in immutable]
-        schema = StructType.fromJson(json.loads(prev["schema"]))
         # outstanding equality deletes were applied to the rewritten live
         # slice by the read above (and the new segment's sequence exempts
         # it); they are carried ONLY for the kept-by-reference members
-        txn_map = None
-        if txn is not None:
-            txn_map = dict(prev.get("txn") or {})
-            txn_map[txn[0]] = int(txn[1])
-        return self._commit_version(
-            table, v, kept + new_members, schema, pcol, expected=base_v,
-            deletes=prev.get("deletes"), txn=txn_map,
-        )
+        return self._commit(table, v, prev, kept + new_members, base_v, mark=txn)
 
     def compact(self, table: str, max_members: int = 16) -> str | None:
         """Iceberg rewrite_data_files analog: delta appends accumulate
@@ -1492,7 +1439,6 @@ class TableStore:
         if len(by_value[worst]) <= max_members:
             return None
         victim = by_value[worst]
-        schema = StructType.fromJson(json.loads(prev["schema"]))
         slice_manifest = dict(prev, members=victim)
         df = self._read_members(table, slice_manifest)
         v = self._next_version(table)
@@ -1517,10 +1463,7 @@ class TableStore:
             for d in (prev.get("deletes") or [])
             if any(self._member_seq(m) < d["applies_below"] for m in kept + new_members)
         ]
-        return self._commit_version(
-            table, v, kept + new_members, schema, pcol, expected=base_v,
-            deletes=deletes,
-        )
+        return self._commit(table, v, prev, kept + new_members, base_v, deletes=deletes)
 
     # ------------------------------------------------------------ manifests
     def commit_round(self, round_id: int, extra: dict | None = None) -> None:
@@ -1553,10 +1496,7 @@ class TableStore:
                     manifest[k] = old + v
                 else:
                     manifest[k] = v
-        tmp = path + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(manifest, f)
-        os.replace(tmp, path)
+        self._replace(path, json.dumps(manifest))
 
     def last_committed_round(self) -> int | None:
         rdir = os.path.join(self.root, "rounds")
@@ -1654,10 +1594,9 @@ class TableStore:
         Returns the deleted paths (relative to the table dir)."""
         import time
 
-        mdir = self._mdir(table)
-        if not os.path.isdir(self._tdir(table)) or not os.path.isdir(mdir):
+        versions = self._versions(table)
+        if not versions:
             return []
-        versions = [f[:-5] for f in os.listdir(mdir) if f.endswith(".json")]
         return self._sweep_unreferenced(
             table, self._referenced(table, versions), cutoff=time.time() - older_than_s
         )
@@ -1667,11 +1606,10 @@ class TableStore:
         manifests of each table (never the current one), then delete any
         segment data no surviving manifest references."""
         for t in os.listdir(self.root):
-            mdir = self._mdir(t)
-            if t == "rounds" or not os.path.isdir(self._tdir(t)) or not os.path.isdir(mdir):
+            versions = self._versions(t)
+            if not versions:
                 continue
             cur = self.current_version(t)
-            versions = sorted(f[:-5] for f in os.listdir(mdir) if f.endswith(".json"))
             kept = set(versions[-keep:])
             if cur:
                 kept.add(cur)

@@ -1,5 +1,7 @@
 from __future__ import annotations
 
+import pytest
+
 from spider_spark.storage import TableStore
 
 
@@ -259,26 +261,54 @@ def test_append_schema_mismatch_raises(spark, tmp_path):
 
 # ----------------------------------------- optimistic concurrency (Iceberg CAS)
 
-def test_stale_commit_raises_concurrent_commit_error(spark, tmp_path):
-    """A writer that snapshotted version X must fail its commit if the
-    pointer moved past X meanwhile (lost-update protection); committing
-    anyway would drop the interleaved writer's members."""
-    import pytest as _pytest
-    from pyspark.sql import functions as F
+_RACERS = {
+    "append": lambda st, df: st.append("t", df([(4, "d")])),
+    "merge_upsert": lambda st, df: st.merge_upsert("t", df([(1, "A"), (4, "d")]), key="k"),
+    "delete_rows": lambda st, df: st.delete_rows("t", df([(1, "a")]).select("k"), key="k"),
+    "compact": lambda st, df: st.compact("t", max_members=1),
+    "evolve_partition_spec": lambda st, df: st.evolve_partition_spec("t", "v"),
+    "rollback": lambda st, df: st.rollback("t", version="v00000"),
+    "append_rows": lambda st, df: st.append_rows("t", {"k": [4], "v": ["d"]}),
+    "upsert_rows": lambda st, df: st.upsert_rows("t", {"k": [1], "v": ["A"]}, key="k"),
+}
 
-    from spider_spark.storage import ConcurrentCommitError, TableStore
 
-    st = TableStore(spark, str(tmp_path / "cas"))
-    st.write("t", spark.range(3).select("id"))
-    stale = st.current_version("t")
-    st.append("t", spark.range(3, 5).select("id"))  # pointer moves on
-    schema = st.read("t").schema
-    with _pytest.raises(ConcurrentCommitError, match="another writer"):
-        st._commit_version("t", "v99999", [], schema, None, expected=stale)
+@pytest.mark.parametrize("method", sorted(_RACERS))
+def test_stale_commit_raises_concurrent_commit_error(spark, tmp_path, method):
+    """Handle B commits while handle A holds its version number (B runs
+    inside A's ``_next_version``): every committing method of A must
+    raise, and must never have written into B's committed segment — the
+    table serves exactly A's base rows plus B's row."""
+    from spider_spark.storage import ConcurrentCommitError
+
+    def df(rows):
+        return spark.createDataFrame(rows, "k bigint, v string")
+
+    root = str(tmp_path / "cas")
+    a, b = TableStore(spark, root), TableStore(spark, root)
+    a.write("t", df([(1, "a"), (2, "b")]))
+    a.append("t", df([(3, "c")]))
+    base = [(1, "a"), (2, "b"), (3, "c")]
+    orig = a._next_version
+
+    def racing(table):
+        v = orig(table)
+        b.append_rows("t", {"k": [10], "v": ["z"]})  # B commits first
+        return v
+
+    a._next_version = racing
+    try:
+        with pytest.raises(ConcurrentCommitError, match="another writer"):
+            _RACERS[method](a, df)
+    finally:
+        a._next_version = orig
+    assert sorted(tuple(r) for r in a.read("t").collect()) == base + [(10, "z")]
     # the guarded write paths still work against the live pointer
-    st.append("t", spark.range(5, 6).select("id"))
-    st.merge_upsert("t", spark.range(5, 7).select("id"), key="id")
-    assert sorted(r["id"] for r in st.read("t").collect()) == [0, 1, 2, 3, 4, 5, 6]
+    a.append("t", df([(5, "e")]))
+    a.merge_upsert("t", df([(5, "E"), (6, "f")]), key="k")
+    assert sorted(tuple(r) for r in a.read("t").collect()) == base + [
+        (5, "E"), (6, "f"), (10, "z")
+    ]
 
 
 def test_interleaved_handles_conflict_via_append(spark, tmp_path):
@@ -456,3 +486,36 @@ def test_maintenance_over_mixed_spark_and_pyarrow_segments(spark, tmp_path):
     assert len(st.files("lineage").collect()) == 1
     assert sorted(tuple(x) for x in st.read("lineage").collect()) == rows
     assert sorted(tuple(x) for x in st.read_at("lineage", round_id=3).collect()) == rows[:3]
+
+
+def test_create_is_metadata_only_and_serves_every_path(spark, tmp_path):
+    """create() commits an empty table with no Spark job and no segment;
+    the memberless table reads back with its exact schema and takes the
+    driver-row writes and the maintenance calls like any other."""
+    from spider_spark.schemas import HOST_STATE, LINEAGE
+
+    st = TableStore(spark, str(tmp_path))
+    before = _job_ids(spark)
+    st.create("lineage", LINEAGE)
+    st.create("host_state", HOST_STATE)
+    assert _job_ids(spark) == before
+    for t, schema in (("lineage", LINEAGE), ("host_state", HOST_STATE)):
+        got = st.read(t)
+        assert got.schema == schema
+        assert got.count() == 0
+        assert st.files(t).count() == 0
+        assert st.compact(t, max_members=0) is None
+
+    row = (1, 0, 5, 4, 1, None, None, None)
+    st.append_rows("lineage", _lineage_cols([row]))
+    st.upsert_rows("host_state", {"host": ["a"], "last_fetch_round": [1], "quarantined": [False]}, key="host")
+    assert [tuple(r) for r in st.read("lineage").collect()] == [row]
+    assert [tuple(r) for r in st.read("host_state").collect()] == [("a", 1, False)]
+    assert [(h["members"], h["rows"]) for h in st.history("lineage")] == [(0, 0), (1, 1)]
+    assert st.files("lineage").count() == 1
+    st.append_rows("lineage", _lineage_cols([row]))
+    assert st.compact("lineage", max_members=1) is not None
+    st.commit_round(1)
+    st.expire_snapshots(keep=1)
+    assert [tuple(r) for r in st.read("lineage").collect()] == [row, row]
+    assert len(st.history("lineage")) == 1

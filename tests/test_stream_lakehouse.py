@@ -1,7 +1,8 @@
 """Exactly-once streaming -> TableStore ingest (streaming/lakehouse.py +
 storage.append_txn): replayed micro-batches must be skipped via the
 manifest-recorded transaction watermark, and the watermark must survive
-every maintenance commit (append/delete/compact/stage+publish)."""
+every maintenance commit (append/delete/compact/stage+publish/branch
+fast-forward/driver-row append)."""
 
 from __future__ import annotations
 
@@ -53,6 +54,14 @@ def test_txn_watermark_survives_maintenance_commits(spark, store):
     # stage + publish inherits
     v = store.stage_append("t", _df(spark, 100, 101))
     store.publish("t", v)
+    assert store.last_txn("t", "s1") == 7
+    # a branch commit fast-forwarded onto the table inherits
+    store.create_branch("t", "audit")
+    store.append_to_branch("t", "audit", _df(spark, 200, 201))
+    store.fast_forward("t", "audit")
+    assert store.last_txn("t", "s1") == 7
+    # a driver-row append inherits
+    store.append_rows("t", {"id": [300], "k": [0]})
     assert store.last_txn("t", "s1") == 7
     # a replay AFTER all that maintenance is still recognized
     assert store.append_txn("t", _df(spark, 0, 10), "s1", 7) is None
