@@ -34,14 +34,14 @@ def main() -> int:
     )
     args = p.parse_args()
 
-    from pyspark.sql import SparkSession
-
     from spider_spark import synth
     from spider_spark.crawl import Crawler
     from spider_spark.round import CrawlConfig
+    from spider_spark.session import submit_spark
 
-    spark = SparkSession.builder.appName("spider_spark_crawl").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    # the engine's settings (non-ANSI, UTC, Arrow, AQE, codegen cache)
+    # under spark-submit's master
+    spark = submit_spark("spider_spark_crawl")
     cfg = CrawlConfig(n_hosts=args.hosts, page_space=args.pages)
     crawler = Crawler(spark, args.workdir, cfg)
     if args.resume:

@@ -11,6 +11,8 @@ that round is durable, and resume rolls back to the last manifest.
 
 from __future__ import annotations
 
+import contextlib
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -139,82 +141,80 @@ class Crawler:
         start = (self.store.last_committed_round() or 0) + 1
         results: list[RoundResult] = []
         hosts_df = self.store.read("hosts").cache()
-        for r in range(start, start + n_rounds):
-            res, out = run_round(
-                self.spark,
-                self.cfg,
-                r,
-                self.store.read("frontier"),
-                hosts_df,
-                self.store.read("host_state") if self.store.exists("host_state") else None,
-                self.bloom,
-                materialize=self._materialize,
-                seen_reader=self._seen_reader,
-                record_order=record_order,
-            )
-            # the round's cached frames (Bloom-tagged candidates, new
-            # links) and broadcasts are released however the round ends:
-            # empty, drained, or a store write raising
-            # (ConcurrentCommitError, a schema ValueError)
-            try:
-                if res.dequeued == 0:
-                    # empty round: advance the clock (retry rows may be
-                    # backed off into the future); stop only when the
-                    # frontier is truly drained.
-                    remaining = (
-                        self.store.read("frontier")
-                        .filter(F.col("state").isin("pending", "retry"))
-                        .count()
+        # the round's cached frames (Bloom-tagged candidates, new links)
+        # and broadcasts, and the cached hosts, are released however a
+        # round ends: empty, drained, or a raise in the round or in a
+        # store write (ConcurrentCommitError, a schema ValueError)
+        try:
+            for r in range(start, start + n_rounds):
+                with contextlib.ExitStack() as cleanup:
+                    res, out = run_round(
+                        self.spark,
+                        self.cfg,
+                        r,
+                        self.store.read("frontier"),
+                        hosts_df,
+                        self.store.read("host_state") if self.store.exists("host_state") else None,
+                        self.bloom,
+                        materialize=self._materialize,
+                        seen_reader=self._seen_reader,
+                        cleanup=cleanup,
+                        record_order=record_order,
                     )
-                    if remaining == 0:
-                        break
+                    if res.dequeued == 0:
+                        # empty round: advance the clock (retry rows may be
+                        # backed off into the future); stop only when the
+                        # frontier is truly drained.
+                        remaining = (
+                            self.store.read("frontier")
+                            .filter(F.col("state").isin("pending", "retry"))
+                            .count()
+                        )
+                        if remaining == 0:
+                            break
+                        self.store.commit_round(r)
+                        continue
+                    self._merge_frontier(out["frontier_updates"])
+                    self.store.append("seen", out["seen_delta"])
+                    # documents partitioned by fetch_round: each round's append
+                    # is one partition member, so an incremental consumer
+                    # (export of rounds k..k+n for a training-data pipeline)
+                    # opens only those members — manifest-level pruning, no
+                    # full-table scan
+                    self.store.append("documents", out["documents"], partition_by=["fetch_round"])
+                    if out["media_delta"] is not None:
+                        # S13 dup-key skip (db_config.py:46-54): first sighting
+                        # of a media_ref wins; later rounds' repeats are dropped
+                        # by a bucket-pruned anti-join (only the media buckets
+                        # this round's refs hash into are opened), and the
+                        # append writes only the new rows
+                        delta = out["media_delta"]
+                        if self.store.exists("media"):
+                            cand_b = [
+                                r["media_bucket"]
+                                for r in delta.select("media_bucket").distinct().collect()
+                            ]
+                            prior = self.store.read_partitions("media", cand_b)
+                            delta = delta.join(prior.select("media_ref"), "media_ref", "left_anti")
+                        self.store.append("media", delta, partition_by=["media_bucket"])
+                    # driver-sized rows (<= n_hosts, <= fetch_partitions) and
+                    # the collected Bloom delta: no Spark job of their own
+                    self.store.upsert_rows("host_state", out["host_state"], key="host")
+                    self.store.append_rows("lineage", out["lineage"])
+                    if self.bloom is not None:
+                        self.bloom.update_local(out["new_hashes"])
                     self.store.commit_round(r)
-                    continue
-                self._merge_frontier(out["frontier_updates"])
-                self.store.append("seen", out["seen_delta"])
-                # documents partitioned by fetch_round: each round's append
-                # is one partition member, so an incremental consumer
-                # (export of rounds k..k+n for a training-data pipeline)
-                # opens only those members — manifest-level pruning, no
-                # full-table scan
-                self.store.append("documents", out["documents"], partition_by=["fetch_round"])
-                if out["media_delta"] is not None:
-                    # S13 dup-key skip (db_config.py:46-54): first sighting
-                    # of a media_ref wins; later rounds' repeats are dropped
-                    # by a bucket-pruned anti-join (only the media buckets
-                    # this round's refs hash into are opened), and the
-                    # append writes only the new rows
-                    delta = out["media_delta"]
-                    if self.store.exists("media"):
-                        cand_b = [
-                            r["media_bucket"]
-                            for r in delta.select("media_bucket").distinct().collect()
-                        ]
-                        prior = self.store.read_partitions("media", cand_b)
-                        delta = delta.join(prior.select("media_ref"), "media_ref", "left_anti")
-                    self.store.append("media", delta, partition_by=["media_bucket"])
-                # driver-sized rows (<= n_hosts, <= fetch_partitions) and
-                # the collected Bloom delta: no Spark job of their own
-                self.store.upsert_rows("host_state", out["host_state"], key="host")
-                self.store.append_rows("lineage", out["lineage"])
-                if self.bloom is not None:
-                    self.bloom.update_local(out["new_hashes"])
-                self.store.commit_round(r)
-                self.store.expire_snapshots(keep=expire_keep)
-                # small-file maintenance (Iceberg rewrite_data_files
-                # analog): delta appends add one segment per round; compact
-                # the worst table slice once it crosses the member
-                # threshold.  No-op most rounds, amortized O(table/threshold).
-                for t in ("seen", "documents", "lineage", "frontier"):
-                    if self.store.exists(t):
-                        self.store.compact(t, max_members=32)
-                results.append(res)
-            finally:
-                for df in out["_cached"]:
-                    df.unpersist()
-                for b in out["_broadcasts"]:
-                    b.destroy()
-        hosts_df.unpersist()
+                    self.store.expire_snapshots(keep=expire_keep)
+                    # small-file maintenance (Iceberg rewrite_data_files
+                    # analog): delta appends add one segment per round; compact
+                    # the worst table slice once it crosses the member
+                    # threshold.  No-op most rounds, amortized O(table/threshold).
+                    for t in ("seen", "documents", "lineage", "frontier"):
+                        if self.store.exists(t):
+                            self.store.compact(t, max_members=32)
+                    results.append(res)
+        finally:
+            hosts_df.unpersist()
         return results
 
     # ------------------------------------------------------------ robots cache

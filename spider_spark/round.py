@@ -29,6 +29,7 @@ storage-inclusive round is about 23 Spark jobs in all.
 
 from __future__ import annotations
 
+import contextlib
 import time
 from dataclasses import dataclass
 
@@ -115,6 +116,7 @@ def run_round(
     *,
     materialize,
     seen_reader,
+    cleanup: contextlib.ExitStack,
     record_order: bool = False,
 ) -> tuple[RoundResult, dict[str, DataFrame]]:
     """Pure-transform round: takes current table DataFrames, returns the
@@ -131,7 +133,14 @@ def run_round(
     in-memory ``.cache()`` thrashes the JVM allocator on wide nested rows
     at high core counts (measured: in-memory columnar caching of the
     fetch results was 5-10x slower than a parquet round-trip at
-    local[32])."""
+    local[32]).
+
+    ``cleanup`` takes each round-scoped cached frame and broadcast as it
+    is made (the Bloom-tagged candidates and their shard broadcast, the
+    new links); the caller closes it once the round's store writes are
+    done, so a raise anywhere -- here or in a write -- leaks neither.
+    A never-destroyed per-round broadcast leaks driver+executor memory
+    over a long crawl."""
     t0 = time.monotonic()
     elig = politeness.eligible_hosts(hosts_df, host_state_df, round_id)
     batch = frontier.dequeue(
@@ -199,6 +208,9 @@ def run_round(
     # those buckets is exact, since a bucket with no maybe-seen hash
     # cannot produce an anti-join match.
     definite_new, maybe_seen, tagged, bloom_bc = bloom_mod.bloom_prefilter(spark, cand, bloom)
+    cleanup.callback(tagged.unpersist)
+    if bloom_bc is not None:
+        cleanup.callback(bloom_bc.destroy)
     bucket_counts = (
         tagged.groupBy(
             F.when(
@@ -213,6 +225,7 @@ def run_round(
     seen_scan = seen_reader(cand_buckets)
     checked_new = maybe_seen.join(seen_scan.select("url_hash"), "url_hash", "left_anti")
     new_links = definite_new.unionByName(checked_new).cache()
+    cleanup.callback(new_links.unpersist)
 
     # ---- MERGE-able outputs
     updates = frontier.state_updates(results, round_id, cfg.max_retries)
@@ -284,10 +297,5 @@ def run_round(
         "host_state": host_state,
         "lineage": lineage,
         "new_hashes": new_hashes,
-        "_cached": [tagged, new_links],
-        # round-scoped broadcasts: destroyed by the caller once the
-        # round's actions complete (never-destroyed per-round broadcasts
-        # leak driver+executor memory over a long crawl)
-        "_broadcasts": [b for b in [bloom_bc] if b is not None],
     }
     return res, out

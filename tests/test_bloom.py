@@ -1,6 +1,7 @@
 from __future__ import annotations
 
 import numpy as np
+import pytest
 
 from spider_spark.bloom import ShardedBloom, bloom_prefilter
 
@@ -130,3 +131,64 @@ def test_seen_filter_entry_releases_prefilter_state(spark, monkeypatch):
     for _, _, tagged, bc in made:
         assert not tagged.is_cached
         assert not os.path.exists(bc._path)
+
+
+@pytest.mark.parametrize("fail_at", ["seen_append", "seen_reader"])
+def test_run_rounds_releases_cached_state_when_a_round_raises(
+    spark, tmp_path, monkeypatch, fail_at
+):
+    """A raise in a store write (the seen append) or inside run_round
+    after the prefilter (the seen reader) must still unpersist the cached
+    hosts and the round's tagged candidates and destroy the Bloom
+    broadcast: none of them may outlive the failed run_rounds."""
+    import os
+
+    import spider_spark.bloom as bloom_mod
+    from spider_spark import synth
+    from spider_spark.crawl import Crawler
+    from spider_spark.round import CrawlConfig
+    from spider_spark.storage import TableStore
+
+    n_hosts, page_space = 10, 200
+    cfg = CrawlConfig(
+        n_hosts=n_hosts, page_space=page_space, fetch_partitions=4,
+        bloom_shards=4, bloom_bits=1 << 14,
+    )
+    c = Crawler(spark, str(tmp_path / "crawl"), cfg)
+    c.bootstrap(
+        synth.seed_list(spark, 40, n_hosts, page_space),
+        synth.hosts_config(spark, n_hosts),
+    )
+
+    made = []
+
+    def spy(*args):
+        out = bloom_prefilter(*args)
+        made.append(out)
+        return out
+
+    def boom(*_a, **_k):
+        raise RuntimeError(f"injected failure at {fail_at}")
+
+    monkeypatch.setattr(bloom_mod, "bloom_prefilter", spy)
+    if fail_at == "seen_append":
+        append = TableStore.append
+
+        def failing_append(store, table, *a, **k):
+            if table == "seen":
+                boom()
+            return append(store, table, *a, **k)
+
+        monkeypatch.setattr(TableStore, "append", failing_append)
+    else:
+        monkeypatch.setattr(Crawler, "_seen_reader", boom)
+
+    jsc = spark.sparkContext._jsc
+    before = jsc.getPersistentRDDs().size()
+    with pytest.raises(RuntimeError, match=fail_at):
+        c.run_rounds(1)
+    assert jsc.getPersistentRDDs().size() == before
+    assert len(made) == 1
+    _, _, tagged, bc = made[0]
+    assert not tagged.is_cached
+    assert not os.path.exists(bc._path)
