@@ -139,15 +139,22 @@ class ShardedBloom:
 
     # ------------------------------------------------------------- query
     def maybe_contains(self, url_hash: np.ndarray) -> np.ndarray:
-        x = url_hash.astype(np.int64).view(np.uint64)
-        shard_ids = (x & np.uint64(self.n_shards - 1)).astype(np.int64)
-        h1, h2 = _h1h2(url_hash)
-        res = np.ones(len(url_hash), dtype=bool)
-        for i in range(self.k):
-            pos = (h1 + np.uint64(i) * h2) % np.uint64(self.m)
-            word = self.shards[shard_ids, (pos >> np.uint64(6)).astype(np.int64)]
-            res &= (word >> (pos & np.uint64(63))) & np.uint64(1) != 0
-        return res
+        return probe(self.shards, self.m, self.k, url_hash)
+
+
+def probe(shards: np.ndarray, m: int, k: int, url_hash: np.ndarray) -> np.ndarray:
+    """Bloom membership of each url_hash in ``shards`` (one m-bit row per
+    shard, k hashes): the one test behind ``ShardedBloom.maybe_contains``
+    and the prefilter UDF, which probes the broadcast bitmaps in place."""
+    x = url_hash.astype(np.int64).view(np.uint64)
+    shard_ids = (x & np.uint64(len(shards) - 1)).astype(np.int64)
+    h1, h2 = _h1h2(url_hash)
+    res = np.ones(len(url_hash), dtype=bool)
+    for i in range(k):
+        pos = (h1 + np.uint64(i) * h2) % np.uint64(m)
+        word = shards[shard_ids, (pos >> np.uint64(6)).astype(np.int64)]
+        res &= (word >> (pos & np.uint64(63))) & np.uint64(1) != 0
+    return res
 
 
 def bloom_prefilter(
@@ -174,16 +181,11 @@ def bloom_prefilter(
     bc = None
     maybe = F.lit(True)
     if bloom is not None:
-        bc = spark.sparkContext.broadcast(
-            {"shards": bloom.shards, "n": bloom.n_shards, "m": bloom.m, "k": bloom.k}
-        )
+        bc = spark.sparkContext.broadcast((bloom.shards, bloom.m, bloom.k))
 
         @F.pandas_udf("boolean")
         def maybe_udf(url_hash: pd.Series) -> pd.Series:
-            d = bc.value
-            b = ShardedBloom(d["n"], d["m"], d["k"])
-            b.shards = d["shards"]
-            return pd.Series(b.maybe_contains(url_hash.to_numpy()))
+            return pd.Series(probe(*bc.value, url_hash.to_numpy()))
 
         maybe = maybe_udf(F.col("url_hash"))
 

@@ -93,12 +93,12 @@ def c2_bloom_stats(spark, sf_dir):
 )
 def c3_seen_filter_split(spark, sf_dir):
     """J5/P10 seen-set dedup end-to-end through the REAL engine path
-    (bloom_prefilter -> definite_new + maybe_seen -> exact anti-join,
-    round.py), on a deterministic universe: every 3rd URL is pre-seen.
-    The small Bloom is deliberately undersized so false positives occur
-    and the anti-join actually earns its keep.  The split is collected
-    so the prefilter's tag cache and Bloom broadcast are released before
-    returning, as ``run_round`` releases them after its actions."""
+    (bloom_prefilter -> definite_new + maybe_seen -> exact anti-join, as
+    in ``crawl.Crawler._admit``), on a deterministic universe: every 3rd
+    URL is pre-seen.  The small Bloom is deliberately undersized so false
+    positives occur and the anti-join actually earns its keep.  The split
+    is collected so the prefilter's tag cache and Bloom broadcast are
+    released before returning, as ``_admit`` releases them."""
     from . import bloom as bloom_mod
     from . import canon
 

@@ -1,4 +1,5 @@
-"""Crawl driver loop: bootstrap, rounds, MERGE-back, resume (T1).
+"""The crawl: bootstrap, one round (``run_round``), one admission path
+(``Crawler._admit``), the driver loop and resume (T1).
 
 Replaces the reference's per-API crawl loops (shixinSpiderAPI
 shixin_spider.py:317-342; zhixingSpiderAPI zhixing_spider.py:229-260)
@@ -12,13 +13,14 @@ that round is durable, and resume rolls back to the last manifest.
 from __future__ import annotations
 
 import contextlib
+import time
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from . import canon, frontier, politeness
-from .bloom import ShardedBloom
-from .round import CrawlConfig, RoundResult, run_round, seen_rows
+from . import bloom as bloom_mod
+from . import canon, fetch, frontier, parse, politeness
+from .round import CrawlConfig, RoundResult, seen_rows
 from .schemas import FRONTIER, HOST_STATE, LINEAGE
 from .storage import TableStore
 
@@ -33,51 +35,85 @@ class Crawler:
         self.store = TableStore(spark, workdir)
         self.bloom = self._make_filter()
 
-    def _make_filter(self) -> ShardedBloom | None:
+    def _make_filter(self) -> bloom_mod.ShardedBloom | None:
         """The seen-prefilter: it only changes WHICH candidates skip the
         exact anti-join, never the result."""
         if not self.cfg.use_bloom:
             return None
-        return ShardedBloom(self.cfg.bloom_shards, self.cfg.bloom_bits)
+        return bloom_mod.ShardedBloom(self.cfg.bloom_shards, self.cfg.bloom_bits)
 
     # ------------------------------------------------------------ admission
     def _canonical_seeds(self, seeds: DataFrame, hosts: DataFrame) -> DataFrame:
-        """(url, priority) rows -> canonical, robots-allowed depth-0 rows
-        (url, url_hash, host, priority, depth), one per URL with its
-        lowest priority.  The prelude of every admission path."""
+        """(url, priority) rows -> depth-0 ``_candidates``, one per
+        canonical URL with its lowest priority.  The prelude of bootstrap
+        and of every seed batch."""
         s = seeds.select(
             canon.canonicalize_udf(F.col("url")).alias("url"), F.col("priority").cast("int")
         )
         s = s.groupBy("url").agg(F.min("priority").alias("priority"))
-        s = s.select(
-            "url",
-            canon.url_hash_col(F.col("url")).alias("url_hash"),
-            canon.host_col(F.col("url")).alias("host"),
-            "priority",
-            F.lit(0).alias("depth"),
-        )
-        return politeness.robots_allowed(s, hosts)
+        return _candidates(s.withColumn("depth", F.lit(0)), hosts)
 
-    def _admit(self, seeds: DataFrame, next_fetch_time: int, round_id: int, what: str) -> int:
-        """Admit the ``_canonical_seeds`` rows not yet in seen: MERGE them
-        into the frontier as pending rows, append them to seen, add them
-        to the Bloom, and commit ``round_id`` with ``{what: n}`` so they
-        survive resume().  Returns n, the number of new URLs."""
-        new = seeds.join(
-            self.store.read("seen").select("url_hash"), "url_hash", "left_anti"
-        ).cache()
-        # one collect of the new hashes is both the count and the Bloom
-        # delta (ORed in on the driver, like a round's; see bloom.py)
-        hashes = new.select("url_hash").toArrow().column("url_hash").to_numpy()
-        n_new = len(hashes)
-        if n_new:
-            self._merge_frontier(frontier.pending_rows(new, next_fetch_time, round_id))
-            self.store.append("seen", seen_rows(new, self.cfg))
-            if self.bloom is not None:
-                self.bloom.update_local(hashes)
-            self.store.commit_round(round_id, extra={what: n_new})
-        new.unpersist()
-        return n_new
+    def _admit(
+        self,
+        cand: DataFrame,
+        next_fetch_time: int,
+        round_id: int,
+        updates: DataFrame | None = None,
+    ) -> tuple[int, int]:
+        """The one way a URL enters the crawl (a round's links, a seed
+        batch, an audit): the candidate rows (url, url_hash, host,
+        priority, depth), one per URL, that are not yet in seen become
+        pending frontier rows fetchable from ``next_fetch_time``.  They
+        and ``updates`` (a round's fetched rows) are MERGEd into the
+        frontier in one commit; the new URLs are appended to seen and ORed
+        into the Bloom.  The caller commits the round.  Returns
+        (candidates, new URLs).
+
+        The Bloom tags each candidate once (``bloom_prefilter``), and ONE
+        grouped count over the tags gives both the candidate count and
+        the seen buckets the exact anti-join must open: maybe-seen rows
+        group by their bucket, definitely-new ones into a NULL group.  A
+        bucket with no maybe-seen hash cannot match, so opening only
+        those is exact.  Everything cached or broadcast here is released
+        however this returns or raises."""
+        with contextlib.ExitStack() as cleanup:
+            definite_new, maybe_seen, tagged, bc = bloom_mod.bloom_prefilter(
+                self.spark, cand, self.bloom
+            )
+            cleanup.callback(tagged.unpersist)
+            if bc is not None:
+                cleanup.callback(bc.destroy)
+            bucket_counts = (
+                tagged.groupBy(
+                    F.when(
+                        F.col("_maybe"),
+                        canon.bucket_col(F.col("url_hash"), self.cfg.seen_buckets),
+                    ).alias("b")
+                )
+                .count()
+                .collect()
+            )
+            n_cand = sum(r["count"] for r in bucket_counts)
+            seen = self.store.read_partitions(
+                "seen", [r["b"] for r in bucket_counts if r["b"] is not None]
+            )
+            new = definite_new.unionByName(
+                maybe_seen.join(seen.select("url_hash"), "url_hash", "left_anti")
+            ).cache()
+            cleanup.callback(new.unpersist)
+            # one collect of the new hashes is both the count and the Bloom
+            # delta (8 B per new URL, ORed in on the driver; see bloom.py)
+            hashes = new.select("url_hash").toArrow().column("url_hash").to_numpy()
+            rows = frontier.pending_rows(new, next_fetch_time, round_id)
+            if updates is not None:
+                self._merge_frontier(updates.unionByName(rows))
+            elif len(hashes):
+                self._merge_frontier(rows)
+            if len(hashes):
+                self.store.append("seen", seen_rows(new, self.cfg))
+                if self.bloom is not None:
+                    self.bloom.update_local(hashes)
+        return n_cand, len(hashes)
 
     def _merge_frontier(self, rows: DataFrame) -> str:
         """MERGE frontier rows by url_hash (single-writer; an atomic
@@ -90,10 +126,6 @@ class Crawler:
             "frontier", rows, key="url_hash", partition_by=["state"],
             immutable_partitions=["fetched", "dead"],
         )
-
-    def _seen_reader(self, bucket_values) -> DataFrame:
-        """Manifest-pruned seen scan for the round's exact anti-join."""
-        return self.store.read_partitions("seen", bucket_values)
 
     # ------------------------------------------------------------ bootstrap
     def bootstrap(self, seeds: DataFrame, hosts: DataFrame) -> None:
@@ -128,91 +160,37 @@ class Crawler:
         return rid
 
     # ------------------------------------------------------------ rounds
-    def _materialize(self, name: str, df: DataFrame) -> DataFrame:
-        """Pin a round intermediate as a parquet snapshot (the cost Iceberg
-        MERGE pays anyway) instead of an in-memory nested-row cache —
-        measured 5-10x faster at high core counts (see round.run_round)."""
-        self.store.write(name, df)
-        return self.store.read(name)
-
     def run_rounds(
         self, n_rounds: int, record_order: bool = False, expire_keep: int = 3
     ) -> list[RoundResult]:
         start = (self.store.last_committed_round() or 0) + 1
         results: list[RoundResult] = []
+        # released however the loop ends: drained, or a raise in a round
         hosts_df = self.store.read("hosts").cache()
-        # the round's cached frames (Bloom-tagged candidates, new links)
-        # and broadcasts, and the cached hosts, are released however a
-        # round ends: empty, drained, or a raise in the round or in a
-        # store write (ConcurrentCommitError, a schema ValueError)
         try:
             for r in range(start, start + n_rounds):
-                with contextlib.ExitStack() as cleanup:
-                    res, out = run_round(
-                        self.spark,
-                        self.cfg,
-                        r,
-                        self.store.read("frontier"),
-                        hosts_df,
-                        self.store.read("host_state") if self.store.exists("host_state") else None,
-                        self.bloom,
-                        materialize=self._materialize,
-                        seen_reader=self._seen_reader,
-                        cleanup=cleanup,
-                        record_order=record_order,
+                res = run_round(self, r, hosts_df, record_order)
+                if res.dequeued == 0:
+                    # empty round: advance the clock (retry rows may be
+                    # backed off into the future); stop only when the
+                    # frontier is truly drained.
+                    remaining = (
+                        self.store.read("frontier")
+                        .filter(F.col("state").isin("pending", "retry"))
+                        .count()
                     )
-                    if res.dequeued == 0:
-                        # empty round: advance the clock (retry rows may be
-                        # backed off into the future); stop only when the
-                        # frontier is truly drained.
-                        remaining = (
-                            self.store.read("frontier")
-                            .filter(F.col("state").isin("pending", "retry"))
-                            .count()
-                        )
-                        if remaining == 0:
-                            break
-                        self.store.commit_round(r)
-                        continue
-                    self._merge_frontier(out["frontier_updates"])
-                    self.store.append("seen", out["seen_delta"])
-                    # documents partitioned by fetch_round: each round's append
-                    # is one partition member, so an incremental consumer
-                    # (export of rounds k..k+n for a training-data pipeline)
-                    # opens only those members — manifest-level pruning, no
-                    # full-table scan
-                    self.store.append("documents", out["documents"], partition_by=["fetch_round"])
-                    if out["media_delta"] is not None:
-                        # S13 dup-key skip (db_config.py:46-54): first sighting
-                        # of a media_ref wins; later rounds' repeats are dropped
-                        # by a bucket-pruned anti-join (only the media buckets
-                        # this round's refs hash into are opened), and the
-                        # append writes only the new rows
-                        delta = out["media_delta"]
-                        if self.store.exists("media"):
-                            cand_b = [
-                                r["media_bucket"]
-                                for r in delta.select("media_bucket").distinct().collect()
-                            ]
-                            prior = self.store.read_partitions("media", cand_b)
-                            delta = delta.join(prior.select("media_ref"), "media_ref", "left_anti")
-                        self.store.append("media", delta, partition_by=["media_bucket"])
-                    # driver-sized rows (<= n_hosts, <= fetch_partitions) and
-                    # the collected Bloom delta: no Spark job of their own
-                    self.store.upsert_rows("host_state", out["host_state"], key="host")
-                    self.store.append_rows("lineage", out["lineage"])
-                    if self.bloom is not None:
-                        self.bloom.update_local(out["new_hashes"])
+                    if remaining == 0:
+                        break
                     self.store.commit_round(r)
-                    self.store.expire_snapshots(keep=expire_keep)
-                    # small-file maintenance (Iceberg rewrite_data_files
-                    # analog): delta appends add one segment per round; compact
-                    # the worst table slice once it crosses the member
-                    # threshold.  No-op most rounds, amortized O(table/threshold).
-                    for t in ("seen", "documents", "lineage", "frontier"):
-                        if self.store.exists(t):
-                            self.store.compact(t, max_members=32)
-                    results.append(res)
+                    continue
+                self.store.expire_snapshots(keep=expire_keep)
+                # small-file maintenance (Iceberg rewrite_data_files
+                # analog): delta appends add one segment per round; compact
+                # the worst table slice once it crosses the member
+                # threshold.  No-op most rounds, amortized O(table/threshold).
+                for t in ("seen", "documents", "lineage", "frontier"):
+                    self.store.compact(t, max_members=32)
+                results.append(res)
         finally:
             hosts_df.unpersist()
         return results
@@ -250,7 +228,10 @@ class Crawler:
         Returns the number of genuinely new URLs."""
         rid = self.store.last_committed_round() or 0
         seeds = self._canonical_seeds(seeds, self.store.read("hosts"))
-        return self._admit(seeds, rid + 1, rid, "seed_ingest")
+        _, n_new = self._admit(seeds, rid + 1, rid)
+        if n_new:
+            self.store.commit_round(rid, extra={"seed_ingest": n_new})
+        return n_new
 
     # ------------------------------------------------------------ priority refresh
     def reprioritize_from_links(self, boost_cap: int = 3) -> str | None:
@@ -292,7 +273,10 @@ class Crawler:
         never reside in a terminal partition."""
         rid = (self.store.last_committed_round() or 0) + 1
         exp = expected.select("url", F.lit(priority).alias("priority"))
-        return self._admit(self._canonical_seeds(exp, self.store.read("hosts")), 0, rid, "audit")
+        _, n_new = self._admit(self._canonical_seeds(exp, self.store.read("hosts")), 0, rid)
+        if n_new:
+            self.store.commit_round(rid, extra={"audit": n_new})
+        return n_new
 
     # ------------------------------------------------------------ views
     def seen_urls(self) -> set[str]:
@@ -300,3 +284,154 @@ class Crawler:
 
     def frontier_df(self) -> DataFrame:
         return self.store.read("frontier")
+
+
+def _candidates(urls: DataFrame, hosts: DataFrame) -> DataFrame:
+    """(url, priority, depth) rows, one per canonical URL -> robots-allowed
+    admission candidates (url, url_hash, host, priority, depth)."""
+    return politeness.robots_allowed(
+        urls.select(
+            "url",
+            canon.url_hash_col(F.col("url")).alias("url_hash"),
+            canon.host_col(F.col("url")).alias("host"),
+            "priority",
+            "depth",
+        ),
+        hosts,
+    )
+
+
+def run_round(
+    crawler: Crawler, round_id: int, hosts_df: DataFrame, record_order: bool = False
+) -> RoundResult:
+    """One crawl round (SURVEY.md §3.4): dequeue (W1) → politeness gates
+    (T2/T3) → salted repartition → fetch+parse (mapInPandas) → link
+    extraction → robots → admission (Bloom prefilter + exact seen
+    anti-join, J5; frontier MERGE, seen append) → documents, media,
+    host_state and lineage (T1) → the round commit.
+
+    Every step that touches crawl-sized data is a DataFrame op.  The
+    fetch results are pinned as the ``_round_results`` parquet snapshot
+    (the cost Iceberg MERGE pays anyway) for their several consumers: an
+    in-memory ``.cache()`` of their wide nested rows thrashes the JVM
+    allocator (measured 5-10x slower at local[32]).  One grouping-sets
+    collect over them gives the lineage rows and per-host (fetches,
+    errors); those driver-sized rows (at most ``fetch_partitions`` and
+    ``n_hosts``) are written with pyarrow, with no Spark job of their
+    own.  An empty batch returns before any admission or write, and the
+    caller decides whether the crawl has drained."""
+    t0 = time.monotonic()
+    cfg, store = crawler.cfg, crawler.store
+    elig = politeness.eligible_hosts(hosts_df, store.read("host_state"), round_id)
+    batch = frontier.dequeue(
+        store.read("frontier"), elig, round_id, cfg.global_cap, hosts_df=hosts_df,
+        rank_salt=cfg.rank_salt,
+    )
+    store.write(
+        "_round_results",
+        fetch.fetch_batch(
+            batch, cfg.n_hosts, cfg.page_space, cfg.fetch_partitions, cfg.salt,
+            keep_body=cfg.keep_raw_body, proxies=cfg.proxies, fetch_fn=cfg.fetch_fn,
+        ),
+    )
+    results = store.read("_round_results")
+
+    # per-partition lineage rows (A1/A5 analog) and per-host quarantine
+    # counts (T3) from ONE driver action: grouping sets over partition_id
+    # and host give at most fetch_partitions + fetched-hosts rows
+    stats = (
+        results.groupingSets([["partition_id"], ["host"]], "partition_id", "host")
+        .agg(
+            F.grouping("host").alias("by_part"),
+            F.count(F.lit(1)).alias("n"),
+            F.sum((F.col("err_type") == 0).cast("long")).alias("ok"),
+            F.sum((F.col("err_type") > 0).cast("long")).alias("err"),
+        )
+        .collect()
+    )
+    parts = sorted((r for r in stats if r["by_part"]), key=lambda r: r["partition_id"])
+    n_deq = sum(r["n"] for r in parts)
+    n_ok = sum(r["ok"] for r in parts)
+    if n_deq == 0:
+        return RoundResult(round_id, 0, 0, 0, 0, 0, int((time.monotonic() - t0) * 1000))
+    batch_urls = None
+    if record_order:
+        order = batch.orderBy(*frontier.ORDER_COLS).select("url")
+        batch_urls = [r["url"] for r in order.collect()]
+
+    # ---- links: they come out of the fetch stage ALREADY canonical
+    # (canon.canonicalize_series runs inside the fetch worker): one python
+    # stage per pipeline — chaining a second pandas UDF here would double
+    # the python workers per task (measured 10x slowdown at 32 cores)
+    ok = results.filter(F.col("err_type") == 0)
+    links = parse.extract_links(ok.select("url", "depth", "spans"))
+    cand = (
+        links.groupBy(F.col("link").alias("url"))
+        .agg((F.min("depth") + 1).cast("int").alias("depth"))
+        .withColumn("priority", F.col("depth"))
+    )
+    n_cand, n_new = crawler._admit(
+        _candidates(cand, hosts_df), round_id + 1, round_id,
+        updates=frontier.state_updates(results, round_id, cfg.max_retries),
+    )
+
+    # ---- documents (interleaved spans) for ok fetches, partitioned by
+    # fetch_round: each round's append is one partition member, so an
+    # incremental consumer (export of rounds k..k+n) opens only those
+    doc_cols = ["doc_id", "spans", "url", "host"] + (["body"] if cfg.keep_raw_body else [])
+    store.append(
+        "documents",
+        ok.select(*doc_cols, F.lit(round_id).cast("long").alias("fetch_round")),
+        partition_by=["fetch_round"],
+    )
+    if cfg.write_media_table:
+        # S13 media refs, one row per media span; dup-key skip
+        # (db_config.py:46-54): the first sighting of a media_ref wins,
+        # later rounds' repeats are dropped by a bucket-pruned anti-join
+        # (only the media buckets this round's refs hash into are opened)
+        media = (
+            ok.select(F.explode("spans").alias("s"), "url")
+            .filter(F.col("s.kind") == "media")
+            .groupBy(F.col("s.media_ref").alias("media_ref"))
+            .agg(
+                F.min("url").alias("source_url"),
+                F.lit(round_id).cast("long").alias("first_seen_round"),
+            )
+            .withColumn(
+                "media_bucket", canon.bucket_col(F.xxhash64("media_ref"), cfg.media_buckets)
+            )
+        )
+        if store.exists("media"):
+            buckets = [r["media_bucket"] for r in media.select("media_bucket").distinct().collect()]
+            prior = store.read_partitions("media", buckets)
+            media = media.join(prior.select("media_ref"), "media_ref", "left_anti")
+        store.append("media", media, partition_by=["media_bucket"])
+    store.upsert_rows(
+        "host_state",
+        politeness.quarantine_rows(
+            {r["host"]: (r["n"], r["err"]) for r in stats if not r["by_part"]}, round_id
+        ),
+        key="host",
+    )
+    nulls = [None] * len(parts)
+    store.append_rows("lineage", {
+        "round_id": [round_id] * len(parts),
+        "partition_id": [r["partition_id"] for r in parts],
+        "dequeued": [r["n"] for r in parts],
+        "fetched_ok": [r["ok"] for r in parts],
+        "errors": [r["err"] for r in parts],
+        "new_urls": nulls,
+        "dup_urls": nulls,
+        "wall_ms": nulls,
+    })
+    store.commit_round(round_id)
+    return RoundResult(
+        round_id=round_id,
+        dequeued=int(n_deq),
+        fetched_ok=int(n_ok),
+        errors=int(n_deq - n_ok),
+        new_urls=int(n_new),
+        dup_urls=int(n_cand - n_new),
+        wall_ms=int((time.monotonic() - t0) * 1000),
+        batch_urls=batch_urls,
+    )

@@ -9,7 +9,8 @@ final URL-seen set under the same seed list + politeness budget.
 
 Every rule here intentionally mirrors one engine module:
 eligibility/quarantine <-> politeness.py, ranking <-> frontier.py,
-fetch outcomes <-> fetch.py(simnet), link handling <-> round.py.
+fetch outcomes <-> fetch.py(simnet), link handling <-> crawl.py
+(run_round, Crawler._admit).
 """
 
 from __future__ import annotations
@@ -196,7 +197,7 @@ def simulate(
                 else:
                     row.state = "dead"
 
-        # ---- dedup vs seen + robots; enqueue (round.py link path)
+        # ---- dedup vs seen + robots; enqueue (Crawler._admit)
         for url, depth in discovered.items():
             if url in res.seen or not _allowed(url, hosts):
                 continue

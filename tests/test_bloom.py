@@ -133,14 +133,16 @@ def test_seen_filter_entry_releases_prefilter_state(spark, monkeypatch):
         assert not os.path.exists(bc._path)
 
 
-@pytest.mark.parametrize("fail_at", ["seen_append", "seen_reader"])
+@pytest.mark.parametrize("fail_at", ["seen_append", "seen_reader", "seed_seen_append"])
 def test_run_rounds_releases_cached_state_when_a_round_raises(
     spark, tmp_path, monkeypatch, fail_at
 ):
-    """A raise in a store write (the seen append) or inside run_round
-    after the prefilter (the seen reader) must still unpersist the cached
-    hosts and the round's tagged candidates and destroy the Bloom
-    broadcast: none of them may outlive the failed run_rounds."""
+    """A raise in a store write (the seen append) or in a store read
+    after the prefilter (the seen buckets) must still unpersist the
+    cached hosts and the round's tagged candidates and new links and
+    destroy the Bloom broadcast: none of them may outlive the failed
+    run_rounds.  A seed batch is admitted the same way, so a raise in its
+    seen append must release its state too."""
     import os
 
     import spider_spark.bloom as bloom_mod
@@ -171,7 +173,7 @@ def test_run_rounds_releases_cached_state_when_a_round_raises(
         raise RuntimeError(f"injected failure at {fail_at}")
 
     monkeypatch.setattr(bloom_mod, "bloom_prefilter", spy)
-    if fail_at == "seen_append":
+    if fail_at.endswith("seen_append"):
         append = TableStore.append
 
         def failing_append(store, table, *a, **k):
@@ -181,14 +183,108 @@ def test_run_rounds_releases_cached_state_when_a_round_raises(
 
         monkeypatch.setattr(TableStore, "append", failing_append)
     else:
-        monkeypatch.setattr(Crawler, "_seen_reader", boom)
+        read_partitions = TableStore.read_partitions
+
+        def failing_read(store, table, *a, **k):
+            if table == "seen":
+                boom()
+            return read_partitions(store, table, *a, **k)
+
+        monkeypatch.setattr(TableStore, "read_partitions", failing_read)
 
     jsc = spark.sparkContext._jsc
     before = jsc.getPersistentRDDs().size()
     with pytest.raises(RuntimeError, match=fail_at):
-        c.run_rounds(1)
+        if fail_at == "seed_seen_append":
+            c.enqueue_seeds(synth.seed_list(spark, 80, n_hosts, page_space))
+        else:
+            c.run_rounds(1)
     assert jsc.getPersistentRDDs().size() == before
     assert len(made) == 1
     _, _, tagged, bc = made[0]
     assert not tagged.is_cached
     assert not os.path.exists(bc._path)
+
+
+def test_empty_batch_runs_no_admission(spark, tmp_path, monkeypatch):
+    """A round whose batch is empty returns before admission: it tags no
+    candidates with the Bloom.  Here a robots refresh disallows every
+    path, so the pending rows stay queued and each round is empty."""
+    from pyspark.sql import functions as F
+
+    import spider_spark.bloom as bloom_mod
+    from spider_spark import synth
+    from spider_spark.crawl import Crawler
+    from spider_spark.round import CrawlConfig
+
+    n_hosts, page_space = 4, 50
+    cfg = CrawlConfig(
+        n_hosts=n_hosts, page_space=page_space, fetch_partitions=2,
+        bloom_shards=4, bloom_bits=1 << 14,
+    )
+    c = Crawler(spark, str(tmp_path / "crawl"), cfg)
+    hosts = synth.hosts_config(spark, n_hosts)
+    c.bootstrap(synth.seed_list(spark, 20, n_hosts, page_space), hosts)
+    c.update_hosts(hosts.withColumn("disallow_prefixes", F.array(F.lit("/"))))
+    made = []
+
+    def spy(*args):
+        out = bloom_prefilter(*args)
+        made.append(out)
+        return out
+
+    monkeypatch.setattr(bloom_mod, "bloom_prefilter", spy)
+    assert c.run_rounds(2) == []
+    assert c.store.last_committed_round() == 2  # the clock advanced
+    assert c.frontier_df().filter(F.col("state") == "pending").count() > 0
+    assert made == []
+
+
+def test_round_with_no_new_url_leaves_seen_unmoved(spark, tmp_path):
+    """Every URL of the universe is a seed, so a round's links are all
+    seen: the round dequeues and fetches, admits nothing, and writes no
+    seen segment (an empty append is a Spark job and a new manifest)."""
+    from spider_spark import synth
+    from spider_spark.crawl import Crawler
+    from spider_spark.round import CrawlConfig
+
+    n_hosts, page_space = 2, 20
+    cfg = CrawlConfig(
+        n_hosts=n_hosts, page_space=page_space, fetch_partitions=2,
+        bloom_shards=4, bloom_bits=1 << 14,
+    )
+    c = Crawler(spark, str(tmp_path / "crawl"), cfg)
+    universe = [(f"http://h{h}.example/p{p}", 0) for h in range(n_hosts) for p in range(page_space)]
+    c.bootstrap(
+        spark.createDataFrame(universe, "url string, priority int"),
+        synth.hosts_config(spark, n_hosts),
+    )
+    v0 = c.store.current_version("seen")
+    (res,) = c.run_rounds(1)
+    assert res.dequeued > 0 and res.dup_urls > 0 and res.new_urls == 0
+    assert c.store.current_version("seen") == v0
+
+
+def test_prefilter_probe_of_broadcast_bitmaps_matches_maybe_contains(monkeypatch):
+    """The prefilter UDF probes the broadcast (shards, m, k) in place.  It
+    must answer like maybe_contains and build no ShardedBloom per Arrow
+    batch (that allocates and zeroes all n_shards * m / 8 bytes)."""
+    import pickle
+
+    from spider_spark import bloom as bloom_mod
+
+    b = ShardedBloom(n_shards=8, bits_per_shard=1 << 12, n_hashes=4)
+    rng = np.random.default_rng(7)
+    inserted = rng.integers(-(2**62), 2**62, size=600, dtype=np.int64)
+    b.update_local(inserted)
+    keys = np.concatenate([inserted, rng.integers(-(2**62), 2**62, size=600, dtype=np.int64)])
+    expected = b.maybe_contains(keys)
+    assert expected[:600].all() and not expected[600:].all()
+
+    payload = pickle.loads(pickle.dumps((b.shards, b.m, b.k)))  # as broadcast ships it
+
+    def no_filter(*_a, **_k):
+        raise AssertionError("the probe built a ShardedBloom")
+
+    monkeypatch.setattr(ShardedBloom, "__init__", no_filter)
+    assert (bloom_mod.probe(*payload, keys) == expected).all()

@@ -170,3 +170,42 @@ def test_sitemap_feeds_the_seed_front_door(spark, booted):
     assert front["http://h2.example/p151"] == 1
     assert front["http://h3.example/p152"] == 5
     assert front["http://h4.example/p153"] == 5
+
+
+@pytest.mark.parametrize("entry", ["enqueue_seeds", "audit_lost"])
+def test_admission_opens_only_its_own_seen_buckets(spark, booted, monkeypatch, entry):
+    """A seed batch or an audit anti-joins seen like a round's links do:
+    it never scans the whole seen table, and it opens only buckets its
+    own candidates hash into."""
+    from spider_spark.storage import TableStore
+
+    crawler, seeds, _ = booted
+    # three URLs already seen (bootstrap seeds) and two new ones
+    old = [r["url"] for r in seeds.orderBy("url").limit(3).collect()]
+    batch = _seeds_df(spark, [(u, 0) for u in old] + EXTRA[:2])
+    cand = crawler._canonical_seeds(batch, crawler.store.read("hosts"))
+    n_buckets = crawler.cfg.seen_buckets
+    own = {r["url_hash"] % n_buckets for r in cand.select("url_hash").collect()}
+    assert len(own) < n_buckets  # the check can tell a full scan apart
+
+    reads, opened = [], []
+    read, read_partitions = TableStore.read, TableStore.read_partitions
+
+    def spy_read(store, table, *a, **k):
+        reads.append(table)
+        return read(store, table, *a, **k)
+
+    def spy_read_partitions(store, table, values, *a, **k):
+        if table == "seen":
+            opened.extend(values)
+        return read_partitions(store, table, values, *a, **k)
+
+    monkeypatch.setattr(TableStore, "read", spy_read)
+    monkeypatch.setattr(TableStore, "read_partitions", spy_read_partitions)
+    if entry == "enqueue_seeds":
+        n_new = crawler.enqueue_seeds(batch)
+    else:
+        n_new = crawler.audit_lost(batch.select("url"))
+    assert n_new == 2
+    assert "seen" not in reads
+    assert opened and set(opened) <= own
