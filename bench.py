@@ -211,7 +211,7 @@ def frontier_wave(spark, n_rows: int, cores: int, n_hosts: int = 1000) -> dict:
     from pyspark.sql import functions as F
 
     from spider_spark import canon, synth
-    from spider_spark.fetch import fetch_batch, make_fetch_fn
+    from spider_spark.fetch import fetch_batch
     from spider_spark.frontier import dequeue
     from spider_spark.politeness import eligible_hosts
 
@@ -235,8 +235,8 @@ def frontier_wave(spark, n_rows: int, cores: int, n_hosts: int = 1000) -> dict:
     seen.count()
     # warm the python worker pool (imports numpy/pandas once per worker) —
     # steady-state throughput, as in a long-running crawl
-    frontier.limit(cores * 200).repartition(cores).mapInPandas(
-        make_fetch_fn(n_hosts, page_space), "url string"
+    fetch_batch(
+        frontier.limit(cores * 200), n_hosts, page_space, num_partitions=cores, salt=8
     ).count()
 
     def wave_df():

@@ -174,12 +174,10 @@ class Crawler:
                     # empty round: advance the clock (retry rows may be
                     # backed off into the future); stop only when the
                     # frontier is truly drained.
-                    remaining = (
-                        self.store.read("frontier")
-                        .filter(F.col("state").isin("pending", "retry"))
-                        .count()
-                    )
-                    if remaining == 0:
+                    # from manifest footers, no Spark job: the frontier
+                    # never carries merge-on-read deletes or pre-spec
+                    # members, so the metadata count is exact
+                    if self.store.count_rows("frontier", ["pending", "retry"]) == 0:
                         break
                     self.store.commit_round(r)
                     continue
@@ -331,7 +329,7 @@ def run_round(
         "_round_results",
         fetch.fetch_batch(
             batch, cfg.n_hosts, cfg.page_space, cfg.fetch_partitions, cfg.salt,
-            keep_body=cfg.keep_raw_body, proxies=cfg.proxies, fetch_fn=cfg.fetch_fn,
+            keep_body=cfg.keep_raw_body, proxies=cfg.proxies, source=cfg.fetch_fn,
         ),
     )
     results = store.read("_round_results")

@@ -1,4 +1,5 @@
-"""Fetch stage: salted host-hash repartition + mapInPandas fetch+parse.
+"""Fetch stage: salted host-hash repartition + ONE mapInPandas fetch
+worker over a pluggable page source.
 
 Reference analog: the gevent fan-out fetch loop
 (shixin_spider.py:212-215 spawn ×50; basicRequest share_func.py:103-171).
@@ -9,6 +10,21 @@ Differences by design:
 - per-partition session bootstrap replaces the per-group cookie jar
   (shixin_spider.py:190-216): one session object per partition per round,
   created inside the iterator (T5).
+
+One worker, three page sources.  The worker, built only by
+``fetch_batch``, owns everything a fetcher has in common: the
+partition's session and its pinned proxy, the passthrough columns,
+``partition_id``/``status``/``err_type``/``doc_id``, outlink
+canonicalization and the ``body`` column.  A page source only says
+where a page comes from: ``simnet_source`` (the default, the
+deterministic simnet), ``transport.make_http_fetch_fn`` (the real-HTTP
+retry ladder, S1) and ``transport.make_browser_fetch_fn`` (an external
+renderer pool, S3).  A source is ``open(partition_id, proxy) -> pages``,
+called once per partition on its first batch; ``pages(urls)`` maps a
+batch's URL series to ``(status, err_type, flat, bodies)``: int32
+arrays, the flat page columns (``title`` … ``link2``, outlinks as
+found) and ``bodies(flat)``, the page HTML, which the worker calls only
+when bodies are kept and only after it has canonicalized the outlinks.
 
 Performance layout (the 100 TB-relevant part):
 - the Python stage emits ONLY flat vectorized columns (numpy/pandas C
@@ -38,6 +54,7 @@ from pyspark.sql import functions as F
 
 from . import canon, simnet
 from .schemas import FETCH_RESULT
+from .transport import err_type_of_status
 
 _PASSTHROUGH = [
     "url",
@@ -85,58 +102,72 @@ def salted_repartition(batch: DataFrame, num_partitions: int, salt: int) -> Data
     )
 
 
-def make_fetch_fn(
+def simnet_source(n_hosts: int, page_space: int):
+    """The default page source: the deterministic simnet, all numpy/Arrow
+    (no per-row Python on the hot fields).  The simnet ignores the
+    partition's proxy, as a healthy proxy is transparent."""
+
+    def open_partition(pid: int, _proxy: str | None):
+        # S4 session acquisition: solve the partition's captcha
+        # challenge (render -> binarize -> template OCR, the
+        # recogImage pipeline share_func.py:56-66, retry <=3) —
+        # executor-local, never touches row results
+        from .functions.ocr import acquire_session_token
+
+        acquire_session_token(pid)
+
+        def pages(urls: pd.Series):
+            h, p = simnet.parse_url_np(urls)
+            status = simnet.status_of_key_np(simnet.page_key(h, p))
+            flat = simnet.fetch_flat_np(h, p, n_hosts, page_space)
+            return status, err_type_of_status(status), flat, simnet.render_html_np
+
+        return pages
+
+    return open_partition
+
+
+def fetch_batch(
+    batch: DataFrame,
     n_hosts: int,
     page_space: int,
+    num_partitions: int = 32,
+    salt: int = 8,
     keep_body: bool = False,
     proxies: list[str] | None = None,
-):
-    """mapInPandas fetch+parse against the deterministic simnet —
-    all-numpy hot path, flat output columns only.
+    source=None,
+) -> DataFrame:
+    """Fetch + parse a dequeued batch: salted repartition, ONE python
+    stage (the fetch worker over ``source``) and the JVM span assembly.
 
-    ``keep_body``: S14 raw-body retention (credit_person_web.py:234-249
-    saves response HTML for later re-parse) — emit the rendered page HTML
-    as a ``body`` column so a parser fix can re-run over old crawls
-    without re-fetching.  Off by default: bodies dominate storage."""
+    ``source``: a page source (module docstring); None is the simnet
+    sized by ``n_hosts``/``page_space``, which no other source reads.
+    ``proxies``: S2 proxy rotation — each partition's session pins ONE
+    proxy from the refreshed pool (proxy_spider.py:15-66 validated list),
+    deterministic per partition, so a replayed round rides the same
+    identities (T5).  ``keep_body``: S14 raw-body retention
+    (credit_person_web.py:234-249 saves response HTML for later
+    re-parse) — a ``body`` column with the page HTML of every ok fetch,
+    so a parser fix can re-run over old crawls without re-fetching.  Off
+    by default: bodies dominate storage.  Everything downstream — span
+    assembly, link extraction, dedup, MERGE-back — is source-agnostic."""
+    if source is None:
+        source = simnet_source(n_hosts, page_space)
 
     def fetch_fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        session = None  # per-partition session (cookie-jar analog, T5)
         tc = TaskContext.get()
         pid = tc.partitionId() if tc is not None else -1
+        pages = None  # the partition's session (cookie-jar analog, T5)
         for pdf in batches:
-            if session is None:
-                # S2 proxy rotation: the partition's session pins ONE
-                # proxy from the refreshed pool (proxy_spider.py:15-66
-                # validated list) — deterministic per partition, so a
-                # replayed round rides the same identities (T5)
-                proxy = proxies[pid % len(proxies)] if proxies else None
-                # S4 session acquisition: solve the partition's captcha
-                # challenge (render -> binarize -> template OCR, the
-                # recogImage pipeline share_func.py:56-66, retry <=3) —
-                # executor-local, never touches row results
-                from .functions.ocr import acquire_session_token
-
-                session = {
-                    "partition": pid,
-                    "fetches": 0,
-                    "proxy": proxy,
-                    "token": acquire_session_token(pid),
-                }
-            h, p = simnet.parse_url_np(pdf["url"])
-            k = simnet.page_key(h, p)
-            status = simnet.status_of_key_np(k)
-            err = np.zeros(len(pdf), dtype=np.int32)
-            err[status == 529] = simnet.ERR_REQUEST
-            err[status == 408] = simnet.ERR_TIMEOUT
-            err[status == 404] = simnet.ERR_UNKNOWN
-            session["fetches"] += len(pdf)
+            if pages is None:
+                pages = source(pid, proxies[pid % len(proxies)] if proxies else None)
+            status, err, flat, bodies = pages(pdf["url"])
             out = pdf[_PASSTHROUGH].copy()
             out["partition_id"] = np.int32(pid)
             out["status"] = status
             out["err_type"] = err
             ok = err == 0
             out["doc_id"] = np.where(ok, "doc:" + pdf["url"].astype(str), None)
-            flat = simnet.fetch_flat_np(h, p, n_hosts, page_space)
             # canonicalize outlinks HERE, in the same worker: chaining a
             # second pandas UDF after this stage would run 2 python workers
             # per task and oversubscribe the executor ~2x (measured 10x
@@ -149,35 +180,13 @@ def make_fetch_fn(
             for col, vals in flat.items():
                 out[col] = vals
             if keep_body:
-                # rendered AFTER link canonicalization so re-parsing the
-                # body reproduces the span sequence exactly
-                out["body"] = np.where(ok, simnet.render_html_np(flat), None)
+                # after canonicalization: a body the simnet renders from
+                # the flat columns re-parses to the exact span sequence
+                out["body"] = np.where(ok, bodies(flat), None)
             yield out
 
-    return fetch_fn
-
-
-def fetch_batch(
-    batch: DataFrame,
-    n_hosts: int,
-    page_space: int,
-    num_partitions: int = 32,
-    salt: int = 8,
-    keep_body: bool = False,
-    proxies: list[str] | None = None,
-    fetch_fn=None,
-) -> DataFrame:
-    """``fetch_fn``: a custom mapInPandas fetcher replacing the simnet
-    default — ``transport.make_http_fetch_fn`` (real-HTTP ladder) and
-    ``transport.make_browser_fetch_fn`` (renderer pool) are schema-
-    identical drop-ins.  The custom fn must emit ``_RAW_SCHEMA``
-    (+ ``body`` when ``keep_body``) and canonicalize outlinks in-worker
-    (one python stage per pipeline); everything downstream — JVM span
-    assembly, link extraction, dedup, MERGE-back — is fetcher-agnostic."""
     salted = salted_repartition(batch.select(*_PASSTHROUGH), num_partitions, salt)
     schema = _RAW_SCHEMA + (", body string" if keep_body else "")
-    if fetch_fn is None:
-        fetch_fn = make_fetch_fn(n_hosts, page_space, keep_body, proxies)
     raw = salted.mapInPandas(fetch_fn, schema)
     out_cols = [f.name for f in FETCH_RESULT.fields] + (["body"] if keep_body else [])
     return raw.withColumn("spans", F.expr(_SPANS_EXPR)).select(out_cols)

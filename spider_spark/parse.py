@@ -63,6 +63,39 @@ def html_to_spans(html: str) -> list[dict]:
     return spans
 
 
+# the fetch stage's flat page columns, from which the JVM assembles spans
+FLAT_COLUMNS = (
+    "title", "text1", "has_media", "media_ref", "has_text2", "text2",
+    "n_links", "link0", "link1", "link2",
+)
+
+
+def flat_columns(bodies: list[str | None]) -> pd.DataFrame:
+    """HTML bodies -> the fetch stage's flat page columns: the first
+    title, first two texts, first media and first three links, the
+    simnet page shape (real pages simply truncate to it).  A missing
+    body is an empty page."""
+    rows = []
+    for body in bodies:
+        spans = html_to_spans(body)
+        texts = [s["text"] for s in spans if s["kind"] == "text"][:2]
+        media = next((s["media_ref"] for s in spans if s["kind"] == "media"), None)
+        links = [s["text"] for s in spans if s["kind"] == "link"][:3]
+        rows.append({
+            "title": next((s["text"] for s in spans if s["kind"] == "title"), ""),
+            "text1": texts[0] if texts else "",
+            "has_media": media is not None,
+            "media_ref": media or "",
+            "has_text2": len(texts) > 1,
+            "text2": texts[1] if len(texts) > 1 else "",
+            "n_links": len(links),
+            **{f"link{j}": links[j] if j < len(links) else "" for j in range(3)},
+        })
+    return pd.DataFrame(rows, columns=FLAT_COLUMNS).astype(
+        {"has_media": bool, "has_text2": bool, "n_links": "int32"}
+    )
+
+
 def _html_to_spans_vec(bodies: pd.Series) -> pd.Series:
     return bodies.map(lambda b: html_to_spans(b) if isinstance(b, str) else [])
 

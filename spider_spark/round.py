@@ -50,9 +50,10 @@ class CrawlConfig:
     # keeping ≤ cap rows/slice, then exact-ranks the ≤ S·cap survivors.
     # Results-identical (parity-gated); None/1 keeps the single window.
     rank_salt: int | None = None
-    # pluggable transport (S1-real / S3): a mapInPandas fetcher built by
+    # pluggable transport (S1-real / S3): a page source built by
     # transport.make_http_fetch_fn / make_browser_fetch_fn replaces the
-    # simnet default for the WHOLE crawl — same flat schema, so every
+    # simnet for the WHOLE crawl.  The fetch worker around it is the same
+    # (keep_raw_body and proxies above apply to every source), so every
     # downstream stage (span assembly, dedup, MERGE-back, resume) is
     # unchanged.  Parity gates (refsim) only apply to the simnet default.
     fetch_fn: object = None

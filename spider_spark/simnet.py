@@ -29,7 +29,9 @@ from __future__ import annotations
 import numpy as np
 
 MASK31 = 0x7FFFFFFF
-ERR_REQUEST, ERR_TIMEOUT, ERR_UNKNOWN = 1, 2, 3
+# err_type, the fetch output's contract with frontier.state_updates: 0 ok,
+# 1 request-failed and 2 timeout (retried with backoff), 3 unknown (dead)
+ERR_OK, ERR_REQUEST, ERR_TIMEOUT, ERR_UNKNOWN = 0, 1, 2, 3
 
 
 def url_of(host_id: int, page_id: int) -> str:

@@ -1,7 +1,9 @@
-"""Real HTTP transport with the reference's typed retry ladder (S1).
+"""Real HTTP transport with the reference's typed retry ladder (S1), and
+the two page sources built on it: real HTTP and an external renderer
+pool (S3).
 
-The engine's default fetcher is the deterministic simnet
-(``fetch.make_fetch_fn``) — this sandbox has no network, and every
+The engine's default page source is the deterministic simnet
+(``fetch.simnet_source``) — this sandbox has no network, and every
 correctness gate (crawl parity, span equality) needs replayable pages.
 This module ships the REAL transport variant the reference actually runs
 (``basicRequest``, flask_spider/spider/public/share_func.py:103-171),
@@ -22,12 +24,16 @@ plus HTTP-status mapping the reference leaves implicit (it checks
 ``response`` truthiness): 2xx -> ok, 5xx/429/408 -> ERR_REQUEST or
 ERR_TIMEOUT (retryable — the frontier state machine re-schedules them
 with backoff), other 4xx -> ERR_UNKNOWN (dead; the unknown-ID route).
+``err_type_of_status`` is that mapping, and the simnet source uses it too.
 
 Retries here are IN-LADDER only (transport-level, like the reference's
 ``resend_times``); scheduling retries stay DATA — an err_type row the
 frontier re-queues (SURVEY.md §4.1).  The two budgets compose: the
 ladder absorbs transient socket noise inside one task, the state machine
 owns real re-scheduling.
+
+The sources only map URLs to pages; the fetch worker (``fetch.fetch_batch``)
+owns the partition session, the proxy, the worker columns and bodies.
 
 ``requests`` is imported lazily and only when no ``transport`` callable
 is injected, so the module (and its tests) work in this no-network,
@@ -38,8 +44,14 @@ one.  Sleeps are injectable for the same reason (tests pass a recorder).
 
 from __future__ import annotations
 
-from collections.abc import Callable, Iterator
+from collections.abc import Callable
 from dataclasses import dataclass, field
+
+import numpy as np
+import pandas as pd
+
+from . import parse
+from .simnet import ERR_OK, ERR_REQUEST, ERR_TIMEOUT, ERR_UNKNOWN
 
 
 class TransportTimeout(Exception):
@@ -56,11 +68,6 @@ class TransportSSLError(Exception):
 
 class TransportError(Exception):
     """Any other RequestException analog."""
-
-
-# err_type contract (frontier.state_updates): 1 request-failed (retry w/
-# backoff), 2 timeout (retry w/ backoff), 3 unknown (dead).
-ERR_OK, ERR_REQUEST, ERR_TIMEOUT, ERR_UNKNOWN = 0, 1, 2, 3
 
 
 @dataclass
@@ -98,6 +105,19 @@ def _default_transport(url: str, timeout: float, proxy: str | None, verify: bool
         raise TransportSSLError(str(e)) from e
     except rex.RequestException as e:
         raise TransportError(str(e)) from e
+
+
+def err_type_of_status(status):
+    """HTTP status -> err_type, on an int or a numpy array: 2xx ok; 408
+    timeout and 429/5xx request-failed (retryable server-side failures:
+    the frontier state machine re-schedules them with backoff); any other
+    status unknown (the unknown-ID dead route)."""
+    s = np.asarray(status)
+    return np.select(
+        [(s >= 200) & (s < 300), s == 408, (s == 429) | (s >= 500)],
+        [ERR_OK, ERR_TIMEOUT, ERR_REQUEST],
+        ERR_UNKNOWN,
+    ).astype(np.int32)
 
 
 def fetch_with_ladder(
@@ -162,25 +182,55 @@ def fetch_with_ladder(
                 continue
         else:
             out.status = status
-            if 200 <= status < 300:
-                out.err_type = ERR_OK
+            out.err_type = int(err_type_of_status(status))
+            if out.err_type == ERR_OK:
                 out.body = body
-            elif status in (408, 429) or status >= 500:
-                # retryable server-side failure: hand back to the frontier
-                # state machine (err 1/2 -> retry with backoff)
-                out.err_type = ERR_TIMEOUT if status == 408 else ERR_REQUEST
-            else:
-                out.err_type = ERR_UNKNOWN  # 4xx: the unknown-ID dead route
             return out
         out.err_type = pending_err
         return out
 
 
-def make_browser_fetch_fn(
-    render,
-    renderer_pool: list[str] | None = None,
-    keep_body: bool = False,
+def make_http_fetch_fn(
+    transport: Callable[..., tuple[int, str]] | None = None,
+    timeout: float = 3.0,
+    resend_times: int = 1,
+    sleep: Callable[[float], None] | None = None,
 ):
+    """The REAL transport as a page source for ``fetch.fetch_batch``:
+    every URL goes through ``fetch_with_ladder``, and bodies parse
+    through the SAME html_to_spans scanner the raw-body re-parse tests
+    gate, flattened to the fetch stage's flat columns
+    (``parse.flat_columns``).
+
+    The partition's pinned proxy (T5) rides every request until the
+    ladder drops it on a ProxyError; the partition then drops it too,
+    exactly like the reference."""
+
+    def open_partition(_pid: int, proxy: str | None):
+        def pages(urls: pd.Series):
+            nonlocal proxy
+            outcomes = []
+            for url in urls:
+                o = fetch_with_ladder(
+                    url, transport, timeout, resend_times, proxy, sleep=sleep
+                )
+                if o.proxy_dropped:
+                    proxy = None
+                outcomes.append(o)
+            bodies = [o.body for o in outcomes]
+            return (
+                np.array([o.status for o in outcomes], dtype=np.int32),
+                np.array([o.err_type for o in outcomes], dtype=np.int32),
+                parse.flat_columns(bodies),
+                lambda _flat: bodies,
+            )
+
+        return pages
+
+    return open_partition
+
+
+def make_browser_fetch_fn(render, renderer_pool: list[str] | None = None):
     """S3: JS-rendered fetch via an EXTERNAL renderer pool — the last §2
     row (the reference drives Chrome/PhantomJS for form login + cookie
     harvest, china_mobile_gd.py:76-148).  An executor cannot host a
@@ -191,211 +241,18 @@ def make_browser_fetch_fn(
     the same renderer, so cookie/session state is deterministic per
     partition).
 
-    Everything downstream is identical to the other fetchers: the
-    rendered DOM (which may contain JS-materialized content absent from
-    the raw response) parses through html_to_spans into the flat fetch
-    columns inside this one python stage; the JVM assembles spans.
-    ``render`` raising any Transport* exception routes the row to the
-    matching err_type — renderer crashes are data, not task failures.
-    Contract-tested with a scripted renderer; no browser runs in CI."""
-    import numpy as np
-    import pandas as pd
-    from pyspark import TaskContext
+    The source is the HTTP source over ``render`` with a zero retry
+    budget: a render that raises a Transport* exception, or answers a
+    non-2xx status, becomes the same typed err row as an exhausted
+    ladder — renderer crashes are data, not task failures.  The rendered
+    DOM (which may contain JS-materialized content absent from the raw
+    response) parses like any other body.  Contract-tested with a
+    scripted renderer; no browser runs in CI."""
 
-    from . import canon
-    from .parse import html_to_spans
+    def open_partition(pid: int, proxy: str | None):
+        endpoint = renderer_pool[pid % len(renderer_pool)] if renderer_pool else None
+        return make_http_fetch_fn(
+            lambda url, _t, _p, _v: render(url, endpoint), resend_times=0
+        )(pid, proxy)
 
-    def flat_from_body(body):
-        spans = html_to_spans(body) if body else []
-        title = next((s["text"] for s in spans if s["kind"] == "title"), "")
-        texts = [s["text"] for s in spans if s["kind"] == "text"][:2]
-        media = next((s["media_ref"] for s in spans if s["kind"] == "media"), None)
-        links = [s["text"] for s in spans if s["kind"] == "link"][:3]
-        return title, texts, media, links
-
-    def fetch_fn(batches):
-        session = None
-        tc = TaskContext.get()
-        pid = tc.partitionId() if tc is not None else -1
-        for pdf in batches:
-            if session is None:
-                endpoint = (
-                    renderer_pool[pid % len(renderer_pool)] if renderer_pool else None
-                )
-                session = {"partition": pid, "endpoint": endpoint}
-            n = len(pdf)
-            status = np.zeros(n, dtype=np.int32)
-            err = np.zeros(n, dtype=np.int32)
-            cols = {
-                "title": [""] * n, "text1": [""] * n,
-                "has_media": np.zeros(n, dtype=bool), "media_ref": [""] * n,
-                "has_text2": np.zeros(n, dtype=bool), "text2": [""] * n,
-                "n_links": np.zeros(n, dtype=np.int32),
-                "link0": [""] * n, "link1": [""] * n, "link2": [""] * n,
-            }
-            bodies = [None] * n
-            for i, url in enumerate(pdf["url"].tolist()):
-                try:
-                    st, html = render(url, session["endpoint"])
-                except TransportTimeout:
-                    status[i], err[i] = 0, ERR_TIMEOUT
-                    continue
-                except (TransportProxyError, TransportSSLError):
-                    status[i], err[i] = 0, ERR_REQUEST
-                    continue
-                except TransportError:
-                    status[i], err[i] = 0, ERR_UNKNOWN
-                    continue
-                status[i] = st
-                if not (200 <= st < 300):
-                    err[i] = (
-                        ERR_TIMEOUT if st == 408
-                        else ERR_REQUEST if st in (429,) or st >= 500
-                        else ERR_UNKNOWN
-                    )
-                    continue
-                title, texts, media, links = flat_from_body(html)
-                cols["title"][i] = title
-                cols["text1"][i] = texts[0] if texts else ""
-                cols["has_media"][i] = media is not None
-                cols["media_ref"][i] = media or ""
-                cols["has_text2"][i] = len(texts) > 1
-                cols["text2"][i] = texts[1] if len(texts) > 1 else ""
-                cols["n_links"][i] = len(links)
-                for j, l in enumerate(links):
-                    cols[f"link{j}"][i] = l
-                bodies[i] = html
-            out = pdf[
-                ["url", "url_hash", "host", "priority", "depth",
-                 "retry_count", "discovered_round"]
-            ].copy()
-            out["partition_id"] = np.int32(pid)
-            out["status"] = status
-            out["err_type"] = err
-            ok = err == 0
-            out["doc_id"] = np.where(ok, "doc:" + pdf["url"].astype(str), None)
-            for c, vals in cols.items():
-                out[c] = vals
-            for c in ("link0", "link1", "link2"):
-                out[c] = canon.canonicalize_series(
-                    pd.Series(out[c]), bases=pdf["url"].reset_index(drop=True)
-                ).astype(object)
-            if keep_body:
-                out["body"] = pd.array(
-                    [b if o else None for b, o in zip(bodies, ok)], dtype=object
-                )
-            yield out
-
-    return fetch_fn
-
-
-def make_http_fetch_fn(
-    transport: Callable[..., tuple[int, str]] | None = None,
-    timeout: float = 3.0,
-    resend_times: int = 1,
-    proxies: list[str] | None = None,
-    keep_body: bool = False,
-    sleep: Callable[[float], None] | None = None,
-):
-    """A drop-in replacement for ``fetch.make_fetch_fn`` backed by the
-    REAL transport ladder: same mapInPandas contract, same flat output
-    schema (fetch._RAW_SCHEMA [+ body]), so ``fetch_batch``'s JVM span
-    assembly, link canonicalization placement, and the one-python-stage
-    rule all hold unchanged.  Bodies parse through the SAME html_to_spans
-    scanner the raw-body re-parse tests gate, then flatten to the fetch
-    stage's flat columns (title/text1/media/text2/up-to-3 links).
-
-    Proxy affinity matches the simnet fetcher: the partition's session
-    pins one proxy from the pool (T5); the ladder may then drop it for
-    that partition on a ProxyError, exactly like the reference."""
-    import numpy as np
-    import pandas as pd
-    from pyspark import TaskContext
-
-    from . import canon
-    from .parse import html_to_spans
-
-    def flat_from_body(body: str | None) -> dict:
-        """spans -> the fetch stage's flat columns (first title, first
-        two texts, first media, first three links — the simnet page
-        shape; real pages simply truncate to it)."""
-        spans = html_to_spans(body) if body else []
-        title = next((s["text"] for s in spans if s["kind"] == "title"), "")
-        texts = [s["text"] for s in spans if s["kind"] == "text"][:2]
-        media = next((s["media_ref"] for s in spans if s["kind"] == "media"), None)
-        links = [s["text"] for s in spans if s["kind"] == "link"][:3]
-        return {
-            "title": title,
-            "text1": texts[0] if texts else "",
-            "has_media": media is not None,
-            "media_ref": media or "",
-            "has_text2": len(texts) > 1,
-            "text2": texts[1] if len(texts) > 1 else "",
-            "n_links": len(links),
-            "links": links + [""] * (3 - len(links)),
-        }
-
-    def fetch_fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        session: dict | None = None
-        tc = TaskContext.get()
-        pid = tc.partitionId() if tc is not None else -1
-        for pdf in batches:
-            if session is None:
-                session = {
-                    "partition": pid,
-                    "proxy": proxies[pid % len(proxies)] if proxies else None,
-                }
-            n = len(pdf)
-            status = np.zeros(n, dtype=np.int32)
-            err = np.zeros(n, dtype=np.int32)
-            cols = {
-                "title": [""] * n, "text1": [""] * n,
-                "has_media": np.zeros(n, dtype=bool), "media_ref": [""] * n,
-                "has_text2": np.zeros(n, dtype=bool), "text2": [""] * n,
-                "n_links": np.zeros(n, dtype=np.int32),
-                "link0": [""] * n, "link1": [""] * n, "link2": [""] * n,
-            }
-            bodies: list[str | None] = [None] * n
-            for i, url in enumerate(pdf["url"].tolist()):
-                o = fetch_with_ladder(
-                    url, transport=transport, timeout=timeout,
-                    resend_times=resend_times, proxy=session["proxy"],
-                    sleep=sleep,
-                )
-                if o.proxy_dropped:
-                    session["proxy"] = None  # partition-session drops it too
-                status[i], err[i] = o.status, o.err_type
-                if o.err_type == ERR_OK:
-                    f = flat_from_body(o.body)
-                    for k in ("title", "text1", "media_ref", "text2"):
-                        cols[k][i] = f[k]
-                    cols["has_media"][i] = f["has_media"]
-                    cols["has_text2"][i] = f["has_text2"]
-                    cols["n_links"][i] = f["n_links"]
-                    for j in range(3):
-                        cols[f"link{j}"][i] = f["links"][j]
-                    bodies[i] = o.body
-            out = pdf[
-                ["url", "url_hash", "host", "priority", "depth",
-                 "retry_count", "discovered_round"]
-            ].copy()
-            out["partition_id"] = np.int32(pid)
-            out["status"] = status
-            out["err_type"] = err
-            ok = err == 0
-            out["doc_id"] = np.where(ok, "doc:" + pdf["url"].astype(str), None)
-            for c, vals in cols.items():
-                out[c] = vals
-            # same placement as the simnet fetcher: canonicalize outlinks
-            # INSIDE this worker (one python stage per pipeline)
-            for c in ("link0", "link1", "link2"):
-                out[c] = canon.canonicalize_series(
-                    pd.Series(out[c]), bases=pdf["url"].reset_index(drop=True)
-                ).astype(object)
-            if keep_body:
-                out["body"] = pd.array(
-                    [b if o else None for b, o in zip(bodies, ok)], dtype=object
-                )
-            yield out
-
-    return fetch_fn
+    return open_partition

@@ -73,3 +73,32 @@ def test_backoff_is_exponential_and_capped(spark):
     assert (got["u2"]["state"], got["u2"]["next_fetch_time"]) == ("retry", 18)   # +2^3
     assert got["u3"]["state"] == "dead"   # budget exhausted
     assert got["u4"]["state"] == "dead"   # permanent error
+
+
+def test_drain_check_runs_no_spark_job(spark, tmp_path, monkeypatch):
+    """An empty round decides from manifest metadata whether the frontier
+    has drained: with every live row backed off into the future, the
+    round dequeues nothing, the crawl is not drained, and the round still
+    commits, all without a DataFrame count."""
+    from pyspark.sql import functions as F
+
+    cfg = CrawlConfig(n_hosts=4, page_space=50, fetch_partitions=2, use_bloom=False)
+    c = Crawler(spark, str(tmp_path), cfg)
+    c.bootstrap(synth.seed_list(spark, 20, 4, 50), synth.hosts_config(spark, 4))
+    backed_off = c.frontier_df().withColumns(
+        {"state": F.lit("retry"), "next_fetch_time": F.lit(100).cast("long")}
+    )
+    c._merge_frontier(backed_off)
+    c.store.commit_round(0)
+    n_live = c.frontier_df().count()
+
+    def no_count(self):
+        raise AssertionError("DataFrame.count in the drain check")
+
+    # the session's concrete DataFrame class (pyspark.sql.DataFrame is
+    # its abstract base in Spark 4)
+    monkeypatch.setattr(type(spark.range(1)), "count", no_count)
+    assert c.run_rounds(1) == []
+    assert c.store.last_committed_round() == 1
+    monkeypatch.undo()
+    assert c.frontier_df().filter(F.col("state") == "retry").count() == n_live

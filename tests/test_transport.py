@@ -113,12 +113,32 @@ def test_zero_budget_fails_immediately():
 @pytest.mark.parametrize(
     "status,expected",
     [(200, ERR_OK), (204, ERR_OK), (404, ERR_UNKNOWN), (403, ERR_UNKNOWN),
-     (408, ERR_TIMEOUT), (429, ERR_REQUEST), (500, ERR_REQUEST), (503, ERR_REQUEST)],
+     (408, ERR_TIMEOUT), (429, ERR_REQUEST), (500, ERR_REQUEST), (503, ERR_REQUEST),
+     (529, ERR_REQUEST)],
 )
 def test_http_status_mapping(status, expected):
+    """One status rule: the ladder, the renderer source and (on the
+    simnet's own statuses) the simnet source all map a status to the
+    same err_type, and the simnet source agrees with refsim's scalar
+    reference ``simnet.err_type_of_status``."""
+    import pandas as pd
+
+    from spider_spark import simnet
+    from spider_spark.fetch import simnet_source
+    from spider_spark.transport import make_browser_fetch_fn
+
     o = fetch_with_ladder("http://a/", transport=Recorder([(status, "b")]),
                           sleep=no_sleep)
     assert o.err_type == expected, f"status {status}"
+    rendered = make_browser_fetch_fn(lambda url, ep: (status, "b"))(0, None)
+    st, err, _flat, _bodies = rendered(pd.Series(["http://a/"]))
+    assert (st[0], err[0]) == (status, expected)
+    if status in (200, 529, 408, 404):
+        page = next(p for p in range(1000)
+                    if simnet.status_of_key(simnet.page_key(0, p)) == status)
+        pages = simnet_source(1, 1000)(0, None)
+        st, err, _flat, _bodies = pages(pd.Series([simnet.url_of(0, page)]))
+        assert (st[0], err[0]) == (status, simnet.err_type_of_status(status))
 
 
 def test_mixed_ladder_composes():
@@ -137,13 +157,11 @@ def test_mixed_ladder_composes():
 
 
 def test_http_fetch_fn_pluggable_into_fetch_batch(spark):
-    """make_http_fetch_fn is a drop-in for the simnet fetcher: same
-    mapInPandas schema, JVM span assembly still applies, err rows route
+    """make_http_fetch_fn is a page source for fetch_batch in place of the
+    simnet: JVM span assembly still applies, err rows route
     by type — driven through a real Spark stage with a scripted
     transport (no network)."""
-    import pyspark.sql.functions as F
-
-    from spider_spark.fetch import _RAW_SCHEMA, _SPANS_EXPR, salted_repartition
+    from spider_spark.fetch import fetch_batch
     from spider_spark.transport import make_http_fetch_fn
 
     def scripted(url, timeout, proxy, verify):
@@ -166,8 +184,8 @@ def test_http_fetch_fn_pluggable_into_fetch_batch(spark):
         "retry_count int, discovered_round long",
     )
     fn = make_http_fetch_fn(transport=scripted, resend_times=1, sleep=lambda s: None)
-    raw = salted_repartition(batch, 2, 2).mapInPandas(fn, _RAW_SCHEMA)
-    got = {r["url"]: r for r in raw.withColumn("spans", F.expr(_SPANS_EXPR)).collect()}
+    raw = fetch_batch(batch, n_hosts=0, page_space=0, num_partitions=2, salt=2, source=fn)
+    got = {r["url"]: r for r in raw.collect()}
     ok = got["http://h0.example/p1"]
     assert ok["err_type"] == 0 and ok["status"] == 200
     kinds = [s["kind"] for s in ok["spans"]]
@@ -184,9 +202,7 @@ def test_browser_fetch_fn_renderer_pool_and_js_content(spark):
     partition (deterministic affinity, like proxies), (b) parses the
     RENDERED DOM — content a raw HTTP fetch would never see — into the
     same span pipeline, (c) routes renderer failures to typed err rows."""
-    import pyspark.sql.functions as F
-
-    from spider_spark.fetch import _RAW_SCHEMA, _SPANS_EXPR, salted_repartition
+    from spider_spark.fetch import fetch_batch
     from spider_spark.transport import TransportTimeout, make_browser_fetch_fn
 
     def scripted_render(url, endpoint):
@@ -212,8 +228,8 @@ def test_browser_fetch_fn_renderer_pool_and_js_content(spark):
     fn = make_browser_fetch_fn(
         scripted_render, renderer_pool=["cdp://r1:9222", "cdp://r2:9222"]
     )
-    raw = salted_repartition(batch, 2, 2).mapInPandas(fn, _RAW_SCHEMA)
-    got = {r["url"]: r for r in raw.withColumn("spans", F.expr(_SPANS_EXPR)).collect()}
+    raw = fetch_batch(batch, n_hosts=0, page_space=0, num_partitions=2, salt=2, source=fn)
+    got = {r["url"]: r for r in raw.collect()}
     ok = got["http://h0.example/p1"]
     assert ok["err_type"] == 0
     kinds = [s["kind"] for s in ok["spans"]]
@@ -295,3 +311,68 @@ def test_http_transport_drives_full_crawl(spark, tmp_path):
     p2 = fr["http://h0.example/p2"]
     assert p2["state"] in ("retry", "dead") and p2["retry_count"] >= 1
     assert "http://h1.example/p3" in crawler.seen_urls()
+
+
+def _small_http_crawl(spark, path, cfg_kw, transport):
+    from spider_spark import synth
+    from spider_spark.crawl import Crawler
+    from spider_spark.round import CrawlConfig
+    from spider_spark.transport import make_http_fetch_fn
+
+    cfg = CrawlConfig(
+        n_hosts=2, page_space=100, fetch_partitions=2, bloom_shards=2,
+        bloom_bits=1 << 12,
+        fetch_fn=make_http_fetch_fn(transport=transport, resend_times=0,
+                                    sleep=lambda s: None),
+        **cfg_kw,
+    )
+    seeds = spark.createDataFrame(
+        [(f"http://h{h}.example/p{p}", 0) for h in range(2) for p in range(4)],
+        "url string, priority int",
+    )
+    hosts = synth.hosts_config(spark, 2, uniform_delay=0, uniform_cap=50,
+                               with_robots=False)
+    crawler = Crawler(spark, str(path), cfg)
+    crawler.bootstrap(seeds, hosts)
+    crawler.run_rounds(1)
+    return crawler
+
+
+def _page(url):
+    return f"<html><title>{url}</title><p>text of {url}</p></html>"
+
+
+def test_http_source_keeps_raw_body(spark, tmp_path):
+    """keep_raw_body applies to every page source: the documents of a
+    crawl through the HTTP ladder carry the fetched HTML."""
+    crawler = _small_http_crawl(
+        spark, tmp_path / "c", {"keep_raw_body": True},
+        lambda url, timeout, proxy, verify: (200, _page(url)),
+    )
+    docs = crawler.store.read("documents").select("url", "body").collect()
+    assert len(docs) == 8
+    assert all(r["body"] == _page(r["url"]) for r in docs)
+
+
+def test_http_source_rides_the_partition_proxy(spark, tmp_path):
+    """CrawlConfig.proxies applies to every page source: each fetch
+    partition's requests go out through the proxy pinned to it."""
+    import os
+
+    pool = ["10.0.0.1:8080", "10.0.0.2:8080"]
+    log_dir = tmp_path / "log"
+    log_dir.mkdir()
+
+    def recorder(url, timeout, proxy, verify):
+        from pyspark import TaskContext
+
+        pid = TaskContext.get().partitionId()
+        with open(os.path.join(log_dir, f"p{pid}"), "a") as f:
+            f.write(f"{proxy}\n")
+        return 200, _page(url)
+
+    _small_http_crawl(spark, tmp_path / "c", {"proxies": pool}, recorder)
+    logs = {int(n[1:]): (log_dir / n).read_text().split() for n in os.listdir(log_dir)}
+    assert sum(map(len, logs.values())) == 8
+    assert {pid: set(p) for pid, p in logs.items()} == {pid: {pool[pid % 2]} for pid in logs}
+    assert len(logs) == 2, "both fetch partitions fetched"
