@@ -5,9 +5,8 @@ Five tiers, from exact to fuzzy — the standard pretraining-data ladder:
 1. exact:          hash-groupBy on content (first-wins, like the
                    reference's unique-key insert skip db_config.py:46-54)
 2. minhash-LSH:    shingle → minhash signature → band-bucket join —
-                   implemented ENTIRELY with JVM built-ins (explode +
-                   broadcast perm join + min-agg + array_sort); no Python
-                   in the hot path, so it scales to 100 TB corpora.
+                   all JVM (explode + one groupBy of per-permutation min
+                   partial aggs); no Python in the hot path.
 3. simhash:        64-bit near-dup signature, all-JVM (explode +
                    bit-majority partial agg), chunk-blocked candidates.
 4. n-gram Jaccard: exact verification on candidate pairs via
@@ -61,7 +60,9 @@ def exact_dedup_by_hash(
 def shingle_col(text: Column, k: int = 5) -> Column:
     """Character k-shingles as an array — JVM higher-order fn, no UDF.
     NULL text coalesces to '' (one empty shingle) so NULL-text docs keep
-    a row through explode-based stages instead of vanishing."""
+    a row through explode-based stages instead of vanishing.  Never
+    empty, so callers explode_outer it: a plain explode makes Spark
+    infer a size() > 0 filter that shingles every doc a second time."""
     safe = F.coalesce(text, F.lit(""))
     return F.array_distinct(
         F.transform(
@@ -71,8 +72,9 @@ def shingle_col(text: Column, k: int = 5) -> Column:
     )
 
 
-def with_shingles(df: DataFrame, text_col: str = "text", k: int = 5) -> DataFrame:
-    return df.withColumn("shingles", shingle_col(F.col(text_col), k))
+def _shingled(df: DataFrame, id_col: str, text_col: str, k: int) -> DataFrame:
+    """The (id, shingles) frame that signatures and verification share."""
+    return df.select(F.col(id_col), shingle_col(F.col(text_col), k).alias("shingles"))
 
 
 # -------------------------------------------------------------- minhash
@@ -84,38 +86,33 @@ def minhash_signatures(
     k: int = 5,
     seed: int = 42,
 ) -> DataFrame:
-    """(id, sig:array<long>) MinHash signatures, all JVM:
-
-    explode shingles → xxhash64 → broadcast-join the (a,b) permutation
-    table → min((a*h+b) mod p) per (doc, perm) → pivot to array via
-    array_sort(collect_list(struct(perm, val))).
+    """(id, sig:array<long>) MinHash signatures, all JVM: explode
+    shingles → pmod(xxhash64, p) once per shingle → ONE groupBy(id)
+    whose only aggregate is array(min((a_0*h+b_0) mod p), ...), so the
+    shuffle carries num_perm partial minima per document and no
+    (shingle × permutation) row ever exists.
 
     Universal-hash family over the 31-bit Mersenne prime p = 2^31-1:
-    a ∈ [1, p), b ∈ [0, p), shingle hash pre-reduced mod p, so every
-    intermediate fits int64 exactly (ANSI-safe, see MERSENNE31 note).
+    a ∈ [1, p), b ∈ [0, p) drawn from RandomState(seed) as (a, b) per
+    permutation, shingle hash pre-reduced mod p, so every intermediate
+    fits int64 exactly (ANSI-safe, see MERSENNE31 note).
     """
-    rng = np.random.RandomState(seed)
-    perms = [
-        (int(i), int(rng.randint(1, MERSENNE31)), int(rng.randint(0, MERSENNE31)))
-        for i in range(num_perm)
-    ]
-    spark = df.sparkSession
-    perm_df = spark.createDataFrame(perms, "perm int, a long, b long")
+    return _signatures(_shingled(df, id_col, text_col, k), id_col, num_perm, seed)
 
-    sh = with_shingles(df.select(id_col, text_col), text_col, k)
-    exploded = sh.select(id_col, F.explode("shingles").alias("shingle")).select(
-        id_col, F.pmod(F.xxhash64("shingle"), F.lit(MERSENNE31)).alias("h")
-    )
-    mins = (
-        exploded.join(F.broadcast(perm_df))
-        .select(id_col, "perm", F.pmod(F.col("a") * F.col("h") + F.col("b"), F.lit(MERSENNE31)).alias("v"))
-        .groupBy(id_col, "perm")
-        .agg(F.min("v").alias("mv"))
+
+def _signatures(sh: DataFrame, id_col: str, num_perm: int, seed: int) -> DataFrame:
+    rng = np.random.RandomState(seed)
+    # draws a, then b, per permutation; ONE SQL string, as a Column per
+    # permutation costs py4j round trips on every call
+    mins = ", ".join(
+        f"min(pmod({rng.randint(1, MERSENNE31)} * h + {rng.randint(0, MERSENNE31)}, {MERSENNE31}))"
+        for _ in range(num_perm)
     )
     return (
-        mins.groupBy(id_col)
-        .agg(F.array_sort(F.collect_list(F.struct("perm", "mv"))).alias("_s"))
-        .select(id_col, F.expr("transform(_s, x -> x.mv)").alias("sig"))
+        sh.select(id_col, F.explode_outer("shingles").alias("s"))
+        .select(id_col, F.pmod(F.xxhash64("s"), F.lit(MERSENNE31)).alias("h"))
+        .groupBy(id_col)
+        .agg(F.expr(f"array({mins})").alias("sig"))
     )
 
 
@@ -205,23 +202,17 @@ def jaccard_verify(
     threshold: float = 0.8,
 ) -> DataFrame:
     """Exact n-gram Jaccard on candidate pairs (array_intersect/union)."""
-    sh = with_shingles(df.select(id_col, text_col), text_col, k).select(
-        F.col(id_col), F.col("shingles")
-    )
+    return _verify(_shingled(df, id_col, text_col, k), pairs, id_col, threshold)
+
+
+def _verify(sh: DataFrame, pairs: DataFrame, id_col: str, threshold: float) -> DataFrame:
     a = sh.select(F.col(id_col).alias("id_a"), F.col("shingles").alias("sh_a"))
     b = sh.select(F.col(id_col).alias("id_b"), F.col("shingles").alias("sh_b"))
+    inter, union = F.size(F.array_intersect("sh_a", "sh_b")), F.size(F.array_union("sh_a", "sh_b"))
     return (
         pairs.join(a, "id_a")
         .join(b, "id_b")
-        .select(
-            "id_a",
-            "id_b",
-            F.round(
-                F.size(F.array_intersect("sh_a", "sh_b"))
-                / F.size(F.array_union("sh_a", "sh_b")),
-                4,
-            ).alias("jaccard"),
-        )
+        .select("id_a", "id_b", F.round(inter / union, 4).alias("jaccard"))
         .filter(F.col("jaccard") >= threshold)
     )
 
@@ -236,11 +227,13 @@ def minhash_dedup(
     threshold: float = 0.8,
     max_bucket_size: int | None = 256,
 ) -> DataFrame:
-    """Full near-dup pipeline: signatures → LSH candidates → exact verify.
-    Returns (id_a, id_b, jaccard) for pairs ≥ threshold."""
-    sigs = minhash_signatures(df, id_col, text_col, num_perm, k)
+    """Full near-dup pipeline: signatures → LSH candidates → exact verify,
+    both ends reading one shingled frame.  Returns (id_a, id_b, jaccard)
+    for pairs ≥ threshold."""
+    sh = _shingled(df, id_col, text_col, k)
+    sigs = _signatures(sh, id_col, num_perm, seed=42)
     pairs = lsh_candidate_pairs(sigs, id_col, bands, max_bucket_size)
-    return jaccard_verify(df, pairs, id_col, text_col, k, threshold)
+    return _verify(sh, pairs, id_col, threshold)
 
 
 # -------------------------------------------------------------- simhash
@@ -522,23 +515,24 @@ def embedding_near_pairs(
 # ------------------------------------------------------- containment
 def word_shingles(df: DataFrame, k: int = 8, id_col: str = "doc_id",
                   text_col: str = "text") -> DataFrame:
-    """Per-doc DISTINCT word k-gram shingles — JVM tokenize (lowercase
-    [a-z0-9]+ runs) + transform/slice, no Python.  Docs with fewer than
-    k tokens yield no rows (no shingle exists).  Output:
-    (id_col, shingle string)."""
+    """Per-doc DISTINCT word k-gram shingles as one array — JVM tokenize
+    (lowercase [a-z0-9]+ runs) + transform/slice + array_distinct, no
+    Python.  Docs with fewer than k tokens yield no row, so the array is
+    never empty (see shingle_col on explode_outer).  Output: (id_col,
+    shingles array<string>)."""
     toks = df.select(
         id_col,
         F.regexp_extract_all(F.lower(F.col(text_col)), F.lit("[a-z0-9]+"), 0).alias("t"),
     ).filter(F.size("t") >= k)
     return toks.select(
         id_col,
-        F.explode(
+        F.array_distinct(
             F.transform(
                 F.sequence(F.lit(1), F.size("t") - (k - 1)),
                 lambda i: F.concat_ws(" ", F.slice("t", i, k)),
             )
-        ).alias("shingle"),
-    ).dropDuplicates([id_col, "shingle"])
+        ).alias("shingles"),
+    )
 
 
 def containment_pairs(
@@ -556,7 +550,9 @@ def containment_pairs(
 
     Query side (`contained`, the suspected-subset docs) shingles
     equi-join the corpus side on the shingle — never all-pairs; only
-    doc pairs sharing >= 1 k-gram meet.  Counts stay INTEGER
+    doc pairs sharing >= 1 k-gram meet.  Each doc is shingled once:
+    n_shingles is the size of its distinct-shingle array, carried
+    through the match groupBy.  Counts stay INTEGER
     (n_match, n_shingles) so full containment is the engine-exact
     predicate n_match == n_shingles; callers threshold partial
     containment as n_match >= tau * n_shingles.  At 100 TB: join on
@@ -568,20 +564,18 @@ def containment_pairs(
     Output: (id_contained, id_container, n_shingles, n_match) — one row
     per candidate pair with at least one shared shingle."""
     a = word_shingles(contained, k, id_col, text_col).select(
-        F.col(id_col).alias("id_contained"), "shingle"
+        F.col(id_col).alias("id_contained"),
+        F.size("shingles").cast("long").alias("n_shingles"),
+        F.explode_outer("shingles").alias("shingle"),
     )
-    n_a = a.groupBy("id_contained").agg(F.count(F.lit(1)).alias("n_shingles"))
     b = word_shingles(corpus, k, id_col, text_col).select(
-        F.col(id_col).alias("id_container"), "shingle"
+        F.col(id_col).alias("id_container"), F.explode_outer("shingles").alias("shingle")
     )
-    matches = (
+    return (
         a.join(b, "shingle")
         .filter(F.col("id_contained") != F.col("id_container"))
-        .groupBy("id_contained", "id_container")
+        .groupBy("id_contained", "id_container", "n_shingles")
         .agg(F.count(F.lit(1)).alias("n_match"))
-    )
-    return matches.join(n_a, "id_contained").select(
-        "id_contained", "id_container", "n_shingles", "n_match"
     )
 
 

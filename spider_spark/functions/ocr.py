@@ -209,10 +209,12 @@ def acquire_session_token(pid: int, max_tries: int = 3) -> str | None:
     (shixin_spider.py:104-119): fetch challenge -> binarize -> recognize,
     retry with the next challenge on a failed read, <=3 tries.  With the
     synthetic renderer every read succeeds on try 1; the retry loop is
-    the contract the real captcha feed exercises."""
+    the contract the real captcha feed exercises.  ``pid`` -1 (a worker
+    run outside a Spark task) wraps to a valid RandomState seed."""
     for attempt in range(max_tries):
         code = challenge_code(pid, attempt)
-        got = recog_rgba(render_code_rgba(code, scale=2, noise=40, seed=pid + attempt))
+        seed = (pid + attempt) % 2**32
+        got = recog_rgba(render_code_rgba(code, scale=2, noise=40, seed=seed))
         if got is not None and got.isdigit():
             return got
     return None

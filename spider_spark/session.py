@@ -13,12 +13,15 @@ spark-submit chose.
 
 Codegen cache rule: one operation's generated classes must fit in
 ``spark.sql.codegen.cache.maxEntries`` (``CODEGEN_CACHE_ENTRIES``).
-Measured with ``CodegenMetrics``: a warm perfbench ``wave_dedup`` op
-needs ~110 cache entries and a crawl round ~105 (local mode caches each
-class twice, once per driver and task classloader).  At Spark's default
-LRU of 100 entries every op recompiled nearly all of them: 0.5-1.0 s of
-Janino compile per op, plus cold un-JITted code.  Check the rule with
-compile counts (``tests/test_session.py``), not timings.
+Measured with ``CodegenMetrics`` as the compiles of an op's first run
+(a warm op then compiles none): a perfbench ``wave_dedup`` op needs 98
+cache entries (34 wave + 64 near-dup, seed 7) and a crawl round ~105
+(local mode caches each class twice, once per driver and task
+classloader).  At Spark's default LRU of 100 entries a warm
+``wave_dedup`` op still recompiles ~40 of its 98, and ops above 100
+recompiled nearly all of them: 0.5-1.0 s of Janino compile per op, plus
+cold un-JITted code.  Check the rule with compile counts
+(``tests/test_session.py``), not timings.
 """
 
 from __future__ import annotations
@@ -28,8 +31,8 @@ import os
 from pyspark.sql import SparkSession
 
 # Whole-stage codegen cache size (a static conf: it only takes effect
-# when the first session starts).  Measured per-op working sets: ~110
-# entries per warm wave_dedup op, ~105 per crawl round.  The cache is an
+# when the first session starts).  Measured per-op working sets: 98
+# entries per wave_dedup op, ~105 per crawl round.  The cache is an
 # LRU, and replaying a cyclic working set just above its capacity evicts
 # each class shortly before it is needed again, so at Spark's default of
 # 100 every op recompiled nearly all of its classes.

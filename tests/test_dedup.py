@@ -59,6 +59,45 @@ def test_minhash_recovers_planted_copies(spark, docs, with_copies):
     pairs.unpersist()
 
 
+def _reference_signatures(df, num_perm, k=5, seed=42):
+    """The explode × permutation-table formulation: min((a*h+b) mod p)
+    per (doc, perm), ordered by perm."""
+    import numpy as np
+
+    from spider_spark.functions.dedup import MERSENNE31, shingle_col
+
+    rng = np.random.RandomState(seed)
+    perms = [
+        (i, int(rng.randint(1, MERSENNE31)), int(rng.randint(0, MERSENNE31)))
+        for i in range(num_perm)
+    ]
+    perm_df = df.sparkSession.createDataFrame(perms, "perm int, a long, b long")
+    h = df.select("doc_id", F.explode(shingle_col(F.col("text"), k)).alias("s")).select(
+        "doc_id", F.pmod(F.xxhash64("s"), F.lit(MERSENNE31)).alias("h")
+    )
+    v = F.pmod(F.col("a") * F.col("h") + F.col("b"), F.lit(MERSENNE31))
+    mins = h.crossJoin(perm_df).groupBy("doc_id", "perm").agg(F.min(v).alias("mv"))
+    return {
+        r["doc_id"]: [m for _, m in sorted(r["pm"])]
+        for r in mins.groupBy("doc_id").agg(F.collect_list(F.struct("perm", "mv")).alias("pm")).collect()
+    }
+
+
+@pytest.mark.parametrize("num_perm", [16, 32, 64])
+def test_minhash_signatures_bit_identical_to_cross_join_reference(spark, docs, num_perm):
+    from spider_spark.functions.dedup import minhash_signatures
+
+    odd = spark.createDataFrame(
+        [(-1, None), (-2, "abc"), (-3, ""), (-4, "same text here"), (-5, "same text here")],
+        "doc_id long, text string",
+    )
+    corpus = docs.limit(40).unionByName(odd)
+    got = {r["doc_id"]: list(r["sig"]) for r in minhash_signatures(corpus, num_perm=num_perm).collect()}
+    assert got == _reference_signatures(corpus, num_perm)
+    assert len(got) == 45 and all(len(sig) == num_perm for sig in got.values())
+    assert got[-4] == got[-5]
+
+
 def test_simhash_copies_have_zero_hamming(spark, docs, with_copies):
     from spider_spark.functions.dedup import simhash_near_pairs, simhash_signatures
 
@@ -322,3 +361,24 @@ def test_blocked_fuzzy_pairs_multipass_recall_and_verify(spark):
     }
     assert got[(1, 101)] == 1 and got[(2, 102)] == 1
     assert (3, 103) not in got, "verify must reject past max_dist"
+
+
+def test_containment_counts_distinct_shingles_of_a_repeating_doc(spark):
+    """Docs that repeat an 8-gram have fewer distinct shingles than
+    positions: n_shingles and n_match count each distinct shingle once
+    on both sides, so the repeat is exactly full containment."""
+    from spider_spark.functions.dedup import containment_pairs
+
+    gram = [f"w{i}" for i in range(8)]
+    # 17 tokens, 10 positions, 9 distinct 8-grams (gram itself twice)
+    corpus = spark.createDataFrame(
+        [(1, " ".join(gram * 2 + ["tail"]))], "doc_id long, text string"
+    )
+    # 24 tokens, 17 positions, 8 distinct 8-grams (the 8 rotations of gram)
+    queries = spark.createDataFrame(
+        [(100, " ".join(gram * 3))], "doc_id long, text string"
+    )
+    rows = containment_pairs(queries, corpus, k=8).collect()
+    assert [(r["id_contained"], r["id_container"], r["n_shingles"], r["n_match"]) for r in rows] == [
+        (100, 1, 8, 8)
+    ]

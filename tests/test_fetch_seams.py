@@ -2,7 +2,7 @@
 fetch iterator, and the page sources in ``transport.py`` only map URLs
 to pages — the worker columns (``partition_id``, ``doc_id``, ``body``),
 outlink canonicalization and the partition session stay in the worker.
-A pure AST walk over the package (no Spark session)."""
+AST walks over the package, and one page-source call; no Spark session."""
 
 from __future__ import annotations
 
@@ -70,3 +70,19 @@ def test_transport_sources_build_no_worker_columns():
     tree = _tree(PKG / "transport.py")
     assert not _column_stores(tree) & (_WORKER_COLUMNS | {"link0", "link1", "link2"})
     assert not _names(tree) & {"canonicalize_series", "canon", "TaskContext", "mapInPandas"}
+
+
+def test_simnet_source_opens_outside_a_spark_task():
+    """Outside a task the worker opens its session with partition id -1;
+    the simnet source must still answer like the scalar ``fetch_one``."""
+    import pandas as pd
+
+    from spider_spark import fetch, simnet
+
+    n_hosts, page_space = 20, 50
+    keys = [(h, p) for h in range(n_hosts) for p in range(0, page_space, 7)]
+    urls = pd.Series([f"http://h{h}.example/p{p}" for h, p in keys])
+    status, err_type, _flat, _bodies = fetch.simnet_source(n_hosts, page_space)(-1, None)(urls)
+    want = [simnet.fetch_one(h, p, n_hosts, page_space)[:2] for h, p in keys]
+    assert [(int(s), int(e)) for s, e in zip(status, err_type)] == want
+    assert {e for _, e in want} != {0}, "the sample must include failed fetches"

@@ -769,3 +769,20 @@ def test_bloom_udf_never_runs_over_seen_rows(spark, tmp_path):
     assert new_links.count() == 500
     out[2].unpersist()  # the tagged cache
     out[3].destroy()  # the shard-bitmap broadcast
+
+
+def test_minhash_signatures_are_one_grouped_aggregate(spark):
+    """MinHash signatures fold every shingle hash into one groupBy(id) of
+    per-permutation minima: no shingle × permutation join of any kind
+    and exactly one shuffle, the aggregate's own."""
+    from spider_spark.functions.dedup import minhash_signatures
+
+    docs = spark.createDataFrame(
+        [(i, f"document number {i} about crawling") for i in range(20)],
+        "doc_id long, text string",
+    )
+    plan = _plan(minhash_signatures(docs), mode="simple")
+    for node in ("BroadcastNestedLoopJoin", "CartesianProduct", "BroadcastExchange", "Join"):
+        assert node not in plan, node
+    assert plan.count("Exchange") == 1, plan
+    assert plan.count("Exchange hashpartitioning(doc_id") == 1
