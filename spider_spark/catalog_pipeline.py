@@ -978,25 +978,16 @@ def d8_decontaminate(spark, sf_dir):
     """Benchmark decontamination — the training-corpus hygiene op: flag
     every document sharing an exact 8-gram shingle with the eval set
     (here carved deterministically from the corpus, doc_id % 97 == 0).
-    Tokens -> sliding 8-gram shingles (JVM transform/slice, no Python)
-    -> per-doc distinct shingles -> equi-join against the benchmark
-    shingle set -> distinct-overlap count.  At 100 TB the join key would
+    Per-doc distinct 8-gram shingles (dedup.word_shingles, JVM, no
+    Python) -> equi-join against the benchmark shingle set ->
+    distinct-overlap count.  At 100 TB the join key would
     be xxhash64(shingle) (8 bytes instead of the string) and the
     benchmark side — eval sets are tiny — broadcasts; the corpus side
     streams through one shuffle."""
+    from .functions.dedup import word_shingles
+
     docs = _t(spark, sf_dir, "documents")
-    toks = docs.select(
-        "doc_id", F.regexp_extract_all(F.lower("text"), F.lit("[a-z0-9]+"), 0).alias("t")
-    ).filter(F.size("t") >= 8)
-    sh = toks.select(
-        "doc_id",
-        F.explode(
-            F.transform(
-                F.sequence(F.lit(1), F.size("t") - 7),
-                lambda i: F.concat_ws(" ", F.slice("t", i, 8)),
-            )
-        ).alias("shingle"),
-    ).dropDuplicates(["doc_id", "shingle"])
+    sh = word_shingles(docs, 8).select("doc_id", F.explode_outer("shingles").alias("shingle"))
     bench = sh.filter(F.col("doc_id") % 97 == 0).select("shingle").distinct()
     hits = (
         sh.filter(F.col("doc_id") % 97 != 0)

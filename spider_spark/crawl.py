@@ -316,8 +316,9 @@ def run_round(
     collect over them gives the lineage rows and per-host (fetches,
     errors); those driver-sized rows (at most ``fetch_partitions`` and
     ``n_hosts``) are written with pyarrow, with no Spark job of their
-    own.  An empty batch returns before any admission or write, and the
-    caller decides whether the crawl has drained."""
+    own.  An empty batch returns right after the ``_round_results``
+    write, on its manifest footer count: no stats collect, admission or
+    other write, and the caller decides whether the crawl has drained."""
     t0 = time.monotonic()
     cfg, store = crawler.cfg, crawler.store
     elig = politeness.eligible_hosts(hosts_df, store.read("host_state"), round_id)
@@ -332,6 +333,8 @@ def run_round(
             keep_body=cfg.keep_raw_body, proxies=cfg.proxies, source=cfg.fetch_fn,
         ),
     )
+    if store.count_rows("_round_results") == 0:
+        return RoundResult(round_id, 0, 0, 0, 0, 0, int((time.monotonic() - t0) * 1000))
     results = store.read("_round_results")
 
     # per-partition lineage rows (A1/A5 analog) and per-host quarantine
@@ -350,8 +353,6 @@ def run_round(
     parts = sorted((r for r in stats if r["by_part"]), key=lambda r: r["partition_id"])
     n_deq = sum(r["n"] for r in parts)
     n_ok = sum(r["ok"] for r in parts)
-    if n_deq == 0:
-        return RoundResult(round_id, 0, 0, 0, 0, 0, int((time.monotonic() - t0) * 1000))
     batch_urls = None
     if record_order:
         order = batch.orderBy(*frontier.ORDER_COLS).select("url")

@@ -4,7 +4,7 @@ Five tiers, from exact to fuzzy — the standard pretraining-data ladder:
 
 1. exact:          hash-groupBy on content (first-wins, like the
                    reference's unique-key insert skip db_config.py:46-54)
-2. minhash-LSH:    shingle → minhash signature → band-bucket join —
+2. minhash-LSH:    shingle → minhash signature → banded buckets —
                    all JVM (explode + one groupBy of per-permutation min
                    partial aggs); no Python in the hot path.
 3. simhash:        64-bit near-dup signature, all-JVM (explode +
@@ -16,7 +16,10 @@ Five tiers, from exact to fuzzy — the standard pretraining-data ladder:
 
 The MinHash estimate and the exact Jaccard verification stage let callers
 trade recall for cost; candidates are generated by LSH banding so the
-pair space never materializes n² rows.
+pair space never materializes n² rows.  Every bucketed tier (MinHash
+bands, SimHash chunks, embedding signatures) takes its candidate pairs
+from one grouped pass over capped buckets (_bucket_pairs), never from a
+self-join.
 
 All five tiers emit PAIRS; connected_components() is the shared
 canonicalization step that folds any pair stream into keep/drop clusters
@@ -129,27 +132,33 @@ def _banded(sigs: DataFrame, id_col: str, bands: int) -> DataFrame:
     )
 
 
-def _cap_bucket_members(
-    keyed: DataFrame, id_col: str, max_bucket_size: int | None
+def _bucket_pairs(
+    keyed: DataFrame, id_col: str, max_bucket_size: int | None, carry: tuple[str, ...] = ()
 ) -> DataFrame:
-    """Keep at most max_bucket_size lowest-id members per (band, bucket).
+    """(a, b) member structs of struct(id_col, *carry), one row per pair
+    co-bucketed in a band, a.id < b.id: the blocking rule of every
+    bucketed tier, from (band, bucket[, carry...]) rows.
 
-    A hot bucket (boilerplate-heavy corpus, all-identical docs) would
-    otherwise yield size² candidate pairs — quadratic blowup at scale.
-    Capping bounds every bucket's contribution at cap² pairs while the
-    kept low-id members still anchor their cluster (dropped members keep
-    their chance to pair through their other bands).  Use
-    lsh_bucket_stats for dropped-member accounting.
-    """
-    if max_bucket_size is None:
-        return keyed
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("band", "bucket").orderBy(id_col)
+    ONE groupBy(band, bucket) collects each bucket's members sorted by
+    id; a hot bucket (boilerplate-heavy corpus, all-identical docs)
+    keeps only its max_bucket_size lowest ids (None: all), so it yields
+    at most cap²/2 pairs while the kept low ids still anchor their
+    cluster (dropped members keep their chance through other bands; see
+    lsh_bucket_stats).  Pairs come from two generators, each member then
+    the members after it, so a row never holds more than one bucket's
+    members.  No self-join: each side of a join recomputes its subtree.
+    A NULL bucket pairs nothing; a NULL id sorts first, takes a slot
+    and pairs with nothing."""
+    members = F.sort_array(F.collect_list(F.struct(id_col, *carry)))
+    if max_bucket_size is not None:
+        members = F.slice(members, 1, max_bucket_size)
     return (
-        keyed.withColumn("_rk", F.row_number().over(w))
-        .filter(F.col("_rk") <= max_bucket_size)
-        .drop("_rk")
+        keyed.filter(F.col("bucket").isNotNull())
+        .groupBy("band", "bucket")
+        .agg(members.alias("m"))
+        .select("m", F.posexplode("m").alias("i", "a"))
+        .select("a", F.explode(F.expr("slice(m, i + 2, size(m))")).alias("b"))
+        .filter(F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
     )
 
 
@@ -176,19 +185,11 @@ def lsh_candidate_pairs(
     max_bucket_size: int | None = 256,
 ) -> DataFrame:
     """Band the signatures; docs sharing a (band, band-hash) bucket become
-    candidate pairs.  Join is on the 16-byte bucket key only; buckets are
-    capped (see _cap_bucket_members) so no bucket goes quadratic."""
-    banded = _cap_bucket_members(_banded(sigs, id_col, bands), id_col, max_bucket_size)
-    left = banded.alias("l")
-    right = banded.alias("r")
+    candidate pairs, from one grouped pass over the capped buckets
+    (_bucket_pairs), so no bucket goes quadratic."""
     return (
-        left.join(
-            right,
-            (F.col("l.band") == F.col("r.band"))
-            & (F.col("l.bucket") == F.col("r.bucket"))
-            & (F.col(f"l.{id_col}") < F.col(f"r.{id_col}")),
-        )
-        .select(F.col(f"l.{id_col}").alias("id_a"), F.col(f"r.{id_col}").alias("id_b"))
+        _bucket_pairs(_banded(sigs, id_col, bands), id_col, max_bucket_size)
+        .select(F.col(f"a.{id_col}").alias("id_a"), F.col(f"b.{id_col}").alias("id_b"))
         .distinct()
     )
 
@@ -291,20 +292,13 @@ def simhash_near_pairs(
             )
         ).alias("band", "bucket"),
     )
-    chunked = _cap_bucket_members(chunked, id_col, max_bucket_size)
-    l, r = chunked.alias("l"), chunked.alias("r")
     pairs = (
-        l.join(
-            r,
-            (F.col("l.band") == F.col("r.band"))
-            & (F.col("l.bucket") == F.col("r.bucket"))
-            & (F.col(f"l.{id_col}") < F.col(f"r.{id_col}")),
-        )
+        _bucket_pairs(chunked, id_col, max_bucket_size, carry=("simhash",))
         .select(
-            F.col(f"l.{id_col}").alias("id_a"),
-            F.col(f"r.{id_col}").alias("id_b"),
-            F.col("l.simhash").alias("sh_a"),
-            F.col("r.simhash").alias("sh_b"),
+            F.col(f"a.{id_col}").alias("id_a"),
+            F.col(f"b.{id_col}").alias("id_b"),
+            F.col("a.simhash").alias("sh_a"),
+            F.col("b.simhash").alias("sh_b"),
         )
         .distinct()
     )
@@ -496,18 +490,10 @@ def embedding_near_pairs(
     sigs = build_lsh_index(emb, dim, id_col, vec_col, n_planes, seed).withColumn(
         "band", F.lit(0)
     ).withColumnRenamed("sig", "bucket")
-    sigs = _cap_bucket_members(sigs, id_col, max_bucket_size)
-    l, r = sigs.alias("l"), sigs.alias("r")
-    pairs = l.join(
-        r,
-        (F.col("l.bucket") == F.col("r.bucket"))
-        & (F.col(f"l.{id_col}") < F.col(f"r.{id_col}")),
-    ).select(
-        F.col(f"l.{id_col}").alias("id_a"),
-        F.col(f"r.{id_col}").alias("id_b"),
-        F.round(cosine_col(F.col(f"l.{vec_col}"), F.col(f"r.{vec_col}")), 4).alias(
-            "cos_sim"
-        ),
+    pairs = _bucket_pairs(sigs, id_col, max_bucket_size, carry=(vec_col,)).select(
+        F.col(f"a.{id_col}").alias("id_a"),
+        F.col(f"b.{id_col}").alias("id_b"),
+        F.round(cosine_col(F.col(f"a.{vec_col}"), F.col(f"b.{vec_col}")), 4).alias("cos_sim"),
     )
     return pairs.filter(F.col("cos_sim") >= threshold)
 
@@ -557,9 +543,8 @@ def containment_pairs(
     predicate n_match == n_shingles; callers threshold partial
     containment as n_match >= tau * n_shingles.  At 100 TB: join on
     xxhash64(shingle) (8-byte key), drop stop-shingles above a document
-    frequency cap first (same role as _cap_bucket_members in the LSH
-    tier — a boilerplate shingle shared by 10^6 docs must not go
-    quadratic).
+    frequency cap first (the role of the bucket cap in _bucket_pairs —
+    a boilerplate shingle shared by 10^6 docs must not go quadratic).
 
     Output: (id_contained, id_container, n_shingles, n_match) — one row
     per candidate pair with at least one shared shingle."""
@@ -665,8 +650,8 @@ def prefix_filter_pairs(
     candidate-bounded array_intersect verify against per-doc sorted
     token arrays — all JVM.  At 100 TB: join on xxhash64(token), and
     cap token document frequency before the prefix join (a boilerplate
-    token shared by 10^6 docs belongs to no useful prefix — same cap
-    rule as the LSH tier's _cap_bucket_members); rarest-first ordering
+    token shared by 10^6 docs belongs to no useful prefix — the rule of
+    the LSH tier's bucket cap in _bucket_pairs); rarest-first ordering
     already pushes prefixes toward low-df tokens, which is what makes
     the candidate join sub-quadratic.
 

@@ -197,6 +197,94 @@ def test_embedding_near_pairs_empty_input(spark):
     assert set(out.columns) == {"id_a", "id_b", "cos_sim"}
 
 
+def _capped_self_join(keyed, id_col, cap):
+    """The blocking rule as a row_number-capped (band, bucket) self-join."""
+    from pyspark.sql import Window
+
+    if cap is not None:
+        w = Window.partitionBy("band", "bucket").orderBy(id_col)
+        keyed = keyed.withColumn("_rk", F.row_number().over(w)).filter(F.col("_rk") <= cap)
+    l, r = keyed.alias("l"), keyed.alias("r")
+    return l.join(
+        r,
+        (F.col("l.band") == F.col("r.band"))
+        & (F.col("l.bucket") == F.col("r.bucket"))
+        & (F.col(f"l.{id_col}") < F.col(f"r.{id_col}")),
+    )
+
+
+def _rows(df):
+    return sorted(tuple(r) for r in df.collect())
+
+
+@pytest.fixture(scope="module")
+def bucketed_corpus(spark, docs):
+    """30 docs plus a group that shares every bucket: an original, four
+    copies, an exact duplicate row of one copy and a NULL id (which,
+    sorting first, leaves a cap of 2 no pair in the group's buckets)."""
+    text = docs.orderBy("doc_id").first()["text"]
+    extra = spark.createDataFrame(
+        [(-1, text), (-2, text), (-2, text), (-3, text), (-4, text), (-5, text), (None, text)],
+        "doc_id long, text string",
+    )
+    corpus = docs.orderBy("doc_id").limit(30).unionByName(extra).cache()
+    yield corpus
+    corpus.unpersist()
+
+
+@pytest.mark.parametrize("cap", [None, 1, 2, 256])
+def test_bucket_pairs_match_capped_self_join(spark, bucketed_corpus, cap):
+    """LSH, SimHash and embedding candidates come from one grouped pass
+    over the capped buckets; each must equal a row_number-capped
+    self-join, row multiset for row multiset, including the duplicate id
+    and the NULL id (which sorts first and takes a slot)."""
+    from spider_spark.functions import dedup
+    from spider_spark.functions.similarity import build_lsh_index, cosine_col
+
+    sigs = dedup.minhash_signatures(bucketed_corpus, num_perm=16)
+    ref = _capped_self_join(dedup._banded(sigs, "doc_id", 8), "doc_id", cap).select(
+        F.col("l.doc_id").alias("id_a"), F.col("r.doc_id").alias("id_b")
+    ).distinct()
+    got = dedup.lsh_candidate_pairs(sigs, bands=8, max_bucket_size=cap)
+    assert _rows(got) == _rows(ref)
+
+    sh = dedup.simhash_signatures(bucketed_corpus)
+    chunked = sh.select(
+        "doc_id", "simhash",
+        F.posexplode(F.expr(
+            "transform(sequence(0, 3), c -> (shiftrightunsigned(simhash, c * 16) & 65535L))"
+        )).alias("band", "bucket"),
+    )
+    hamming = F.bit_count(F.col("l.simhash").bitwiseXOR(F.col("r.simhash"))).alias("hamming")
+    cand = _capped_self_join(chunked, "doc_id", cap).select(
+        F.col("l.doc_id").alias("id_a"), F.col("r.doc_id").alias("id_b"), hamming
+    ).distinct()
+    for d in (0, 3, 64):
+        got = dedup.simhash_near_pairs(sh, max_hamming=d, max_bucket_size=cap)
+        assert _rows(got) == _rows(cand.filter(F.col("hamming") <= d))
+
+    emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet").select(
+        F.col("vec_id").cast("long").alias("vec_id"), "embedding"
+    ).orderBy("vec_id").limit(30)
+    first = emb.first()
+    extra = spark.createDataFrame(
+        [(v, first["embedding"]) for v in (-1, -2, -2, -3, None)],
+        "vec_id long, embedding array<float>",
+    )
+    emb = emb.unionByName(extra).cache()
+    # 2 planes: 4 buckets, so every bucket holds more members than the caps
+    keyed = build_lsh_index(emb, len(first["embedding"]), n_planes=2).select(
+        "vec_id", "embedding", F.lit(0).alias("band"), F.col("sig").alias("bucket")
+    )
+    cos = F.round(cosine_col(F.col("l.embedding"), F.col("r.embedding")), 4).alias("cos_sim")
+    ref = _capped_self_join(keyed, "vec_id", cap).select(
+        F.col("l.vec_id").alias("id_a"), F.col("r.vec_id").alias("id_b"), cos
+    )
+    got = dedup.embedding_near_pairs(emb, threshold=-1.0, n_planes=2, max_bucket_size=cap)
+    assert _rows(got) == _rows(ref.filter(F.col("cos_sim") >= -1.0))
+    emb.unpersist()
+
+
 def test_connected_components_matches_union_find(spark):
     """CC fixpoint over a seeded random graph == classic union-find."""
     import random

@@ -46,8 +46,11 @@ def test_every_traced_hook_names_an_engine_attribute():
 def test_patched_crawl_names_are_looked_up_at_call_time():
     """A patch of a module attribute only takes effect where the caller
     looks the name up when it calls: ``run_rounds`` calls the module
-    global ``run_round`` and ``_admit`` calls ``bloom.bloom_prefilter``."""
+    global ``run_round``, ``_admit`` calls ``bloom.bloom_prefilter`` and
+    ``minhash_dedup`` calls the module global ``lsh_candidate_pairs``."""
     from spider_spark.crawl import Crawler
+    from spider_spark.functions.dedup import minhash_dedup
 
     assert "run_round" in Crawler.run_rounds.__code__.co_names
     assert "bloom_prefilter" in Crawler._admit.__code__.co_names
+    assert "lsh_candidate_pairs" in minhash_dedup.__code__.co_names

@@ -786,3 +786,25 @@ def test_minhash_signatures_are_one_grouped_aggregate(spark):
         assert node not in plan, node
     assert plan.count("Exchange") == 1, plan
     assert plan.count("Exchange hashpartitioning(doc_id") == 1
+
+
+def test_minhash_dedup_computes_signatures_once(spark):
+    """LSH candidates come from one grouped pass over the capped buckets,
+    not a self-join: each side of a join recomputes its subtree (AQE
+    reuses no exchange over a cached input), so a self-join built the
+    signature aggregate twice.  The executed plan of a collected
+    minhash_dedup has ONE final signature aggregate, and the candidate
+    plan has no join at all."""
+    from spider_spark.functions.dedup import lsh_candidate_pairs, minhash_dedup, minhash_signatures
+
+    docs = spark.createDataFrame(
+        [(i, f"document number {i % 7} about crawling the web") for i in range(40)],
+        "doc_id long, text string",
+    ).cache()
+    out = minhash_dedup(docs)
+    assert out.collect()
+    final = out._jdf.queryExecution().executedPlan().toString().split("== Initial Plan ==")[0]
+    assert "isFinalPlan=true" in final
+    assert final.count("functions=[min(pmod(") == 1, final
+    assert "Join" not in _plan(lsh_candidate_pairs(minhash_signatures(docs)), mode="simple")
+    docs.unpersist()

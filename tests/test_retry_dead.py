@@ -79,7 +79,8 @@ def test_drain_check_runs_no_spark_job(spark, tmp_path, monkeypatch):
     """An empty round decides from manifest metadata whether the frontier
     has drained: with every live row backed off into the future, the
     round dequeues nothing, the crawl is not drained, and the round still
-    commits, all without a DataFrame count."""
+    commits, all without a DataFrame count or collect: the round reads
+    its empty batch from the manifest's footer counts."""
     from pyspark.sql import functions as F
 
     cfg = CrawlConfig(n_hosts=4, page_space=50, fetch_partitions=2, use_bloom=False)
@@ -92,12 +93,15 @@ def test_drain_check_runs_no_spark_job(spark, tmp_path, monkeypatch):
     c.store.commit_round(0)
     n_live = c.frontier_df().count()
 
-    def no_count(self):
-        raise AssertionError("DataFrame.count in the drain check")
+    def forbid(name):
+        def call(self, *args, **kwargs):
+            raise AssertionError(f"DataFrame.{name} in an empty round")
+        return call
 
     # the session's concrete DataFrame class (pyspark.sql.DataFrame is
     # its abstract base in Spark 4)
-    monkeypatch.setattr(type(spark.range(1)), "count", no_count)
+    for name in ("count", "collect"):
+        monkeypatch.setattr(type(spark.range(1)), name, forbid(name))
     assert c.run_rounds(1) == []
     assert c.store.last_committed_round() == 1
     monkeypatch.undo()
