@@ -12,7 +12,9 @@ columns sorted by name, each column's values sorted independently
 Usage:  python scripts/oracle_sweep.py [sf0.1] [out.json]
         python scripts/oracle_sweep.py sf0.01 --names a17_x,w10_y
 (--names sweeps the given entries instead of the graded window —
-the validator for new tail entries at every SF.)
+the validator for new tail entries at every SF.)  A name without both
+a query and an oracle (unknown, or a rows-only entry) exits 2 before
+Spark starts.
 """
 
 from __future__ import annotations
@@ -82,6 +84,16 @@ def main() -> int:
     sf_dir = f"/root/testdata/{sf}"
 
     from spider_spark.catalog import GRADED_WINDOW, ORACLES, QUERIES
+
+    names = names if names is not None else GRADED_WINDOW
+    unknown = [n for n in names if n not in QUERIES or n not in ORACLES]
+    if unknown:
+        print(
+            "no query + oracle pair (unknown or rows-only): " + ",".join(unknown),
+            file=sys.stderr,
+        )
+        return 2
+
     from spider_spark.session import get_spark
 
     spark = get_spark(master="local[8]", shuffle_partitions=8)
@@ -91,7 +103,7 @@ def main() -> int:
         con.sql(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')")
 
     detail, bad = [], []
-    for name in names if names is not None else GRADED_WINDOW:
+    for name in names:
         sdf = QUERIES[name](spark, sf_dir)
         scols = [c.lower() for c in sdf.columns]
         srows = [tuple(r) for r in sdf.collect()]

@@ -101,17 +101,9 @@ def _canon1(urls: pd.Series) -> pd.Series:
     return canonicalize_series(urls).astype(object)
 
 
-def _canon2(urls: pd.Series, bases: pd.Series) -> pd.Series:
-    return canonicalize_series(urls, bases).astype(object)
-
-
 def canonicalize_udf(url: Column) -> Column:
     """Vectorized canonicalizer (UDF registered lazily — needs a session)."""
     return pandas_udf(_canon1, "string")(url)
-
-
-def canonicalize_with_base_udf(url: Column, base: Column) -> Column:
-    return pandas_udf(_canon2, "string")(url, base)
 
 
 def host_col(url: Column) -> Column:

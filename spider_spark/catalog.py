@@ -14,6 +14,10 @@ Each entry's docstring cites the reference behavior it reproduces
 
 from __future__ import annotations
 
+import hashlib
+import os
+import shutil
+import tempfile
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -22,6 +26,16 @@ from pyspark.sql import functions as F
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+
+
+def _scratch(tag: str, sf_dir: str) -> str:
+    """An emptied scratch root for entry ``tag``'s store, keyed by SF too:
+    grading two SFs back-to-back can never tear down a store the other's
+    lazy plan still reads."""
+    key = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
+    root = os.path.join(tempfile.gettempdir(), f"spider_spark_{tag}_{key}")
+    shutil.rmtree(root, ignore_errors=True)
+    return root
 
 
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}

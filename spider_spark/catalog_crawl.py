@@ -11,7 +11,7 @@ import os
 
 from pyspark.sql import functions as F
 
-from .catalog import _t, q
+from .catalog import _scratch, _t, q
 
 
 @q(
@@ -150,18 +150,9 @@ def c4_time_travel_scan(spark, sf_dir):
     incremental scan of everything appended after it (manifest member-set
     difference, O(delta) I/O).  Store rebuilt per call in a scratch dir;
     the parquet bytes on disk are what get graded."""
-    import shutil
-    import tempfile
-
     from .storage import TableStore
 
-    # scratch dir keyed by SF so grading two SFs back-to-back can never
-    # tear down a snapshot the other's lazy plan still reads
-    import hashlib
-
-    key = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    root = os.path.join(tempfile.gettempdir(), f"spider_spark_c4_store_{key}")
-    shutil.rmtree(root, ignore_errors=True)
+    root = _scratch("c4_store", sf_dir)
     store = TableStore(spark, root)
     docs = _t(spark, sf_dir, "documents").filter(F.col("doc_id") < 300).select(
         F.col("doc_id").cast("long").alias("doc_id")
@@ -288,15 +279,9 @@ def c8_merge_upsert(spark, sf_dir):
     delete_keys DELETE as an atomic snapshot swap) — the Iceberg MERGE
     analog the crawl's frontier write-back runs every round — graded
     against the analytic final state."""
-    import hashlib
-    import shutil
-    import tempfile
-
     from .storage import TableStore
 
-    key = hashlib.md5(("c8:" + sf_dir).encode()).hexdigest()[:8]
-    root = os.path.join(tempfile.gettempdir(), f"spider_spark_c8_store_{key}")
-    shutil.rmtree(root, ignore_errors=True)
+    root = _scratch("c8_store", sf_dir)
     store = TableStore(spark, root)
     docs = _t(spark, sf_dir, "documents").select(F.col("doc_id").cast("long").alias("doc_id"))
     base = docs.filter(F.col("doc_id") < 200).select(
@@ -327,15 +312,9 @@ def c9_compacted_partition_read(spark, sf_dir):
     the worst partitions, and read_partitions opens ONLY the requested
     buckets' members.  The entry raises if compaction never engaged, so
     the pruned read is provably over rewritten history."""
-    import hashlib
-    import shutil
-    import tempfile
-
     from .storage import TableStore
 
-    key = hashlib.md5(("c9:" + sf_dir).encode()).hexdigest()[:8]
-    root = os.path.join(tempfile.gettempdir(), f"spider_spark_c9_store_{key}")
-    shutil.rmtree(root, ignore_errors=True)
+    root = _scratch("c9_store", sf_dir)
     store = TableStore(spark, root)
     docs = _t(spark, sf_dir, "documents").select(
         F.col("doc_id").cast("long").alias("doc_id"),
@@ -401,15 +380,9 @@ def c10_schema_evolution_scan(spark, sf_dir):
     read — old segment null-filled, never rewritten — and (b) the
     time-travel read AS OF round 1, which must serve the snapshot-time
     schema (no gen column; asserted here, value-graded via the twin)."""
-    import hashlib
-    import shutil
-    import tempfile
-
     from .storage import TableStore
 
-    key = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    root = os.path.join(tempfile.gettempdir(), f"spider_spark_c10_store_{key}")
-    shutil.rmtree(root, ignore_errors=True)
+    root = _scratch("c10_store", sf_dir)
     store = TableStore(spark, root)
     docs = _t(spark, sf_dir, "documents").select(F.col("doc_id").cast("long").alias("doc_id"))
     store.append("evo", docs.filter(F.col("doc_id") < 200))
@@ -525,16 +498,10 @@ def c12_seed_ingest(spark, sf_dir):
     duplicates (min-priority dedup), and the surviving rows must land as
     pending frontier rows fetchable next round.  The frontier parquet
     bytes on disk are what get graded."""
-    import hashlib
-    import shutil
-    import tempfile
-
     from .crawl import Crawler
     from .round import CrawlConfig
 
-    key = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    root = os.path.join(tempfile.gettempdir(), f"spider_spark_c12_store_{key}")
-    shutil.rmtree(root, ignore_errors=True)
+    root = _scratch("c12_store", sf_dir)
     cfg = CrawlConfig(n_hosts=10, page_space=400, use_bloom=False, seen_buckets=4)
     crawler = Crawler(spark, root, cfg)
 
@@ -588,15 +555,9 @@ def c13_mor_delete_scan(spark, sf_dir):
     GDPR-takedown / dedup-purge shape) — and readers apply it by the
     sequence rule, so keys re-inserted by a later append stay visible.
     The parquet bytes on disk are what get graded."""
-    import hashlib
-    import shutil
-    import tempfile
-
     from .storage import TableStore
 
-    key = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    root = os.path.join(tempfile.gettempdir(), f"spider_spark_c13_store_{key}")
-    shutil.rmtree(root, ignore_errors=True)
+    root = _scratch("c13_store", sf_dir)
     store = TableStore(spark, root)
     ids = _t(spark, sf_dir, "documents").filter(F.col("doc_id") < 300).select(
         F.col("doc_id").cast("long").alias("doc_id")
@@ -635,15 +596,9 @@ def c14_stats_skip_scan(spark, sf_dir):
     analog) and the range scan opens only intersecting members — at
     100 TB a narrow id/time range touches O(1) members.  The parquet
     bytes on disk are what get graded."""
-    import hashlib
-    import shutil
-    import tempfile
-
     from .storage import TableStore
 
-    key = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    root = os.path.join(tempfile.gettempdir(), f"spider_spark_c14_store_{key}")
-    shutil.rmtree(root, ignore_errors=True)
+    root = _scratch("c14_store", sf_dir)
     store = TableStore(spark, root)
     ids = _t(spark, sf_dir, "documents").filter(F.col("doc_id") < 300).select(
         F.col("doc_id").cast("long").alias("doc_id")
@@ -680,15 +635,9 @@ def c15_wap_publish(spark, sf_dir):
     append is durable and auditable via time-travel but invisible until
     the atomic publish, the quality gate a training-data ingest needs.
     The parquet bytes on disk are what get graded."""
-    import hashlib
-    import shutil
-    import tempfile
-
     from .storage import TableStore
 
-    key = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    root = os.path.join(tempfile.gettempdir(), f"spider_spark_c15_store_{key}")
-    shutil.rmtree(root, ignore_errors=True)
+    root = _scratch("c15_store", sf_dir)
     store = TableStore(spark, root)
     ids = _t(spark, sf_dir, "documents").filter(F.col("doc_id") < 300).select(
         F.col("doc_id").cast("long").alias("doc_id")
@@ -844,15 +793,9 @@ def c17_foreign_sink_upsert(spark, sf_dir):
     store back and grade its contents against the first-wins SQL twin.
     Exercises the executor-side client lifecycle, batching, job-level
     dedup, and the idempotence accounting (written == distinct keys)."""
-    import hashlib
-    import shutil
-    import tempfile
-
     from .sinks import FileBackedKeyStore, write_foreign
 
-    key = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    root = os.path.join(tempfile.gettempdir(), f"spider_spark_c17_sink_{key}")
-    shutil.rmtree(root, ignore_errors=True)
+    root = _scratch("c17_sink", sf_dir)
 
     df = (
         _t(spark, sf_dir, "documents")
@@ -910,16 +853,10 @@ def c18_zorder_scan(spark, sf_dir):
     box query opens O(box) segments instead of a full scan.  The exact
     box filter is re-applied after the pruned scan (stats prune, never
     answer).  The parquet bytes on disk are what get graded."""
-    import hashlib
-    import shutil
-    import tempfile
-
     from .functions.zorder import z_box_bounds, z_value
     from .storage import TableStore
 
-    key = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    root = os.path.join(tempfile.gettempdir(), f"spider_spark_c18_store_{key}")
-    shutil.rmtree(root, ignore_errors=True)
+    root = _scratch("c18_store", sf_dir)
     store = TableStore(spark, root)
     pts = _t(spark, sf_dir, "documents").select(
         F.col("doc_id").cast("long").alias("doc_id"),
@@ -970,15 +907,9 @@ def c19_branch_publish(spark, sf_dir):
     on the fork base).  The audit-then-publish flow a training-data
     ingest runs per round, with multi-commit audits.  The parquet bytes
     on disk are what get graded."""
-    import hashlib
-    import shutil
-    import tempfile
-
     from .storage import TableStore
 
-    key = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    root = os.path.join(tempfile.gettempdir(), f"spider_spark_c19_store_{key}")
-    shutil.rmtree(root, ignore_errors=True)
+    root = _scratch("c19_store", sf_dir)
     store = TableStore(spark, root)
     ids = _t(spark, sf_dir, "documents").filter(F.col("doc_id") < 300).select(
         F.col("doc_id").cast("long").alias("doc_id")
@@ -1028,15 +959,9 @@ def c23_incremental_agg(spark, sf_dir):
     crawler's per-status report tables are recomputed per run
     (check_spider.py report queries); this is the form that survives a
     10^10-row fact table."""
-    import hashlib
-    import shutil
-    import tempfile
-
     from .storage import TableStore
 
-    key = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    root = os.path.join(tempfile.gettempdir(), f"spider_spark_c23_store_{key}")
-    shutil.rmtree(root, ignore_errors=True)
+    root = _scratch("c23_store", sf_dir)
     store = TableStore(spark, root)
     orders = _t(spark, sf_dir, "orders").filter(F.col("o_orderkey") < 3000).select(
         "o_orderkey",
@@ -1088,15 +1013,9 @@ def c24_count_pushdown(spark, sf_dir):
     merge-on-read deletes are pending (metadata would overstate) —
     tests/test_count_pushdown.py gates the refusal and the
     compact()-restores-answerability path."""
-    import hashlib
-    import shutil
-    import tempfile
-
     from .storage import TableStore
 
-    key = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    root = os.path.join(tempfile.gettempdir(), f"spider_spark_c24_store_{key}")
-    shutil.rmtree(root, ignore_errors=True)
+    root = _scratch("c24_store", sf_dir)
     store = TableStore(spark, root)
     orders = _t(spark, sf_dir, "orders").filter(F.col("o_orderkey") < 4000).select(
         "o_orderkey", "o_orderstatus"
@@ -1137,15 +1056,9 @@ def c25_spec_evolution(spark, sf_dir):
     table adopts partitioning mid-life without the O(table) rewrite;
     compact() migrates the old generation incrementally
     (tests/test_spec_evolution.py gates the migration)."""
-    import hashlib
-    import shutil
-    import tempfile
-
     from .storage import TableStore
 
-    key = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    root = os.path.join(tempfile.gettempdir(), f"spider_spark_c25_store_{key}")
-    shutil.rmtree(root, ignore_errors=True)
+    root = _scratch("c25_store", sf_dir)
     store = TableStore(spark, root)
     docs = _t(spark, sf_dir, "documents").select(
         F.col("doc_id").cast("long").alias("doc_id"), "lang"
@@ -1203,15 +1116,9 @@ def c26_table_history(spark, sf_dir):
     deleted keys, the delete segment retires), and a STAGED append the
     pointer never served (visible in history, absent from reads).
     Every cell is re-derived by the twin from the documents census."""
-    import hashlib
-    import shutil
-    import tempfile
-
     from .storage import TableStore
 
-    key = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    root = os.path.join(tempfile.gettempdir(), f"spider_spark_c26_store_{key}")
-    shutil.rmtree(root, ignore_errors=True)
+    root = _scratch("c26_store", sf_dir)
     store = TableStore(spark, root)
     docs = _t(spark, sf_dir, "documents").select(
         F.col("doc_id").cast("long").alias("doc_id"), "lang"
@@ -1266,15 +1173,9 @@ def c27_bloom_point_lookup(spark, sf_dir):
     bit-for-bit, so probing costs zero Spark jobs; each of the ten
     probes below must prune 3 of 4 members or the entry RAISES.  The
     parquet bytes on disk are what get graded."""
-    import hashlib
-    import shutil
-    import tempfile
-
     from .storage import TableStore
 
-    key = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    root = os.path.join(tempfile.gettempdir(), f"spider_spark_c27_store_{key}")
-    shutil.rmtree(root, ignore_errors=True)
+    root = _scratch("c27_store", sf_dir)
     store = TableStore(spark, root)
     docs = _t(spark, sf_dir, "documents").select(
         F.col("doc_id").cast("long").alias("doc_id"),
@@ -1318,15 +1219,11 @@ def c28_orphan_cleanup(spark, sf_dir):
     store costs proportional to live data; the age window (not exercised
     here, unit-tested) protects in-flight commits.  The parquet bytes on
     disk are what get graded."""
-    import hashlib
     import shutil
-    import tempfile
 
     from .storage import TableStore
 
-    key = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    root = os.path.join(tempfile.gettempdir(), f"spider_spark_c28_store_{key}")
-    shutil.rmtree(root, ignore_errors=True)
+    root = _scratch("c28_store", sf_dir)
     store = TableStore(spark, root)
     docs = _t(spark, sf_dir, "documents").select(
         F.col("doc_id").cast("long").alias("doc_id")
@@ -1375,15 +1272,9 @@ def c29_rollback_restore(spark, sf_dir):
     property that makes rollback constant-time at 100 TB.  Reference
     capability: the crawler's bad-batch recovery was a manual MySQL dump
     re-load (db_config.py workflow); here it is one atomic commit."""
-    import hashlib
-    import shutil
-    import tempfile
-
     from .storage import TableStore
 
-    key = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    root = os.path.join(tempfile.gettempdir(), f"spider_spark_c29_store_{key}")
-    shutil.rmtree(root, ignore_errors=True)
+    root = _scratch("c29_store", sf_dir)
     store = TableStore(spark, root)
     docs = _t(spark, sf_dir, "documents").filter(F.col("doc_id") < 300).select(
         F.col("doc_id").cast("long").alias("doc_id")
@@ -1434,15 +1325,9 @@ def c30_files_metadata(spark, sf_dir):
     grading it certifies the manifest's physical bookkeeping (footer
     counts, hive partition paths, stats attachment) against ground
     truth re-derived from the slice formulas."""
-    import hashlib
-    import shutil
-    import tempfile
-
     from .storage import TableStore
 
-    key = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    root = os.path.join(tempfile.gettempdir(), f"spider_spark_c30_store_{key}")
-    shutil.rmtree(root, ignore_errors=True)
+    root = _scratch("c30_store", sf_dir)
     store = TableStore(spark, root)
     docs = _t(spark, sf_dir, "documents").filter(F.col("doc_id") < 300).select(
         F.col("doc_id").cast("long").alias("doc_id"),
@@ -1489,15 +1374,9 @@ def c31_incremental_join_view(spark, sf_dir):
     unless the incrementally-maintained view is row-identical to the
     full recompute (exceptAll both directions), then grades the view's
     content against the slice-formula twin."""
-    import hashlib
-    import shutil
-    import tempfile
-
     from .storage import TableStore
 
-    key = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    root = os.path.join(tempfile.gettempdir(), f"spider_spark_c31_store_{key}")
-    shutil.rmtree(root, ignore_errors=True)
+    root = _scratch("c31_store", sf_dir)
     store = TableStore(spark, root)
     docs = _t(spark, sf_dir, "documents").filter(F.col("doc_id") < 300)
     a_all = docs.select(F.col("doc_id").cast("long").alias("doc_id"), "lang")

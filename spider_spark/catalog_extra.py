@@ -7,7 +7,7 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from .catalog import _t, q
+from .catalog import _scratch, _t, q
 
 
 @q(
@@ -487,16 +487,9 @@ def a23_hll_sketch_store(spark, sf_dir):
     estimator sound.  Estimates are engine-specific, so the graded
     output is the EXACT cardinalities; the sketch path gates them
     inside a 5% band and RAISES on miss."""
-    import hashlib
-    import os
-    import shutil
-    import tempfile
-
     from .storage import TableStore
 
-    key = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    root = os.path.join(tempfile.gettempdir(), f"spider_spark_a23_store_{key}")
-    shutil.rmtree(root, ignore_errors=True)
+    root = _scratch("a23_store", sf_dir)
     store = TableStore(spark, root)
     docs = _t(spark, sf_dir, "documents").select(F.col("doc_id").cast("long").alias("doc_id"))
     slices = {

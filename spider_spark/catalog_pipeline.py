@@ -15,7 +15,7 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from .catalog import _t, q
+from .catalog import _scratch, _t, q
 
 
 # =====================================================================
@@ -2242,16 +2242,9 @@ def d13_incremental_dedup(spark, sf_dir):
     the twin re-derives them from text equality, so a hash/text
     mismatch or a stale index row breaks the grade.  At scale the join
     is bucket-pruned exactly like the seen anti-join (c3)."""
-    import hashlib as _h
-    import os
-    import shutil
-    import tempfile
-
     from .storage import TableStore
 
-    key = _h.md5(sf_dir.encode()).hexdigest()[:8]
-    root = os.path.join(tempfile.gettempdir(), f"spider_spark_d13_{key}")
-    shutil.rmtree(root, ignore_errors=True)
+    root = _scratch("d13", sf_dir)
     store = TableStore(spark, root)
     d = _t(spark, sf_dir, "documents").select(
         F.col("doc_id").cast("long").alias("doc_id"), "text"

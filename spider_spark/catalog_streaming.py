@@ -16,21 +16,16 @@ would see zero new files and drain an empty batch.
 
 from __future__ import annotations
 
-import hashlib
 import os
-import shutil
-import tempfile
 
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from .catalog import _t, q
+from .catalog import _scratch, _t, q
 
 
 def _stage(spark, sf_dir: str, tag: str, transform=None) -> tuple[str, str]:
-    key = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    root = os.path.join(tempfile.gettempdir(), f"spider_spark_{tag}_{key}")
-    shutil.rmtree(root, ignore_errors=True)
+    root = _scratch(tag, sf_dir)
     src = os.path.join(root, "src")
     os.makedirs(src)
     if transform is None:
@@ -328,9 +323,7 @@ def st8_stream_cdc_merge(spark, sf_dir):
     from .storage import TableStore
     from .streaming.lakehouse import stream_merge_table
 
-    key = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    root = os.path.join(tempfile.gettempdir(), f"spider_spark_st8_{key}")
-    shutil.rmtree(root, ignore_errors=True)
+    root = _scratch("st8", sf_dir)
     src = os.path.join(root, "src")
     os.makedirs(src)
     store = TableStore(spark, os.path.join(root, "store"))

@@ -1,18 +1,26 @@
 """Multimodal column plumbing: image/audio/video as opaque binary columns
 with typed metadata.
 
-The Spark-side plumbing (schemas, partition-friendly batch shapes,
-mapInPandas signatures) is real and tested.  Decode policy (the codec
-boundary): PNG and baseline JPEG blobs are decoded FOR REAL —
-dependency-free spec-conformant codecs live in functions/png.py (zlib
-inflate + all five scanline filters) and functions/jpeg.py (DQT/DHT/
-SOF0/SOS parse, Huffman entropy decode, IDCT, 4:4:4 / 4:2:0, restart
-markers) — MPNG video containers (length-prefixed PNG frames, below)
-parse + frame-decode for real, and WAV audio decodes for real through
-the RIFF/PCM16 codec in functions/wav.py; remaining formats
-(MP3/MP4/progressive JPEG: no PIL/ffmpeg in this container) raise
-NotImplementedError under ``strict=True`` or fall back to a
-clearly-marked deterministic fake otherwise.
+Every operator here and every ``synth_*`` store builder is one row
+function behind one mapper, ``_per_blob``: its single ``mapInPandas``
+crosses the Python boundary once per Arrow batch and calls the row
+function once per blob, which returns that blob's output tuples (none
+when a lax operator skips an undecodable blob, one normally, one per
+sampled frame).  The builders are integer-formula encoders
+``seed[, flag] -> bytes`` behind ``_synth``, which emits the ``MEDIA``
+shape.
+
+Decode policy (the codec boundary): PNG and baseline JPEG blobs are
+decoded FOR REAL — dependency-free spec-conformant codecs live in
+functions/png.py (zlib inflate + all five scanline filters) and
+functions/jpeg.py (DQT/DHT/SOF0/SOS parse, Huffman entropy decode,
+IDCT, 4:4:4 / 4:2:0, restart markers) — MPNG video containers
+(length-prefixed PNG frames, below) parse + frame-decode for real, and
+WAV audio decodes for real through the RIFF/PCM16 codec in
+functions/wav.py; remaining formats (MP3/MP4/progressive JPEG: no
+PIL/ffmpeg in this container) raise NotImplementedError under
+``strict=True`` or fall back to a clearly-marked deterministic fake
+otherwise.
 
 Reference analog: the crawler streams images to disk separately from text
 (share_func.py:224-242 saveImage) and binarizes captcha pixels
@@ -22,7 +30,9 @@ which is exactly the media_ref indirection here.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+import hashlib
+import struct
+from collections.abc import Callable, Iterator
 
 import numpy as np
 import pandas as pd
@@ -30,7 +40,66 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from . import jpeg, png
+from . import jpeg, png, wav
+
+_TYPES = {
+    "string": T.StringType(),
+    "binary": T.BinaryType(),
+    "int": T.IntegerType(),
+    "long": T.LongType(),
+    "double": T.DoubleType(),
+}
+
+
+def _schema(ddl: str) -> T.StructType:
+    """``"name type, ..."`` -> StructType of nullable fields."""
+    return T.StructType(
+        [T.StructField(n, _TYPES[t]) for n, t in (f.split() for f in ddl.split(","))]
+    )
+
+
+MEDIA = _schema("media_ref string, content binary, media_kind string, n_bytes int")
+MEDIA_FEATURES = _schema(
+    "media_ref string, media_kind string, n_bytes int, width int, height int,"
+    " n_frames int, byte_entropy double"
+)
+MEDIA_TEXT = _schema("media_ref string, title string, software string, n_keys int")
+
+
+def _per_blob(
+    df: DataFrame, cols: list[str], schema: T.StructType, row: Callable[..., list[tuple]]
+) -> DataFrame:
+    """The one mapInPandas of this module: each Arrow batch of ``cols``
+    becomes the concatenation of ``row(*values)`` over its rows, every
+    tuple ordered like ``schema``."""
+    names = schema.fieldNames()
+
+    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            yield pd.DataFrame(
+                [t for vals in zip(*(pdf[c] for c in cols)) for t in row(*vals)],
+                columns=names,
+            )
+
+    return df.select(*cols).mapInPandas(fn, schema)
+
+
+def _synth(
+    refs: DataFrame, kind: str, encode: Callable[..., bytes], flag: str | None = None
+) -> DataFrame:
+    """A MEDIA store of ``kind`` blobs, ``encode(seed[, flag])`` per ref."""
+    extra = [flag] if flag else []
+    df = refs.select(
+        "media_ref",
+        F.col("seed").cast("long").alias("seed"),
+        *[F.col(c).cast("int").alias(c) for c in extra],
+    )
+
+    def row(ref, *args):
+        data = encode(*map(int, args))
+        return [(ref, data, kind, len(data))]
+
+    return _per_blob(df, ["media_ref", "seed", *extra], MEDIA, row)
 
 
 def _decode_rgba(content, strict: bool = False) -> tuple[np.ndarray, bool]:
@@ -59,26 +128,22 @@ def _decode_rgba(content, strict: bool = False) -> tuple[np.ndarray, bool]:
     h = max(n_px // w, 1)
     return np.resize(a, (h, w, 4)), False
 
-MEDIA = T.StructType(
-    [
-        T.StructField("media_ref", T.StringType()),
-        T.StructField("content", T.BinaryType()),
-        T.StructField("media_kind", T.StringType()),  # image | audio | video
-        T.StructField("n_bytes", T.IntegerType()),
-    ]
-)
 
-MEDIA_FEATURES = T.StructType(
-    [
-        T.StructField("media_ref", T.StringType()),
-        T.StructField("media_kind", T.StringType()),
-        T.StructField("n_bytes", T.IntegerType()),
-        T.StructField("width", T.IntegerType()),
-        T.StructField("height", T.IntegerType()),
-        T.StructField("n_frames", T.IntegerType()),
-        T.StructField("byte_entropy", T.DoubleType()),
-    ]
-)
+def _fake_seed(b: np.ndarray) -> int:
+    """Stable byte hash behind the stubbed decode's dims and frame count."""
+    return int(b[:8].astype(np.int64).sum()) if len(b) >= 8 else 0
+
+
+def _sum_r(px: np.ndarray) -> int:
+    return int(px[..., 0].astype(np.int64).sum())
+
+
+def _rgba(h: int, w: int, *channels: np.ndarray) -> np.ndarray:
+    """Opaque (h, w, 4) uint8 pixels from row-major R, G, B values."""
+    px = np.full((h, w, 4), 255, dtype=np.uint8)
+    for c, v in enumerate(channels):
+        px[..., c] = v.reshape(h, w)
+    return px
 
 
 def synth_media_table(refs: DataFrame, ref_col: str = "media_ref") -> DataFrame:
@@ -103,6 +168,16 @@ def synth_media_table(refs: DataFrame, ref_col: str = "media_ref") -> DataFrame:
     )
 
 
+def _image_px(s: int) -> np.ndarray:
+    w, h = 16 + s % 17, 16 + s % 13
+    i = np.arange(w * h, dtype=np.int64)
+    return _rgba(h, w, (7 * s + 13 * i) % 256, (11 * s + 29 * i) % 256, 1 + (3 * i + s) % 7)
+
+
+def _encode_png_image(s: int) -> bytes:
+    return png.encode_png(_image_px(s), filter_type=s % 5)
+
+
 def synth_png_media(refs: DataFrame) -> DataFrame:
     """REAL-PNG media store: per ref, deterministic RGBA pixels from the
     integer ``seed`` column, encoded through the real codec
@@ -120,35 +195,7 @@ def synth_png_media(refs: DataFrame) -> DataFrame:
 
     Input: (media_ref string, seed long).  Output matches
     synth_media_table: (media_ref, content, media_kind, n_bytes)."""
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out_refs, blobs, nbytes = [], [], []
-            for ref, seed in zip(pdf["media_ref"], pdf["seed"]):
-                s = int(seed)
-                w, h = 16 + s % 17, 16 + s % 13
-                i = np.arange(w * h, dtype=np.int64)
-                px = np.empty((h, w, 4), dtype=np.uint8)
-                px[..., 0] = ((7 * s + 13 * i) % 256).reshape(h, w)
-                px[..., 1] = ((11 * s + 29 * i) % 256).reshape(h, w)
-                px[..., 2] = (1 + (3 * i + s) % 7).reshape(h, w)
-                px[..., 3] = 255
-                data = png.encode_png(px, filter_type=s % 5)
-                out_refs.append(ref)
-                blobs.append(data)
-                nbytes.append(len(data))
-            yield pd.DataFrame(
-                {
-                    "media_ref": out_refs,
-                    "content": blobs,
-                    "media_kind": ["image"] * len(out_refs),
-                    "n_bytes": np.array(nbytes, dtype=np.int32),
-                }
-            )
-
-    return refs.select("media_ref", F.col("seed").cast("long").alias("seed")).mapInPandas(
-        fn, MEDIA
-    )
+    return _synth(refs, "image", _encode_png_image)
 
 
 def decode_and_featurize(media: DataFrame, strict: bool = False) -> DataFrame:
@@ -163,52 +210,23 @@ def decode_and_featurize(media: DataFrame, strict: bool = False) -> DataFrame:
       a stable byte hash, entropy computed for real from the bytes.
     """
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            n = len(pdf)
-            widths = np.zeros(n, dtype=np.int32)
-            heights = np.zeros(n, dtype=np.int32)
-            frames = np.zeros(n, dtype=np.int32)
-            entropy = np.zeros(n, dtype=np.float64)
-            nbytes = np.zeros(n, dtype=np.int32)
-            for i, (content, kind) in enumerate(zip(pdf["content"], pdf["media_kind"])):
-                b = np.frombuffer(content or b"", dtype=np.uint8)
-                nbytes[i] = len(b)
-                if len(b):
-                    counts = np.bincount(b, minlength=256)
-                    p = counts[counts > 0] / len(b)
-                    entropy[i] = float(-(p * np.log2(p)).sum())
-                if png.is_png(bytes(content or b"")):
-                    px = png.decode_png(bytes(content))
-                    heights[i], widths[i] = px.shape[0], px.shape[1]
-                    frames[i] = 1
-                    continue
-                if jpeg.is_jpeg(bytes(content or b"")):
-                    px = jpeg.decode_jpeg(bytes(content))
-                    heights[i], widths[i] = px.shape[0], px.shape[1]
-                    frames[i] = 1
-                    continue
-                if strict:
-                    raise NotImplementedError(
-                        "non-PNG/JPEG decode requires PIL/ffmpeg, not available in this container"
-                    )
-                seed = int(b[:8].astype(np.int64).sum()) if len(b) >= 8 else 0
-                widths[i] = 16 + seed % 1024
-                heights[i] = 16 + (seed // 7) % 1024
-                frames[i] = 1 if kind == "image" else 1 + seed % 120
-            yield pd.DataFrame(
-                {
-                    "media_ref": pdf["media_ref"],
-                    "media_kind": pdf["media_kind"],
-                    "n_bytes": nbytes,
-                    "width": widths,
-                    "height": heights,
-                    "n_frames": frames,
-                    "byte_entropy": np.round(entropy, 4),
-                }
-            )
+    def row(ref, content, kind):
+        b = np.frombuffer(content or b"", dtype=np.uint8)
+        entropy = 0.0
+        if len(b):
+            counts = np.bincount(b, minlength=256)
+            p = counts[counts > 0] / len(b)
+            entropy = float(-(p * np.log2(p)).sum())
+        px, real = _decode_rgba(content, strict)
+        if real:
+            w, h, frames = px.shape[1], px.shape[0], 1
+        else:
+            seed = _fake_seed(b)
+            w, h = 16 + seed % 1024, 16 + (seed // 7) % 1024
+            frames = 1 if kind == "image" else 1 + seed % 120
+        return [(ref, kind, len(b), w, h, frames, float(np.round(entropy, 4)))]
 
-    return media.mapInPandas(fn, MEDIA_FEATURES)
+    return _per_blob(media, ["media_ref", "content", "media_kind"], MEDIA_FEATURES, row)
 
 
 def media_refs_from_documents(docs: DataFrame) -> DataFrame:
@@ -245,45 +263,24 @@ def binarize_media(media: DataFrame, strict: bool = False) -> DataFrame:
     reference's three-pass threshold, emit the binarized bytes +
     white-pixel fraction."""
 
-    out_schema = T.StructType(
-        [
-            T.StructField("media_ref", T.StringType()),
-            T.StructField("width", T.IntegerType()),
-            T.StructField("height", T.IntegerType()),
-            T.StructField("binarized", T.BinaryType()),
-            T.StructField("frac_white", T.DoubleType()),
-            T.StructField("n_white", T.IntegerType()),
-        ]
+    def row(ref, content):
+        px, _real = _decode_rgba(content, strict)
+        h, w = px.shape[0], px.shape[1]
+        out = binarize_rgba(px)
+        # integer white count alongside the fraction: exact across
+        # engines (no float-rounding hazard in the m2 oracle)
+        n_w = int((out[..., 0] == 255).sum())
+        return [(ref, w, h, out.tobytes(), round(n_w / (h * w), 4), n_w)]
+
+    return _per_blob(
+        media,
+        ["media_ref", "content"],
+        _schema(
+            "media_ref string, width int, height int, binarized binary,"
+            " frac_white double, n_white int"
+        ),
+        row,
     )
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            refs, widths, heights, blobs, fracs, whites = [], [], [], [], [], []
-            for ref, content in zip(pdf["media_ref"], pdf["content"]):
-                px, _real = _decode_rgba(content, strict)
-                h, w = px.shape[0], px.shape[1]
-                out = binarize_rgba(px)
-                refs.append(ref)
-                widths.append(w)
-                heights.append(h)
-                blobs.append(out.tobytes())
-                # integer white count alongside the fraction: exact across
-                # engines (no float-rounding hazard in the m2 oracle)
-                n_w = int((out[..., 0] == 255).sum())
-                whites.append(n_w)
-                fracs.append(round(n_w / (h * w), 4))
-            yield pd.DataFrame(
-                {
-                    "media_ref": refs,
-                    "width": np.array(widths, dtype=np.int32),
-                    "height": np.array(heights, dtype=np.int32),
-                    "binarized": blobs,
-                    "frac_white": np.array(fracs, dtype=np.float64),
-                    "n_white": np.array(whites, dtype=np.int32),
-                }
-            )
-
-    return media.select("media_ref", "content").mapInPandas(fn, out_schema)
 
 
 def _nn_resize(px: np.ndarray, out_w: int, out_h: int) -> np.ndarray:
@@ -301,32 +298,17 @@ def resize_media(media: DataFrame, out_w: int = 32, out_h: int = 32) -> DataFram
     Decode via _decode_rgba (real for PNG, stubbed fake otherwise); the
     resize itself is real numpy index math.  Output keeps the
     binary-column contract: (media_ref, width, height, content)."""
-    out_schema = T.StructType(
-        [
-            T.StructField("media_ref", T.StringType()),
-            T.StructField("width", T.IntegerType()),
-            T.StructField("height", T.IntegerType()),
-            T.StructField("content", T.BinaryType()),
-        ]
+
+    def row(ref, content):
+        px, _real = _decode_rgba(content)
+        return [(ref, out_w, out_h, _nn_resize(px, out_w, out_h).tobytes())]
+
+    return _per_blob(
+        media,
+        ["media_ref", "content"],
+        _schema("media_ref string, width int, height int, content binary"),
+        row,
     )
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            refs, blobs = [], []
-            for ref, content in zip(pdf["media_ref"], pdf["content"]):
-                px, _real = _decode_rgba(content)
-                blobs.append(_nn_resize(px, out_w, out_h).tobytes())
-                refs.append(ref)
-            yield pd.DataFrame(
-                {
-                    "media_ref": refs,
-                    "width": np.full(len(refs), out_w, dtype=np.int32),
-                    "height": np.full(len(refs), out_h, dtype=np.int32),
-                    "content": blobs,
-                }
-            )
-
-    return media.select("media_ref", "content").mapInPandas(fn, out_schema)
 
 
 def resize_stats(
@@ -336,33 +318,24 @@ def resize_stats(
     one python stage.  Same _nn_resize math as resize_media; the sum_r
     of the resized grid is the analytic value the m6 oracle recomputes
     from the generator pixel formulas."""
-    out_schema = T.StructType(
-        [
-            T.StructField("media_ref", T.StringType()),
-            T.StructField("width", T.IntegerType()),
-            T.StructField("height", T.IntegerType()),
-            T.StructField("sum_r", T.LongType()),
-        ]
+
+    def row(ref, content):
+        px, _real = _decode_rgba(content, strict)
+        return [(ref, out_w, out_h, _sum_r(_nn_resize(px, out_w, out_h)))]
+
+    return _per_blob(
+        media,
+        ["media_ref", "content"],
+        _schema("media_ref string, width int, height int, sum_r long"),
+        row,
     )
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            refs, sums = [], []
-            for ref, content in zip(pdf["media_ref"], pdf["content"]):
-                px, _real = _decode_rgba(content, strict)
-                out = _nn_resize(px, out_w, out_h)
-                refs.append(ref)
-                sums.append(int(out[..., 0].astype(np.int64).sum()))
-            yield pd.DataFrame(
-                {
-                    "media_ref": refs,
-                    "width": np.full(len(refs), out_w, dtype=np.int32),
-                    "height": np.full(len(refs), out_h, dtype=np.int32),
-                    "sum_r": np.array(sums, dtype=np.int64),
-                }
-            )
 
-    return media.select("media_ref", "content").mapInPandas(fn, out_schema)
+def _encode_jpeg(s: int) -> bytes:
+    tw, th = 2 + s % 3, 1 + s % 2
+    t = (np.arange(th * 16)[:, None] // 16) * tw + (np.arange(tw * 16)[None, :] // 16)
+    px = ((23 * s + 41 * t) % 256).astype(np.uint8)
+    return jpeg.encode_jpeg(px, restart_interval=s % 3)
 
 
 def synth_jpeg_media(refs: DataFrame) -> DataFrame:
@@ -381,34 +354,7 @@ def synth_jpeg_media(refs: DataFrame) -> DataFrame:
 
     Input: (media_ref string, seed long).  Output matches
     synth_media_table: (media_ref, content, media_kind, n_bytes)."""
-    from . import jpeg as _jpeg
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out_refs, blobs, nbytes = [], [], []
-            for ref, seed in zip(pdf["media_ref"], pdf["seed"]):
-                s = int(seed)
-                tw, th = 2 + s % 3, 1 + s % 2
-                t = (np.arange(th * 16)[:, None] // 16) * tw + (
-                    np.arange(tw * 16)[None, :] // 16
-                )
-                px = ((23 * s + 41 * t) % 256).astype(np.uint8)
-                data = _jpeg.encode_jpeg(px, restart_interval=s % 3)
-                out_refs.append(ref)
-                blobs.append(data)
-                nbytes.append(len(data))
-            yield pd.DataFrame(
-                {
-                    "media_ref": out_refs,
-                    "content": blobs,
-                    "media_kind": ["image"] * len(out_refs),
-                    "n_bytes": np.array(nbytes, dtype=np.int32),
-                }
-            )
-
-    return refs.select(
-        "media_ref", F.col("seed").cast("long").alias("seed")
-    ).mapInPandas(fn, MEDIA)
+    return _synth(refs, "image", _encode_jpeg)
 
 
 def jpeg_stats(media: DataFrame, strict: bool = False) -> DataFrame:
@@ -417,50 +363,32 @@ def jpeg_stats(media: DataFrame, strict: bool = False) -> DataFrame:
     sum) per blob — the m8 oracle recomputes sum_r analytically from the
     generator tile formulas.  Non-JPEG blobs raise under strict (the
     PIL/ffmpeg drop-in boundary) or report n/a dims with sum_r = -1."""
-    from . import jpeg as _jpeg
 
-    out_schema = T.StructType(
-        [
-            T.StructField("media_ref", T.StringType()),
-            T.StructField("width", T.IntegerType()),
-            T.StructField("height", T.IntegerType()),
-            T.StructField("sum_r", T.LongType()),
-        ]
+    def row(ref, content):
+        b = bytes(content or b"")
+        if jpeg.is_jpeg(b):
+            rgb = jpeg.decode_jpeg(b)
+            return [(ref, rgb.shape[1], rgb.shape[0], _sum_r(rgb))]
+        if strict:
+            raise NotImplementedError("non-JPEG decode requires PIL/ffmpeg, not available")
+        return [(ref, 0, 0, -1)]
+
+    return _per_blob(
+        media,
+        ["media_ref", "content"],
+        _schema("media_ref string, width int, height int, sum_r long"),
+        row,
     )
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            refs, ws, hs, sums = [], [], [], []
-            for ref, content in zip(pdf["media_ref"], pdf["content"]):
-                b = bytes(content or b"")
-                if _jpeg.is_jpeg(b):
-                    rgb = _jpeg.decode_jpeg(b)
-                    refs.append(ref)
-                    hs.append(rgb.shape[0])
-                    ws.append(rgb.shape[1])
-                    sums.append(int(rgb[..., 0].astype(np.int64).sum()))
-                    continue
-                if strict:
-                    raise NotImplementedError(
-                        "non-JPEG decode requires PIL/ffmpeg, not available"
-                    )
-                refs.append(ref)
-                hs.append(0)
-                ws.append(0)
-                sums.append(-1)
-            yield pd.DataFrame(
-                {
-                    "media_ref": refs,
-                    "width": np.array(ws, dtype=np.int32),
-                    "height": np.array(hs, dtype=np.int32),
-                    "sum_r": np.array(sums, dtype=np.int64),
-                }
-            )
-
-    return media.select("media_ref", "content").mapInPandas(fn, out_schema)
 
 
 # ------------------------------------------------------- audio (WAV/PCM)
+def _encode_wav(s: int, retag: int = 0) -> bytes:
+    i = np.arange(500 + s % 300, dtype=np.int64)
+    samples = (((37 * s + 11 * i) % 2003) - 1001).astype(np.int16)
+    info = (b"c" * (1 + s % 3)) if retag else None
+    return wav.encode_wav(samples, 8000 + 100 * (s % 5), info=info)
+
+
 def synth_wav_media(refs: DataFrame) -> DataFrame:
     """REAL-audio media store: per ref, a genuine RIFF/WAVE blob
     (functions/wav.py) with SQL-replicable integer samples:
@@ -471,33 +399,7 @@ def synth_wav_media(refs: DataFrame) -> DataFrame:
 
     Input (media_ref string, seed long); output matches
     synth_media_table: (media_ref, content, media_kind, n_bytes)."""
-    from . import wav
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out_refs, blobs, nbytes = [], [], []
-            for ref, seed in zip(pdf["media_ref"], pdf["seed"]):
-                s = int(seed)
-                rate = 8000 + 100 * (s % 5)
-                n = 500 + s % 300
-                i = np.arange(n, dtype=np.int64)
-                samples = (((37 * s + 11 * i) % 2003) - 1001).astype(np.int16)
-                data = wav.encode_wav(samples, rate)
-                out_refs.append(ref)
-                blobs.append(data)
-                nbytes.append(len(data))
-            yield pd.DataFrame(
-                {
-                    "media_ref": out_refs,
-                    "content": blobs,
-                    "media_kind": ["audio"] * len(out_refs),
-                    "n_bytes": np.array(nbytes, dtype=np.int32),
-                }
-            )
-
-    return refs.select(
-        "media_ref", F.col("seed").cast("long").alias("seed")
-    ).mapInPandas(fn, MEDIA)
+    return _synth(refs, "audio", _encode_wav)
 
 
 def wav_stats(media: DataFrame, strict: bool = False) -> DataFrame:
@@ -506,47 +408,22 @@ def wav_stats(media: DataFrame, strict: bool = False) -> DataFrame:
     feature row an audio-quality filter keys on.  Non-WAV blobs raise
     under strict (the codec drop-in boundary) or fall back to zeroed
     stats with n_samples = -1 (clearly marked undecodable)."""
-    from . import wav
 
-    out_schema = T.StructType(
-        [
-            T.StructField("media_ref", T.StringType()),
-            T.StructField("sample_rate", T.IntegerType()),
-            T.StructField("n_samples", T.IntegerType()),
-            T.StructField("sum_amp", T.LongType()),
-        ]
+    def row(ref, content):
+        b = bytes(content or b"")
+        if wav.is_wav(b):
+            rate, samples = wav.decode_wav(b)
+            return [(ref, rate, len(samples), int(samples.astype(np.int64).sum()))]
+        if strict:
+            raise NotImplementedError("non-WAV audio decode requires ffmpeg, not available")
+        return [(ref, 0, -1, 0)]
+
+    return _per_blob(
+        media,
+        ["media_ref", "content"],
+        _schema("media_ref string, sample_rate int, n_samples int, sum_amp long"),
+        row,
     )
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            refs, rates, counts, sums = [], [], [], []
-            for ref, content in zip(pdf["media_ref"], pdf["content"]):
-                b = bytes(content or b"")
-                if wav.is_wav(b):
-                    rate, samples = wav.decode_wav(b)
-                    refs.append(ref)
-                    rates.append(rate)
-                    counts.append(len(samples))
-                    sums.append(int(samples.astype(np.int64).sum()))
-                    continue
-                if strict:
-                    raise NotImplementedError(
-                        "non-WAV audio decode requires ffmpeg, not available"
-                    )
-                refs.append(ref)
-                rates.append(0)
-                counts.append(-1)
-                sums.append(0)
-            yield pd.DataFrame(
-                {
-                    "media_ref": refs,
-                    "sample_rate": np.array(rates, dtype=np.int32),
-                    "n_samples": np.array(counts, dtype=np.int32),
-                    "sum_amp": np.array(sums, dtype=np.int64),
-                }
-            )
-
-    return media.select("media_ref", "content").mapInPandas(fn, out_schema)
 
 
 # ------------------------------------------------- multi-frame container
@@ -558,8 +435,6 @@ MPNG_MAGIC = b"MPNG"
 
 
 def encode_mpng(frames: list[bytes]) -> bytes:
-    import struct
-
     out = [MPNG_MAGIC, struct.pack(">I", len(frames))]
     for fb in frames:
         out.append(struct.pack(">I", len(fb)))
@@ -573,8 +448,6 @@ def is_mpng(data: bytes | None) -> bool:
 
 def parse_mpng(data: bytes) -> list[bytes]:
     """Container bytes -> per-frame PNG blobs (no pixel decode)."""
-    import struct
-
     n = struct.unpack(">I", data[4:8])[0]
     frames, off = [], 8
     for _ in range(n):
@@ -582,6 +455,16 @@ def parse_mpng(data: bytes) -> list[bytes]:
         frames.append(data[off + 4 : off + 4 + ln])
         off += 4 + ln
     return frames
+
+
+def _encode_png_video(s: int, refilter: int = 0) -> bytes:
+    nf, w, h = 3 + s % 8, 8 + s % 5, 8 + s % 3
+    i = np.arange(w * h, dtype=np.int64)
+    frames = []
+    for f in range(nf):
+        r, g, b = (5 * s + 7 * f + 11 * i) % 256, (3 * s + 13 * f + 17 * i) % 256, (s + f + i) % 5
+        frames.append(png.encode_png(_rgba(h, w, r, g, b), filter_type=(s + f + refilter) % 5))
+    return encode_mpng(frames)
 
 
 def synth_png_video(refs: DataFrame) -> DataFrame:
@@ -599,38 +482,7 @@ def synth_png_video(refs: DataFrame) -> DataFrame:
 
     Input: (media_ref string, seed long); output matches
     synth_media_table: (media_ref, content, media_kind, n_bytes)."""
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out_refs, blobs, nbytes = [], [], []
-            for ref, seed in zip(pdf["media_ref"], pdf["seed"]):
-                s = int(seed)
-                nf, w, h = 3 + s % 8, 8 + s % 5, 8 + s % 3
-                i = np.arange(w * h, dtype=np.int64)
-                frames = []
-                for f in range(nf):
-                    px = np.empty((h, w, 4), dtype=np.uint8)
-                    px[..., 0] = ((5 * s + 7 * f + 11 * i) % 256).reshape(h, w)
-                    px[..., 1] = ((3 * s + 13 * f + 17 * i) % 256).reshape(h, w)
-                    px[..., 2] = ((s + f + i) % 5).reshape(h, w)
-                    px[..., 3] = 255
-                    frames.append(png.encode_png(px, filter_type=(s + f) % 5))
-                data = encode_mpng(frames)
-                out_refs.append(ref)
-                blobs.append(data)
-                nbytes.append(len(data))
-            yield pd.DataFrame(
-                {
-                    "media_ref": out_refs,
-                    "content": blobs,
-                    "media_kind": ["video"] * len(out_refs),
-                    "n_bytes": np.array(nbytes, dtype=np.int32),
-                }
-            )
-
-    return refs.select(
-        "media_ref", F.col("seed").cast("long").alias("seed")
-    ).mapInPandas(fn, MEDIA)
+    return _synth(refs, "video", _encode_png_video)
 
 
 def sample_frame_stats(
@@ -647,56 +499,28 @@ def sample_frame_stats(
     Output: (media_ref, frame_idx, n_frames, width, height, sum_r) —
     sum_r = sum of the decoded R channel, the analytic per-frame checksum
     the m3 oracle recomputes in SQL."""
-    out_schema = T.StructType(
-        [
-            T.StructField("media_ref", T.StringType()),
-            T.StructField("frame_idx", T.IntegerType()),
-            T.StructField("n_frames", T.IntegerType()),
-            T.StructField("width", T.IntegerType()),
-            T.StructField("height", T.IntegerType()),
-            T.StructField("sum_r", T.LongType()),
-        ]
+
+    def row(ref, content):
+        b = bytes(content or b"")
+        if is_mpng(b):
+            frames = parse_mpng(b)
+            n = len(frames)
+            sampled = ((fi, png.decode_png(frames[fi])) for fi in range(0, n, every_k))
+        elif strict:
+            raise NotImplementedError("non-MPNG video decode requires ffmpeg, not available")
+        else:
+            n, sampled = 1, [(0, _decode_rgba(b)[0])]
+        return [(ref, fi, n, px.shape[1], px.shape[0], _sum_r(px)) for fi, px in sampled]
+
+    return _per_blob(
+        media,
+        ["media_ref", "content"],
+        _schema(
+            "media_ref string, frame_idx int, n_frames int, width int, height int,"
+            " sum_r long"
+        ),
+        row,
     )
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            refs, idxs, totals, ws, hs, sums = [], [], [], [], [], []
-            for ref, content in zip(pdf["media_ref"], pdf["content"]):
-                b = bytes(content or b"")
-                if is_mpng(b):
-                    frames = parse_mpng(b)
-                    for fi in range(0, len(frames), every_k):
-                        px = png.decode_png(frames[fi])
-                        refs.append(ref)
-                        idxs.append(fi)
-                        totals.append(len(frames))
-                        hs.append(px.shape[0])
-                        ws.append(px.shape[1])
-                        sums.append(int(px[..., 0].astype(np.int64).sum()))
-                    continue
-                if strict:
-                    raise NotImplementedError(
-                        "non-MPNG video decode requires ffmpeg, not available"
-                    )
-                px, _real = _decode_rgba(b)
-                refs.append(ref)
-                idxs.append(0)
-                totals.append(1)
-                hs.append(px.shape[0])
-                ws.append(px.shape[1])
-                sums.append(int(px[..., 0].astype(np.int64).sum()))
-            yield pd.DataFrame(
-                {
-                    "media_ref": refs,
-                    "frame_idx": np.array(idxs, dtype=np.int32),
-                    "n_frames": np.array(totals, dtype=np.int32),
-                    "width": np.array(ws, dtype=np.int32),
-                    "height": np.array(hs, dtype=np.int32),
-                    "sum_r": np.array(sums, dtype=np.int64),
-                }
-            )
-
-    return media.select("media_ref", "content").mapInPandas(fn, out_schema)
 
 
 def frame_sample(media: DataFrame, every_k: int = 10) -> DataFrame:
@@ -704,41 +528,27 @@ def frame_sample(media: DataFrame, every_k: int = 10) -> DataFrame:
     FRAME — the batch-shape contract a real decoder (ffmpeg) would have.
     Frame count/bytes are derived deterministically from the blob (the
     stubbed decode); frames are fixed-size slices of the blob, cycled."""
-    out_schema = T.StructType(
-        [
-            T.StructField("media_ref", T.StringType()),
-            T.StructField("frame_idx", T.IntegerType()),
-            T.StructField("n_frames", T.IntegerType()),
-            T.StructField("frame", T.BinaryType()),
-        ]
+
+    def row(ref, content, kind):
+        b = np.frombuffer(content or b"", dtype=np.uint8)
+        n_frames = 1 if kind == "image" else 1 + _fake_seed(b) % 120
+        fsize = max(len(b) // max(n_frames, 1), 1)
+        starts = ((fi, (fi * fsize) % max(len(b), 1)) for fi in range(0, n_frames, every_k))
+        return [(ref, fi, n_frames, b[st : st + fsize].tobytes()) for fi, st in starts]
+
+    return _per_blob(
+        media,
+        ["media_ref", "content", "media_kind"],
+        _schema("media_ref string, frame_idx int, n_frames int, frame binary"),
+        row,
     )
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            refs, idxs, totals, frames = [], [], [], []
-            for ref, content, kind in zip(
-                pdf["media_ref"], pdf["content"], pdf["media_kind"]
-            ):
-                b = np.frombuffer(content or b"", dtype=np.uint8)
-                seed = int(b[:8].astype(np.int64).sum()) if len(b) >= 8 else 0
-                n_frames = 1 if kind == "image" else 1 + seed % 120
-                fsize = max(len(b) // max(n_frames, 1), 1)
-                for fi in range(0, n_frames, every_k):
-                    start = (fi * fsize) % max(len(b), 1)
-                    refs.append(ref)
-                    idxs.append(fi)
-                    totals.append(n_frames)
-                    frames.append(b[start : start + fsize].tobytes())
-            yield pd.DataFrame(
-                {
-                    "media_ref": refs,
-                    "frame_idx": np.array(idxs, dtype=np.int32),
-                    "n_frames": np.array(totals, dtype=np.int32),
-                    "frame": frames,
-                }
-            )
 
-    return media.select("media_ref", "content", "media_kind").mapInPandas(fn, out_schema)
+def _encode_shifted_png(s: int, shift: int) -> bytes:
+    w, h = 16 + s % 17, 16 + s % 13
+    i = np.arange(w * h, dtype=np.int64)
+    r, g, b = (7 * s + 13 * i) % 255, (11 * s + 29 * i) % 255, (3 * i + s) % 200
+    return png.encode_png(_rgba(h, w, r + shift, g + shift, b + shift), filter_type=s % 5)
 
 
 def synth_shifted_png_media(refs: DataFrame) -> DataFrame:
@@ -758,37 +568,7 @@ def synth_shifted_png_media(refs: DataFrame) -> DataFrame:
 
     Input: (media_ref string, seed long, shift int).  Output matches
     synth_media_table: (media_ref, content, media_kind, n_bytes)."""
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out_refs, blobs, nbytes = [], [], []
-            for ref, seed, shift in zip(pdf["media_ref"], pdf["seed"], pdf["shift"]):
-                s, sh = int(seed), int(shift)
-                w, h = 16 + s % 17, 16 + s % 13
-                i = np.arange(w * h, dtype=np.int64)
-                px = np.empty((h, w, 4), dtype=np.uint8)
-                px[..., 0] = ((7 * s + 13 * i) % 255 + sh).reshape(h, w)
-                px[..., 1] = ((11 * s + 29 * i) % 255 + sh).reshape(h, w)
-                px[..., 2] = ((3 * i + s) % 200 + sh).reshape(h, w)
-                px[..., 3] = 255
-                data = png.encode_png(px, filter_type=s % 5)
-                out_refs.append(ref)
-                blobs.append(data)
-                nbytes.append(len(data))
-            yield pd.DataFrame(
-                {
-                    "media_ref": out_refs,
-                    "content": blobs,
-                    "media_kind": ["image"] * len(out_refs),
-                    "n_bytes": np.array(nbytes, dtype=np.int32),
-                }
-            )
-
-    return refs.select(
-        "media_ref",
-        F.col("seed").cast("long").alias("seed"),
-        F.col("shift").cast("int").alias("shift"),
-    ).mapInPandas(fn, MEDIA)
+    return _synth(refs, "image", _encode_shifted_png, "shift")
 
 
 def average_hash_rgba(px: np.ndarray) -> int:
@@ -832,34 +612,17 @@ def average_hash_media(media: DataFrame, strict: bool = True) -> DataFrame:
     that an exact byte hash misses — the image-side analog of the text
     MinHash tier (reference stores media by content hash only,
     share_func.py download path)."""
-    out_schema = T.StructType(
-        [
-            T.StructField("media_ref", T.StringType()),
-            T.StructField("width", T.IntegerType()),
-            T.StructField("height", T.IntegerType()),
-            T.StructField("ahash", T.StringType()),
-        ]
+
+    def row(ref, content):
+        px, _real = _decode_rgba(content, strict)
+        return [(ref, px.shape[1], px.shape[0], f"{average_hash_rgba(px):016x}")]
+
+    return _per_blob(
+        media,
+        ["media_ref", "content"],
+        _schema("media_ref string, width int, height int, ahash string"),
+        row,
     )
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            refs, widths, heights, hashes = [], [], [], []
-            for ref, content in zip(pdf["media_ref"], pdf["content"]):
-                px, _real = _decode_rgba(content, strict)
-                refs.append(ref)
-                heights.append(px.shape[0])
-                widths.append(px.shape[1])
-                hashes.append(f"{average_hash_rgba(px):016x}")
-            yield pd.DataFrame(
-                {
-                    "media_ref": refs,
-                    "width": np.array(widths, dtype=np.int32),
-                    "height": np.array(heights, dtype=np.int32),
-                    "ahash": hashes,
-                }
-            )
-
-    return media.select("media_ref", "content").mapInPandas(fn, out_schema)
 
 
 def synth_tagged_wav_media(refs: DataFrame) -> DataFrame:
@@ -869,36 +632,7 @@ def synth_tagged_wav_media(refs: DataFrame) -> DataFrame:
     with the seed so both word-alignment paths are exercised): the BYTES
     differ, the PCM samples do not.  Input (media_ref, seed long,
     retag int); output matches synth_media_table."""
-    from . import wav
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out_refs, blobs, nbytes = [], [], []
-            for ref, seed, retag in zip(pdf["media_ref"], pdf["seed"], pdf["retag"]):
-                s = int(seed)
-                rate = 8000 + 100 * (s % 5)
-                n = 500 + s % 300
-                i = np.arange(n, dtype=np.int64)
-                samples = (((37 * s + 11 * i) % 2003) - 1001).astype(np.int16)
-                info = (b"c" * (1 + s % 3)) if int(retag) else None
-                data = wav.encode_wav(samples, rate, info=info)
-                out_refs.append(ref)
-                blobs.append(data)
-                nbytes.append(len(data))
-            yield pd.DataFrame(
-                {
-                    "media_ref": out_refs,
-                    "content": blobs,
-                    "media_kind": ["audio"] * len(out_refs),
-                    "n_bytes": np.array(nbytes, dtype=np.int32),
-                }
-            )
-
-    return refs.select(
-        "media_ref",
-        F.col("seed").cast("long").alias("seed"),
-        F.col("retag").cast("int").alias("retag"),
-    ).mapInPandas(fn, MEDIA)
+    return _synth(refs, "audio", _encode_wav, "retag")
 
 
 def audio_fingerprint_media(media: DataFrame, strict: bool = True) -> DataFrame:
@@ -908,45 +642,23 @@ def audio_fingerprint_media(media: DataFrame, strict: bool = True) -> DataFrame:
     metadata fingerprints identically, while the byte-level content hash
     (the reference's media-store key) differs.  Group by the fingerprint
     to dedup.  Output (media_ref, rate, n_samples, pcm_md5)."""
-    import hashlib
 
-    from . import wav
+    def row(ref, content):
+        b = bytes(content or b"")
+        if not wav.is_wav(b):
+            if strict:
+                raise NotImplementedError("non-WAV audio decode not available")
+            return []
+        rate, samples = wav.decode_wav(b)
+        fp = hashlib.md5(str(rate).encode() + b"|" + samples.tobytes()).hexdigest()
+        return [(ref, rate, len(samples), fp)]
 
-    out_schema = T.StructType(
-        [
-            T.StructField("media_ref", T.StringType()),
-            T.StructField("rate", T.IntegerType()),
-            T.StructField("n_samples", T.IntegerType()),
-            T.StructField("pcm_md5", T.StringType()),
-        ]
+    return _per_blob(
+        media,
+        ["media_ref", "content"],
+        _schema("media_ref string, rate int, n_samples int, pcm_md5 string"),
+        row,
     )
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            refs, rates, counts, fps = [], [], [], []
-            for ref, content in zip(pdf["media_ref"], pdf["content"]):
-                b = bytes(content or b"")
-                if not wav.is_wav(b):
-                    if strict:
-                        raise NotImplementedError("non-WAV audio decode not available")
-                    continue
-                rate, samples = wav.decode_wav(b)
-                refs.append(ref)
-                rates.append(rate)
-                counts.append(len(samples))
-                fps.append(
-                    hashlib.md5(str(rate).encode() + b"|" + samples.tobytes()).hexdigest()
-                )
-            yield pd.DataFrame(
-                {
-                    "media_ref": refs,
-                    "rate": np.array(rates, dtype=np.int32),
-                    "n_samples": np.array(counts, dtype=np.int32),
-                    "pcm_md5": fps,
-                }
-            )
-
-    return media.select("media_ref", "content").mapInPandas(fn, out_schema)
 
 
 def synth_tagged_png_video(refs: DataFrame) -> DataFrame:
@@ -956,40 +668,7 @@ def synth_tagged_png_video(refs: DataFrame) -> DataFrame:
     instead of (s+f) % 5): the PNG byte streams differ, the decoded
     frames do not (all five filters are lossless).  Input (media_ref,
     seed long, refilter int); output matches synth_media_table."""
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out_refs, blobs, nbytes = [], [], []
-            for ref, seed, refl in zip(pdf["media_ref"], pdf["seed"], pdf["refilter"]):
-                s, shift = int(seed), int(refl)
-                nf, w, h = 3 + s % 8, 8 + s % 5, 8 + s % 3
-                i = np.arange(w * h, dtype=np.int64)
-                frames = []
-                for f in range(nf):
-                    px = np.empty((h, w, 4), dtype=np.uint8)
-                    px[..., 0] = ((5 * s + 7 * f + 11 * i) % 256).reshape(h, w)
-                    px[..., 1] = ((3 * s + 13 * f + 17 * i) % 256).reshape(h, w)
-                    px[..., 2] = ((s + f + i) % 5).reshape(h, w)
-                    px[..., 3] = 255
-                    frames.append(png.encode_png(px, filter_type=(s + f + shift) % 5))
-                data = encode_mpng(frames)
-                out_refs.append(ref)
-                blobs.append(data)
-                nbytes.append(len(data))
-            yield pd.DataFrame(
-                {
-                    "media_ref": out_refs,
-                    "content": blobs,
-                    "media_kind": ["video"] * len(out_refs),
-                    "n_bytes": np.array(nbytes, dtype=np.int32),
-                }
-            )
-
-    return refs.select(
-        "media_ref",
-        F.col("seed").cast("long").alias("seed"),
-        F.col("refilter").cast("int").alias("refilter"),
-    ).mapInPandas(fn, MEDIA)
+    return _synth(refs, "video", _encode_png_video, "refilter")
 
 
 def video_fingerprint_media(media: DataFrame, strict: bool = True) -> DataFrame:
@@ -999,43 +678,34 @@ def video_fingerprint_media(media: DataFrame, strict: bool = True) -> DataFrame:
     frames, different scanline filters / compression) fingerprints
     identically while its bytes, and the byte-level media-store key,
     differ.  Output (media_ref, n_frames, frames_md5)."""
-    import hashlib
 
-    out_schema = T.StructType(
-        [
-            T.StructField("media_ref", T.StringType()),
-            T.StructField("n_frames", T.IntegerType()),
-            T.StructField("frames_md5", T.StringType()),
-        ]
+    def row(ref, content):
+        b = bytes(content or b"")
+        if not is_mpng(b):
+            if strict:
+                raise NotImplementedError("non-MPNG video decode not available")
+            return []
+        h = hashlib.md5()
+        frames = parse_mpng(b)
+        for fb in frames:
+            px = png.decode_png(fb)
+            h.update(np.array(px.shape, dtype=np.int64).tobytes())
+            h.update(px.tobytes())
+        return [(ref, len(frames), h.hexdigest())]
+
+    return _per_blob(
+        media,
+        ["media_ref", "content"],
+        _schema("media_ref string, n_frames int, frames_md5 string"),
+        row,
     )
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            refs, counts, fps = [], [], []
-            for ref, content in zip(pdf["media_ref"], pdf["content"]):
-                b = bytes(content or b"")
-                if not is_mpng(b):
-                    if strict:
-                        raise NotImplementedError("non-MPNG video decode not available")
-                    continue
-                h = hashlib.md5()
-                frames = parse_mpng(b)
-                for fb in frames:
-                    px = png.decode_png(fb)
-                    h.update(np.array(px.shape, dtype=np.int64).tobytes())
-                    h.update(px.tobytes())
-                refs.append(ref)
-                counts.append(len(frames))
-                fps.append(h.hexdigest())
-            yield pd.DataFrame(
-                {
-                    "media_ref": refs,
-                    "n_frames": np.array(counts, dtype=np.int32),
-                    "frames_md5": fps,
-                }
-            )
 
-    return media.select("media_ref", "content").mapInPandas(fn, out_schema)
+def _encode_tagged_png_image(s: int) -> bytes:
+    text = {"Title": f"doc{s}"}
+    if s % 11 != 0:
+        text["Software"] = f"sw{s % 7}"
+    return png.encode_png(_image_px(s), filter_type=s % 5, text=text)
 
 
 def synth_png_media_tagged(refs: DataFrame) -> DataFrame:
@@ -1045,48 +715,7 @@ def synth_png_media_tagged(refs: DataFrame) -> DataFrame:
     handle missing keys, not just present ones).  Bytes therefore carry
     REAL in-band metadata the way crawled images do (Title/Software are
     the PNG spec's registered keywords)."""
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out_refs, blobs, nbytes = [], [], []
-            for ref, seed in zip(pdf["media_ref"], pdf["seed"]):
-                s = int(seed)
-                w, h = 16 + s % 17, 16 + s % 13
-                i = np.arange(w * h, dtype=np.int64)
-                px = np.empty((h, w, 4), dtype=np.uint8)
-                px[..., 0] = ((7 * s + 13 * i) % 256).reshape(h, w)
-                px[..., 1] = ((11 * s + 29 * i) % 256).reshape(h, w)
-                px[..., 2] = (1 + (3 * i + s) % 7).reshape(h, w)
-                px[..., 3] = 255
-                text = {"Title": f"doc{s}"}
-                if s % 11 != 0:
-                    text["Software"] = f"sw{s % 7}"
-                data = png.encode_png(px, filter_type=s % 5, text=text)
-                out_refs.append(ref)
-                blobs.append(data)
-                nbytes.append(len(data))
-            yield pd.DataFrame(
-                {
-                    "media_ref": out_refs,
-                    "content": blobs,
-                    "media_kind": ["image"] * len(out_refs),
-                    "n_bytes": np.array(nbytes, dtype=np.int32),
-                }
-            )
-
-    return refs.select("media_ref", F.col("seed").cast("long").alias("seed")).mapInPandas(
-        fn, MEDIA
-    )
-
-
-MEDIA_TEXT = T.StructType(
-    [
-        T.StructField("media_ref", T.StringType()),
-        T.StructField("title", T.StringType()),
-        T.StructField("software", T.StringType()),
-        T.StructField("n_keys", T.IntegerType()),
-    ]
-)
+    return _synth(refs, "image", _encode_tagged_png_image)
 
 
 def extract_media_text(media: DataFrame, strict: bool = False) -> DataFrame:
@@ -1098,27 +727,13 @@ def extract_media_text(media: DataFrame, strict: bool = False) -> DataFrame:
     header cost, deciding what to decode later.  Non-PNG blobs: strict
     raises (codec boundary), lax yields a null row."""
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            refs, titles, softwares, nkeys = [], [], [], []
-            for ref, content in zip(pdf["media_ref"], pdf["content"]):
-                try:
-                    chunks = png.png_text_chunks(content or b"")
-                except ValueError:
-                    if strict:
-                        raise
-                    chunks = None
-                refs.append(ref)
-                titles.append(None if chunks is None else chunks.get("Title"))
-                softwares.append(None if chunks is None else chunks.get("Software"))
-                nkeys.append(-1 if chunks is None else len(chunks))
-            yield pd.DataFrame(
-                {
-                    "media_ref": refs,
-                    "title": titles,
-                    "software": softwares,
-                    "n_keys": np.array(nkeys, dtype=np.int32),
-                }
-            )
+    def row(ref, content):
+        try:
+            chunks = png.png_text_chunks(content or b"")
+        except ValueError:
+            if strict:
+                raise
+            return [(ref, None, None, -1)]
+        return [(ref, chunks.get("Title"), chunks.get("Software"), len(chunks))]
 
-    return media.select("media_ref", "content").mapInPandas(fn, MEDIA_TEXT)
+    return _per_blob(media, ["media_ref", "content"], MEDIA_TEXT, row)

@@ -34,7 +34,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
-from .multimodal import binarize_rgba
+from .multimodal import _per_blob, binarize_rgba
 
 # classic 5x7 block font, digits only (the reference's captchas are
 # digits-only: `result.isdigit() else False`)
@@ -157,20 +157,13 @@ def recog_captcha(
     face of recogImage.  One mapInPandas stage; captchas are tiny, so the
     per-image loop inside the Arrow batch is not a hot path."""
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            codes = []
-            for content, w, h in zip(pdf[px_col], pdf[w_col], pdf[h_col]):
-                b = np.frombuffer(content or b"", dtype=np.uint8)
-                if len(b) != int(w) * int(h) * 4:
-                    codes.append(None)
-                    continue
-                codes.append(recog_rgba(b.reshape(int(h), int(w), 4)))
-            yield pd.DataFrame({"media_ref": pdf["media_ref"], "code": codes})
+    def row(ref, content, w, h):
+        b = np.frombuffer(content or b"", dtype=np.uint8)
+        if len(b) != int(w) * int(h) * 4:
+            return [(ref, None)]
+        return [(ref, recog_rgba(b.reshape(int(h), int(w), 4)))]
 
-    return media.select(
-        "media_ref", px_col, w_col, h_col
-    ).mapInPandas(fn, RECOG_SCHEMA)
+    return _per_blob(media, ["media_ref", px_col, w_col, h_col], RECOG_SCHEMA, row)
 
 
 def render_recog_identity(

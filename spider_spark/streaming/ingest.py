@@ -24,7 +24,10 @@ wants true always-on ingestion points the same code at
 from __future__ import annotations
 
 from pyspark.sql import SparkSession
+from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from .lakehouse import _drain
 
 SEED_SCHEMA = T.StructType(
     [
@@ -43,25 +46,16 @@ def ingest_seed_stream(
     """Drain all unprocessed seed files (JSON lines: {"url", "priority"})
     from ``seeds_dir`` into ``crawler``'s frontier.  Returns the number
     of genuinely new URLs enqueued by THIS invocation."""
-    stream = spark.readStream.schema(SEED_SCHEMA).json(seeds_dir)
     enqueued = [0]
 
     def _sink(batch_df, batch_id: int) -> None:
         # rows with a null url (malformed lines) are dropped here; a
         # malformed PRIORITY is null -> cast to int stays null -> treated
         # as lowest urgency by coalescing to a large value
-        from pyspark.sql import functions as F
-
         batch = batch_df.filter(F.col("url").isNotNull()).select(
             "url", F.coalesce(F.col("priority"), F.lit(1 << 20)).alias("priority")
         )
         enqueued[0] += crawler.enqueue_seeds(batch)
 
-    q = (
-        stream.writeStream.foreachBatch(_sink)
-        .trigger(availableNow=True)
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
-    )
-    q.awaitTermination()
+    _drain(spark.readStream.schema(SEED_SCHEMA).json(seeds_dir), _sink, checkpoint_dir)
     return enqueued[0]

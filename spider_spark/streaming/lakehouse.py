@@ -20,8 +20,35 @@ in the documents table while readers time-travel behind the pointer).
 from __future__ import annotations
 
 import hashlib
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
+
+
+def _drain(
+    stream: DataFrame, sink: Callable[[DataFrame, int], None], checkpoint_dir: str
+) -> None:
+    """The one ``Trigger.AvailableNow`` driver of this package's
+    foreachBatch streams: run ``sink(batch_df, batch_id)`` over every
+    micro-batch ``stream`` has now, checkpointed at ``checkpoint_dir``,
+    and return once they are drained."""
+    (
+        stream.writeStream.foreachBatch(sink)
+        .trigger(availableNow=True)
+        .option("checkpointLocation", checkpoint_dir)
+        .start()
+        .awaitTermination()
+    )
+
+
+def _parquet_stream(
+    spark: SparkSession, src_dir: str, schema, max_files_per_trigger: int | None
+) -> DataFrame:
+    reader = spark.readStream.schema(schema)
+    if max_files_per_trigger is not None:
+        reader = reader.option("maxFilesPerTrigger", int(max_files_per_trigger))
+    return reader.parquet(src_dir)
 
 
 def stream_append_table(
@@ -53,10 +80,6 @@ def stream_append_table(
     batch.
     """
     key = txn_key or "stream:" + hashlib.md5(checkpoint_dir.encode()).hexdigest()[:12]
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", int(max_files_per_trigger))
-    stream = reader.parquet(src_dir)
     appended = [0]
 
     def _sink(batch_df: DataFrame, batch_id: int) -> None:
@@ -64,13 +87,9 @@ def stream_append_table(
         if store.append_txn(table, out, key, int(batch_id), partition_by) is not None:
             appended[0] += 1
 
-    q = (
-        stream.writeStream.foreachBatch(_sink)
-        .trigger(availableNow=True)
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
+    _drain(
+        _parquet_stream(spark, src_dir, schema, max_files_per_trigger), _sink, checkpoint_dir
     )
-    q.awaitTermination()
     return appended[0]
 
 
@@ -105,15 +124,7 @@ def stream_merge_table(
     order; rows WITHIN one batch must be key-unique — pre-aggregate in
     ``transform`` if the feed can repeat a key per file.  ``txn_key``
     defaults like stream_append_table's (per-checkpoint batch ids)."""
-    import hashlib as _hashlib
-
-    from pyspark.sql import functions as F
-
-    tkey = txn_key or "cdc:" + _hashlib.md5(checkpoint_dir.encode()).hexdigest()[:12]
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", int(max_files_per_trigger))
-    stream = reader.parquet(src_dir)
+    tkey = txn_key or "cdc:" + hashlib.md5(checkpoint_dir.encode()).hexdigest()[:12]
     applied = [0]
 
     def _sink(batch_df: DataFrame, batch_id: int) -> None:
@@ -129,11 +140,7 @@ def stream_merge_table(
         )
         applied[0] += 1
 
-    q = (
-        stream.writeStream.foreachBatch(_sink)
-        .trigger(availableNow=True)
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
+    _drain(
+        _parquet_stream(spark, src_dir, schema, max_files_per_trigger), _sink, checkpoint_dir
     )
-    q.awaitTermination()
     return applied[0]

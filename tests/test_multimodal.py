@@ -376,3 +376,121 @@ def test_video_fingerprint_catches_refiltered_copy(spark):
     assert got["base"]["frames_md5"] != got["short"]["frames_md5"]
     assert got["base"]["frames_md5"] != got["bumped"]["frames_md5"]
     assert got["base"]["n_frames"] == 4 and got["short"]["n_frames"] == 3
+
+
+def test_only_the_per_blob_helper_calls_map_in_pandas():
+    """Every media operator and store builder is a row function behind
+    ``_per_blob``: no other function in multimodal.py builds its own
+    mapInPandas batch loop."""
+    import ast
+    from pathlib import Path
+
+    path = Path(__file__).resolve().parent.parent / "spider_spark/functions/multimodal.py"
+    tree = ast.parse(path.read_text())
+    callers = {
+        f.name
+        for f in tree.body if isinstance(f, ast.FunctionDef)
+        for n in ast.walk(f)
+        if isinstance(n, ast.Attribute) and n.attr == "mapInPandas"
+    }
+    assert callers == {"_per_blob"}
+
+
+# md5 over the sorted (media_ref, content) rows of each builder for
+# seeds 0..39 (flags = seed % 2); no oracle reads the store bytes
+_BUILDER_MD5 = {
+    "synth_png_media": "ae6b6bb9cbea185e70b27a1fc3f872c3",
+    "synth_png_media_tagged": "68119e62d2b3f91cf973e3f4bc4091fc",
+    "synth_shifted_png_media": "788661d4e7aa90fe261ad9f5d2886c84",
+    "synth_jpeg_media": "b61454830b5281df80be2b5dc6e4ed38",
+    "synth_wav_media": "e8458760af1c066a79973f9b75df0a41",
+    "synth_tagged_wav_media": "2668408159148444cacef5e88aa86493",
+    "synth_png_video": "435c4de0005b280ed77137c559a0da70",
+    "synth_tagged_png_video": "7fee385ffd85d50f00c4d6f7f1f051bb",
+}
+
+
+def test_synth_builders_bytes_are_pinned(spark):
+    import hashlib
+
+    from pyspark.sql import functions as F
+
+    from spider_spark.functions import multimodal as mm
+
+    refs = spark.range(40).select(
+        F.concat(F.lit("media://pin/"), F.col("id")).alias("media_ref"),
+        F.col("id").alias("seed"),
+        *[(F.col("id") % 2).cast("int").alias(c) for c in ("shift", "retag", "refilter")],
+    )
+    got = {}
+    for name in _BUILDER_MD5:
+        rows = getattr(mm, name)(refs).collect()
+        assert all(r["n_bytes"] == len(r["content"]) for r in rows)
+        h = hashlib.md5()
+        for ref, content in sorted((r["media_ref"], bytes(r["content"])) for r in rows):
+            h.update(ref.encode() + b"\0" + content)
+        got[name] = h.hexdigest()
+    assert got == _BUILDER_MD5
+
+
+def test_media_operators_on_empty_input_keep_their_schema(spark):
+    from pyspark.sql import functions as F
+
+    from spider_spark.functions import multimodal as mm
+
+    refs = spark.range(4).select(
+        F.concat(F.lit("media://e/"), F.col("id")).alias("media_ref"),
+        F.col("id").alias("seed"),
+    )
+    empty = mm.synth_png_media(refs).filter(F.col("n_bytes") < 0)
+    schemas = {
+        "decode_and_featurize": "media_ref:string,media_kind:string,n_bytes:int,"
+        "width:int,height:int,n_frames:int,byte_entropy:double",
+        "binarize_media": "media_ref:string,width:int,height:int,binarized:binary,"
+        "frac_white:double,n_white:int",
+        "resize_media": "media_ref:string,width:int,height:int,content:binary",
+        "resize_stats": "media_ref:string,width:int,height:int,sum_r:bigint",
+        "jpeg_stats": "media_ref:string,width:int,height:int,sum_r:bigint",
+        "wav_stats": "media_ref:string,sample_rate:int,n_samples:int,sum_amp:bigint",
+        "sample_frame_stats": "media_ref:string,frame_idx:int,n_frames:int,"
+        "width:int,height:int,sum_r:bigint",
+        "frame_sample": "media_ref:string,frame_idx:int,n_frames:int,frame:binary",
+        "average_hash_media": "media_ref:string,width:int,height:int,ahash:string",
+        "audio_fingerprint_media": "media_ref:string,rate:int,n_samples:int,pcm_md5:string",
+        "video_fingerprint_media": "media_ref:string,n_frames:int,frames_md5:string",
+        "extract_media_text": "media_ref:string,title:string,software:string,n_keys:int",
+    }
+    for name, fields in schemas.items():
+        out = getattr(mm, name)(empty)
+        assert out.schema.simpleString() == f"struct<{fields}>", name
+        assert out.collect() == [], name
+
+
+def test_lax_operators_skip_or_null_undecodable_blobs(spark):
+    """Lax mode over a mixed store: the audio and video fingerprints drop
+    blobs they cannot decode, extract_media_text keeps them as a NULL
+    row with n_keys = -1."""
+    from pyspark.sql import functions as F
+
+    from spider_spark.functions import multimodal as mm
+
+    def refs(kind):
+        return spark.range(3).select(
+            F.concat(F.lit(f"{kind}/"), F.col("id")).alias("media_ref"),
+            F.col("id").alias("seed"),
+        )
+
+    media = (
+        mm.synth_png_media_tagged(refs("img"))
+        .unionByName(mm.synth_wav_media(refs("aud")))
+        .unionByName(mm.synth_png_video(refs("vid")))
+    )
+    audio = mm.audio_fingerprint_media(media, strict=False).collect()
+    assert sorted(r["media_ref"] for r in audio) == ["aud/0", "aud/1", "aud/2"]
+    video = mm.video_fingerprint_media(media, strict=False).collect()
+    assert sorted(r["media_ref"] for r in video) == ["vid/0", "vid/1", "vid/2"]
+    text = {r["media_ref"]: tuple(r)[1:] for r in mm.extract_media_text(media).collect()}
+    assert len(text) == 9
+    for s in range(3):
+        assert text[f"img/{s}"] == (f"doc{s}", None if s == 0 else f"sw{s}", 1 if s == 0 else 2)
+        assert text[f"aud/{s}"] == text[f"vid/{s}"] == (None, None, -1)
