@@ -16,7 +16,10 @@ would see zero new files and drain an empty batch.
 
 from __future__ import annotations
 
+import contextlib
+import datetime
 import os
+import time
 
 from pyspark.sql import Window
 from pyspark.sql import functions as F
@@ -36,6 +39,33 @@ def _stage(spark, sf_dir: str, tag: str, transform=None) -> tuple[str, str]:
     else:
         transform(_t(spark, sf_dir, "events")).write.mode("overwrite").parquet(src)
     return src, os.path.join(root, "cp")
+
+
+def _add_file(df, src: str) -> None:
+    """Append ``df`` to ``src`` as one newer file."""
+    df.coalesce(1).write.mode("append").parquet(src)
+    time.sleep(0.05)  # distinct mtimes: file source orders oldest-first
+
+
+def _sentinels(spark, src: str, rows_at) -> None:
+    """The two far-future sentinel files (+10d, +20d past the latest
+    staged event): file ``i`` holds ``rows_at(i, ts)``, events-shaped."""
+    ev = spark.read.parquet(src)
+    mx = ev.agg(F.max("ts")).collect()[0][0]
+    for i, days in enumerate((10, 20)):
+        rows = rows_at(i, mx + datetime.timedelta(days=days))
+        _add_file(spark.createDataFrame(rows, ev.schema), src)
+
+
+@contextlib.contextmanager
+def _utc(spark):
+    """Pin the session timezone to UTC for the block, then restore it."""
+    tz = spark.conf.get("spark.sql.session.timeZone")
+    spark.conf.set("spark.sql.session.timeZone", "UTC")
+    try:
+        yield
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", tz)
 
 
 @q(
@@ -58,17 +88,13 @@ def st1_stream_window_counts(spark, sf_dir):
     # label always round-trips the parquet wall clock.  Timezone-aware
     # expressions capture the zone at analysis time, so restoring the
     # conf after the (eagerly analyzed) result frame is built is safe.
-    tz = spark.conf.get("spark.sql.session.timeZone")
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    try:
+    with _utc(spark):
         out = windowed_event_counts_stream(spark, src, cp)
         return out.select(
             F.date_format("window_start", "yyyy-MM-dd").alias("day"),
             "event_type",
             F.col("n").cast("long").alias("n"),
         )
-    finally:
-        spark.conf.set("spark.sql.session.timeZone", tz)
 
 
 @q(
@@ -202,27 +228,11 @@ def st6_stream_session_window(spark, sf_dir):
     sentinel sessions stay in state unemitted.  Output therefore equals
     the batch aggregate the w9 gaps-and-islands SQL restates.  Session
     TZ pinned to UTC for the NTZ casts (st1 pattern)."""
-    import datetime
-    import time
-
     from .streaming.windows import session_window_stream
 
     src, cp = _stage(spark, sf_dir, "st6")
-    tz = spark.conf.get("spark.sql.session.timeZone")
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    try:
-        ev = spark.read.parquet(src)
-        mx = ev.agg(F.max("ts").alias("m")).collect()[0]["m"]
-        for days in (10, 20):
-            row = [(int(-1), mx + datetime.timedelta(days=days), int(-1),
-                    "sentinel", 0.0, "{}")]
-            (
-                spark.createDataFrame(row, ev.schema)
-                .coalesce(1)
-                .write.mode("append")
-                .parquet(src)
-            )
-            time.sleep(0.05)  # distinct mtimes: file source orders oldest-first
+    with _utc(spark):
+        _sentinels(spark, src, lambda i, ts: [(-1, ts, -1, "sentinel", 0.0, "{}")])
         out = session_window_stream(spark, src, cp)
         # the sentinel user's sessions are staging scaffolding (a final
         # no-data batch can flush sentinel #1 once #2 advances the
@@ -233,8 +243,6 @@ def st6_stream_session_window(spark, sf_dir):
             F.unix_micros(F.col("session_end")).alias("session_end"),
             F.col("n_events").cast("long").alias("n_events"),
         )
-    finally:
-        spark.conf.set("spark.sql.session.timeZone", tz)
 
 
 @q(
@@ -318,8 +326,6 @@ def st8_stream_cdc_merge(spark, sf_dir):
     with the SAME txn key — batch ids replay from 0 and every one must
     be skipped (RAISES otherwise); the graded bytes are the final
     mirror table."""
-    import time
-
     from .storage import TableStore
     from .streaming.lakehouse import stream_merge_table
 
@@ -328,23 +334,16 @@ def st8_stream_cdc_merge(spark, sf_dir):
     os.makedirs(src)
     store = TableStore(spark, os.path.join(root, "store"))
 
-    def _file(df):
-        df.coalesce(1).write.mode("append").parquet(src)
-        time.sleep(0.05)  # distinct mtimes: file source orders oldest-first
+    def kv(a, b, off=None):
+        """Keys a..b-1 upserting v = k + off, or deleting when off is None."""
+        v = F.lit(0).cast("long") if off is None else F.col("id") + off
+        return spark.range(a, b).select(
+            F.col("id").alias("k"), v.alias("v"), F.lit(off is None).alias("del")
+        )
 
-    r = lambda a, b: spark.range(a, b)  # noqa: E731
-    _file(r(0, 200).select(F.col("id").alias("k"), F.col("id").alias("v"),
-                           F.lit(False).alias("del")))
-    _file(r(100, 300).select(F.col("id").alias("k"),
-                             (F.col("id") + 1000).alias("v"),
-                             F.lit(False).alias("del")))
-    _file(
-        r(200, 400).select(F.col("id").alias("k"), (F.col("id") + 2000).alias("v"),
-                           F.lit(False).alias("del"))
-        .unionByName(r(150, 180).select(F.col("id").alias("k"),
-                                        F.lit(0).cast("long").alias("v"),
-                                        F.lit(True).alias("del")))
-    )
+    _add_file(kv(0, 200, 0), src)
+    _add_file(kv(100, 300, 1000), src)
+    _add_file(kv(200, 400, 2000).unionByName(kv(150, 180)), src)
     schema = spark.read.parquet(src).schema
     n1 = stream_merge_table(
         spark, src, schema, store, "mirror", os.path.join(root, "cp"),
@@ -389,28 +388,13 @@ def st9_stream_outer_join(spark, sf_dir):
     null rows, and the sentinels themselves (negative event ids) stay
     in state, filtered here.  Output is id pairs only — no instants
     surface, so the session timezone is irrelevant."""
-    import datetime
-    import time
-
     from .streaming.windows import stream_stream_outer_join_pairs
 
     src, cp = _stage(spark, sf_dir, "st9")
-    ev = spark.read.parquet(src)
-    mx = ev.agg(F.max("ts").alias("m")).collect()[0]["m"]
-    for i, days in enumerate((10, 20)):
-        rows = [
-            (int(-(2 * i + 1)), mx + datetime.timedelta(days=days), int(-1),
-             "view", 0.0, "{}"),
-            (int(-(2 * i + 2)), mx + datetime.timedelta(days=days), int(-1),
-             "click", 0.0, "{}"),
-        ]
-        (
-            spark.createDataFrame(rows, ev.schema)
-            .coalesce(1)
-            .write.mode("append")
-            .parquet(src)
-        )
-        time.sleep(0.05)  # distinct mtimes: file source orders oldest-first
+    _sentinels(spark, src, lambda i, ts: [
+        (-(2 * i + 1), ts, -1, "view", 0.0, "{}"),
+        (-(2 * i + 2), ts, -1, "click", 0.0, "{}"),
+    ])
     out = stream_stream_outer_join_pairs(spark, src, cp)
     return out.filter(F.col("l_id") >= 0).select(
         F.col("l_id").cast("long").alias("l_id"),

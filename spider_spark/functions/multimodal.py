@@ -611,10 +611,13 @@ def average_hash_media(media: DataFrame, strict: bool = True) -> DataFrame:
     Group-by this column to find brightness/re-encode near-duplicates
     that an exact byte hash misses — the image-side analog of the text
     MinHash tier (reference stores media by content hash only,
-    share_func.py download path)."""
+    share_func.py download path).  Lax mode skips a blob that decodes to
+    fewer than 8x8 pixels (a short fake-decoded blob); strict raises."""
 
     def row(ref, content):
         px, _real = _decode_rgba(content, strict)
+        if not strict and min(px.shape[:2]) < 8:
+            return []
         return [(ref, px.shape[1], px.shape[0], f"{average_hash_rgba(px):016x}")]
 
     return _per_blob(

@@ -13,7 +13,7 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
@@ -113,16 +113,7 @@ def query_signature(query_vec: list[float], n_planes: int = 12, seed: int = 42) 
 def probe_signatures(qsig: int, n_planes: int, probe_hamming: int) -> list[int]:
     """Multi-probe LSH bucket enumeration: every signature within
     ``probe_hamming`` bit flips of the query's — C(n_planes, ≤h) values."""
-    from itertools import combinations
-
-    out = []
-    for h in range(probe_hamming + 1):
-        for bits in combinations(range(n_planes), h):
-            s = qsig
-            for b in bits:
-                s ^= 1 << b
-            out.append(s)
-    return out
+    return [qsig ^ m for m in probe_masks(n_planes, probe_hamming)]
 
 
 def ann_lsh_topk(
@@ -173,6 +164,17 @@ def probe_masks(n_planes: int, probe_hamming: int) -> list[int]:
                 m |= 1 << b
             out.append(m)
     return out
+
+
+def _topk_per_query(scored: DataFrame, k: int, score: str, id_col: str) -> DataFrame:
+    """The ``k`` best rows of each ``query_id`` by descending ``score``,
+    ties broken on ascending ``id_col`` (one row_number window)."""
+    w = Window.partitionBy("query_id").orderBy(F.desc(score), F.asc(id_col))
+    return (
+        scored.withColumn("_rn", F.row_number().over(w))
+        .filter(F.col("_rn") <= k)
+        .drop("_rn")
+    )
 
 
 def ann_topk_batch(
@@ -226,14 +228,7 @@ def ann_topk_batch(
         id_col,
         F.round(cosine_col(F.col(vec_col), F.col("_qvec")), 4).alias("cos_sim"),
     )
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc(id_col))
-    return (
-        scored.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") <= k)
-        .drop("_rn")
-    )
+    return _topk_per_query(scored, k, "cos_sim", id_col)
 
 
 def ivf_topk_batch(
@@ -272,14 +267,7 @@ def ivf_topk_batch(
         id_col,
         F.round(cosine_col(F.col(vec_col), F.col("_qvec")), 4).alias("cos_sim"),
     )
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc(id_col))
-    return (
-        scored.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") <= k)
-        .drop("_rn")
-    )
+    return _topk_per_query(scored, k, "cos_sim", id_col)
 
 
 def pq_topk_batch(
@@ -352,14 +340,7 @@ def pq_topk_batch(
         .groupBy("query_id", id_col)
         .agg(F.sum("partial").alias("adc"))
     )
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("query_id").orderBy(F.desc("adc"), F.asc(id_col))
-    pool = (
-        scored.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") <= rerank)
-        .select("query_id", id_col)
-    )
+    pool = _topk_per_query(scored, rerank, "adc", id_col).select("query_id", id_col)
     cand = pool.join(base.select(id_col, vec_col), id_col)
     qv = q.select("query_id", "_qvec")
     paired = cand.join(F.broadcast(qv), "query_id")
@@ -367,12 +348,7 @@ def pq_topk_batch(
         "query_id", id_col,
         F.round(cosine_col(F.col(vec_col), F.col("_qvec")), 4).alias("cos_sim"),
     )
-    w2 = Window.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc(id_col))
-    return (
-        rescored.withColumn("_rn", F.row_number().over(w2))
-        .filter(F.col("_rn") <= k)
-        .drop("_rn")
-    )
+    return _topk_per_query(rescored, k, "cos_sim", id_col)
 
 
 def train_ivf_centroids(
@@ -606,8 +582,6 @@ def quantized_kmeans_assign(
     k ~ sqrt(N) and feed real k-means++ centroids; the assignment plan
     is unchanged.  Replaces the reference's single-process dedup scan
     (phone_book.py:107-110) with the SemDeDup front half."""
-    from pyspark.sql import Window
-
     q = df.select(F.col(id_col), int8_quantize_col(F.col(vec_col)).alias("q"))
     cent = (
         q.orderBy(id_col)

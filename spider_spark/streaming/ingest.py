@@ -57,5 +57,6 @@ def ingest_seed_stream(
         )
         enqueued[0] += crawler.enqueue_seeds(batch)
 
-    _drain(spark.readStream.schema(SEED_SCHEMA).json(seeds_dir), _sink, checkpoint_dir)
+    stream = spark.readStream.schema(SEED_SCHEMA).json(seeds_dir)
+    _drain(stream.writeStream.foreachBatch(_sink), checkpoint_dir)
     return enqueued[0]

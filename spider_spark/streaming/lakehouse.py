@@ -20,22 +20,19 @@ in the documents table while readers time-travel behind the pointer).
 from __future__ import annotations
 
 import hashlib
-from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import DataStreamWriter
 
 
-def _drain(
-    stream: DataFrame, sink: Callable[[DataFrame, int], None], checkpoint_dir: str
-) -> None:
-    """The one ``Trigger.AvailableNow`` driver of this package's
-    foreachBatch streams: run ``sink(batch_df, batch_id)`` over every
-    micro-batch ``stream`` has now, checkpointed at ``checkpoint_dir``,
-    and return once they are drained."""
+def _drain(writer: DataStreamWriter, checkpoint_dir: str) -> None:
+    """The one ``Trigger.AvailableNow`` driver of this package's streams:
+    run the configured ``writer`` (a foreachBatch or memory sink) over
+    every micro-batch its stream has now, checkpointed at
+    ``checkpoint_dir``, and return once they are drained."""
     (
-        stream.writeStream.foreachBatch(sink)
-        .trigger(availableNow=True)
+        writer.trigger(availableNow=True)
         .option("checkpointLocation", checkpoint_dir)
         .start()
         .awaitTermination()
@@ -87,9 +84,8 @@ def stream_append_table(
         if store.append_txn(table, out, key, int(batch_id), partition_by) is not None:
             appended[0] += 1
 
-    _drain(
-        _parquet_stream(spark, src_dir, schema, max_files_per_trigger), _sink, checkpoint_dir
-    )
+    stream = _parquet_stream(spark, src_dir, schema, max_files_per_trigger)
+    _drain(stream.writeStream.foreachBatch(_sink), checkpoint_dir)
     return appended[0]
 
 
@@ -140,7 +136,6 @@ def stream_merge_table(
         )
         applied[0] += 1
 
-    _drain(
-        _parquet_stream(spark, src_dir, schema, max_files_per_trigger), _sink, checkpoint_dir
-    )
+    stream = _parquet_stream(spark, src_dir, schema, max_files_per_trigger)
+    _drain(stream.writeStream.foreachBatch(_sink), checkpoint_dir)
     return applied[0]

@@ -7,23 +7,52 @@ windowed aggregation and streaming dedup, run with Trigger.AvailableNow
 so each invocation processes exactly the available data — the 1:1
 mapping of "one crawl round == one micro-batch".
 
-The memory sink used here is the test/grade sink (results are small
-aggregates); a production deployment points writeStream at a parquet/
-TableStore sink with the same checkpoint dir — the state store, the
-watermark, and the availableNow drain are sink-independent.
+Every query reads the events through ``_events`` and drains through
+``_to_memory``, which hands its memory-sink writer to
+``lakehouse._drain``, the package's one availableNow driver.  The memory
+sink is the test/grade sink (results are small aggregates); a
+production deployment points writeStream at a parquet/TableStore sink
+with the same checkpoint dir — the state store, the watermark, and the
+availableNow drain are sink-independent.
 """
 
 from __future__ import annotations
 
+import itertools
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-_COUNTER = [0]
+from .lakehouse import _drain, _parquet_stream
+
+_QUERY_IDS = itertools.count(1)
 
 
-def _next_name(prefix: str) -> str:
-    _COUNTER[0] += 1
-    return f"{prefix}_{_COUNTER[0]}"
+def _events(spark: SparkSession, path: str, max_files: int | None = None) -> DataFrame:
+    """The events stream under ``path``, ``ts`` cast from parquet NTZ to a
+    session-TZ TIMESTAMP (watermarks require TIMESTAMP, not
+    TIMESTAMP_NTZ)."""
+    schema = spark.read.parquet(path).schema
+    stream = _parquet_stream(spark, path, schema, max_files)
+    return stream.withColumn("ts", F.col("ts").cast("timestamp"))
+
+
+def _to_memory(stream: DataFrame, prefix: str, mode: str, checkpoint_dir: str) -> DataFrame:
+    """Drain ``stream`` into a fresh memory table ``{prefix}_{n}`` in
+    output ``mode``, checkpointed at ``{checkpoint_dir}/{prefix}_{n}``,
+    and return that table."""
+    name = f"{prefix}_{next(_QUERY_IDS)}"
+    writer = stream.writeStream.format("memory").queryName(name).outputMode(mode)
+    _drain(writer, f"{checkpoint_dir}/{name}")
+    return stream.sparkSession.table(name)
+
+
+def _window_counts(events: DataFrame, window: str) -> DataFrame:
+    return (
+        events.groupBy(F.window("ts", window).alias("w"), "event_type")
+        .agg(F.count(F.lit(1)).alias("n"))
+        .select(F.col("w.start").alias("window_start"), "event_type", "n")
+    )
 
 
 def windowed_event_counts_stream(
@@ -39,38 +68,13 @@ def windowed_event_counts_stream(
     Late rows beyond the watermark are dropped by the engine; with
     availableNow over static files the result equals the batch groupBy
     (verified in tests)."""
-    schema = spark.read.parquet(events_path).schema
-    stream = spark.readStream.schema(schema).parquet(events_path)
-    # parquet NTZ timestamps -> session-TZ timestamps (watermarks require
-    # TIMESTAMP, not TIMESTAMP_NTZ)
-    stream = stream.withColumn("ts", F.col("ts").cast("timestamp"))
-    agg = (
-        stream.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", window).alias("w"), "event_type")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .select(F.col("w.start").alias("window_start"), "event_type", "n")
-    )
-    name = _next_name("win_counts")
-    q = (
-        agg.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", f"{checkpoint_dir}/{name}")
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(name)
+    events = _events(spark, events_path).withWatermark("ts", watermark)
+    return _to_memory(_window_counts(events, window), "win_counts", "complete", checkpoint_dir)
 
 
 def windowed_event_counts_batch(spark: SparkSession, events_path: str, window: str = "1 day") -> DataFrame:
-    return (
-        spark.read.parquet(events_path)
-        .withColumn("ts", F.col("ts").cast("timestamp"))
-        .groupBy(F.window("ts", window).alias("w"), "event_type")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .select(F.col("w.start").alias("window_start"), "event_type", "n")
-    )
+    events = spark.read.parquet(events_path).withColumn("ts", F.col("ts").cast("timestamp"))
+    return _window_counts(events, window)
 
 
 def streaming_dedup(
@@ -83,21 +87,8 @@ def streaming_dedup(
     """Streaming exact dedup with state TTL via watermark —
     the streaming twin of the seen-set anti-join (J5)."""
     keys = keys or ["user_id", "event_type"]
-    schema = spark.read.parquet(events_path).schema
-    stream = spark.readStream.schema(schema).parquet(events_path)
-    stream = stream.withColumn("ts", F.col("ts").cast("timestamp"))
-    dedup = stream.withWatermark("ts", watermark).dropDuplicatesWithinWatermark(keys)
-    name = _next_name("dedup")
-    q = (
-        dedup.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", f"{checkpoint_dir}/{name}")
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(name)
+    events = _events(spark, events_path).withWatermark("ts", watermark)
+    return _to_memory(events.dropDuplicatesWithinWatermark(keys), "dedup", "append", checkpoint_dir)
 
 
 def stream_static_join_counts(
@@ -113,21 +104,43 @@ def stream_static_join_counts(
     enrich (J1).  Spark broadcasts the dim side per batch when it is
     small, exactly the hot path a per-host config or geo dim takes at
     cluster scale.  Aggregated counts per dim label, availableNow."""
-    schema = spark.read.parquet(events_path).schema
-    stream = spark.readStream.schema(schema).parquet(events_path)
-    joined = stream.join(F.broadcast(dim), on=on, how="inner")
+    joined = _events(spark, events_path).join(F.broadcast(dim), on=on, how="inner")
     agg = joined.groupBy(label).agg(F.count(F.lit(1)).alias("n"))
-    name = _next_name("ssjoin")
-    q = (
-        agg.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", f"{checkpoint_dir}/{name}")
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(name)
+    return _to_memory(agg, "ssjoin", "complete", checkpoint_dir)
+
+
+def _interval_join(
+    spark: SparkSession,
+    events_path: str,
+    checkpoint_dir: str,
+    left_type: str,
+    right_type: str,
+    within: str,
+    watermark: str,
+    how: str,
+    max_files: int | None,
+    prefix: str,
+) -> DataFrame:
+    """(l_id, r_id) pairs of a watermarked stream-stream ``how`` join:
+    same-user ``right_type`` events inside [l_ts, l_ts + within] of each
+    ``left_type`` event."""
+
+    def _side(tag: str, ev_type: str) -> DataFrame:
+        s = _events(spark, events_path, max_files)
+        return s.filter(F.col("event_type") == ev_type).select(
+            F.col("event_id").alias(f"{tag}_id"),
+            F.col("user_id").alias(f"{tag}_user"),
+            F.col("ts").alias(f"{tag}_ts"),
+        ).withWatermark(f"{tag}_ts", watermark)
+
+    joined = _side("l", left_type).join(
+        _side("r", right_type),
+        F.expr(
+            f"l_user = r_user AND r_ts >= l_ts AND r_ts <= l_ts + interval {within}"
+        ),
+        how,
+    ).select(F.col("l_id"), F.col("r_id"))
+    return _to_memory(joined, prefix, "append", checkpoint_dir)
 
 
 def stream_stream_join_pairs(
@@ -150,37 +163,10 @@ def stream_stream_join_pairs(
     nothing is evicted early, so the result equals the batch interval
     join and DuckDB can state it exactly.
     """
-    schema = spark.read.parquet(events_path).schema
-
-    def _side(tag: str, ev_type: str) -> DataFrame:
-        s = spark.readStream.schema(schema).parquet(events_path)
-        s = s.withColumn("ts", F.col("ts").cast("timestamp"))
-        return s.filter(F.col("event_type") == ev_type).select(
-            F.col("event_id").alias(f"{tag}_id"),
-            F.col("user_id").alias(f"{tag}_user"),
-            F.col("ts").alias(f"{tag}_ts"),
-        ).withWatermark(f"{tag}_ts", watermark)
-
-    left = _side("l", left_type)
-    right = _side("r", right_type)
-    joined = left.join(
-        right,
-        F.expr(
-            f"l_user = r_user AND r_ts >= l_ts AND r_ts <= l_ts + interval {within}"
-        ),
-        "inner",
-    ).select(F.col("l_id"), F.col("r_id"))
-    name = _next_name("ssj")
-    q = (
-        joined.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", f"{checkpoint_dir}/{name}")
-        .start()
+    return _interval_join(
+        spark, events_path, checkpoint_dir, left_type, right_type, within, watermark,
+        "inner", None, "ssj",
     )
-    q.awaitTermination()
-    return spark.table(name)
 
 
 def stateful_running_counts(
@@ -199,10 +185,6 @@ def stateful_running_counts(
     import pandas as pd
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-    schema = spark.read.parquet(events_path).schema
-    stream = spark.readStream.schema(schema).parquet(events_path)
-    stream = stream.withColumn("ts", F.col("ts").cast("timestamp"))
-
     def update(key_tuple, pdfs, state: GroupState):
         n = 0
         total = 0.0
@@ -216,27 +198,14 @@ def stateful_running_counts(
         state.update((n, total))
         yield pd.DataFrame({key: [key_tuple[0]], "n": [n], "total": [round(total, 2)]})
 
-    out = (
-        stream.groupBy(key)
-        .applyInPandasWithState(
-            update,
-            outputStructType=f"{key} string, n long, total double",
-            stateStructType="n long, total double",
-            outputMode="update",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
+    out = _events(spark, events_path).groupBy(key).applyInPandasWithState(
+        update,
+        outputStructType=f"{key} string, n long, total double",
+        stateStructType="n long, total double",
+        outputMode="update",
+        timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    name = _next_name("stateful")
-    q = (
-        out.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", f"{checkpoint_dir}/{name}")
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(name)
+    return _to_memory(out, "stateful", "update", checkpoint_dir)
 
 
 def session_window_stream(
@@ -260,15 +229,9 @@ def session_window_stream(
     sentinel sessions themselves stay in state (the watermark never
     passes them) and are never emitted — the appended output is exactly
     the batch session_window aggregate over the real events."""
-    schema = spark.read.parquet(events_path).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(events_path)
-    )
-    stream = stream.withColumn("ts", F.col("ts").cast("timestamp"))
     agg = (
-        stream.withWatermark("ts", watermark)
+        _events(spark, events_path, max_files=1)
+        .withWatermark("ts", watermark)
         .groupBy("user_id", F.session_window("ts", gap).alias("w"))
         .agg(F.count(F.lit(1)).alias("n_events"))
         .select(
@@ -278,17 +241,7 @@ def session_window_stream(
             "n_events",
         )
     )
-    name = _next_name("sessions")
-    q = (
-        agg.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", f"{checkpoint_dir}/{name}")
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(name)
+    return _to_memory(agg, "sessions", "append", checkpoint_dir)
 
 
 def stream_stream_outer_join_pairs(
@@ -317,36 +270,7 @@ def stream_stream_outer_join_pairs(
     #2's batch performs the eviction pass that emits the null rows.  The
     sentinel rows themselves stay in state unemitted and carry negative
     ids the caller filters."""
-    schema = spark.read.parquet(events_path).schema
-
-    def _side(tag: str, ev_type: str) -> DataFrame:
-        s = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(events_path)
-        )
-        s = s.withColumn("ts", F.col("ts").cast("timestamp"))
-        return s.filter(F.col("event_type") == ev_type).select(
-            F.col("event_id").alias(f"{tag}_id"),
-            F.col("user_id").alias(f"{tag}_user"),
-            F.col("ts").alias(f"{tag}_ts"),
-        ).withWatermark(f"{tag}_ts", watermark)
-
-    joined = _side("l", left_type).join(
-        _side("r", right_type),
-        F.expr(
-            f"l_user = r_user AND r_ts >= l_ts AND r_ts <= l_ts + interval {within}"
-        ),
-        "leftOuter",
-    ).select(F.col("l_id"), F.col("r_id"))
-    name = _next_name("ssoj")
-    q = (
-        joined.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", f"{checkpoint_dir}/{name}")
-        .start()
+    return _interval_join(
+        spark, events_path, checkpoint_dir, left_type, right_type, within, watermark,
+        "leftOuter", 1, "ssoj",
     )
-    q.awaitTermination()
-    return spark.table(name)

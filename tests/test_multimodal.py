@@ -494,3 +494,30 @@ def test_lax_operators_skip_or_null_undecodable_blobs(spark):
     for s in range(3):
         assert text[f"img/{s}"] == (f"doc{s}", None if s == 0 else f"sw{s}", 1 if s == 0 else 2)
         assert text[f"aud/{s}"] == text[f"vid/{s}"] == (None, None, -1)
+
+
+def test_lax_average_hash_skips_blobs_under_8x8(spark):
+    """Lax average_hash_media drops a blob whose fake decode is smaller
+    than 8x8 pixels (100 bytes -> a 5x5 grid) instead of failing the
+    whole job; larger blobs and real PNGs still hash, and strict mode
+    still raises on the short blob."""
+    import pytest
+
+    from spider_spark.functions import multimodal as mm
+
+    refs = spark.createDataFrame([("img/0", 0)], "media_ref string, seed long")
+    blobs = spark.createDataFrame(
+        [("short", bytes(range(100)), "image", 100),
+         ("long", bytes(range(256)) * 2, "image", 512)],
+        mm.MEDIA,
+    )
+    got = {
+        r["media_ref"]: (r["width"], r["height"])
+        for r in mm.average_hash_media(
+            mm.synth_png_media(refs).unionByName(blobs), strict=False
+        ).collect()
+    }
+    assert set(got) == {"img/0", "long"}
+    assert got["long"] == (11, 11)  # 512 bytes -> 128 pixels -> 11x11
+    with pytest.raises(Exception, match="PIL/ffmpeg"):
+        mm.average_hash_media(blobs.filter("media_ref = 'short'"), strict=True).collect()

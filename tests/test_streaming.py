@@ -151,3 +151,51 @@ def test_session_window_stream_equals_batch(spark, tmp_path):
     g = {tuple(r) for r in got.collect()}
     e = {tuple(r) for r in exp.collect()}
     assert g == e and len(g) > 100
+
+
+def test_stream_stream_outer_join_equals_batch_left_join(spark, tmp_path):
+    """Left outer stream-stream join under the sentinel staging: the real
+    events, then two far-future files each holding a view and a click
+    sentinel (negative ids), drained one file per trigger.  The
+    non-sentinel pairs, NULL r_ids included, equal a batch left join
+    over the real events."""
+    import datetime
+    import time
+    from collections import Counter
+
+    from pyspark.sql import functions as F
+
+    from spider_spark.streaming.windows import stream_stream_outer_join_pairs
+
+    path = _events_dir(tmp_path)
+    raw = spark.read.parquet(path)
+    mx = raw.agg(F.max("ts")).collect()[0][0]
+    for i, days in enumerate((10, 20)):
+        ts = mx + datetime.timedelta(days=days)
+        rows = [(-(2 * i + 1), ts, -1, "view", 0.0, "{}"),
+                (-(2 * i + 2), ts, -1, "click", 0.0, "{}")]
+        spark.createDataFrame(rows, raw.schema).coalesce(1).write.mode("append").parquet(path)
+        time.sleep(0.05)
+    got = stream_stream_outer_join_pairs(spark, path, str(tmp_path / "cp_ssoj")).filter(
+        F.col("l_id") >= 0
+    )
+    ev = spark.read.parquet(f"{SF_DIR}/events.parquet").withColumn(
+        "ts", F.col("ts").cast("timestamp")
+    )
+    v = ev.filter(F.col("event_type") == "view").select(
+        F.col("event_id").alias("l_id"), F.col("user_id").alias("u"), F.col("ts").alias("l_ts")
+    )
+    c = ev.filter(F.col("event_type") == "click").select(
+        F.col("event_id").alias("r_id"), F.col("user_id").alias("cu"), F.col("ts").alias("r_ts")
+    )
+    exp = v.join(
+        c,
+        (v["u"] == c["cu"])
+        & (c["r_ts"] >= v["l_ts"])
+        & (c["r_ts"] <= v["l_ts"] + F.expr("interval 30 minutes")),
+        "left",
+    ).select("l_id", "r_id")
+    g = Counter(tuple(r) for r in got.collect())
+    e = Counter(tuple(r) for r in exp.collect())
+    assert g == e
+    assert {r is None for _, r in e} == {True, False}, "needs matched and unmatched views"
