@@ -7,8 +7,6 @@ for the Bloom fill band (c2) and the HLL error bound (a10)."""
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import functions as F
 
 from .catalog import _scratch, _t, q
@@ -620,42 +618,6 @@ def c14_stats_skip_scan(spark, sf_dir):
 
 
 @q(
-    "c15_wap_publish",
-    # ground truth: evens are published, odds are STAGED — the pre-publish
-    # probe must see only evens (the entry RAISES otherwise), the
-    # post-publish probe sees everything; publish is a pointer flip
-    """SELECT 'pre' AS probe, doc_id FROM documents
-       WHERE doc_id < 300 AND doc_id % 2 = 0
-       UNION ALL
-       SELECT 'post', doc_id FROM documents WHERE doc_id < 300""",
-)
-def c15_wap_publish(spark, sf_dir):
-    """Write-audit-publish end-to-end through the REAL TableStore
-    (storage.stage_append/publish — Iceberg WAP analog): the staged
-    append is durable and auditable via time-travel but invisible until
-    the atomic publish, the quality gate a training-data ingest needs.
-    The parquet bytes on disk are what get graded."""
-    from .storage import TableStore
-
-    root = _scratch("c15_store", sf_dir)
-    store = TableStore(spark, root)
-    ids = _t(spark, sf_dir, "documents").filter(F.col("doc_id") < 300).select(
-        F.col("doc_id").cast("long").alias("doc_id")
-    )
-    store.write("docs", ids.filter(F.col("doc_id") % 2 == 0))
-    v = store.stage_append("docs", ids.filter(F.col("doc_id") % 2 == 1))
-    pre = store.read("docs").select(F.lit("pre").alias("probe"), "doc_id")
-    # audit: the staged snapshot holds everything, the table only evens
-    n_staged = store.read_at("docs", version=v).count()
-    n_visible = store.read("docs").count()
-    if not (n_staged == 300 and n_visible == 150):
-        raise AssertionError(f"stage leaked: staged={n_staged} visible={n_visible}")
-    store.publish("docs", v)
-    post = store.read("docs").select(F.lit("post").alias("probe"), "doc_id")
-    return pre.unionByName(post)
-
-
-@q(
     "f20_sitemap_parse",
     # construct -> parse identity: each doc becomes a sitemap with one
     # prioritized <url> (priority '0.{i%9}' -> rank round(10*(1-p))) and
@@ -884,55 +846,6 @@ def c18_zorder_scan(spark, sf_dir):
 
 
 @q(
-    "c19_branch_publish",
-    # ground truth: odds land on the BRANCH across two commits — main
-    # ('pre') and the pre-fork tag see only evens (the entry RAISES
-    # otherwise), the branch head and post-fast-forward main see all
-    """SELECT 'pre' AS probe, doc_id FROM documents
-       WHERE doc_id < 300 AND doc_id % 2 = 0
-       UNION ALL
-       SELECT 'branch', doc_id FROM documents WHERE doc_id < 300
-       UNION ALL
-       SELECT 'tag', doc_id FROM documents
-       WHERE doc_id < 300 AND doc_id % 2 = 0
-       UNION ALL
-       SELECT 'post', doc_id FROM documents WHERE doc_id < 300""",
-)
-def c19_branch_publish(spark, sf_dir):
-    """Branch/tag refs end-to-end through the REAL TableStore (Iceberg
-    refs analog — WAP generalized from one staged snapshot to a whole
-    lineage): a tag pins the pre-fork corpus immutably, a branch takes
-    TWO isolated append commits that no main-table reader sees, and
-    fast_forward publishes the lineage as an atomic pointer move (CAS
-    on the fork base).  The audit-then-publish flow a training-data
-    ingest runs per round, with multi-commit audits.  The parquet bytes
-    on disk are what get graded."""
-    from .storage import TableStore
-
-    root = _scratch("c19_store", sf_dir)
-    store = TableStore(spark, root)
-    ids = _t(spark, sf_dir, "documents").filter(F.col("doc_id") < 300).select(
-        F.col("doc_id").cast("long").alias("doc_id")
-    )
-    store.write("docs", ids.filter(F.col("doc_id") % 2 == 0))
-    store.create_tag("docs", "pre-fork")
-    store.create_branch("docs", "audit")
-    store.append_to_branch("docs", "audit", ids.filter(F.col("doc_id") % 4 == 1))
-    store.append_to_branch("docs", "audit", ids.filter(F.col("doc_id") % 4 == 3))
-    pre = store.read("docs").select(F.lit("pre").alias("probe"), "doc_id")
-    n_main, n_branch = store.read("docs").count(), store.read_ref("docs", "audit").count()
-    if not (n_main == 150 and n_branch == 300):
-        raise AssertionError(f"branch leaked: main={n_main} branch={n_branch}")
-    branch = store.read_ref("docs", "audit").select(
-        F.lit("branch").alias("probe"), "doc_id"
-    )
-    store.fast_forward("docs", "audit")
-    tag = store.read_ref("docs", "pre-fork").select(F.lit("tag").alias("probe"), "doc_id")
-    post = store.read("docs").select(F.lit("post").alias("probe"), "doc_id")
-    return pre.unionByName(branch).unionByName(tag).unionByName(post)
-
-
-@q(
     "c23_incremental_agg",
     # ground truth: a FULL recompute over the same slice — the maintained
     # aggregate (base snapshot agg + delta agg, combined) must equal it
@@ -1088,7 +1001,7 @@ def c25_spec_evolution(spark, sf_dir):
 
 @q(
     "c26_table_history",
-    # the audit trail of a 6-commit lifecycle, restated analytically:
+    # the audit trail of a 5-commit lifecycle, restated analytically:
     # history reports PHYSICAL metadata (footer row counts as written —
     # logically-deleted rows still count until compact materializes),
     # so every cell is a function of the documents census
@@ -1098,12 +1011,11 @@ def c25_spec_evolution(spark, sf_dir):
          CAST(COUNT(*) AS BIGINT) AS total
        FROM documents)
        SELECT 0 AS version, 1 AS members, a AS rows, 0 AS deletes,
-              0 AS staged, 0 AS current FROM n
-       UNION ALL SELECT 1, 2, a + b, 0, 0, 0 FROM n
-       UNION ALL SELECT 2, 3, total, 0, 0, 0 FROM n
-       UNION ALL SELECT 3, 3, total, 1, 0, 0 FROM n
-       UNION ALL SELECT 4, 1, total - 5, 0, 0, 1 FROM n
-       UNION ALL SELECT 5, 2, total - 2, 0, 1, 0 FROM n""",
+              0 AS current FROM n
+       UNION ALL SELECT 1, 2, a + b, 0, 0 FROM n
+       UNION ALL SELECT 2, 3, total, 0, 0 FROM n
+       UNION ALL SELECT 3, 3, total, 1, 0 FROM n
+       UNION ALL SELECT 4, 1, total - 5, 0, 1 FROM n""",
 )
 def c26_table_history(spark, sf_dir):
     """Snapshot-history introspection (storage.history — the Iceberg
@@ -1112,10 +1024,9 @@ def c26_table_history(spark, sf_dir):
     audit surface a compliance review reads before touching data.  The
     lifecycle graded: write, two appends, a merge-on-read equality
     delete (physical rows unchanged — history must NOT silently apply
-    it), a compaction that materializes the delete (rows drop by the 5
-    deleted keys, the delete segment retires), and a STAGED append the
-    pointer never served (visible in history, absent from reads).
-    Every cell is re-derived by the twin from the documents census."""
+    it), and a compaction that materializes the delete (rows drop by the
+    5 deleted keys, the delete segment retires).  Every cell is
+    re-derived by the twin from the documents census."""
     from .storage import TableStore
 
     root = _scratch("c26_store", sf_dir)
@@ -1130,171 +1041,13 @@ def c26_table_history(spark, sf_dir):
         "t", spark.range(0, 5).select(F.col("id").alias("doc_id")), "doc_id"
     )
     store.compact("t", max_members=2)
-    store.stage_append(
-        "t",
-        docs.filter(F.col("doc_id") < 3).select(
-            (F.col("doc_id") + 1_000_000).alias("doc_id"), "lang"
-        ),
-    )
     rows = [
-        (
-            h["version"], h["members"], h["rows"], h["deletes"],
-            int(h["staged"]), int(h["current"]),
-        )
+        (h["version"], h["members"], h["rows"], h["deletes"], int(h["current"]))
         for h in store.history("t")
     ]
     return spark.createDataFrame(
-        rows,
-        "version int, members int, rows bigint, deletes int, staged int, current int",
+        rows, "version int, members int, rows bigint, deletes int, current int"
     )
-
-
-@q(
-    "c27_bloom_point_lookup",
-    # ground truth: the table is four hash-bucketed appends of documents
-    # (doc_id % 4), each with a per-member bloom over k = 'u'||doc_id;
-    # ten point probes each open EXACTLY ONE member (the entry RAISES at
-    # the manifest level otherwise) and the exact filter restates, so
-    # the twin is just the ten-key selection
-    """SELECT doc_id, lang FROM documents
-       WHERE doc_id IN (3, 7, 42, 99, 123, 200, 311, 404, 444, 498)""",
-)
-def c27_bloom_point_lookup(spark, sf_dir):
-    """Per-member Bloom file skipping end-to-end through the REAL
-    TableStore (storage.read_point — the Iceberg/Parquet column-bloom
-    pruning analog, composing with c14's min/max stats and c18's
-    z-order): appends record a per-member bloom over the lookup key, and
-    a point probe (a URL takedown, a doc-id audit — the reference's
-    point SELECTs in phone_book.py:107) opens only the members whose
-    bloom can match.  Unlike min/max stats, blooms prune UNCLUSTERED
-    keys — the hash-bucketed appends here have fully overlapping doc_id
-    ranges, so stats alone could never skip a member.  The build hash
-    (JVM md5 double hashing) and the driver probe hash agree
-    bit-for-bit, so probing costs zero Spark jobs; each of the ten
-    probes below must prune 3 of 4 members or the entry RAISES.  The
-    parquet bytes on disk are what get graded."""
-    from .storage import TableStore
-
-    root = _scratch("c27_store", sf_dir)
-    store = TableStore(spark, root)
-    docs = _t(spark, sf_dir, "documents").select(
-        F.col("doc_id").cast("long").alias("doc_id"),
-        "lang",
-        F.concat(F.lit("u"), F.col("doc_id")).alias("k"),
-    )
-    for b in range(4):
-        store.append("docs", docs.filter(F.col("doc_id") % 4 == b), bloom_col="k")
-    out = None
-    for d in (3, 7, 42, 99, 123, 200, 311, 404, 444, 498):
-        cands = store.point_members("docs", "k", f"u{d}")
-        if len(cands) != 1:
-            raise AssertionError(
-                f"bloom skipping did not engage for u{d}: "
-                f"{len(cands)} members kept, expected 1"
-            )
-        hit = store.read_point("docs", "k", f"u{d}").select("doc_id", "lang")
-        out = hit if out is None else out.unionByName(hit)
-    return out
-
-
-@q(
-    "c28_orphan_cleanup",
-    # ground truth: evens committed first (v1), odds second; a crashed
-    # writer's orphan segment is planted then swept — the entry RAISES
-    # unless exactly the orphan went and nothing else did, so the twin
-    # restates the two committed surfaces the sweep must not touch:
-    # time-travel to v1 (evens) and the current read (everything)
-    """SELECT 'v1' AS probe, doc_id FROM documents WHERE doc_id % 2 = 0
-       UNION ALL
-       SELECT 'cur', doc_id FROM documents""",
-)
-def c28_orphan_cleanup(spark, sf_dir):
-    """Orphan-file cleanup end-to-end through the REAL TableStore
-    (storage.remove_orphans — Iceberg remove_orphan_files analog): a
-    crashed writer leaves segment bytes with no manifest (the
-    write-then-commit gap); the sweep deletes exactly those bytes while
-    every committed snapshot keeps serving — graded here by reading the
-    POST-SWEEP store through both time-travel (v1) and the current
-    pointer.  At 100 TB this is the maintenance job that keeps object-
-    store costs proportional to live data; the age window (not exercised
-    here, unit-tested) protects in-flight commits.  The parquet bytes on
-    disk are what get graded."""
-    import shutil
-
-    from .storage import TableStore
-
-    root = _scratch("c28_store", sf_dir)
-    store = TableStore(spark, root)
-    docs = _t(spark, sf_dir, "documents").select(
-        F.col("doc_id").cast("long").alias("doc_id")
-    )
-    store.append("docs", docs.filter(F.col("doc_id") % 2 == 0))
-    v1 = store.current_version("docs")
-    store.append("docs", docs.filter(F.col("doc_id") % 2 == 1))
-    # simulate the crashed append: segment bytes on disk, no manifest
-    tdir = store._tdir("docs")
-    shutil.copytree(
-        os.path.join(tdir, "seg00000"), os.path.join(tdir, "seg09999")
-    )
-    removed = store.remove_orphans("docs")
-    if removed != ["seg09999"] or os.path.exists(os.path.join(tdir, "seg09999")):
-        raise AssertionError(f"orphan sweep wrong: removed={removed}")
-    old = store.read_at("docs", version=v1).select(
-        F.lit("v1").alias("probe"), "doc_id"
-    )
-    cur = store.read("docs").select(F.lit("cur").alias("probe"), "doc_id")
-    return old.unionByName(cur)
-
-
-@q(
-    "c29_rollback_restore",
-    # ground truth: three committed slices by doc_id % 3, with slice 1
-    # rolled back BEFORE slice 2 was appended — the current read must be
-    # exactly slices {0,2}, while time-travel to the rolled-past
-    # snapshot still serves {0,1}.  The entry RAISES unless the restore
-    # was a pure metadata commit (history shape + member identity), so
-    # the twin only restates the two graded read surfaces
-    """SELECT 'restored' AS probe, doc_id FROM documents
-       WHERE doc_id < 300 AND doc_id % 3 IN (0, 2)
-       UNION ALL
-       SELECT 'rolled_past', doc_id FROM documents
-       WHERE doc_id < 300 AND doc_id % 3 IN (0, 1)""",
-)
-def c29_rollback_restore(spark, sf_dir):
-    """Snapshot rollback end-to-end through the REAL TableStore
-    (storage.rollback — Delta RESTORE / Iceberg rollback analog): a bad
-    append is rolled back by a NEW history-preserving commit that copies
-    the target snapshot's members (O(1) metadata, zero data I/O), then
-    ingestion continues on the restored content.  Graded by reading the
-    post-rollback store through the current pointer AND time-travel to
-    the rolled-past snapshot (still auditable).  The entry RAISES unless
-    the restore commit added a manifest without adding a segment — the
-    property that makes rollback constant-time at 100 TB.  Reference
-    capability: the crawler's bad-batch recovery was a manual MySQL dump
-    re-load (db_config.py workflow); here it is one atomic commit."""
-    from .storage import TableStore
-
-    root = _scratch("c29_store", sf_dir)
-    store = TableStore(spark, root)
-    docs = _t(spark, sf_dir, "documents").filter(F.col("doc_id") < 300).select(
-        F.col("doc_id").cast("long").alias("doc_id")
-    )
-    store.append("snap", docs.filter(F.col("doc_id") % 3 == 0))
-    v_good = store.current_version("snap")
-    store.append("snap", docs.filter(F.col("doc_id") % 3 == 1))  # the bad batch
-    v_bad = store.current_version("snap")
-    v_restore = store.rollback("snap", version=v_good)
-    store.append("snap", docs.filter(F.col("doc_id") % 3 == 2))
-    hist = store.history("snap")
-    restore_rec = next(h for h in hist if h["version"] == int(v_restore[1:]))
-    good_rec = next(h for h in hist if h["version"] == int(v_good[1:]))
-    if len(hist) != 4 or restore_rec["members"] != good_rec["members"]:
-        raise AssertionError(f"rollback was not a pure metadata commit: {hist}")
-    restored = store.read("snap").select(F.lit("restored").alias("probe"), "doc_id")
-    rolled_past = store.read_at("snap", version=v_bad).select(
-        F.lit("rolled_past").alias("probe"), "doc_id"
-    )
-    return restored.unionByName(rolled_past)
 
 
 @q(

@@ -29,9 +29,8 @@ atomic: two writers never hold one number, and no write ever lands in a
 directory another writer owns; metadata-only commits claim too).  The
 data lands in that directory, then ``_commit`` builds the manifest from
 the parent's, CASes on the base version (``_check_base``) and flips the
-pointer — or, for a staged snapshot, only writes the manifest.
-``_replace`` is the one atomic metadata write (pointer, manifests, refs,
-round manifests).
+pointer.  ``_replace`` is the one atomic metadata write (pointer,
+manifests, round manifests).
 
 On a real cluster this module swaps for Iceberg catalog calls 1:1 (the
 API is MERGE-shaped on purpose); nothing else in the engine changes.
@@ -41,7 +40,6 @@ from __future__ import annotations
 
 import json
 import os
-import re
 import shutil
 from urllib.parse import unquote
 
@@ -131,11 +129,12 @@ class TableStore:
 
     def _next_version(self, table: str) -> str:
         """Claim the next version: one past every manifest on disk (a
-        STAGED snapshot holds a version without moving the pointer), made
-        this writer's by creating its segment directory.  The loser of a
-        race for ``seg{N}`` moves on to N+1 and never writes into (or
-        replaces) the winner's segment; a torn write's directory is
-        skipped, never reused, and ``remove_orphans`` sweeps it."""
+        resumed store's pointer can sit below manifests a crashed round
+        wrote), made this writer's by creating its segment directory.
+        The loser of a race for ``seg{N}`` moves on to N+1 and never
+        writes into (or replaces) the winner's segment; a torn write's
+        directory is skipped, never reused, and ``expire_snapshots``
+        sweeps it."""
         n = max((int(v[1:]) for v in self._versions(table)), default=-1) + 1
         os.makedirs(self._tdir(table), exist_ok=True)
         while True:
@@ -153,7 +152,6 @@ class TableStore:
         df: DataFrame,
         partition_by: list[str] | None,
         stats_col: str | None = None,
-        bloom_col: str | None = None,
     ) -> list[dict]:
         """Write df into the segment directory `version` claimed; return
         its member records (one per partition subdir when partitioned).
@@ -183,11 +181,6 @@ class TableStore:
             else:
                 r = df.agg(F.min(c).alias("lo"), F.max(c).alias("hi")).collect()[0]
                 stats[None] = [r["lo"], r["hi"]]
-        blooms = (
-            self._bloom_build(df, partition_by[0] if partition_by else None, bloom_col)
-            if bloom_col is not None
-            else {}
-        )
         def _jsonable(pair) -> bool:
             # manifests are JSON; stats only attach for types that
             # round-trip (numbers, strings) — others simply don't skip
@@ -199,8 +192,6 @@ class TableStore:
             m = {"path": seg, "value": None, "rows": self._footer_rows(seg_path)}
             if stats_col is not None and _jsonable(stats.get(None)):
                 m["stats"] = {stats_col: stats[None]}
-            if blooms.get(None) is not None:
-                m["bloom"] = {bloom_col: blooms[None]}
             return [m]
         col = partition_by[0]
         members = []
@@ -216,9 +207,6 @@ class TableStore:
                 s = stats.get(str(value)) if value is not None else None
                 if stats_col is not None and _jsonable(s):
                     m["stats"] = {stats_col: s}
-                b = blooms.get(str(value)) if value is not None else None
-                if b is not None:
-                    m["bloom"] = {bloom_col: b}
                 members.append(m)
         return members
 
@@ -245,7 +233,6 @@ class TableStore:
         prev: dict,
         members: list[dict],
         base: str | None,
-        parent: str | None = None,
         mark: tuple[str, int] | None = None,
         **fields,
     ) -> str:
@@ -257,36 +244,28 @@ class TableStore:
         exactly-once watermark).  ``fields`` override keys; ``mark=(key,
         id)`` records one more txn mark.
 
-        With ``parent`` the snapshot is STAGED: the manifest is written
-        and the pointer does not move.  Otherwise the commit CASes on
-        ``base`` and flips the pointer; ``base=None`` is a full rewrite,
-        a new table generation (``write``/``create``)."""
-        manifest = {k: v for k, v in prev.items() if k != "parent"}
-        manifest.update(
-            members=members, deletes=prev.get("deletes") or [], txn=prev.get("txn") or {}
+        The commit CASes on ``base`` and flips the pointer; ``base=None``
+        is a full rewrite, a new table generation (``write``/``create``)."""
+        manifest = dict(
+            prev, members=members, deletes=prev.get("deletes") or [], txn=prev.get("txn") or {}
         )
         manifest.update(fields)
         if mark is not None:
             manifest["txn"] = {**manifest["txn"], mark[0]: int(mark[1])}
-        if parent is not None:
-            manifest["parent"] = parent
-        elif base is not None:
+        if base is not None:
             self._check_base(table, base)
         self._write_manifest(table, version, manifest)
-        if parent is None:
-            self._set_pointer(table, version)
+        self._set_pointer(table, version)
         return version
 
-    def _check_base(
-        self, table: str, base: str, hint: str = "another writer committed first; re-read and retry"
-    ) -> None:
+    def _check_base(self, table: str, base: str) -> None:
         """The one optimistic-concurrency check (Iceberg CAS): the table
         must still serve ``base``, the snapshot the operation read."""
         cur = self.current_version(table)
         if cur != base:
             raise ConcurrentCommitError(
                 f"table '{table}': expected version {base} at commit time "
-                f"but found {cur} — {hint}"
+                f"but found {cur} — another writer committed first; re-read and retry"
             )
 
     @staticmethod
@@ -426,127 +405,6 @@ class TableStore:
         return self._read_members(table, pruned).filter(
             (F.col(col) >= lo) & (F.col(col) <= hi)
         )
-
-    # ------------------------------------------------------------ bloom skipping
-    _BLOOM_K = 6
-    _BLOOM_TYPES = {"string", "bigint", "int", "smallint", "tinyint"}
-
-    def _bloom_build(self, df: DataFrame, pcol: str | None, col: str) -> dict:
-        """Per-member Bloom filter over ``col`` (the Iceberg/Parquet
-        column-bloom analog): {member value (str) or None: bloom record}.
-
-        The filter uses double hashing g_i = h1 + i*h2 over the md5 of the
-        value's STRING form — md5-on-utf8 is bit-identical between the JVM
-        (F.md5 ∘ F.encode ∘ cast-to-string) and the driver's hashlib, so
-        membership probes are pure Python with zero Spark jobs.  Only
-        string/integral columns are accepted: their cast-to-string is
-        representation-stable across both sides (floats are not).
-
-        Sizing is per member from an approx distinct count (~16 bits/key,
-        k=6 → FP ≈ 1e-3), capped at 2^17 bits = 16 KB per member: a
-        saturated bloom prunes less but never lies, and the driver-side
-        manifest cost stays O(members · 16 KB) — metadata-class, the same
-        bound the candidate-bucket collects already carry."""
-        import base64
-        import math
-
-        dt = df.schema[col].dataType.simpleString()
-        if dt not in self._BLOOM_TYPES:
-            raise ValueError(
-                f"bloom_col '{col}' has type {dt}; blooms need a "
-                f"representation-stable cast-to-string type: {sorted(self._BLOOM_TYPES)}"
-            )
-        gb = [F.col(pcol)] if pcol else []
-        sizes = {}
-        for r in df.groupBy(*gb).agg(
-            F.approx_count_distinct(col).alias("nd")
-        ).collect():
-            key = str(r[pcol]) if pcol else None
-            nd = max(int(r["nd"]), 1)
-            sizes[key] = 1 << max(10, min(17, math.ceil(math.log2(16 * nd))))
-        if not sizes:
-            return {}
-        s = F.col(col).cast("string")
-        hx = F.md5(F.encode(s, "UTF-8"))
-        h1 = F.conv(F.substring(hx, 1, 15), 16, 10).cast("long")
-        h2 = F.conv(F.substring(hx, 16, 15), 16, 10).cast("long").bitwiseOR(F.lit(1))
-        if pcol:
-            bits_c = F.lit(None).cast("long")
-            for key, b in sizes.items():
-                bits_c = F.when(F.col(pcol).cast("string") == key, F.lit(b)).otherwise(bits_c)
-        else:
-            bits_c = F.lit(sizes[None])
-        pos = F.explode(
-            F.array(*[F.pmod(h1 + F.lit(i) * h2, bits_c) for i in range(self._BLOOM_K)])
-        ).alias("pos")
-        out = {}
-        for r in df.select(*gb, pos).groupBy(*gb).agg(
-            F.collect_set("pos").alias("ps")
-        ).collect():
-            key = str(r[pcol]) if pcol else None
-            bits = sizes[key]
-            buf = bytearray(bits >> 3)
-            for p in r["ps"]:
-                buf[p >> 3] |= 1 << (p & 7)
-            out[key] = {
-                "bits": bits,
-                "k": self._BLOOM_K,
-                "b64": base64.b64encode(bytes(buf)).decode("ascii"),
-            }
-        return out
-
-    @staticmethod
-    def _bloom_hit(bloom: dict, value) -> bool:
-        """Driver-side membership probe — md5 double hashing, identical to
-        the JVM-side build hash by construction (see _bloom_build)."""
-        import base64
-        import hashlib
-
-        hx = hashlib.md5(str(value).encode("utf-8")).hexdigest()
-        h1 = int(hx[:15], 16)
-        h2 = int(hx[15:30], 16) | 1
-        buf = base64.b64decode(bloom["b64"])
-        bits, k = bloom["bits"], bloom["k"]
-        return all(
-            (buf[p >> 3] >> (p & 7)) & 1
-            for p in ((h1 + i * h2) % bits for i in range(k))
-        )
-
-    def point_members(self, table: str, col: str, value) -> list[dict]:
-        """Members that COULD hold rows with ``col == value``: a member
-        whose bloom rejects the value is skipped at the manifest level;
-        [min, max] stats compose when present; members without either are
-        conservatively kept.  False positives cost an extra member read,
-        never a wrong answer — the same contract as the crawl's seen-set
-        bloom."""
-        if value is None:
-            raise ValueError("point_members: equality-to-NULL never matches; no probe")
-        out = []
-        for m in self._manifest(table)["members"]:
-            s = (m.get("stats") or {}).get(col)
-            if s is not None:
-                try:
-                    if value < s[0] or value > s[1]:
-                        continue
-                except TypeError:
-                    pass  # incomparable representations: keep conservatively
-            b = (m.get("bloom") or {}).get(col)
-            if b is not None and not self._bloom_hit(b, value):
-                continue
-            out.append(m)
-        return out
-
-    def read_point(self, table: str, col: str, value) -> DataFrame:
-        """Point-lookup scan that opens ONLY the members whose bloom (or
-        stats interval) can match ``col == value`` — the Iceberg
-        bloom-filter file-skipping analog.  The exact equality filter
-        still applies (blooms only prune, never answer), and merge-on-read
-        deletes compose through _read_members exactly as in read_range.
-        On an append-heavy 100 TB table a point probe (a URL takedown, a
-        doc-id audit) touches O(1) members instead of every file."""
-        m = self._manifest(table)
-        pruned = dict(m, members=self.point_members(table, col, value))
-        return self._read_members(table, pruned).filter(F.col(col) == F.lit(value))
 
     def count_rows(self, table: str, values=None) -> int:
         """Iceberg count-pushdown analog: COUNT(*) answered ENTIRELY from
@@ -753,7 +611,6 @@ class TableStore:
         df: DataFrame,
         partition_by: list[str] | None = None,
         stats_col: str | None = None,
-        bloom_col: str | None = None,
         txn: tuple[str, int] | None = None,
     ) -> str:
         """Full-snapshot write: one new segment is the whole table.
@@ -764,9 +621,7 @@ class TableStore:
         majority of the frontier is terminal — pruning is the difference
         between scanning the whole table and scanning the live slice)."""
         v = self._next_version(table)
-        members = self._write_segment(
-            table, v, df, partition_by, stats_col=stats_col, bloom_col=bloom_col
-        )
+        members = self._write_segment(table, v, df, partition_by, stats_col=stats_col)
         pcol = partition_by[0] if partition_by else None
         fresh = {"schema": df.schema.json(), "columns": df.columns, "partition_col": pcol}
         return self._commit(table, v, fresh, members, None, mark=txn)
@@ -785,7 +640,6 @@ class TableStore:
         partition_by: list[str] | None = None,
         allow_evolution: bool = False,
         stats_col: str | None = None,
-        bloom_col: str | None = None,
         txn: tuple[str, int] | None = None,
     ) -> str:
         """Iceberg-append analog: write ONLY df as a new segment and link
@@ -801,40 +655,15 @@ class TableStore:
         each snapshot with its own snapshot-time schema."""
         base = self.current_version(table)
         if base is None:
-            return self.write(
-                table, df, partition_by, stats_col=stats_col,
-                bloom_col=bloom_col, txn=txn,
-            )
-        return self._append(
-            table, base, df, "append", partition_by, allow_evolution,
-            stats_col, bloom_col, txn,
-        )
-
-    def _append(
-        self,
-        table: str,
-        head: str,
-        df: DataFrame,
-        what: str,
-        partition_by: list[str] | None = None,
-        allow_evolution: bool = False,
-        stats_col: str | None = None,
-        bloom_col: str | None = None,
-        txn: tuple[str, int] | None = None,
-        parent: str | None = None,
-    ) -> str:
-        """Write df as a new segment and commit it on top of snapshot
-        ``head`` (staged when ``parent`` is set): the one append path of
-        ``append``, ``stage_append`` and ``append_to_branch``."""
-        prev = self._manifest(table, head)
+            return self.write(table, df, partition_by, stats_col=stats_col, txn=txn)
+        prev = self._manifest(table, base)
         pcol = prev.get("partition_col")
         if partition_by and partition_by[0] != pcol:
             raise ValueError(f"append partition spec {partition_by} != table spec {pcol}")
-        self._check_schema(table, df, prev, what, allow_evolution=allow_evolution)
+        self._check_schema(table, df, prev, "append", allow_evolution=allow_evolution)
         v = self._next_version(table)
         new_members = self._write_segment(
-            table, v, df, [pcol] if pcol else None,
-            stats_col=stats_col, bloom_col=bloom_col,
+            table, v, df, [pcol] if pcol else None, stats_col=stats_col
         )
         fields = {}
         added = [f for f in df.schema.fields if f.name not in prev["columns"]]
@@ -845,8 +674,7 @@ class TableStore:
             )
             fields = {"schema": schema.json(), "columns": schema.fieldNames()}
         return self._commit(
-            table, v, prev, prev["members"] + new_members, head,
-            parent=parent, mark=txn, **fields,
+            table, v, prev, prev["members"] + new_members, base, mark=txn, **fields
         )
 
     # ------------------------------------------------------------ driver rows
@@ -962,9 +790,8 @@ class TableStore:
         manifest on disk, oldest first — version, PHYSICAL member/row
         totals (footer counts as written; logically-deleted rows still
         count until compact materializes the delete), outstanding
-        equality-delete segments, partition spec, and whether the
-        snapshot is a staged or branch commit not yet published
-        (``staged``) plus which one the pointer currently serves.
+        equality-delete segments, partition spec, and which one the
+        pointer currently serves.
         Metadata-only: JSON reads, zero parquet I/O — the audit surface a
         takedown/compliance review reads before touching data."""
         out = []
@@ -978,7 +805,6 @@ class TableStore:
                     "rows": sum(m.get("rows", 0) for m in man["members"]),
                     "deletes": len(man.get("deletes") or []),
                     "partition_col": man.get("partition_col"),
-                    "staged": "parent" in man,
                     "current": v == cur,
                 }
             )
@@ -988,12 +814,11 @@ class TableStore:
         """Iceberg ``SELECT * FROM t.files`` metadata-table analog: the
         current (or any) snapshot's data-file census as a queryable
         DataFrame — member path, write sequence, partition value, footer
-        row count, which skipping indexes the manifest holds for it
-        (column stats / per-member bloom), and whether it predates the
-        partition-spec boundary.  Metadata-only: built from manifest
-        JSON, zero parquet I/O — the planning surface a maintenance job
-        (compaction targeting, small-file reports, stats-coverage
-        audits) queries at 100 TB without touching data.  Like
+        row count, which columns carry [min, max] stats for it, and
+        whether it predates the partition-spec boundary.  Metadata-only:
+        built from manifest JSON, zero parquet I/O — the planning surface
+        a maintenance job (compaction targeting, small-file reports,
+        stats-coverage audits) queries at 100 TB without touching data.  Like
         ``history`` this is the PHYSICAL census: rows under an
         outstanding equality delete still count until compact
         materializes them away."""
@@ -1005,14 +830,13 @@ class TableStore:
                 m.get("value"),
                 int(m.get("rows", 0)),
                 sorted((m.get("stats") or {}).keys()),
-                sorted((m.get("bloom") or {}).keys()),
                 self._pre_spec(man, m),
             )
             for m in man["members"]
         ]
         schema = (
             "path string, seq int, part string, rows bigint, "
-            "stats_cols array<string>, bloom_cols array<string>, pre_spec boolean"
+            "stats_cols array<string>, pre_spec boolean"
         )
         return self.spark.createDataFrame(recs, schema)
 
@@ -1051,7 +875,7 @@ class TableStore:
     def last_txn(self, table: str, txn_key: str) -> int:
         """Highest transaction id committed for ``txn_key`` on the current
         snapshot, or -1 (Delta's txnVersion analog).  Maintenance commits
-        (append/merge/compact/delete/stage) inherit the map, so the mark
+        (append/merge/compact/delete) inherit the map, so the mark
         survives table upkeep; a full ``write()`` rewrite resets it."""
         base = self.current_version(table)
         if base is None:
@@ -1084,227 +908,6 @@ class TableStore:
         if txn_id <= self.last_txn(table, txn_key):
             return None
         return self.append(table, df, partition_by, txn=(txn_key, int(txn_id)))
-
-    def stage_append(
-        self,
-        table: str,
-        df: DataFrame,
-        partition_by: list[str] | None = None,
-        stats_col: str | None = None,
-    ) -> str:
-        """Write-audit-publish, step 1 (Iceberg WAP analog): append df as
-        a STAGED snapshot — the segment and manifest are durable, but the
-        table pointer does not move, so no reader sees the rows.  Audit
-        the staged snapshot with ``read_at(version=...)``; then
-        ``publish`` flips the pointer atomically, or simply abandon it
-        (expire_snapshots reclaims unpublished segments).  This is the
-        quality gate a training-data ingest wants: a round's documents
-        become visible only after validation, with zero rewrite on
-        publish."""
-        base = self.current_version(table)
-        if base is None:
-            raise FileNotFoundError(
-                f"stage_append needs an existing table '{table}' (write() first)"
-            )
-        return self._append(
-            table, base, df, "stage_append", partition_by, stats_col=stats_col, parent=base
-        )
-
-    def _expose(self, table: str, head: str, base: str, hint: str) -> str:
-        """Make a staged lineage the table's snapshot (``publish``,
-        ``fast_forward``): CAS on ``base``, flip the pointer to ``head``,
-        then drop ``parent`` from every manifest from ``head`` back to
-        ``base`` (that expiry kept) — they are ordinary snapshots now, so
-        ``rollback`` may target them and ``history`` no longer reports
-        them as staged.  The markers go AFTER the flip, so a crash in
-        between can only leave one on an exposed snapshot, never strip it
-        from an unpublished one."""
-        self._check_base(table, base, hint)
-        self._set_pointer(table, head)
-        v = head
-        while v not in (None, base) and os.path.exists(self._mpath(table, v)):
-            man = self._manifest(table, v)
-            if "parent" in man:
-                self._write_manifest(table, v, {k: x for k, x in man.items() if k != "parent"})
-            v = man.get("parent")
-        return head
-
-    def publish(self, table: str, version: str) -> str:
-        """Write-audit-publish, step 2: atomically expose a staged
-        snapshot.  CAS on the staged snapshot's parent — if any writer
-        committed since the stage, publishing would silently drop their
-        members, so it raises instead (re-stage on top and re-audit)."""
-        parent = self._manifest(table, version).get("parent")
-        if parent is None:
-            raise ValueError(f"version {version} of '{table}' was not staged")
-        return self._expose(table, version, parent, "re-stage on the current snapshot")
-
-    def rollback(self, table: str, version: str | None = None, round_id: int | None = None) -> str:
-        """Delta ``RESTORE`` / Iceberg rollback analog: make the table
-        serve an earlier snapshot's CONTENT again by committing a NEW
-        version whose manifest copies the target's members, schema,
-        partition spec, and outstanding deletes.  History is preserved —
-        the rolled-past commits stay auditable via ``history``/``read_at``
-        — unlike a raw pointer move, which would let ``_next_version``
-        reuse and clobber their numbers.  No data file is read or
-        written: the restored members are the target's immutable
-        segments, so rollback is O(1) metadata regardless of table size.
-
-        Two deliberate asymmetries vs a naive manifest copy:
-
-        * the txn high-water map is inherited from the CURRENT snapshot,
-          not the target — rolling back table content must never rewind a
-          streaming sink's exactly-once watermark, or the producer's next
-          replayed micro-batch would double-append into the restored
-          table (the rule ``_commit`` applies to every maintenance
-          commit);
-        * a staged, never-published snapshot is refused — WAP audit
-          candidates become visible through ``publish``'s parent CAS,
-          and restoring one would expose unaudited rows while skipping
-          that gate.
-
-        ``read_changes`` across a rollback raises by construction (the
-        base member set is no longer a subset of the target's), exactly
-        as it does across compaction — the incremental-scan contract
-        stays honest.
-
-        Reference capability: the operational recovery the crawler did by
-        restoring MySQL dumps after a bad batch (db_config.py's manual
-        re-load workflow), here as a constant-time, history-preserving
-        commit."""
-        cur = self.current_version(table)
-        if cur is None:
-            raise FileNotFoundError(f"table {table} has no committed version")
-        if version is None:
-            if round_id is None:
-                raise ValueError("rollback needs round_id or version")
-            version = self._version_at_round(table, round_id)
-        if not os.path.exists(self._mpath(table, version)):
-            raise ValueError(f"table '{table}' has no snapshot {version}")
-        if version == cur:
-            return cur
-        target = self._manifest(table, version)
-        if "parent" in target:
-            raise ValueError(
-                f"version {version} of '{table}' is a staged (WAP) snapshot — "
-                f"expose it with publish(), not rollback()"
-            )
-        # the restored members' physical layout is the TARGET's, so its
-        # spec, deletes and spec boundary govern reads; the watermarks
-        # ride the content rollback from the current snapshot (docstring)
-        txn = self._manifest(table, cur).get("txn") or {}
-        v = self._next_version(table)
-        return self._commit(table, v, target, target["members"], cur, txn=txn)
-
-    # ------------------------------------------------------------ refs
-    def _refs_dir(self, table: str) -> str:
-        return os.path.join(self._tdir(table), "_refs")
-
-    def _ref_path(self, table: str, name: str) -> str:
-        if not re.fullmatch(r"[A-Za-z0-9._-]+", name):
-            raise ValueError(f"invalid ref name {name!r}")
-        return os.path.join(self._refs_dir(table), f"{name}.json")
-
-    def _write_ref(self, table: str, name: str, ref: dict) -> None:
-        self._replace(self._ref_path(table, name), json.dumps(ref))
-
-    def ref(self, table: str, name: str) -> dict:
-        try:
-            with open(self._ref_path(table, name)) as f:
-                return json.load(f)
-        except FileNotFoundError:
-            raise ValueError(f"table '{table}' has no ref '{name}'") from None
-
-    def refs(self, table: str) -> dict[str, dict]:
-        """All named refs of a table: {name: {kind, version, ...}}."""
-        out = {}
-        try:
-            for f in sorted(os.listdir(self._refs_dir(table))):
-                if f.endswith(".json"):
-                    out[f[:-5]] = self.ref(table, f[:-5])
-        except FileNotFoundError:
-            pass
-        return out
-
-    def create_tag(self, table: str, name: str, version: str | None = None) -> str:
-        """Iceberg tag analog: an IMMUTABLE named pointer to a snapshot
-        (default: the current one).  Tags pin a reproducible dataset —
-        'the corpus a model was trained on' — and expire_snapshots keeps
-        every ref'd snapshot readable regardless of its age."""
-        v = version or self.current_version(table)
-        if v is None:
-            raise FileNotFoundError(f"table {table} has no committed version")
-        self._manifest(table, v)  # must exist
-        if os.path.exists(self._ref_path(table, name)):
-            raise ValueError(f"ref '{name}' already exists on '{table}'")
-        self._write_ref(table, name, {"kind": "tag", "version": v})
-        return v
-
-    def create_branch(self, table: str, name: str, version: str | None = None) -> str:
-        """Iceberg branch analog: a MUTABLE named pointer that advances
-        via append_to_branch while the table pointer stays put — the
-        isolation layer for multi-commit audit flows (WAP generalized
-        from one staged snapshot to a whole lineage).  ``base`` records
-        the main-table version the branch forked from; fast_forward
-        CASes on it."""
-        v = version or self.current_version(table)
-        if v is None:
-            raise FileNotFoundError(f"table {table} has no committed version")
-        self._manifest(table, v)
-        if os.path.exists(self._ref_path(table, name)):
-            raise ValueError(f"ref '{name}' already exists on '{table}'")
-        self._write_ref(table, name, {"kind": "branch", "version": v, "base": v})
-        return v
-
-    def read_ref(self, table: str, name: str) -> DataFrame:
-        """Read the snapshot a named ref points to (tag or branch head)
-        — time travel by name instead of version/round."""
-        return self.read_at(table, version=self.ref(table, name)["version"])
-
-    def append_to_branch(
-        self,
-        table: str,
-        name: str,
-        df: DataFrame,
-        stats_col: str | None = None,
-    ) -> str:
-        """Append ONLY to a branch: a new segment + manifest whose parent
-        is the branch head; the branch ref advances, the table pointer
-        does not move, so no main-table reader sees the rows.  Same
-        O(delta) cost as append.  The branch lineage is durable and
-        auditable via read_ref/read_at(version=...) until fast_forward
-        publishes it (or the branch is abandoned to expire_snapshots)."""
-        r = self.ref(table, name)
-        if r["kind"] != "branch":
-            raise ValueError(f"ref '{name}' is a {r['kind']}, not a branch")
-        v = self._append(
-            table, r["version"], df, "append_to_branch", stats_col=stats_col,
-            parent=r["version"],
-        )
-        self._write_ref(table, name, dict(r, version=v))
-        return v
-
-    def fast_forward(self, table: str, name: str) -> str:
-        """Publish a branch: atomically move the table pointer to the
-        branch head.  CAS on the branch's fork base — if any writer
-        committed to main since the fork, fast-forwarding would silently
-        drop their members (the branch manifests don't contain them), so
-        it raises instead (re-branch from current and replay).  After
-        publishing, the branch's base advances to its head, so the
-        branch remains usable for the next audit cycle."""
-        r = self.ref(table, name)
-        if r["kind"] != "branch":
-            raise ValueError(f"ref '{name}' is a {r['kind']}, not a branch")
-        # every branch commit since the fork is main-table lineage now
-        self._expose(table, r["version"], r["base"], "re-branch from the current snapshot")
-        self._write_ref(table, name, dict(r, base=r["version"]))
-        return r["version"]
-
-    def drop_ref(self, table: str, name: str) -> None:
-        try:
-            os.remove(self._ref_path(table, name))
-        except FileNotFoundError:
-            raise ValueError(f"table '{table}' has no ref '{name}'") from None
 
     def delete_rows(self, table: str, keys: DataFrame, key: str) -> str:
         """Iceberg v2 equality-delete analog (merge-on-read): commit the
@@ -1544,62 +1147,22 @@ class TableStore:
             referenced.update(d["path"] for d in man.get("deletes") or [])
         return referenced
 
-    def _sweep_unreferenced(
-        self, table: str, referenced: set[str], cutoff: float | None = None
-    ) -> list[str]:
+    def _sweep_unreferenced(self, table: str, referenced: set[str]) -> None:
         """Delete every ``seg*`` directory of ``table`` that ``referenced``
         does not name — for a partitioned segment, every unreferenced
         partition subdirectory (merge carries live slices by reference),
-        then the segment once none is left.  With ``cutoff``, anything
-        modified after it is kept.  Returns the deleted paths (relative
-        to the table dir)."""
+        then the segment once none is left.  This also takes a crashed
+        writer's debris: a claimed segment whose commit never landed."""
         tdir = self._tdir(table)
-        removed: list[str] = []
-
-        def _sweep(rel: str) -> None:
-            path = os.path.join(tdir, rel)
-            if cutoff is not None and os.path.getmtime(path) > cutoff:
-                return  # possibly a commit in flight: keep
-            shutil.rmtree(path, ignore_errors=True)
-            removed.append(rel)
-
         for seg in sorted(os.listdir(tdir)):
             seg_path = os.path.join(tdir, seg)
             if not seg.startswith("seg") or not os.path.isdir(seg_path) or seg in referenced:
                 continue
-            subdirs = [d for d in os.listdir(seg_path) if "=" in d]
-            if not subdirs:
-                _sweep(seg)
-                continue
-            for d in sorted(subdirs):
-                if f"{seg}/{d}" not in referenced:
-                    _sweep(f"{seg}/{d}")
+            for d in os.listdir(seg_path):
+                if "=" in d and f"{seg}/{d}" not in referenced:
+                    shutil.rmtree(os.path.join(seg_path, d), ignore_errors=True)
             if not any("=" in d for d in os.listdir(seg_path)):
                 shutil.rmtree(seg_path, ignore_errors=True)
-        return removed
-
-    def remove_orphans(self, table: str, older_than_s: float = 0.0) -> list[str]:
-        """Iceberg remove_orphan_files analog: delete segment data that NO
-        manifest of ``table`` references — the debris of a crashed writer
-        (the segment lands before its manifest commit; a crash between
-        the two strands the bytes forever, invisible to every reader and
-        to expire_snapshots' kept-set).  Unlike expire_snapshots this
-        touches no manifests: every committed snapshot, tag, branch, and
-        time-travel read serves exactly as before — only never-committed
-        bytes go.
-
-        ``older_than_s`` is the Iceberg safety window: files younger than
-        it are kept, so an IN-FLIGHT append (segment written, commit
-        microseconds away) is never swept out from under its writer.
-        Returns the deleted paths (relative to the table dir)."""
-        import time
-
-        versions = self._versions(table)
-        if not versions:
-            return []
-        return self._sweep_unreferenced(
-            table, self._referenced(table, versions), cutoff=time.time() - older_than_s
-        )
 
     def expire_snapshots(self, keep: int = 2) -> None:
         """Iceberg snapshot-expiry analog: drop all but the newest `keep`
@@ -1613,12 +1176,6 @@ class TableStore:
             kept = set(versions[-keep:])
             if cur:
                 kept.add(cur)
-            for r in self.refs(t).values():
-                # ref'd snapshots (tags, branch heads) and a branch's
-                # fork base stay readable regardless of age
-                kept.add(r["version"])
-                if "base" in r:
-                    kept.add(r["base"])
             referenced = self._referenced(t, kept)
             for v in versions:
                 if v not in kept:

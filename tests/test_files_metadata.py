@@ -1,5 +1,5 @@
 """storage.files — the Iceberg t.files metadata-table analog: a
-queryable per-member census (path, seq, partition, rows, skipping-index
+queryable per-member census (path, seq, partition, rows, stats
 coverage, spec boundary) built from manifest JSON with zero parquet
 I/O, pinnable to any snapshot version."""
 
@@ -17,8 +17,7 @@ def _mk(spark, lo, hi):
 def test_files_census_and_index_coverage(spark, tmp_path):
     store = TableStore(spark, str(tmp_path))
     store.write("t", _mk(spark, 0, 10), partition_by=["p"])
-    store.append("t", _mk(spark, 10, 16), partition_by=["p"],
-                 stats_col="k", bloom_col="val")
+    store.append("t", _mk(spark, 10, 16), partition_by=["p"], stats_col="k")
     rows = {r["path"]: r for r in store.files("t").collect()}
     assert set(rows) == {
         "seg00000/p=0", "seg00000/p=1", "seg00001/p=0", "seg00001/p=1",
@@ -27,10 +26,9 @@ def test_files_census_and_index_coverage(spark, tmp_path):
     assert rows["seg00001/p=0"]["rows"] == 3
     assert rows["seg00000/p=0"]["seq"] == 0
     assert rows["seg00001/p=1"]["seq"] == 1
-    # skipping-index coverage is per member: only the second append has it
+    # stats coverage is per member: only the second append has it
     assert rows["seg00000/p=0"]["stats_cols"] == []
     assert rows["seg00001/p=0"]["stats_cols"] == ["k"]
-    assert rows["seg00001/p=1"]["bloom_cols"] == ["val"]
     # pinnable to an earlier snapshot
     assert store.files("t", version="v00000").count() == 2
 

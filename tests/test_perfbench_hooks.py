@@ -1,9 +1,11 @@
 """The benchmark's traced runs wrap engine names (``perfbench/workloads.py``
-``install_tracing``).  A rename in the engine must fail here, not leave a
-traced run silently measuring nothing."""
+``install_tracing``) and call some ``TableStore`` methods directly.  A
+rename or a deletion in the engine must fail here, not leave a traced run
+silently measuring nothing or crashing."""
 
 from __future__ import annotations
 
+import ast
 import importlib.util
 import os
 import sys
@@ -54,3 +56,24 @@ def test_patched_crawl_names_are_looked_up_at_call_time():
     assert "run_round" in Crawler.run_rounds.__code__.co_names
     assert "bloom_prefilter" in Crawler._admit.__code__.co_names
     assert "lsh_candidate_pairs" in minhash_dedup.__code__.co_names
+
+
+def test_every_direct_store_call_names_a_table_store_method():
+    """``perfbench/workloads.py`` calls ``store.<name>(...)`` and
+    ``<x>.store.<name>(...)`` outside the traced hooks (the
+    ``storage.members`` census, the seen digest).  Each name must be a
+    ``TableStore`` method, or a traced crawl run dies at its end."""
+    from spider_spark.storage import TableStore
+
+    path = os.path.join(ROOT, "perfbench", "workloads.py")
+    with open(path) as f:
+        tree = ast.parse(f.read(), filename=path)
+    names = set()
+    for n in ast.walk(tree):
+        if isinstance(n, ast.Call) and isinstance(n.func, ast.Attribute):
+            owner = n.func.value
+            if getattr(owner, "id", None) == "store" or getattr(owner, "attr", None) == "store":
+                names.add(n.func.attr)
+    assert names >= {"files", "exists", "read"}
+    missing = sorted(m for m in names if not callable(getattr(TableStore, m, None)))
+    assert not missing, f"perfbench calls TableStore.{missing}, which no longer exist"

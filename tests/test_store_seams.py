@@ -1,10 +1,11 @@
 """Every ``TableStore`` commit goes through one set of helpers, so a
 crash hook or an audit needs to wrap only those: ``_replace`` is the one
-atomic metadata write, ``_commit``/``_expose`` the only manifest writers
-and pointer flips (with ``restore_last_committed``'s roll-back),
-``_check_base`` the one CAS and ``_versions`` the one listing of the
-manifest directory.  A pure AST walk over ``storage.py`` (no Spark
-session)."""
+atomic metadata write, ``_commit`` the only manifest writer and pointer
+flip (with ``restore_last_committed``'s roll-back), ``_check_base`` the
+one CAS and ``_versions`` the one listing of the manifest directory.
+The public surface is pinned to the methods the crawl, the streams, the
+graded catalog window or the tests of those features use.  A pure AST
+walk over ``storage.py`` (no Spark session)."""
 
 from __future__ import annotations
 
@@ -55,9 +56,39 @@ def test_every_commit_goes_through_one_seam():
         and getattr(n.value, "id", None) == "os"
     }
     assert replacers == {"_replace"}
-    assert _callers("_write_manifest") == {"_commit", "_expose"}
-    assert _callers("_set_pointer") == {"_commit", "_expose", "restore_last_committed"}
+    assert _callers("_write_manifest") == {"_commit"}
+    assert _callers("_set_pointer") == {"_commit", "restore_last_committed"}
     assert _raisers("ConcurrentCommitError") == {"_check_base"}
-    assert _callers("_check_base") == {"_commit", "_expose"}
+    assert _callers("_check_base") == {"_commit"}
     listers = {m for m, node in _methods().items() if _called(node) & _LISTINGS}
     assert {m for m in listers if "_mdir" in _called(_methods()[m])} == {"_versions"}
+
+
+# Every public method and the caller that keeps it.  A method no engine
+# module, no graded catalog entry, no SURVEY section 2 row and no test of
+# a kept feature calls is deleted, not listed here.
+_KEPT_PUBLIC = {
+    "current_version", "exists", "read", "write", "create", "append",
+    "append_rows", "upsert_rows", "merge_upsert", "compact", "count_rows",
+    "read_partitions", "commit_round", "last_committed_round",
+    "restore_last_committed", "expire_snapshots",  # the crawl
+    "append_txn", "last_txn",  # the streaming sinks
+    "delete_rows", "range_members", "read_range", "evolve_partition_spec",
+    "partition_files",  # graded entries c13, c14, c18, c25
+    "read_at", "read_changes", "history",  # helpers of graded-feature tests
+    "files",  # the benchmark's storage.members
+}
+
+
+def test_public_surface_is_the_audited_keep_list():
+    public = {m for m in _methods() if not m.startswith("_")}
+    assert public == _KEPT_PUBLIC, (
+        f"added: {sorted(public - _KEPT_PUBLIC)}, gone: {sorted(_KEPT_PUBLIC - public)}"
+    )
+
+
+def test_commit_has_one_mode():
+    """``_commit`` always CASes and flips the pointer: no staged mode."""
+    args = _methods()["_commit"].args
+    names = {a.arg for a in args.args + args.kwonlyargs}
+    assert "parent" not in names

@@ -1,8 +1,7 @@
 """Exactly-once streaming -> TableStore ingest (streaming/lakehouse.py +
 storage.append_txn): replayed micro-batches must be skipped via the
 manifest-recorded transaction watermark, and the watermark must survive
-every maintenance commit (append/delete/compact/stage+publish/branch
-fast-forward/driver-row append)."""
+every maintenance commit (append/delete/compact/driver-row append)."""
 
 from __future__ import annotations
 
@@ -50,15 +49,6 @@ def test_txn_watermark_survives_maintenance_commits(spark, store):
     for i in range(4):
         store.append("t", _df(spark, 20 + i, 21 + i))
     assert store.compact("t", max_members=3) is not None
-    assert store.last_txn("t", "s1") == 7
-    # stage + publish inherits
-    v = store.stage_append("t", _df(spark, 100, 101))
-    store.publish("t", v)
-    assert store.last_txn("t", "s1") == 7
-    # a branch commit fast-forwarded onto the table inherits
-    store.create_branch("t", "audit")
-    store.append_to_branch("t", "audit", _df(spark, 200, 201))
-    store.fast_forward("t", "audit")
     assert store.last_txn("t", "s1") == 7
     # a driver-row append inherits
     store.append_rows("t", {"id": [300], "k": [0]})
